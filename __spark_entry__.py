@@ -1141,7 +1141,9 @@ def q_simhash_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL, one source of truth for positions/weights). The xxhash64 simhash
     stays the production path (q_simhash_neardup, rows-only)."""
     d = _planted_dups(spark, sf_dir)
-    return d.select("doc_id", dedup.simhash64_md5(F.col("text")).alias("sig"))
+    return d.select(
+        "doc_id", dedup.simhash64(F.col("text"), hash_family="md5").alias("sig")
+    )
 
 
 DECON_CLEAN_TEXT = " ".join(f"zzqx{i}" for i in range(20))
@@ -1194,8 +1196,8 @@ def q_minhash_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     the two variants' band/pair behavior is pinned equal in
     tests/test_dedup_similarity.py."""
     d = _docs(spark, sf_dir).filter(F.col("doc_id") < 40)
-    sigs = dedup.minhash_signatures_md5_df(
-        d, "doc_id", "text", shingle_n=5, num_hashes=128
+    sigs = dedup.minhash_signatures_df(
+        d, "doc_id", "text", shingle_n=5, num_hashes=128, hash_family="md5"
     )
     return sigs.select(
         F.col("id").alias("doc_id"),

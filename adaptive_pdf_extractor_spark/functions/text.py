@@ -309,6 +309,16 @@ def _gram_hashes(col: Column, k: int) -> Column:
     return F.transform(char_grams_all(col, k), lambda g: F.xxhash64(g))
 
 
+def _window_minima(np, h, window: int):
+    """Distinct-sorted sliding-window minima of one non-empty hash array
+    (a single window when the array is no longer than ``window``)."""
+    if len(h) <= window:
+        m = h.min(keepdims=True)
+    else:
+        m = np.lib.stride_tricks.sliding_window_view(h, window).min(axis=1)
+    return np.unique(m)
+
+
 def winnowing_minima_np(window: int):
     """Arrow-batched winnowing window minima: k-gram hash arrays in,
     distinct-sorted window minima out, one numpy sliding-window reduce per
@@ -328,11 +338,7 @@ def winnowing_minima_np(window: int):
             if len(h) == 0:
                 out.append([])
                 continue
-            if len(h) <= window:
-                m = h.min(keepdims=True)
-            else:
-                m = np.lib.stride_tricks.sliding_window_view(h, window).min(axis=1)
-            out.append(np.unique(m).tolist())
+            out.append(_window_minima(np, h, window).tolist())
         return pd.Series(out)
 
     mins.__annotations__ = {"hashes": pd.Series, "return": pd.Series}
@@ -426,13 +432,9 @@ def winnowing_minima_str_np(window: int, width: int = 16):
                 out.append(uniq)
                 continue
             h = np.array([int(x, 16) for x in hs], dtype=np.uint64)
-            if len(h) <= window:
-                m = h.min(keepdims=True)
-            else:
-                m = np.lib.stride_tricks.sliding_window_view(h, window).min(
-                    axis=1
-                )
-            out.append([format(int(v), fmt) for v in np.unique(m)])
+            out.append(
+                [format(int(v), fmt) for v in _window_minima(np, h, window)]
+            )
         return pd.Series(out)
 
     mins.__annotations__ = {"hashes": pd.Series, "return": pd.Series}

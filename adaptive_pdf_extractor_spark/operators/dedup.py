@@ -8,7 +8,8 @@ Four families, each a different cost/recall point at 100 TB:
   exact-Jaccard verification of candidates. Near-dup detection whose cost
   is ~O(n · bands) instead of O(n²); the scale path. All hashing is
   JVM-side ``xxhash64`` (whole-stage codegen, deterministic across runs
-  and cluster sizes).
+  and cluster sizes); the sketches also take an ``md5`` hash family that
+  a DuckDB oracle reproduces bit-for-bit.
 * **SimHash** — 64-bit signature whose Hamming distance approximates
   cosine similarity of token multisets; near-dup via signature-prefix
   bucketing.
@@ -80,24 +81,38 @@ def exact_dedup_keep(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def minhash_signature(shingles: Column, num_hashes: int) -> Column:
-    """MinHash signature as an array<bigint>: for seed i, min over shingles
-    of xxhash64(shingle, i). Entirely JVM-side.
+# Per-element hash families of the sketch kernels (MinHash, SimHash): the
+# JVM-side hash applied to each gram/token, and the numpy decode of the
+# resulting Arrow array to uint64. Only these differ between families; the
+# folds are one implementation each. xxhash64 is the production fast path;
+# md5 (first 16 hex chars parsed as uint64) is the engine-portable form a
+# DuckDB oracle reproduces bit-for-bit (numpy can't reduce string dtypes,
+# hence the per-element parse).
+_HASH_FAMILIES = {
+    "xxhash64": (
+        lambda g: F.xxhash64(g),
+        lambda np, hs: np.asarray(hs, dtype=np.int64).astype(np.uint64),
+    ),
+    "md5": (
+        lambda g: F.substring(F.md5(g), 1, 16),
+        lambda np, hs: np.array([int(x, 16) for x in hs], dtype=np.uint64),
+    ),
+}
 
-    NOTE: higher-order Column functions are interpreted (no codegen), so at
-    num_hashes=128 this costs ~n_shingles x 128 interpreted evals per row —
-    measured 9x slower than :func:`minhash_signatures_np`, which is the
-    path `minhash_lsh_pairs` uses. Kept as the reference formulation."""
-    return F.array(
-        *[
-            F.array_min(F.transform(shingles, lambda s: F.xxhash64(s, F.lit(i))))
-            for i in range(num_hashes)
-        ]
-    )
+
+def _hash_family(hash_family: str):
+    """(JVM element hash, numpy decode) of a hash family; ValueError for
+    an unknown name (raised while the query is built, before any job)."""
+    if hash_family not in _HASH_FAMILIES:
+        raise ValueError(
+            f"unknown hash_family {hash_family!r}; "
+            f"expected one of {sorted(_HASH_FAMILIES)}"
+        )
+    return _HASH_FAMILIES[hash_family]
 
 
 # Permutation bank for the numpy signature path: sig_i = min over shingles
-# of (a_i * h + b_i) mod 2^64, h = the shingle's JVM xxhash64. Odd a makes
+# of (a_i * h + b_i) mod 2^64, h = the shingle's decoded hash. Odd a makes
 # the multiply a bijection on [0, 2^64) (multiply-shift family), so each
 # (a_i, b_i) is a genuine pseudo-permutation — natural uint64 wraparound is
 # the modulus. (A bounded-parameter variant that never wrapped its modulus
@@ -123,10 +138,14 @@ def _perm_params(num_hashes: int, seed: int = 1):
     return a, b
 
 
-def minhash_signatures_np(num_hashes: int = 128):
-    """Arrow-batched signature computation: per-shingle xxhash64 values in,
-    signature array out — one uint64 numpy broadcast per document, ~10x
-    faster than the interpreted Column-lambda formulation (measured)."""
+def _minhash_fold_udf(decode, num_hashes: int):
+    """Shared Arrow-batched MinHash fold for every hash family:
+    ``decode(np, hashes) -> uint64 ndarray`` supplies the per-gram hash
+    values; the permutation bank (:func:`_perm_params`) and the min-reduce
+    are ONE implementation, so the production and oracled signatures can
+    never silently diverge. One uint64 numpy broadcast per document, ~10x
+    faster than an interpreted Column-lambda formulation (measured).
+    Null / empty gram arrays fold to a null signature."""
     import numpy as np
     from pyspark.sql.pandas.functions import pandas_udf
 
@@ -139,7 +158,7 @@ def minhash_signatures_np(num_hashes: int = 128):
                 if hs is None or len(hs) == 0:
                     out.append(None)
                     continue
-                h = np.asarray(hs, dtype=np.int64).astype(np.uint64)
+                h = decode(np, hs)
                 vals = a[:, None] * h[None, :] + b[:, None]  # mod 2^64 implicit
                 out.append(vals.min(axis=1).astype(np.int64).tolist())
         return pd.Series(out)
@@ -157,33 +176,12 @@ def _shingled(df: DataFrame, id_col: str, text_col: str, shingle_n: int) -> Data
     # optimizer pushed the size(<whole gram expression>) predicate below
     # every join/repartition to the parquet SCAN, re-evaluating the gram
     # regex for the full corpus on the scan's 1-2 input splits (measured
-    # 4.5 s vs 0.4 s for a 4.7k-doc pruned verify pass at sf1.0).
+    # 4.5 s vs 0.4 s for a 4.7k-doc pruned verify pass at sf1.0). The
+    # same holds for every gram array in this module.
     return _spread(df).select(
         F.col(id_col).alias("id"),
         char_ngrams(F.col(text_col), shingle_n).alias("shingles"),
     )
-
-
-def _position_gram_hashes(col: Column, n: int, hash_fn) -> Column:
-    """Per-position n-gram hashes of the text column: one codegen'd regex
-    gram pass (functions.text.char_grams_all) + one SINGLE-LEVEL hashing
-    transform. Two load-bearing properties:
-
-    * No ``array_distinct``: min over a multiset equals min over its
-      distinct set, so every MinHash signature slot is BIT-IDENTICAL with
-      or without deduplication — the distinct was pure cost here.
-    * No nested lambdas: this array is a pandas-UDF input, and a
-      PythonUDF whose input carries nested lambda bindings silently
-      skips ExtractPythonUDFs on every query after a session's first
-      (see functions/text._gram_hashes).
-
-    The round-5 form (interpreted per-position substr over a captured
-    ``lower(text)``) was O(len²) per row — the signature stage measured
-    39.7 s for 50k docs at sf1.0; this form measures ~1 s, signatures
-    bit-identical (verified corpus-wide)."""
-    from ..functions.text import char_grams_all
-
-    return F.transform(char_grams_all(col, n), hash_fn)
 
 
 def minhash_signatures_df(
@@ -193,86 +191,45 @@ def minhash_signatures_df(
     *,
     shingle_n: int = 5,
     num_hashes: int = 128,
+    hash_family: str = "xxhash64",
 ) -> DataFrame:
     """(id, sig) minhash signature table — the per-corpus one-time cost.
     Materialize/persist this once (a parquet/Iceberg table at scale, the
     streaming state table in micro-batch mode) and feed it to
     :func:`minhash_lsh_pairs_from_sigs`; only NEW documents ever hash.
-    Gram hashing is the single-level position-gram pass
-    (:func:`_position_gram_hashes`) — signatures are bit-identical to the
-    shingle-set formulation (min is duplication-invariant), at O(len)
-    instead of O(len²) per row."""
-    # no size(gh) > 0 filter: the gram array is never empty (see
-    # _shingled — and the pushed-to-scan predicate re-ran the gram regex
-    # for the whole corpus on the scan's 1-2 input splits)
+
+    ``hash_family``: ``"xxhash64"`` (the production fast path) or
+    ``"md5"`` — the engine-portable variant whose every signature value a
+    DuckDB oracle reproduces (q_minhash_md5). Both run the same
+    permutation bank and fold (:func:`_minhash_fold_udf`); only the
+    per-gram hash differs, and their band/pair behavior on one corpus is
+    pinned equal in tests.
+
+    Gram hashing is one codegen'd regex gram pass
+    (functions.text.char_grams_all) + one SINGLE-LEVEL hashing transform.
+    Two load-bearing properties:
+
+    * No ``array_distinct``: min over a multiset equals min over its
+      distinct set, so every signature slot is BIT-IDENTICAL to the
+      shingle-set formulation — the distinct was pure cost here.
+    * No nested lambdas: this array is a pandas-UDF input, and a
+      PythonUDF whose input carries nested lambda bindings silently
+      skips ExtractPythonUDFs on every query after a session's first
+      (see functions/text._gram_hashes).
+
+    An interpreted per-position substr form is O(len²) per row (39.7 s
+    against ~1 s for the signature stage of 50k docs at sf1.0). No
+    size(gh) > 0 filter: see :func:`_shingled`."""
+    from ..functions.text import char_grams_all
+
+    gram_hash, decode = _hash_family(hash_family)
     base = _spread(df).select(
         F.col(id_col).alias("id"),
-        _position_gram_hashes(
-            F.col(text_col), shingle_n, lambda g: F.xxhash64(g)
-        ).alias("gh"),
+        F.transform(char_grams_all(F.col(text_col), shingle_n), gram_hash).alias(
+            "gh"
+        ),
     )
-    sig_udf = minhash_signatures_np(num_hashes)
-    return base.select("id", sig_udf(F.col("gh")).alias("sig"))
-
-
-def minhash_signatures_md5_np(num_hashes: int = 128):
-    """numpy fold for the engine-portable md5 minhash: arrays of 16-char
-    md5-hex shingle hashes in, signature array out via the SAME
-    multiply-shift permutation bank (:func:`_perm_params`, odd ``a``,
-    natural uint64 wraparound) as :func:`minhash_signatures_np` — only the
-    per-shingle hash differs (md5-hex parse instead of JVM xxhash64).
-    Each hex string parses to uint64 (the winnowing_md5 pattern: numpy
-    can't reduce string dtypes)."""
-    import numpy as np
-    from pyspark.sql.pandas.functions import pandas_udf
-
-    a, b = _perm_params(num_hashes)
-
-    def sig(hashes):
-        out = []
-        with np.errstate(over="ignore"):
-            for hs in hashes:
-                if hs is None or len(hs) == 0:
-                    out.append(None)
-                    continue
-                h = np.array([int(x, 16) for x in hs], dtype=np.uint64)
-                vals = a[:, None] * h[None, :] + b[:, None]  # mod 2^64
-                out.append(vals.min(axis=1).astype(np.int64).tolist())
-        return pd.Series(out)
-
-    sig.__annotations__ = {"hashes": pd.Series, "return": pd.Series}
-    return pandas_udf("array<bigint>")(sig)
-
-
-def minhash_signatures_md5_df(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    *,
-    shingle_n: int = 5,
-    num_hashes: int = 128,
-) -> DataFrame:
-    """Engine-portable (id, sig) minhash signature table: per-shingle hash
-    = uint64 parse of the first 16 hex chars of md5(shingle), fed through
-    the SAME multiply-shift bank as the xxhash64 production path
-    (:func:`minhash_signatures_df`) — so a DuckDB oracle reproduces EVERY
-    signature value bit-for-bit (the minhash analog of
-    ``simhash64_md5`` / ``winnowing_fingerprints_md5``, completing the
-    md5 trilogy: the curation pipeline's core hash math itself sits under
-    the driver's hash gate). xxhash64 stays the production fast path;
-    band/pair behavior of the two variants on the same corpus is pinned
-    equal in tests. Same single-level position-gram pass as
-    :func:`minhash_signatures_df` (signatures are duplication-invariant
-    — bit-identical to the shingle-set formulation)."""
-    base = _spread(df).select(
-        F.col(id_col).alias("id"),
-        _position_gram_hashes(
-            F.col(text_col),
-            shingle_n,
-            lambda g: F.substring(F.md5(g), 1, 16),
-        ).alias("gh"),
-    )
-    sig_udf = minhash_signatures_md5_np(num_hashes)
+    sig_udf = _minhash_fold_udf(decode, num_hashes)
     return base.select("id", sig_udf(F.col("gh")).alias("sig"))
 
 
@@ -297,12 +254,14 @@ def minhash_lsh_pairs(
     practical purposes (tests plant dups and assert exact equality).
 
     Scale notes: candidate pairing joins only within buckets, carrying
-    bare (id, id); exact verification is a narrow JVM re-shingling of the
-    docs hash-joined against the few surviving pairs (a candidate-id
-    semi-join pre-prune was measured 1.6x SLOWER — it re-evaluates the
-    prefilter subtree before its cache populates). Composition of
-    :func:`minhash_signatures_df` + :func:`minhash_lsh_pairs_from_sigs` —
-    callers holding a persisted signature table use those directly.
+    bare (id, id); exact verification re-shingles only the candidate
+    endpoints — the prefiltered candidate pairs are materialized first
+    (persist + one eager count at plan build), then the docs are
+    semi-joined down to their ids (a LAZY semi-join pre-prune was measured
+    1.6x SLOWER: it re-evaluates the prefilter subtree before its cache
+    populates). Composition of :func:`minhash_signatures_df` +
+    :func:`minhash_lsh_pairs_from_sigs` — callers holding a persisted
+    signature table use those directly.
     """
     sigs = minhash_signatures_df(
         df, id_col, text_col, shingle_n=shingle_n, num_hashes=num_hashes
@@ -349,6 +308,97 @@ def _banded(sigs: DataFrame, bands: int, rows_per_band: int) -> DataFrame:
     ).select("id", "bb.band", "bb.bucket")
 
 
+def _verified_pairs(
+    cand: DataFrame,
+    sigs: DataFrame,
+    docs: DataFrame,
+    id_col: str,
+    text_col: str,
+    *,
+    shingle_n: int,
+    num_hashes: int,
+    threshold: float,
+    prune_verify: bool,
+) -> DataFrame:
+    """Verification tail shared by the full and incremental pair stages:
+    candidate ``(id_a, id_b)`` pairs -> signature prefilter -> exact
+    Jaccard on re-shingled ``docs`` -> ``(id_a, id_b, jaccard)``.
+    ``sigs`` (``id``, ``sig``) must cover every candidate endpoint.
+
+    Two stages. On homogeneous corpora (web text hovers around j~0.2
+    pairwise) band collisions produce ~P(j^rows) x n^2 candidates —
+    verifying each with array_intersect over hundreds of shingles
+    dominated the job (measured ~80% of wall time). Stage 1 estimates
+    jaccard from signature agreement (num_hashes int equality ops,
+    E[est]=j, sigma=sqrt(j(1-j)/num_hashes)); only candidates within 4+
+    sigma of the threshold proceed to exact verification.
+
+    ``prune_verify``: semi-join the verification docs down to candidate
+    endpoint ids before shingling. Shingling is the dominant per-doc cost
+    and candidates are usually a tiny fraction of the corpus (2,544 pairs
+    of 50k docs at sf1.0), so the un-pruned verify shingles every doc for
+    rows the join immediately drops. The candidate set must materialize
+    first (persist + one eager count job at plan build): a LAZY semi-join
+    pre-prune re-evaluates the banding/prefilter subtree before its cache
+    populates — measured 1.6x slower end-to-end. Off, the plan stays lazy
+    and single-action."""
+    sig_margin = 4.5 * (0.25 / num_hashes) ** 0.5  # sigma at j=0.5 (max)
+    sa = sigs.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
+    sb = sigs.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
+    est = (
+        F.size(
+            F.filter(
+                F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda v: v
+            )
+        )
+        / num_hashes
+    )
+    prefiltered = (
+        cand.join(sa, "id_a")
+        .join(sb, "id_b")
+        .filter(est >= threshold - sig_margin)
+        .select("id_a", "id_b")
+    )
+    verify_docs = docs
+    if prune_verify:
+        prefiltered = prefiltered.persist()
+        prefiltered.count()  # candidate ids must exist before the prune
+        cand_ids = prefiltered.select(
+            F.explode(F.array("id_a", "id_b")).alias(id_col)
+        ).distinct()
+        # unconditional full-width repartition: AQE coalesces the tiny
+        # semi-join output to ~1 partition and the interpreted shingle
+        # projection is compute-bound per row (measured 3.7s single-core
+        # vs 0.5s spread for 210 docs)
+        verify_docs = docs.join(cand_ids, id_col, "left_semi").repartition(
+            max(docs.sparkSession.sparkContext.defaultParallelism, 8)
+        )
+    # Exact verification with ONE evaluation of the shingled docs: the
+    # two-sided (a ⋈ b) form embeds the shingle subtree TWICE in the plan,
+    # computing it twice per action (measured ~10% of the warm stage and
+    # 3x of the cold one at 5k docs). Exploding each pair to one row per
+    # endpoint joins the shingled docs once and regroups; the regroup
+    # shuffle carries candidate-scaled shingle arrays only, and
+    # intersect/union are symmetric so the jaccard is unchanged.
+    cbase = _shingled(verify_docs, id_col, text_col, shingle_n)
+    sides = prefiltered.select(
+        "id_a", "id_b", F.explode(F.array("id_a", "id_b")).alias("id")
+    )
+    gathered = (
+        sides.join(cbase, "id")
+        .groupBy("id_a", "id_b")
+        .agg(F.collect_list("shingles").alias("sh"))
+        .filter(F.size("sh") == 2)  # endpoint missing from docs -> no pair
+    )
+    jac = F.size(
+        F.array_intersect(F.element_at("sh", 1), F.element_at("sh", 2))
+    ) / F.size(F.array_union(F.element_at("sh", 1), F.element_at("sh", 2)))
+    return (
+        gathered.filter(jac >= threshold)  # exact check on the surviving few
+        .select("id_a", "id_b", F.round(jac, 4).alias("jaccard"))
+    )
+
+
 def minhash_lsh_pairs_incremental(
     new_sigs: DataFrame,
     old_sigs: DataFrame,
@@ -365,33 +415,31 @@ def minhash_lsh_pairs_incremental(
     """Pair stage for a NEW document batch against an existing signature
     table: candidates = new x new ∪ new x old — the batch twin of the
     streaming state pattern, and the form a daily 100 TB pipeline runs.
-    Banding, the >=2-band evidence cut, the signature prefilter and the
-    exact-Jaccard verification are semantically IDENTICAL to
-    :func:`minhash_lsh_pairs_from_sigs` restricted to pairs touching a
-    new id (pinned by test), but the bucket join probes only the banded
-    NEW side, so candidate-generation cost scales with the DELTA, not
-    the corpus — old documents never re-hash, never re-band against each
-    other, and only candidate-joined rows are ever re-shingled.
+    Banding (:func:`_banded`) and verification (:func:`_verified_pairs`)
+    are the SAME code as :func:`minhash_lsh_pairs_from_sigs`, and the
+    output equals it restricted to pairs touching a new id (pinned by
+    test), but the bucket join probes only the banded NEW side, so
+    candidate-generation cost scales with the DELTA, not the corpus —
+    old documents never re-hash, never re-band against each other, and
+    only candidate-joined rows are ever re-shingled.
 
     ``docs`` must cover every id in either signature table (it feeds the
-    re-shingle verification — ONE linear narrow pass, evaluated once; see
-    below). Per-batch cost: candidate generation probes only the banded
-    NEW side (delta x bucket-density pairs), plus one linear narrow pass
-    over the old corpus for banding and verification — no quadratic
-    term, and crucially the EXPENSIVE per-doc work (the 128-hash
-    signatures) runs for new docs only. No ``max_bucket_size`` guard
-    here: an old-side flood bucket of size m costs O(|new ∩ bucket| x m)
-    candidates — already delta-scaled; a flood INSIDE one batch is the
-    full pair stage's regime.
+    re-shingle verification — ONE linear narrow pass, evaluated once).
+    Per-batch cost: candidate generation probes only the banded NEW side
+    (delta x bucket-density pairs), plus one linear narrow pass over the
+    old corpus for banding and verification — no quadratic term, and
+    crucially the EXPENSIVE per-doc work (the 128-hash signatures) runs
+    for new docs only. No ``max_bucket_size`` guard here: an old-side
+    flood bucket of size m costs O(|new ∩ bucket| x m) candidates —
+    already delta-scaled; a flood INSIDE one batch is the full pair
+    stage's regime.
 
-    ``prune_verify``: semi-join the verification docs down to the
-    candidate ids before shingling. The candidate set must materialize
-    first (persist + one eager count job at plan-build), so the default
-    stays lazy/single-action — right for bench-scale corpora; enable it
-    when the old corpus is large relative to the delta (the daily
-    production regime: measured 16.6s -> ~9s at 50k old docs x 500
-    delta, and the gap grows with the corpus since the un-pruned verify
-    shingles every old doc)."""
+    ``prune_verify`` (see :func:`_verified_pairs`) stays off by default —
+    lazy/single-action, right for bench-scale corpora; enable it when the
+    old corpus is large relative to the delta (the daily production
+    regime: measured 16.6s -> ~9s at 50k old docs x 500 delta, and the
+    gap grows with the corpus since the un-pruned verify shingles every
+    old doc)."""
     rows_per_band = num_hashes // bands
     assert rows_per_band * bands == num_hashes, "bands must divide num_hashes"
     nsig = new_sigs.select("id", "sig").persist()
@@ -418,63 +466,16 @@ def minhash_lsh_pairs_incremental(
         .filter(F.col("count") >= min_bands)
         .select("id_a", "id_b")
     )
-    # signature prefilter + exact verification: same two-stage shape (and
-    # the same margin constant) as the full pair stage
-    sig_margin = 4.5 * (0.25 / num_hashes) ** 0.5
-    sigs_all = nsig.unionByName(osig)
-    sa = sigs_all.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
-    sb = sigs_all.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
-    est = (
-        F.size(
-            F.filter(
-                F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda v: v
-            )
-        )
-        / num_hashes
-    )
-    prefiltered = (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
-        .filter(est >= threshold - sig_margin)
-        .select("id_a", "id_b")
-    )
-    # Exact verification with ONE evaluation of the shingled corpus: the
-    # full stage's two-sided (a ⋈ b) form embeds the shingle subtree
-    # TWICE in the plan (computed twice per action — measured as the
-    # whole verify stage doubling); here pairs explode to one row per
-    # endpoint, join the shingled docs once, and regroup. The shuffle
-    # carries candidate-scaled shingle arrays only; intersect/union are
-    # symmetric, so the jaccard is identical to the two-sided form.
-    verify_docs = docs
-    if prune_verify:
-        prefiltered = prefiltered.persist()
-        prefiltered.count()  # candidate ids must exist before the prune
-        cand_ids = prefiltered.select(
-            F.explode(F.array("id_a", "id_b")).alias(id_col)
-        ).distinct()
-        # unconditional full-width repartition: AQE coalesces the tiny
-        # semi-join output to ~1 partition and the interpreted shingle
-        # projection is compute-bound per row (measured 3.7s single-core
-        # vs 0.5s spread for 210 docs)
-        verify_docs = docs.join(cand_ids, id_col, "left_semi").repartition(
-            max(docs.sparkSession.sparkContext.defaultParallelism, 8)
-        )
-    cbase = _shingled(verify_docs, id_col, text_col, shingle_n)
-    sides = prefiltered.select(
-        "id_a", "id_b", F.explode(F.array("id_a", "id_b")).alias("id")
-    )
-    gathered = (
-        sides.join(cbase, "id")
-        .groupBy("id_a", "id_b")
-        .agg(F.collect_list("shingles").alias("sh"))
-        .filter(F.size("sh") == 2)  # endpoint missing from docs -> no pair
-    )
-    jac = F.size(
-        F.array_intersect(F.element_at("sh", 1), F.element_at("sh", 2))
-    ) / F.size(F.array_union(F.element_at("sh", 1), F.element_at("sh", 2)))
-    return (
-        gathered.filter(jac >= threshold)
-        .select("id_a", "id_b", F.round(jac, 4).alias("jaccard"))
+    return _verified_pairs(
+        cand,
+        nsig.unionByName(osig),
+        docs,
+        id_col,
+        text_col,
+        shingle_n=shingle_n,
+        num_hashes=num_hashes,
+        threshold=threshold,
+        prune_verify=prune_verify,
     )
 
 
@@ -491,7 +492,6 @@ def minhash_lsh_pairs_from_sigs(
     persist_sigs: bool = True,
     max_bucket_size: int | None = None,
     observation=None,
-    prune_verify: bool | None = None,
 ) -> DataFrame:
     """LSH pair stage over a PRECOMPUTED signature table ``sigs_df``
     (columns ``id``, ``sig``): banding, the >=2-band cut, and the
@@ -500,23 +500,14 @@ def minhash_lsh_pairs_from_sigs(
     the few surviving pairs. The incremental / streaming path: signatures
     persist, only new docs ever hash.
 
-    ``prune_verify`` (default: follow ``persist_sigs``): semi-join the
-    verification docs down to candidate endpoint ids before the shingle
-    projection. Shingling is the dominant per-doc cost (measured 38.9 s
-    for 50k docs at sf1.0 — interpreted per-position substr +
-    array_distinct), and candidates are usually a tiny fraction of the
-    corpus (2,544 pairs of 50k docs there), so the un-pruned verify paid
-    a full second corpus shingling for rows the join immediately
-    dropped. The prune requires the candidate set to exist first
-    (persist + one eager count at plan build — the same fan-out-race
-    rationale as the guarded signature cache below); streaming callers
-    pass ``persist_sigs=False`` and keep the fully lazy single-action
-    plan, managing caching themselves.
-
     ``persist_sigs=False`` for callers that manage the signature frame's
     caching themselves (the streaming loop persists per micro-batch and
     must unpersist after — an internal persist here would strand one
     CacheManager entry per batch, since each batch's plan is distinct).
+    ``persist_sigs`` also turns on the candidate-endpoint prune of the
+    verification docs (``prune_verify`` of :func:`_verified_pairs`: one
+    eager count at plan build); without it the plan stays fully lazy and
+    single-action.
 
     **Mega-cluster guard** (``max_bucket_size``): a template cluster of m
     near-identical documents (exact dedup does NOT catch near-identical)
@@ -663,75 +654,16 @@ def minhash_lsh_pairs_from_sigs(
         # it twice would emit duplicate output rows
         cand = small_pairs.unionByName(big.drop("_bsz")).distinct()
 
-    # Two-stage verification. On homogeneous corpora (web text hovers
-    # around j~0.2 pairwise) band collisions produce ~P(j^rows) x n^2
-    # candidates — verifying each with array_intersect over hundreds of
-    # shingles dominated the job (measured ~80% of wall time). Stage 1
-    # estimates jaccard from signature agreement (num_hashes int equality
-    # ops, E[est]=j, sigma=sqrt(j(1-j)/num_hashes)); only candidates within
-    # 4+ sigma of the threshold proceed to exact verification.
-    sig_margin = 4.5 * (0.25 / num_hashes) ** 0.5  # sigma at j=0.5 (max)
-    sa = sigs.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
-    sb = sigs.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
-    est = (
-        F.size(
-            F.filter(
-                F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda v: v
-            )
-        )
-        / num_hashes
-    )
-    prefiltered = (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
-        .filter(est >= threshold - sig_margin)
-        .select("id_a", "id_b")
-    )
-
-    # Exact verification: ONE evaluation of the shingled docs, pruned to
-    # candidate endpoints when the candidate set is materialized. (Two
-    # earlier formulations both lose: a LAZY semi-join pre-prune of docs
-    # by candidate ids re-evaluates the banding/prefilter subtree before
-    # its cache populates — measured 1.6x slower end-to-end, which is
-    # why the prune below materializes the pairs eagerly first; and the
-    # two-sided a ⋈ b join embeds the shingle subtree TWICE in the plan,
-    # computing it twice per action — measured ~10% of the warm stage
-    # and 3x of the cold one at 5k docs. Exploding each pair to one row
-    # per endpoint joins the shingled docs ONCE and regroups; the
-    # regroup shuffle carries candidate-scaled shingle arrays only, and
-    # intersect/union are symmetric so the jaccard is unchanged.)
-    verify_docs = docs
-    if prune_verify is None:
-        prune_verify = persist_sigs
-    if prune_verify:
-        prefiltered = prefiltered.persist()
-        prefiltered.count()  # candidate ids must exist before the prune
-        cand_ids = prefiltered.select(
-            F.explode(F.array("id_a", "id_b")).alias(id_col)
-        ).distinct()
-        # unconditional full-width repartition: AQE coalesces the tiny
-        # semi-join output to ~1 partition and the interpreted shingle
-        # projection is compute-bound per row (the incremental path's
-        # measured 3.7s-single-core-vs-0.5s-spread trap)
-        verify_docs = docs.join(cand_ids, id_col, "left_semi").repartition(
-            max(docs.sparkSession.sparkContext.defaultParallelism, 8)
-        )
-    cbase = _shingled(verify_docs, id_col, text_col, shingle_n)
-    sides = prefiltered.select(
-        "id_a", "id_b", F.explode(F.array("id_a", "id_b")).alias("id")
-    )
-    gathered = (
-        sides.join(cbase, "id")
-        .groupBy("id_a", "id_b")
-        .agg(F.collect_list("shingles").alias("sh"))
-        .filter(F.size("sh") == 2)  # endpoint missing from docs -> no pair
-    )
-    jac = F.size(
-        F.array_intersect(F.element_at("sh", 1), F.element_at("sh", 2))
-    ) / F.size(F.array_union(F.element_at("sh", 1), F.element_at("sh", 2)))
-    return (
-        gathered.filter(jac >= threshold)  # exact check on the surviving few
-        .select("id_a", "id_b", F.round(jac, 4).alias("jaccard"))
+    return _verified_pairs(
+        cand,
+        sigs,
+        docs,
+        id_col,
+        text_col,
+        shingle_n=shingle_n,
+        num_hashes=num_hashes,
+        threshold=threshold,
+        prune_verify=persist_sigs,
     )
 
 
@@ -891,13 +823,13 @@ def bloom_contains(np, bits, k: int, m: int, kv):
 
 
 def _simhash_fold_udf(decode):
-    """Shared Arrow-batched sign-sum fold for both simhash variants:
+    """Shared Arrow-batched sign-sum fold for every hash family:
     ``decode(np, tokens) -> uint64 ndarray`` supplies the per-token hash
-    values (JVM xxhash64 longs or md5-hex parses); the bit unpack, +-1
-    contribution sum, and signed 64-bit wrap are ONE implementation so the
-    production and oracled paths can never silently diverge. Null / empty
-    token arrays fold to signature 0 (the Column spec's when(null > 0)
-    otherwise-branch behavior — pinned by test)."""
+    values; the bit unpack, +-1 contribution sum, and signed 64-bit wrap
+    are ONE implementation so the production and oracled paths can never
+    silently diverge. Null / empty token arrays fold to signature 0 (the
+    Column spec's when(null > 0) otherwise-branch behavior — pinned by
+    test)."""
     import numpy as np
     from pyspark.sql.pandas.functions import pandas_udf
 
@@ -922,51 +854,21 @@ def _simhash_fold_udf(decode):
     return pandas_udf("bigint")(sim)
 
 
-def simhash64_np():
-    """Arrow-batched SimHash: per-token JVM xxhash64 values in (one
-    interpreted ``transform`` pass, same as the minhash path), 64-bit
-    signature out via one numpy unpack/sign-sum per document
-    (:func:`_simhash_fold_udf`). Replaces the Column-algebra formulation
-    below, whose 64 interpreted ``F.aggregate`` folds cost ~64 x n_tokens
-    lambda evals per row (the interpreted-lambda anti-pattern already
-    fixed for minhash — see minhash_signatures_np). Output is
-    bit-identical to :func:`simhash64_columns` (pinned by test)."""
-    return _simhash_fold_udf(
-        lambda np, hs: np.asarray(hs, dtype=np.int64).astype(np.uint64)
-    )
-
-
-def simhash64_md5_np():
-    """numpy fold for the engine-portable simhash variant: 16-char md5-hex
-    token hashes in (bits 63..60 in the first hex char — ``int(hx, 16)``
-    order), signed 64-bit signature out via the SAME sign-sum fold as
-    :func:`simhash64_np` (:func:`_simhash_fold_udf`). Hex parses to uint64
-    per token (the winnowing_md5 pattern: numpy can't reduce string
-    dtypes)."""
-    return _simhash_fold_udf(
-        lambda np, hs: np.array([int(x, 16) for x in hs], dtype=np.uint64)
-    )
-
-
-def simhash64_md5(text_col: Column) -> Column:
-    """Engine-portable SimHash: token hash = first 16 hex chars of
-    md5(token) parsed as uint64, so a DuckDB oracle reproduces EVERY
-    signature bit-for-bit (the simhash analog of
-    functions.text.winnowing_fingerprints_md5; :func:`simhash64` with
-    xxhash64 stays the production fast path). JVM md5 per token; one
-    numpy parse + sign-sum per document."""
-    hexes = F.transform(
-        tokens(text_col), lambda t: F.substring(F.md5(t), 1, 16)
-    )
-    return simhash64_md5_np()(hexes)
-
-
-def simhash64(text_col: Column) -> Column:
+def simhash64(text_col: Column, hash_family: str = "xxhash64") -> Column:
     """64-bit SimHash over whitespace tokens: bit k of the signature = sign
-    of sum over tokens of bit k (+-1) of the token's xxhash64. JVM hashes
-    each token once; the 64-bit fold runs as numpy (simhash64_np)."""
-    hashes = F.transform(tokens(text_col), lambda t: F.xxhash64(t))
-    return simhash64_np()(hashes)
+    of sum over tokens of bit k (+-1) of the token's hash. JVM hashes each
+    token once; the 64-bit fold runs as one numpy unpack/sign-sum per
+    document (:func:`_simhash_fold_udf`) — 64 interpreted ``F.aggregate``
+    folds (:func:`simhash64_columns`, to which the xxhash64 output is
+    bit-identical, pinned by test) cost ~64 x n_tokens lambda evals per
+    row.
+
+    ``hash_family``: ``"xxhash64"`` (the production fast path) or
+    ``"md5"`` — the engine-portable variant (token hash = first 16 hex
+    chars of md5, bits 63..60 in the first hex char) whose every
+    signature a DuckDB oracle reproduces bit-for-bit (q_simhash_md5)."""
+    token_hash, decode = _hash_family(hash_family)
+    return _simhash_fold_udf(decode)(F.transform(tokens(text_col), token_hash))
 
 
 def simhash64_columns(text_col: Column) -> Column:
@@ -1417,11 +1319,7 @@ def ngram_jaccard_pairs(
     index (explode + equi-join on shingle, count shared, |A∪B| from set
     sizes). Quadratic in the worst case — use on candidate sets or small
     partitions; serves as ground truth for the LSH family."""
-    # no size filter — vacuous and pushdown-hostile, see _shingled
-    base = _spread(df).select(
-        F.col(id_col).alias("id"),
-        char_ngrams(F.col(text_col), shingle_n).alias("shingles"),
-    )
+    base = _shingled(df, id_col, text_col, shingle_n)
     sizes = base.select("id", F.size("shingles").alias("n_sh"))
     inv = base.select("id", F.explode("shingles").alias("sh"))
     shared = (

@@ -68,28 +68,37 @@ def test_minhash_md5_pairs_match_xxhash_pairs(corpus):
     verification gates both, so any divergence is a real bug in the
     signature math (recall at 128/32 is ~1-5e-8 for both)."""
     kw = dict(shingle_n=5, num_hashes=128, bands=32, threshold=0.8)
-    xx = dedup.minhash_signatures_df(corpus, "doc_id", "text", **kw_sig(kw))
-    md = dedup.minhash_signatures_md5_df(corpus, "doc_id", "text", **kw_sig(kw))
-    pairs_xx = {
-        (r["id_a"], r["id_b"], r["jaccard"])
-        for r in dedup.minhash_lsh_pairs_from_sigs(
-            xx, corpus, "doc_id", "text", **kw
-        ).collect()
+    pairs = {
+        fam: {
+            (r["id_a"], r["id_b"], r["jaccard"])
+            for r in dedup.minhash_lsh_pairs_from_sigs(
+                dedup.minhash_signatures_df(
+                    corpus, "doc_id", "text", shingle_n=5, num_hashes=128,
+                    hash_family=fam,
+                ),
+                corpus, "doc_id", "text", **kw,
+            ).collect()
+        }
+        for fam in ("xxhash64", "md5")
     }
-    pairs_md = {
-        (r["id_a"], r["id_b"], r["jaccard"])
-        for r in dedup.minhash_lsh_pairs_from_sigs(
-            md, corpus, "doc_id", "text", **kw
-        ).collect()
-    }
-    assert pairs_xx == pairs_md
+    assert pairs["xxhash64"] == pairs["md5"]
     assert {(i, 100 + i) for i in range(5)} <= {
-        (a, b) for a, b, _ in pairs_md
+        (a, b) for a, b, _ in pairs["md5"]
     }
 
 
-def kw_sig(kw):
-    return {k: kw[k] for k in ("shingle_n", "num_hashes")}
+def test_unknown_hash_family_raises_before_any_job(spark, corpus):
+    """An unknown hash_family fails while the query is BUILT — a
+    ValueError from both sketch entry points, and no Spark job runs."""
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    with pytest.raises(ValueError, match="hash_family"):
+        dedup.minhash_signatures_df(
+            corpus, "doc_id", "text", hash_family="sha1"
+        )
+    with pytest.raises(ValueError, match="hash_family"):
+        dedup.simhash64(F.col("text"), hash_family="sha1")
+    assert set(tracker.getJobIdsForGroup()) == before
 
 
 def test_minhash_incremental_pairs_match_full(corpus):
@@ -779,7 +788,8 @@ def test_simhash_md5_hamming_tracks_similarity(corpus):
     sigs = {
         r["doc_id"]: r["sig"]
         for r in corpus.select(
-            "doc_id", dedup.simhash64_md5(F.col("text")).alias("sig")
+            "doc_id",
+            dedup.simhash64(F.col("text"), hash_family="md5").alias("sig"),
         ).collect()
     }
 

@@ -402,25 +402,17 @@ def test_pandas_udf_gram_inputs_survive_repeated_queries(spark):
 
     sf = "/root/testdata/sf0.001"
 
-    def sig_rows():
-        d = spark.read.parquet(f"{sf}/documents.parquet").limit(20)
+    def sig_rows(hash_family, n):
+        d = spark.read.parquet(f"{sf}/documents.parquet").limit(n)
         return sorted(
             (r["id"], tuple(r["sig"]))
-            for r in dedup.minhash_signatures_df(d, "doc_id", "text").collect()
-        )
-
-    assert sig_rows() == sig_rows()
-
-    def md5_sig_rows():
-        d = spark.read.parquet(f"{sf}/documents.parquet").limit(10)
-        return sorted(
-            (r["id"], tuple(r["sig"]))
-            for r in dedup.minhash_signatures_md5_df(
-                d, "doc_id", "text"
+            for r in dedup.minhash_signatures_df(
+                d, "doc_id", "text", hash_family=hash_family
             ).collect()
         )
 
-    assert md5_sig_rows() == md5_sig_rows()
+    for hash_family, n in (("xxhash64", 20), ("md5", 10)):
+        assert sig_rows(hash_family, n) == sig_rows(hash_family, n)
 
     def winnow_rows():
         d = spark.read.parquet(f"{sf}/documents.parquet").limit(10)
