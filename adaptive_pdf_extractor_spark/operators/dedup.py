@@ -479,6 +479,72 @@ def minhash_lsh_pairs_incremental(
     )
 
 
+def _guard_split(
+    buck: DataFrame,
+    keys: list[str],
+    max_bucket_size: int,
+    observation=None,
+    carry: tuple[str, ...] = (),
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The mega-cluster guard of the LSH pair stages (minhash, simhash,
+    embedding): splits a bucketed frame ``buck`` (one row per member and
+    bucket: ``id``, the bucket ``keys``, payload) at ``max_bucket_size``.
+
+    A template cluster of m near-identical items (exact dedup does NOT
+    catch near-identical) lands all m in the same buckets, and a
+    within-bucket self-join emits O(m²) candidate pairs — at web scale m
+    can be 10⁶⁺, the one quadratic regime of the bucketed formulation.
+    One window over ``keys`` sizes every bucket; returns
+    ``(small, star, flood_ids)``:
+
+    * ``small`` — the rows of buckets at or under the cap, with
+      ``buck``'s columns: the stage's exact all-pairs path. With no
+      oversized bucket it is all of ``buck``, so the guarded output is
+      identical to the unguarded one.
+    * ``star`` — one STAR edge per member of an oversized bucket:
+      ``(id_a = bucket-min id, id_b = member, <c>_a, <c>_b for c in
+      carry)``. O(m) candidates per oversized bucket, connectivity-
+      preserving for the clustering consumer. ``carry`` rides the
+      bucket-min through ``min(struct(id, *carry))`` (struct ordering
+      compares the unique id first), so a stage verifies star edges on
+      its payload without a join back. Every stage still verifies star
+      edges exactly, so the guard never ADDS a false pair; it can only
+      omit non-spanning-tree pairs BETWEEN members of an oversized bucket
+      (callers consuming raw pairs per pair, not as a graph, should size
+      the cap above their largest expected true cluster).
+    * ``flood_ids`` — distinct ids in some oversized bucket.
+
+    With an ``observation``, ``star_candidate_rows`` (0 when no bucket
+    was oversized) and ``max_oversized_bucket`` arrive at
+    ``observation.get`` after the query's first action — the production
+    signal that a corpus is in the template-flood regime. The observed
+    frame is ``star``, so the stage must consume it exactly once
+    (``flood_ids`` comes from the sized frame for that reason)."""
+    from pyspark.sql.window import Window
+
+    wb = Window.partitionBy(*keys)
+    sized = buck.withColumn("_bsz", F.count("*").over(wb)).withColumn(
+        "_bmin", F.min(F.struct("id", *carry)).over(wb)
+    )
+    over = F.col("_bsz") > max_bucket_size
+    small = sized.filter(~over).select(*buck.columns)
+    star = sized.filter(over & (F.col("id") != F.col("_bmin.id"))).select(
+        F.col("_bmin.id").alias("id_a"),
+        F.col("id").alias("id_b"),
+        *[F.col(f"_bmin.{c}").alias(f"{c}_a") for c in carry],
+        *[F.col(c).alias(f"{c}_b") for c in carry],
+        "_bsz",
+    )
+    if observation is not None:
+        star = star.observe(
+            observation,
+            F.count("*").alias("star_candidate_rows"),
+            F.max("_bsz").alias("max_oversized_bucket"),
+        )
+    flood_ids = sized.filter(over).select("id").distinct()
+    return small, star.drop("_bsz"), flood_ids
+
+
 def minhash_lsh_pairs_from_sigs(
     sigs_df: DataFrame,
     docs: DataFrame,
@@ -509,33 +575,17 @@ def minhash_lsh_pairs_from_sigs(
     eager count at plan build); without it the plan stays fully lazy and
     single-action.
 
-    **Mega-cluster guard** (``max_bucket_size``): a template cluster of m
-    near-identical documents (exact dedup does NOT catch near-identical)
-    lands all m in the same band buckets, and the within-bucket self-join
-    emits O(m²) candidate pairs — at web scale m can be 10⁶⁺, the one
-    quadratic regime of the banded formulation. With ``max_bucket_size``
-    set, buckets larger than the cap switch from all-pairs to STAR edges
-    (bucket-min id -> member): O(m) candidates per oversized bucket,
-    connectivity-preserving for the clustering consumer. Star edges
-    bypass the >=2-band evidence cut (an oversized full-band collision is
+    ``max_bucket_size`` is the mega-cluster guard (:func:`_guard_split`,
+    which also documents ``observation``'s metrics): a band bucket larger
+    than the cap emits star edges instead of all pairs. Star edges bypass
+    the >=2-band evidence cut (an oversized full-band collision is
     already overwhelming evidence) but still pass the signature prefilter
-    and the exact-Jaccard verification, so the guard never ADDS a false
-    pair — it can only omit non-spanning-tree pairs BETWEEN members of
-    oversized buckets (callers consuming raw pairs per-pair, not as a
-    graph, should size the cap above their largest expected true
-    cluster). Pairs whose band evidence is SPLIT between small and
-    oversized buckets are not lost: the >=min_bands cut relaxes to one
-    band for pairs with BOTH endpoints in oversized buckets (co-occupying
-    one is what makes collisions invisible to the count, and it implies
-    both ids are flood members), and exact verification still gates the
-    output. With no oversized bucket the
-    guarded path's output is identical to the unguarded path's.
-
-    Pass a ``pyspark.sql.Observation`` as ``observation`` for the loud
-    metric: ``star_candidate_rows`` (0 when no bucket was oversized) and
-    ``max_oversized_bucket`` arrive at ``observation.get`` after the
-    query's first action — the production signal that a corpus is in the
-    template-flood regime.
+    and the exact-Jaccard verification. Pairs whose band evidence is
+    SPLIT between small and oversized buckets are not lost: the
+    >=min_bands cut relaxes to one band for pairs with BOTH endpoints in
+    oversized buckets (co-occupying one is what makes collisions
+    invisible to the count, and it implies both ids are flood members),
+    and exact verification still gates the output.
 
     NOTE: with BOTH ``max_bucket_size`` and ``persist_sigs`` set, this
     function EAGERLY materializes the signature cache (one count job at
@@ -571,66 +621,42 @@ def minhash_lsh_pairs_from_sigs(
     # count-based cut happens BEFORE any data is joined to the pairs, so
     # the million-candidate shuffle carries only (id, id) + a count.
     min_bands = 2 if bands >= 8 else 1
-    if max_bucket_size is None:
-        cand = (
-            banded.alias("x")
-            .join(banded.alias("y"), ["band", "bucket"])
-            .filter(F.col("x.id") < F.col("y.id"))
-            .groupBy(F.col("x.id").alias("id_a"), F.col("y.id").alias("id_b"))
-            .count()
-            .filter(F.col("count") >= min_bands)
-            .select("id_a", "id_b")
+    small, star = banded, None
+    if max_bucket_size is not None:
+        small, star, flood_ids = _guard_split(
+            banded, ["band", "bucket"], max_bucket_size, observation
         )
+    counted = (
+        small.alias("x")
+        .join(small.alias("y"), ["band", "bucket"])
+        .filter(F.col("x.id") < F.col("y.id"))
+        .groupBy(F.col("x.id").alias("id_a"), F.col("y.id").alias("id_b"))
+        .count()
+    )
+    if star is None:
+        cand = counted.filter(F.col("count") >= min_bands).select("id_a", "id_b")
     else:
-        from pyspark.sql.window import Window
-
-        # one shuffle on (band, bucket) annotates every banded row with
-        # its bucket's size and min id; buckets under the cap take the
-        # exact all-pairs path, oversized ones emit O(m) star edges
-        wb = Window.partitionBy("band", "bucket")
-        sized = banded.withColumn("_bsz", F.count("*").over(wb)).withColumn(
-            "_bmin", F.min("id").over(wb)
-        )
-        small = sized.filter(F.col("_bsz") <= max_bucket_size).select(
-            "id", "band", "bucket"
-        )
-        small_counted = (
-            small.alias("x")
-            .join(small.alias("y"), ["band", "bucket"])
-            .filter(F.col("x.id") < F.col("y.id"))
-            .groupBy(F.col("x.id").alias("id_a"), F.col("y.id").alias("id_b"))
-            .count()
-        )
         # Evidence dilution: a true pair's band collisions inside
         # OVERSIZED buckets are invisible to this count (those buckets
         # emit star edges, not pairs), so a pair with one small-bucket
         # collision plus flood-bucket co-membership would miss the
         # >=min_bands cut that the unguarded path would have passed.
         # Relax the cut to 1 band for co-flood pairs — BOTH endpoints in
-        # some oversized bucket: a hidden collision means the pair
-        # CO-OCCUPIED an oversized bucket, which puts both ids in
-        # big_ids, so every pair whose evidence the guard could have
-        # diluted is covered; the signature prefilter + exact verify
-        # still reject every false positive, and the relaxation is empty
-        # (bit-identical path) when no bucket is oversized.
-        big_ids = (
-            sized.filter(F.col("_bsz") > max_bucket_size)
-            .select("id")
-            .distinct()
-        )
-        # ONE pass over small_counted (it holds the expensive self-join +
-        # groupBy — consuming it per-branch re-executed that subtree and
-        # measured 2x on the curation bench): two left joins attach
-        # endpoint-in-oversized-bucket flags, one filter applies the
-        # possibly-relaxed cut. BOTH flags must be set: a hidden collision
-        # means the pair CO-OCCUPIED an oversized bucket, which puts both
-        # endpoints in big_ids — requiring only one would keep every
-        # 1-band noise pair that merely touches a flood member, exactly
-        # the volume the min_bands cut exists to drop.
-        bia = big_ids.select(F.col("id").alias("id_a"), F.lit(True).alias("_ba"))
-        bib = big_ids.select(F.col("id").alias("id_b"), F.lit(True).alias("_bb"))
+        # flood_ids: a hidden collision means the pair CO-OCCUPIED an
+        # oversized bucket, so every pair whose evidence the guard could
+        # have diluted is covered; requiring only one endpoint would keep
+        # every 1-band noise pair that merely touches a flood member,
+        # exactly the volume the min_bands cut exists to drop. The
+        # signature prefilter + exact verify still reject every false
+        # positive, and the relaxation is empty when no bucket is
+        # oversized. ONE pass over counted (it holds the expensive
+        # self-join + groupBy — consuming it per branch re-executed that
+        # subtree and measured 2x on the curation bench): two left joins
+        # attach the endpoint flags, one filter applies the cut.
+        bia = flood_ids.select(F.col("id").alias("id_a"), F.lit(True).alias("_ba"))
+        bib = flood_ids.select(F.col("id").alias("id_b"), F.lit(True).alias("_bb"))
         small_pairs = (
-            small_counted.join(bia, "id_a", "left")
+            counted.join(bia, "id_a", "left")
             .join(bib, "id_b", "left")
             .filter(
                 (F.col("count") >= min_bands)
@@ -638,21 +664,10 @@ def minhash_lsh_pairs_from_sigs(
             )
             .select("id_a", "id_b")
         )
-        big = sized.filter(
-            (F.col("_bsz") > max_bucket_size) & (F.col("id") != F.col("_bmin"))
-        ).select(
-            F.col("_bmin").alias("id_a"), F.col("id").alias("id_b"), "_bsz"
-        )
-        if observation is not None:
-            big = big.observe(
-                observation,
-                F.count("*").alias("star_candidate_rows"),
-                F.max("_bsz").alias("max_oversized_bucket"),
-            )
         # distinct over the union: the same pair can arise as a small-
         # bucket pair in one band and a star edge in another — verifying
         # it twice would emit duplicate output rows
-        cand = small_pairs.unionByName(big.drop("_bsz")).distinct()
+        cand = small_pairs.unionByName(star).distinct()
 
     return _verified_pairs(
         cand,
@@ -920,11 +935,10 @@ def simhash_pairs(
     toward 1 while cost stays ~n_rotations buckets per row. Pairs dedupe as
     bare ids before the (verified, exact) hamming filter.
 
-    ``max_bucket_size`` is the mega-cluster guard (same contract as
-    ``minhash_lsh_pairs_from_sigs``): a prefix bucket larger than the cap
-    emits star edges (bucket-min -> member, still exact-hamming-verified)
-    instead of O(m²) all-pairs; ``observation`` receives
-    ``star_candidate_rows`` / ``max_oversized_bucket``."""
+    ``max_bucket_size`` is the mega-cluster guard (:func:`_guard_split`,
+    with ``observation``): a prefix bucket larger than the cap emits star
+    edges, which carry both signatures and pass the same exact hamming
+    filter."""
     sigs = _spread(df).select(
         F.col(id_col).alias("id"), simhash64(F.col(text_col)).alias("sig")
     )
@@ -950,42 +964,16 @@ def simhash_pairs(
     buck = sigs.select(
         "id", "sig", F.explode(F.array(*rot_buckets)).alias("rb")
     ).select("id", "sig", "rb.rot", "rb.bucket")
+    small, star = buck, None
     if max_bucket_size is not None:
-        from pyspark.sql.window import Window
-
-        wb = Window.partitionBy("rot", "bucket")
-        # struct-min carries the bucket-min's SIGNATURE atomically with
-        # its id (struct ordering compares id first), so star edges can
-        # compute their exact hamming without a join back to sigs
-        sized = buck.withColumn("_bsz", F.count("*").over(wb)).withColumn(
-            "_bmin", F.min(F.struct("id", "sig")).over(wb)
+        small, star, _ = _guard_split(
+            buck, ["rot", "bucket"], max_bucket_size, observation, carry=("sig",)
         )
-        small = sized.filter(F.col("_bsz") <= max_bucket_size).select(
-            "id", "sig", "rot", "bucket"
+        star = star.select(
+            "id_a",
+            "id_b",
+            F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b"))).alias("hamming"),
         )
-        big = sized.filter(
-            (F.col("_bsz") > max_bucket_size)
-            & (F.col("id") != F.col("_bmin.id"))
-        ).select(
-            F.col("_bmin.id").alias("id_a"),
-            F.col("id").alias("id_b"),
-            F.bit_count(
-                F.col("_bmin.sig").bitwiseXOR(F.col("sig"))
-            ).alias("hamming"),
-            "_bsz",
-        )
-        if observation is not None:
-            big = big.observe(
-                observation,
-                F.count("*").alias("star_candidate_rows"),
-                F.max("_bsz").alias("max_oversized_bucket"),
-            )
-        star = (
-            big.drop("_bsz")
-            .filter(F.col("hamming") <= max_hamming)
-        )
-    else:
-        small, star = buck, None
     x, y = small.alias("x"), small.alias("y")
     hamming = F.bit_count(F.col("x.sig").bitwiseXOR(F.col("y.sig")))
     pairs = (
@@ -996,11 +984,10 @@ def simhash_pairs(
             F.col("y.id").alias("id_b"),
             hamming.alias("hamming"),
         )
-        .filter(F.col("hamming") <= max_hamming)
     )
     if star is not None:
         pairs = pairs.unionByName(star)
-    return pairs.distinct()
+    return pairs.filter(F.col("hamming") <= max_hamming).distinct()
 
 
 # ---------------------------------------------------------------------------

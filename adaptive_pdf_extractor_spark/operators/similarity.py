@@ -274,7 +274,7 @@ def train_ivf_centroids(
 ):
     """k-means centroids trained on a deterministic hash-sample of the
     corpus (driver-side numpy Lloyd iterations — centroids are KB-scale;
-    the corpus-sized work stays distributed in :func:`ivf_assign`).
+    the corpus-sized work stays distributed in :func:`ivf_probe_assign`).
 
     Returns a list[list[float]] of L2-normalized centroids."""
     import numpy as np
@@ -336,30 +336,6 @@ def train_ivf_centroids(
     return [[float(v) for v in c] for c in cent]
 
 
-def ivf_assign(df: DataFrame, id_col: str, vec_col: str, centroids) -> DataFrame:
-    """Distributed bucket assignment: one Arrow-batched numpy matmul per
-    batch (rows x centroids). Adds an ``_ivf`` bucket column."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import functions as F
-    from pyspark.sql.pandas.functions import pandas_udf
-
-    cent = np.array(centroids, dtype=np.float64).T  # dim x k
-
-    def assign(vecs):
-        out = []
-        for batch_start in range(0, len(vecs), 4096):
-            chunk = vecs.iloc[batch_start : batch_start + 4096]
-            m = np.array(list(chunk), dtype=np.float64)
-            m /= np.linalg.norm(m, axis=1, keepdims=True) + 1e-12
-            out.extend((m @ cent).argmax(axis=1).tolist())
-        return pd.Series(out, dtype="int32")
-
-    assign.__annotations__ = {"vecs": pd.Series, "return": pd.Series}
-    udf = pandas_udf("int")(assign)
-    return df.withColumn("_ivf", udf(F.col(vec_col)))
-
-
 def ivf_topk(
     df: DataFrame,
     id_col: str,
@@ -386,8 +362,9 @@ def ivf_topk(
     q = np.array(query_vec, dtype=np.float64)
     q = q / (np.linalg.norm(q) + 1e-12)
     order = (cent @ q).argsort()[::-1][:nprobe]
-    assigned = ivf_assign(df, id_col, vec_col, centroids)
-    probed = assigned.filter(F.col("_ivf").isin([int(c) for c in order]))
+    probed = ivf_probe_assign(df, vec_col, centroids, 1).filter(
+        F.col("_probes")[0].isin([int(c) for c in order])
+    )
     return brute_force_topk(probed, id_col, vec_col, query_vec, k)
 
 
@@ -395,9 +372,10 @@ def ivf_probe_assign(
     df: DataFrame, vec_col: str, centroids, nprobe: int
 ) -> DataFrame:
     """Adds ``_probes``: the ``nprobe`` nearest centroid ids per vector
-    (one Arrow-batched numpy matmul + argpartition per batch) — the query
-    side of the IVF join; :func:`ivf_assign`'s argmax is the special case
-    nprobe=1 on the corpus side."""
+    (one Arrow-batched numpy matmul + stable argsort per batch) — the
+    query side of the IVF join. ``nprobe=1`` is the corpus side's bucket
+    assignment: a stable argsort's first entry is the argmax centroid,
+    ties included (lowest id)."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import functions as F
@@ -440,27 +418,26 @@ def knn_join_ivf(
     vectors in its ``nprobe`` probed buckets instead of the whole corpus —
     the composition :func:`knn_join`'s docstring promises for large query
     batches. Corpus side: one bucket per vector (argmax centroid,
-    :func:`ivf_assign`). Query side: ``nprobe`` buckets per vector,
-    exploded and broadcast. The bucket equi-join replaces the cross join,
-    so the per-query candidate set (and the row_number window's shuffle)
-    shrinks ~n_centroids/nprobe-fold vs exact.
+    :func:`ivf_probe_assign` with ``nprobe=1``). Query side: ``nprobe``
+    buckets per vector, exploded and broadcast. The bucket equi-join
+    replaces the cross join, so the per-query candidate set (and the
+    row_number window's shuffle) shrinks ~n_centroids/nprobe-fold vs
+    exact.
 
     With ``nprobe >= n_centroids`` every bucket is probed and the result
     equals :func:`knn_join` exactly (each corpus vector lives in exactly
     one bucket) — the equality pin tests use this. Approximate otherwise;
     recall-vs-exact is tested."""
-    from pyspark.sql.window import Window
-
     from .dedup import _spread
 
     if centroids is None:
         centroids = train_ivf_centroids(
             corpus, vec_col, n_centroids=n_centroids, seed=seed
         )
-    assigned = ivf_assign(_spread(corpus), id_col, vec_col, centroids).select(
+    assigned = ivf_probe_assign(_spread(corpus), vec_col, centroids, 1).select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).cast("array<double>").alias("cvec"),
-        "_ivf",
+        F.col("_probes")[0].alias("_ivf"),
     )
     qx = (
         ivf_probe_assign(queries, vec_col, centroids, nprobe)
@@ -470,27 +447,7 @@ def knn_join_ivf(
             F.explode("_probes").alias("_ivf"),
         )
     )
-    # candidate scoring is corpus-scaled (pruned, but still O(|corpus| x
-    # nprobe / n_centroids) pairs) -> Arrow/numpy batch cosine, not the
-    # interpreted zip_with/aggregate folds (those stay the spec in
-    # :func:`cosine`; agreement inside round-6 pinned by the full-probe ==
-    # exact test)
-    cos = cosine_pairs_np()(F.col("cvec"), F.col("qvec"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("_cos"), F.asc("neighbor_id")
-    )
-    return (
-        assigned.join(F.broadcast(qx), "_ivf")
-        .withColumn("_cos", cos)
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "rk",
-            F.round(F.col("_cos"), 6).alias("cosine"),
-        )
-    )
+    return _knn_ranked(assigned.join(F.broadcast(qx), "_ivf"), k)
 
 
 def knn_join(
@@ -510,8 +467,6 @@ def knn_join(
     query set; for large query batches over a huge corpus use
     :func:`knn_join_ivf`, which prunes each query's candidates to its
     probed IVF buckets before the window."""
-    from pyspark.sql.window import Window
-
     from .dedup import _spread
 
     q = queries.select(
@@ -524,18 +479,25 @@ def knn_join(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).cast("array<double>").alias("cvec"),
     )
-    # pair scoring is |corpus| x |queries|-sized -> Arrow/numpy batch
-    # cosine, not the interpreted zip_with/aggregate Column folds (those
-    # stay the executable spec in :func:`cosine`; agreement inside the
-    # round-6 output is pinned by the DuckDB oracle and the full-probe ==
-    # exact test, same as knn_join_ivf)
-    cos = cosine_pairs_np()(F.col("cvec"), F.col("qvec"))
+    return _knn_ranked(c.crossJoin(F.broadcast(q)), k)
+
+
+def _knn_ranked(pairs: DataFrame, k: int) -> DataFrame:
+    """The ranking tail of :func:`knn_join` and :func:`knn_join_ivf` over
+    candidate ``(neighbor_id, cvec, query_id, qvec)`` rows: cosine, then a
+    ``row_number`` window per query with a deterministic id tiebreak,
+    then the top ``k``. Candidate scoring is corpus-scaled, so the cosine
+    is the Arrow/numpy batch kernel, not the interpreted zip_with/aggregate
+    Column folds (those stay the executable spec in :func:`cosine`;
+    agreement is pinned by the DuckDB oracle and the full-probe == exact
+    test)."""
+    from pyspark.sql.window import Window
+
     w = Window.partitionBy("query_id").orderBy(
         F.desc("_cos"), F.asc("neighbor_id")
     )
     return (
-        c.crossJoin(F.broadcast(q))
-        .withColumn("_cos", cos)
+        pairs.withColumn("_cos", cosine_pairs_np()(F.col("cvec"), F.col("qvec")))
         .withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= k)
         .select(
@@ -633,19 +595,15 @@ def embedding_neardup_pairs(
       (corpus-LINEAR payload) and the scoring is one BLAS pass per
       bucket. Guide §2.3/§4.2: shuffle the linear thing, batch the math.
 
-    ``max_bucket_size`` is the mega-cluster guard (same contract as
-    ``dedup.minhash_lsh_pairs_from_sigs``): a sign bucket larger than the
-    cap emits star candidates (bucket-min -> member) instead of O(m²)
-    all-pairs — a cluster of m near-identical embeddings otherwise floods
-    the bucket scoring. Star candidates carry the bucket-min's vector via
-    a struct-min window (no join back) and still pass the exact cosine
-    verification, so no false pair is ever added; ``observation`` receives
-    ``star_candidate_rows`` / ``max_oversized_bucket``. Under-cap buckets
-    score bit-identically to the unguarded path (same kernel, same
-    groups — pinned in tests)."""
+    ``max_bucket_size`` is the mega-cluster guard
+    (:func:`dedup._guard_split`, with ``observation``): a sign bucket
+    larger than the cap emits star candidates, which carry both vectors
+    and pass the exact cosine verification. Under-cap buckets score
+    bit-identically to the unguarded path (same kernel, same groups —
+    pinned in tests)."""
     # _spread first: a small parquet input arrives as ONE partition and
     # would run the bucket matmul / pair dots on a single core.
-    from .dedup import _spread
+    from .dedup import _guard_split, _spread
 
     if n_planes > 0:
         base = _spread(df).select(
@@ -664,51 +622,22 @@ def embedding_neardup_pairs(
             "vec",
             F.posexplode(bucket_udf(F.col("vec"))).alias("tab", "bucket"),
         )
-        score_fn = _bucket_cosine_pairs_fn(threshold)
+        small, star = buck, None
         if max_bucket_size is not None:
-            from pyspark.sql.window import Window
-
-            # struct-min carries the bucket-min's VECTOR atomically with
-            # its id (struct ordering compares id first — ids are unique,
-            # the vec field never compares), so star edges score without
-            # a join back to the corpus (the simhash guard's trick).
-            wb = Window.partitionBy("tab", "bucket")
-            sized = buck.withColumn("_bsz", F.count("*").over(wb)).withColumn(
-                "_bmin", F.min(F.struct("id", "vec")).over(wb)
+            small, star, _ = _guard_split(
+                buck, ["tab", "bucket"], max_bucket_size, observation,
+                carry=("vec",),
             )
-            small = sized.filter(F.col("_bsz") <= max_bucket_size).select(
-                "id", "vec", "tab", "bucket"
-            )
-            small_scored = small.groupBy("tab", "bucket").applyInPandas(
-                score_fn, schema=out_schema
-            )
-            big = sized.filter(
-                (F.col("_bsz") > max_bucket_size)
-                & (F.col("id") != F.col("_bmin.id"))
-            ).select(
-                F.col("_bmin.id").alias("id_a"),
-                F.col("_bmin.vec").alias("vec_a"),
-                F.col("id").alias("id_b"),
-                F.col("vec").alias("vec_b"),
-                "_bsz",
-            )
-            if observation is not None:
-                big = big.observe(
-                    observation,
-                    F.count("*").alias("star_candidate_rows"),
-                    F.max("_bsz").alias("max_oversized_bucket"),
-                )
-            star_scored = (
-                big.withColumn(
+        scored = small.groupBy("tab", "bucket").applyInPandas(
+            _bucket_cosine_pairs_fn(threshold), schema=out_schema
+        )
+        if star is not None:
+            scored = scored.unionByName(
+                star.withColumn(
                     "_cos", cosine_pairs_np()(F.col("vec_a"), F.col("vec_b"))
                 )
                 .filter(F.col("_cos") >= threshold)
                 .select("id_a", "id_b", "_cos")
-            )
-            scored = small_scored.unionByName(star_scored)
-        else:
-            scored = buck.groupBy("tab", "bucket").applyInPandas(
-                score_fn, schema=out_schema
             )
         # the same pair can surface in several buckets (and as both a
         # small pair and a star edge under the guard); one aggregate

@@ -21,6 +21,43 @@ from ..operators import dedup
 from .checkpoint import RunManifest
 
 
+def _gate(
+    docs: DataFrame,
+    decontaminate_against: DataFrame | None,
+    decon_n: int,
+) -> DataFrame:
+    """The curation gate of :func:`curation_pipeline` and
+    :func:`curate_increment`: quality >= 0.5, then the optional
+    decontamination anti-join, then exact dedup (min-id keeper per
+    fingerprint). ONE definition: curate_increment's exactness contract
+    holds only while both paths gate identically."""
+    scored = docs.withColumn("quality", T.quality_score(F.col("text")))
+    kept = scored.filter(F.col("quality") >= 0.5)
+    if decontaminate_against is not None:
+        flagged = dedup.decontaminate(
+            kept, decontaminate_against, "doc_id", "text", n=decon_n
+        )
+        kept = kept.join(
+            flagged.filter(F.col("contaminated")).select(
+                F.col("id").alias("doc_id")
+            ),
+            "doc_id",
+            "left_anti",
+        )
+    return dedup.exact_dedup_keep(kept, "doc_id", "text")
+
+
+def _stats(kept: DataFrame, keep: DataFrame) -> DataFrame:
+    """Gated docs joined to their ``(doc_id, cluster_size)`` keepers, as
+    the curated ``(doc_id, cluster_size, n_tokens, quality)``."""
+    return kept.join(keep, "doc_id").select(
+        "doc_id",
+        "cluster_size",
+        T.token_count(F.col("text")).cast("long").alias("n_tokens"),
+        "quality",
+    )
+
+
 def curation_pipeline(
     docs: DataFrame,
     pair_fn,
@@ -37,27 +74,13 @@ def curation_pipeline(
 
     ``decontaminate_against``: an eval-set frame (``text`` column) —
     quality-passing docs sharing ``decon_n``-token n-grams with it are
-    dropped before dedup (broadcast membership, anti-join on flagged
-    ids; see dedup.decontaminate for the plan shape)."""
+    dropped before dedup (see dedup.decontaminate for the plan shape)."""
     # Spread before the quality gate: the regex bank is compute-bound per
     # row and a small parquet input arrives as 1-2 splits (measured 23 s
     # on 2 cores vs 10.6 s spread for 100k docs at sf1.0 — the same
     # idle-core trap as dedup._spread, which only kicks in later, inside
     # the pair stage).
-    docs = dedup._spread(docs)
-    scored = docs.withColumn("quality", T.quality_score(F.col("text")))
-    kept = scored.filter(F.col("quality") >= 0.5)
-    if decontaminate_against is not None:
-        flagged = dedup.decontaminate(
-            kept, decontaminate_against, "doc_id", "text", n=decon_n
-        )
-        kept = kept.join(
-            flagged.filter(F.col("contaminated")).select(
-                F.col("id").alias("doc_id")
-            ),
-            "doc_id",
-            "left_anti",
-        )
+    #
     # Cache: kept feeds THREE consumers (the pair stage, the cluster id
     # set, and the final stats join) — without this the quality-score
     # regex bank and the dedup agg re-run per consumer (measured 2.6x on
@@ -69,7 +92,7 @@ def curation_pipeline(
     # 2x vs an eager localCheckpoint, which re-executes per invocation.
     # Entry count is bounded by distinct source frames, session-scoped.
     # At true corpus scale this is a table write (same role).
-    kept = dedup.exact_dedup_keep(kept, "doc_id", "text").persist()
+    kept = _gate(dedup._spread(docs), decontaminate_against, decon_n).persist()
     pairs = pair_fn(kept)
     clusters = dedup.neardup_clusters(
         kept.select(F.col("doc_id").alias("id")), pairs
@@ -77,12 +100,7 @@ def curation_pipeline(
     canon = clusters.filter(
         F.col("doc_id") == F.col("canonical_id")
     ).select("doc_id", "cluster_size")
-    return kept.join(canon, "doc_id").select(
-        "doc_id",
-        "cluster_size",
-        T.token_count(F.col("text")).cast("long").alias("n_tokens"),
-        "quality",
-    )
+    return _stats(kept, canon)
 
 
 def curate_increment(
@@ -121,22 +139,9 @@ def curate_increment(
     cluster_size counts the NEW-only cluster, which equals the full
     graph's cluster for every KEPT doc (kept docs live in all-new
     clusters by the id-order argument)."""
-    scored = new_docs.withColumn("quality", T.quality_score(F.col("text")))
-    kept = scored.filter(F.col("quality") >= 0.5)
-    if decontaminate_against is not None:
-        flagged = dedup.decontaminate(
-            kept, decontaminate_against, "doc_id", "text", n=decon_n
-        )
-        kept = kept.join(
-            flagged.filter(F.col("contaminated")).select(
-                F.col("id").alias("doc_id")
-            ),
-            "doc_id",
-            "left_anti",
-        )
-    # exact dedup WITHIN the batch, then content-identity anti-join
+    # the gate runs WITHIN the batch, then a content-identity anti-join
     # against the old corpus (a re-ingested doc must not come back)
-    kept = dedup.exact_dedup_keep(kept, "doc_id", "text")
+    kept = _gate(new_docs, decontaminate_against, decon_n)
     old_fp = old_docs.select(
         T.doc_fingerprint_md5(F.col("text")).alias("fp")
     ).distinct()
@@ -188,12 +193,7 @@ def curate_increment(
         .join(tainted, "canonical_id", "left_anti")
         .select("doc_id", "cluster_size")
     )
-    return kept.join(keep, "doc_id").select(
-        "doc_id",
-        "cluster_size",
-        T.token_count(F.col("text")).cast("long").alias("n_tokens"),
-        "quality",
-    )
+    return _stats(kept, keep)
 
 
 def curation_run(

@@ -30,7 +30,7 @@ deterministic), so the loop terminates in <= max_rounds scans.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field as dc_field
+from dataclasses import dataclass
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -50,24 +50,32 @@ from ..sources import spark_io
 from .checkpoint import RunManifest
 
 
+# Miner acceptance: a mined rule must pass its checks on at least this
+# share of its examples; at most this many hash-smallest examples per
+# (label, field) reach the miner.
+MIN_PASS_RATE = 0.9
+MAX_EXAMPLES_PER_GROUP = 64
+# Corpus-driven anchor discovery (operators.miner.discover_label_anchors)
+# learns each field's rendered label from the documents instead of
+# assuming field.title(). It runs once, on this many hash-smallest
+# unresolved docs per label of the first round; discovered anchors persist
+# in the manifest so resumed runs replay identically.
+ANCHOR_SAMPLE_PER_LABEL = 128
+# strip_boilerplate: a text span is boilerplate when it recurs in at least
+# this share of its label's docs and in at least this many docs.
+BOILERPLATE_MIN_DOC_FRAC = 0.5
+BOILERPLATE_MIN_DOCS = 5
+
+
 @dataclass
 class PipelineConfig:
     max_rounds: int = 5            # reference max_attempts default (src/main.py:62-67)
-    min_pass_rate: float = 0.9
-    max_examples_per_group: int = 64
     # Fraction of unresolved docs shipped to the miner, selected by stable
     # doc_id hash (deterministic). At 10^12 docs the miner needs only a few
     # thousand examples per (label, field); everything else is wasted I/O.
     miner_sample_mod: int = 1      # 1 = all; K = ~1/K of unresolved docs
     num_partitions: Optional[int] = None
     direct_fallback: bool = True
-    # Corpus-driven anchor discovery (operators.miner.discover_label_anchors):
-    # learn each field's rendered label from the documents instead of
-    # assuming field.title(). Runs once, on a bounded per-label sample of
-    # the first round's unresolved docs; discovered anchors persist in the
-    # manifest so resumed runs replay identically.
-    discover_anchors: bool = True
-    anchor_sample_per_label: int = 128
     # Standalone keyword-contamination guard (miner.validate_no_other_keywords):
     # drop slow-path example values containing another field's keyword before
     # shape induction. Default OFF to match the reference, which defines the
@@ -79,9 +87,6 @@ class PipelineConfig:
     # Off by default: the reference parity corpora are boilerplate-free and
     # the stage must reduce to identity there (SURVEY §2.11).
     strip_boilerplate: bool = False
-    boilerplate_min_doc_frac: float = 0.5
-    boilerplate_min_docs: int = 5
-    extra: dict = dc_field(default_factory=dict)
 
 
 def aggregate_weights(rules_rows: list[dict], extracted: DataFrame) -> list[dict]:
@@ -149,7 +154,7 @@ class ExtractionPipeline:
 
     def _discover_anchors(self, extracted: DataFrame, docs: DataFrame) -> None:
         """One bounded pass of corpus-driven anchor discovery for labels not
-        yet covered: take the anchor_sample_per_label hash-smallest unresolved
+        yet covered: take the ANCHOR_SAMPLE_PER_LABEL hash-smallest unresolved
         docs per label (deterministic at any parallelism), broadcast-join
         their schema/expected metadata from ``docs`` (streams the big side,
         no shuffle of docs), and mine anchors per label group. Results are
@@ -173,7 +178,7 @@ class ExtractionPipeline:
         w = Window.partitionBy("label").orderBy(F.xxhash64("doc_id"), "doc_id")
         sample = (
             need.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= cfg.anchor_sample_per_label)
+            .filter(F.col("_rn") <= ANCHOR_SAMPLE_PER_LABEL)
             .drop("_rn")
         )
         meta_cols = [docs["doc_id"], docs["schema_fields"]]
@@ -196,7 +201,7 @@ class ExtractionPipeline:
         rows = (
             joined.groupBy("label")
             .applyInPandas(
-                make_discover_fn(max_texts=cfg.anchor_sample_per_label),
+                make_discover_fn(max_texts=ANCHOR_SAMPLE_PER_LABEL),
                 schema=ANCHOR_DDL,
             )
             .collect()
@@ -255,13 +260,13 @@ class ExtractionPipeline:
         )
         pairs = (
             pairs.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= cfg.max_examples_per_group)
+            .filter(F.col("_rn") <= MAX_EXAMPLES_PER_GROUP)
             .drop("_rn")
         )
         mined = pairs.groupBy("label", "field").applyInPandas(
             make_miner_fn(
-                min_pass_rate=cfg.min_pass_rate,
-                max_examples=cfg.max_examples_per_group,
+                min_pass_rate=MIN_PASS_RATE,
+                max_examples=MAX_EXAMPLES_PER_GROUP,
                 anchors=self._anchor_map(),
                 keyword_guard=cfg.keyword_guard,
             ),
@@ -332,8 +337,8 @@ class ExtractionPipeline:
             ).first()["n"] or 0
             docs = strip_boilerplate_spans(
                 docs,
-                min_doc_frac=cfg.boilerplate_min_doc_frac,
-                min_docs=cfg.boilerplate_min_docs,
+                min_doc_frac=BOILERPLATE_MIN_DOC_FRAC,
+                min_docs=BOILERPLATE_MIN_DOCS,
             )
         if cfg.num_partitions:
             docs = salted_repartition(docs, cfg.num_partitions)
@@ -388,9 +393,7 @@ class ExtractionPipeline:
                 try:
                     rules_rows = aggregate_weights(rules_rows, extracted)
                     metrics, lineage = self._round_metrics(extracted)
-                    if cfg.discover_anchors and not self.manifest.state.get(
-                        "anchor_discovery_done"
-                    ):
+                    if not self.manifest.state.get("anchor_discovery_done"):
                         # Anchors are template properties: one discovery pass
                         # over the first executed round's unresolved docs
                         # covers every label that will ever reach the miner

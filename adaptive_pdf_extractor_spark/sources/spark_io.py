@@ -108,11 +108,15 @@ def corpus_from_documents_df(
     spread, 50k docs) — the guide §2 idle-core trap. Per-id seeding
     makes the output independent of partitioning. ``partitions``
     overrides the spread target (callers that know the corpus size pass
-    a row-scaled value — tiny corpora over-schedule at 2x parallelism)."""
-    sc = docs_df.sparkSession.sparkContext
-    target = partitions or 2 * max(sc.defaultParallelism, 4)
-    if docs_df.rdd.getNumPartitions() < target:
-        docs_df = docs_df.repartition(target)
+    a row-scaled value — tiny corpora over-schedule at 2x parallelism)
+    and always repartitions: ``getNumPartitions()`` cannot see AQE's
+    post-shuffle coalescing, so only the default target trusts it."""
+    if partitions:
+        docs_df = docs_df.repartition(partitions)
+    else:
+        target = 2 * max(docs_df.sparkSession.sparkContext.defaultParallelism, 4)
+        if docs_df.rdd.getNumPartitions() < target:
+            docs_df = docs_df.repartition(target)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

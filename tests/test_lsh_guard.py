@@ -338,3 +338,52 @@ def test_minhash_guard_split_evidence_pair_survives(spark):
                    for a, b in pairs)
     # the flood itself stays connected through verified star edges
     assert sum(1 for a, b in pairs if a >= 1000 and b >= 1000) >= m - 1
+
+
+@pytest.mark.parametrize("stage", ["minhash", "simhash", "embedding"])
+def test_guard_telemetry_is_exact_on_identical_flood(spark, stage):
+    """Exact telemetry pin: m=100 members that hash identically fill ONE
+    bucket per band / rotation / table, so at cap 24 every bucket is
+    oversized and the guard emits exactly (m-1) star edges per bucket —
+    32 bands x 99 = 3,168 (minhash), 4 rotations x 99 = 396 (simhash),
+    3 tables x 99 = 297 (embedding) — counted once, and the output is
+    exactly the star around the min id."""
+    m, cap = 100, 24
+    obs = Observation(f"exact_{stage}")
+    if stage == "minhash":
+        sig = [i * 1000 + 7 for i in range(128)]
+        sigs_df = spark.createDataFrame(
+            [(i, sig) for i in range(m)], "id long, sig array<bigint>"
+        )
+        docs = _mega_docs(spark, m, partitions=4).withColumnRenamed(
+            "doc_id", "id"
+        )
+        pairs = dedup.minhash_lsh_pairs_from_sigs(
+            sigs_df, docs, "id", "text", bands=32, threshold=0.8,
+            persist_sigs=False, max_bucket_size=cap, observation=obs,
+        )
+        expected_rows = 32 * (m - 1)
+    elif stage == "simhash":
+        docs = spark.range(0, m, 1, 4).select(
+            F.col("id").alias("doc_id"), F.lit(BASE).alias("text")
+        )
+        pairs = dedup.simhash_pairs(
+            docs, "doc_id", "text", n_rotations=4,
+            max_bucket_size=cap, observation=obs,
+        )
+        expected_rows = 4 * (m - 1)
+    else:
+        vec = [0.25 * (d % 5) - 0.4 for d in range(16)]
+        docs = spark.createDataFrame(
+            [(i, vec) for i in range(m)], "vec_id long, embedding array<double>"
+        )
+        pairs = similarity.embedding_neardup_pairs(
+            docs, "vec_id", "embedding", threshold=0.95, n_planes=6,
+            n_tables=3, max_bucket_size=cap, observation=obs,
+        )
+        expected_rows = 3 * (m - 1)
+    got_pairs = sorted((r["id_a"], r["id_b"]) for r in pairs.collect())
+    got = obs.get
+    assert got["star_candidate_rows"] == expected_rows
+    assert got["max_oversized_bucket"] == m
+    assert got_pairs == [(0, i) for i in range(1, m)]
