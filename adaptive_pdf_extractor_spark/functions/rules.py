@@ -90,9 +90,10 @@ def execute_rule(rule_pattern: str, text: Optional[str]) -> Optional[str]:
 
     Returns the stripped first capture, ``""`` for an empty capture (null
     field), or ``None`` for no match / no capture group / bad regex / null
-    or empty input (Rule.apply gates falsy text — src/rule.py:44-45).
+    or empty input (Rule.apply gates falsy text — src/rule.py:44-45; a
+    pandas NaN counts as null).
     """
-    if not text or not rule_pattern:
+    if not text or not rule_pattern or not isinstance(text, str):
         return None
     pat = compile_cached(rule_pattern, re.DOTALL)
     if pat is None:
@@ -135,51 +136,23 @@ def first_match(rules: Iterable[Rule], text: Optional[str]) -> tuple[Optional[st
 
 
 # ---------------------------------------------------------------------------
-# Vectorized semantics (pandas / Arrow batches)
+# Batch form (pandas Series in, pandas Series out)
 # ---------------------------------------------------------------------------
 
 
 def apply_rules_vectorized(
     texts: pd.Series, rules: list[Rule]
 ) -> tuple[pd.Series, pd.Series]:
-    """First-match rule application over a batch of texts.
-
-    Each rule is applied with one vectorized ``Series.str.extract`` /
-    ``str.match`` pass over the rows still unresolved — the common case
-    (converged rule set) touches each row with the top-priority rule only.
+    """First-match rule application over a batch of texts: ``first_match``
+    per row, so the rule semantics live in one place.
 
     Returns ``(values, rule_ids)``: values is object-dtype with ``None`` for
     unresolved rows, ``""`` for validated empty captures; rule_ids is int64
     with ``-1`` for unresolved.
     """
-    n = len(texts)
-    values = pd.Series([None] * n, index=texts.index, dtype="object")
-    rule_ids = pd.Series([-1] * n, index=texts.index, dtype="int64")
-    # Rule.apply gates falsy text (src/rule.py:44-45)
-    unresolved = texts.notna() & (texts != "")
-
-    for r in rules:
-        if not unresolved.any():
-            break
-        pat = compile_cached(r.rule, re.DOTALL)
-        if pat is None or pat.groups < 1:
-            continue
-        vpat = compile_cached(r.validation_regex, 0)
-        if vpat is None:
-            continue
-        sub = texts[unresolved]
-        # str.extract uses pat.search; group 1 == first column.
-        extracted = sub.str.extract(pat, expand=True).iloc[:, 0]
-        got = extracted.notna()
-        if not got.any():
-            continue
-        cand = extracted[got].str.strip()  # "" survives as "" (null-field)
-        valid = cand.str.match(vpat, na=False)  # re.match semantics
-        hit_idx = cand.index[valid]
-        if len(hit_idx):
-            values.loc[hit_idx] = cand[valid]
-            rule_ids.loc[hit_idx] = r.rule_id
-            unresolved.loc[hit_idx] = False
+    hits = [first_match(rules, t) for t in texts.tolist()]
+    values = pd.Series([v for v, _ in hits], index=texts.index, dtype="object")
+    rule_ids = pd.Series([i for _, i in hits], index=texts.index, dtype="int64")
     return values, rule_ids
 
 

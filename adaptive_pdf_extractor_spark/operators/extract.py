@@ -14,6 +14,15 @@ split between the JVM and Arrow-batched Python by what each is good at:
   SURVEY §2.2). Only flat string/long arrays cross Arrow, which measurably
   cuts UDF serde (the local-mode JVM/Python contention source).
 
+The Python kernel is a plain-list kernel: each Arrow batch is normalized
+once (one vectorized ``normalize_series``), split into (label, fields)
+groups, and each group's texts stay a Python list that every field
+resolves with ``rules.first_match`` over precompiled patterns. No pandas
+Series is built per field or per rule: at tens of documents per template
+per partition a per-call pandas ``str.extract``/``.loc`` costs more than
+the regex work it wraps. The direct fallback gets a Series only when a
+field misses every rule.
+
 The rule set rides in as a **broadcast** ``RuleBook`` (KB-scale), so the
 pass is a broadcast nested-loop join with first-match short-circuit: zero
 shuffle, linear in executors. Weights are NOT mutated in place (the
@@ -38,7 +47,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.normalize import normalize_series
-from ..functions.rules import RuleBook, apply_rules_vectorized
+from ..functions.rules import RuleBook, first_match
 
 # UDF-boundary schema: flat arrays/scalars only (cheap Arrow transport).
 _UDF_DDL = (
@@ -71,8 +80,6 @@ def _make_udf(
     """Python stage: (doc_id, label, raw_text, fields, passthrough...) in,
     flat (values, rule_ids, paths) arrays + echoed passthrough out."""
 
-    import numpy as np
-
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         book: RuleBook = (
             rulebook_bc.value if hasattr(rulebook_bc, "value") else rulebook_bc
@@ -81,55 +88,49 @@ def _make_udf(
             n = len(pdf)
             if n == 0:
                 continue
-            pdf = pdf.reset_index(drop=True)
-            texts = normalize_series(pdf["raw_text"].astype("object"))
+            texts = normalize_series(pdf["raw_text"].astype("object")).tolist()
 
-            field_tuples = [
-                tuple(ft) if ft is not None else () for ft in pdf["fields"]
-            ]
+            field_lists = [list(ft) if ft is not None else [] for ft in pdf["fields"]]
             groups: dict[tuple, list[int]] = {}
-            for pos, key in enumerate(zip(pdf["label"], field_tuples)):
+            for pos, key in enumerate(zip(pdf["label"], map(tuple, field_lists))):
                 groups.setdefault(key, []).append(pos)
 
             out_values: list = [None] * n
             out_ids: list = [None] * n
             out_paths: list = [None] * n
-            any_unres = np.zeros(n, dtype=bool)
+            # mining payload only for docs with a genuinely unresolved field
+            # (no value AFTER the direct fallback), so the final pass doesn't
+            # push the whole slow-path corpus text over Arrow for nothing
+            norm_out: list = [None] * n
 
             for (label, fields), positions in groups.items():
-                gtexts = texts.iloc[positions]
-                # Build per-field COLUMNS (vectorized) and transpose to rows
-                # at the end: the earlier per-(doc, field) Python loop with
-                # Series.loc lookups cost ~9x the regex work itself.
+                gtexts = [texts[pos] for pos in positions]
+                gseries = None  # built only when a field misses every rule
+                # Per-field COLUMNS, transposed to rows at the end.
                 col_vals, col_ids, col_paths = [], [], []
-                group_unres = np.zeros(len(positions), dtype=bool)
+                group_unres = [False] * len(positions)
                 for fname in fields:
                     rules = book.rules_for(label, fname)
-                    vals, ids = apply_rules_vectorized(gtexts, rules)
-                    v = vals.to_numpy(dtype=object, copy=True)
-                    iid = ids.to_numpy()
+                    hits = [first_match(rules, t) for t in gtexts]
+                    ids = [rid for _, rid in hits]
                     # "" -> null in the answer (src/pipeline.py:52-57)
-                    v[v == ""] = None
-                    paths = np.where(iid != -1, PATH_RULE, PATH_NONE).astype(object)
-                    miss = iid == -1
-                    if direct_extractor is not None and miss.any():
-                        dv = direct_extractor(
-                            label, list(fields), fname, gtexts
-                        ).to_numpy(dtype=object, copy=True)
-                        got = miss & np.array([x is not None for x in dv], dtype=bool)
-                        dv[[x == "" for x in dv]] = None
-                        v[got] = dv[got]
-                        paths[got] = PATH_DIRECT
-                        miss = miss & ~got
-                    col_vals.append(v.tolist())
-                    col_ids.append(iid.tolist())
-                    col_paths.append(paths.tolist())
-                    # unresolved = still no value AFTER the direct fallback:
-                    # norm_text (the mining payload) ships only for docs
-                    # with a genuinely unresolved field, so the final pass
-                    # doesn't push the whole slow-path corpus text over
-                    # Arrow for nothing
-                    group_unres |= miss
+                    vals = [v or None for v, _ in hits]
+                    paths = [PATH_NONE if rid == -1 else PATH_RULE for rid in ids]
+                    miss = [k for k, rid in enumerate(ids) if rid == -1]
+                    if miss and direct_extractor is not None:
+                        if gseries is None:
+                            gseries = pd.Series(gtexts, dtype="object")
+                        dv = direct_extractor(label, list(fields), fname, gseries).tolist()
+                        for k in miss:
+                            if dv[k] is not None:
+                                vals[k] = dv[k] or None
+                                paths[k] = PATH_DIRECT
+                        miss = [k for k in miss if dv[k] is None]
+                    for k in miss:
+                        group_unres[k] = True
+                    col_vals.append(vals)
+                    col_ids.append(ids)
+                    col_paths.append(paths)
                 if fields:
                     rows_v = list(map(list, zip(*col_vals)))
                     rows_i = list(map(list, zip(*col_ids)))
@@ -142,19 +143,17 @@ def _make_udf(
                     out_values[pos] = rows_v[k]
                     out_ids[pos] = rows_i[k]
                     out_paths[pos] = rows_p[k]
-                any_unres[positions] = group_unres
+                    if group_unres[k]:
+                        norm_out[pos] = gtexts[k]
 
-            texts_np = texts.to_numpy(dtype=object)
-            norm_out = np.where(any_unres, texts_np, None)
             yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"].values,
                     "label": pdf["label"].values,
-                    "fields": [list(ft) for ft in field_tuples],
+                    "fields": field_lists,
                     "values": out_values,
                     "rule_ids": out_ids,
                     "paths": out_paths,
-                    # mining payload only for docs with unresolved fields
                     "norm_text": norm_out,
                     "media_refs": pdf["media_refs"].values,
                     "n_text_spans": pdf["n_text_spans"].values,

@@ -7,11 +7,13 @@ broadcast rule set::
 
     round r:
       1. broadcast rules(r)  ->  fused extraction pass (operators.extract)
-      2. weight aggregation: groupBy(rule_id).count() over this round's
-         hits, summed into the rules table (replaces in-place bubble-up —
-         end-state totals are order-independent, SURVEY §2.4)
+      2. one aggregate action: per-rule hit counts, summed into the rules
+         table (replaces in-place bubble-up — end-state totals are
+         order-independent, SURVEY §2.4), and the per-partition lineage
+         whose sums are the round metrics
       3. unresolved (doc, field) pairs  ->  hash-sampled  ->  grouped
-         applyInPandas rule mining (operators.miner)
+         applyInPandas rule mining (operators.miner); a round with no
+         unresolved field mines nothing and submits no job
       4. accepted rules appended (weight=1, next rule_seq — matching the
          reference's add-at-tail, src/cache.py:182-199); rules snapshot +
          manifest committed (plans.checkpoint)
@@ -22,6 +24,8 @@ broadcast rule set::
       direct extractor as slow-path fallback for still-unresolved fields
       (the reference's answers for LLM-extracted fields come from the LLM
       directly, src/main.py:262 — the direct extractor is that analog).
+      The run summary is an Observation on the output write, so the final
+      pass is one job and caches nothing.
 
 Convergence: the unresolved-pair count is monotonically non-increasing
 across rounds (rules are only added, never removed, and extraction is
@@ -33,7 +37,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 from typing import Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -89,24 +93,78 @@ class PipelineConfig:
     strip_boilerplate: bool = False
 
 
-def aggregate_weights(rules_rows: list[dict], extracted: DataFrame) -> list[dict]:
-    """weights += this round's per-rule hit counts (distributed agg, tiny
-    result). Partial aggregation (map-side combine) comes free from
-    groupBy().count()."""
-    hits = (
-        extracted.select(F.explode("hits").alias("h"))
-        .filter(F.col("h.path") == "rule")
-        .groupBy(F.col("h.rule_id").alias("rule_id"))
-        .count()
+_METRIC_KEYS = ["docs", "unresolved_fields", "rule_hits", "text_spans", "media_spans"]
+
+
+def _rule_hits():
+    return F.filter("hits", lambda h: h["path"] == F.lit("rule"))
+
+
+def _metric_aggs() -> list:
+    """The round metrics as aggregates over an extraction frame."""
+    return [
+        F.count("*").alias("docs"),
+        F.sum(F.size("unresolved")).alias("unresolved_fields"),
+        F.sum(F.size(_rule_hits())).alias("rule_hits"),
+        F.sum("n_text_spans").alias("text_spans"),
+        F.sum("n_media_spans").alias("media_spans"),
+    ]
+
+
+def _lineage(rows) -> list[dict]:
+    """Per-partition metric rows, ordered by part_id (manifest bytes must
+    not depend on collect order)."""
+    out = [{"part_id": r["part_id"], **{k: r[k] for k in _METRIC_KEYS}} for r in rows]
+    return sorted(out, key=lambda r: r["part_id"])
+
+
+def _totals(lineage: list[dict]) -> dict:
+    totals = {k: int(sum(r[k] or 0 for r in lineage)) for k in _METRIC_KEYS}
+    totals["fast_path_doc_rate"] = None
+    return totals
+
+
+def aggregate_weights(
+    rules_rows: list[dict], extracted: DataFrame
+) -> tuple[list[dict], list[dict]]:
+    """One aggregate action per round: weights += this round's per-rule hit
+    counts, plus the per-partition lineage (whose sums are the round
+    metrics). Each doc explodes to its rule hits (``posexplode_outer``, so
+    a doc without hits keeps one row); only its first row carries the doc's
+    own stats. ``groupingSets([part_id], [rule_id])`` then aggregates both
+    keys in one shuffle, O(partitions + rules) result rows."""
+    first = F.coalesce(F.col("pos"), F.lit(0)) == 0
+
+    def doc_sum(c):
+        return F.sum(F.when(first, F.col(c)))
+
+    rows = (
+        extracted.select(
+            "part_id",
+            "n_text_spans",
+            "n_media_spans",
+            F.size("unresolved").alias("n_unresolved"),
+            F.posexplode_outer(_rule_hits()).alias("pos", "h"),
+        )
+        .select("*", F.col("h.rule_id").alias("rule_id"))
+        .groupingSets([["part_id"], ["rule_id"]], "part_id", "rule_id")
+        .agg(
+            F.grouping("part_id").alias("by_rule"),
+            F.count(F.when(first, 1)).alias("docs"),
+            doc_sum("n_unresolved").alias("unresolved_fields"),
+            F.count("rule_id").alias("rule_hits"),
+            doc_sum("n_text_spans").alias("text_spans"),
+            doc_sum("n_media_spans").alias("media_spans"),
+        )
         .collect()
     )
-    by_id = {r["rule_id"]: r["count"] for r in hits}
+    by_id = {r["rule_id"]: r["rule_hits"] for r in rows if r["by_rule"]}
     out = []
     for row in rules_rows:
         row = dict(row)
         row["weight"] = int(row["weight"]) + int(by_id.get(row["rule_id"], 0))
         out.append(row)
-    return out
+    return out, _lineage(r for r in rows if not r["by_rule"])
 
 
 def _next_ids(rules_rows: list[dict]) -> tuple[int, dict[tuple, int]]:
@@ -210,27 +268,9 @@ class ExtractionPipeline:
             key = (r["label"], r["field"])
             if key not in self.anchors:  # first discovery wins (replay-stable)
                 self.anchors[key] = r.asDict()
-        self.manifest.state["anchors"] = sorted(
-            self.anchors.values(), key=lambda a: (a["label"], a["field"])
-        )
 
-    def _round_metrics(self, extracted: DataFrame) -> tuple[dict, list[dict]]:
-        agg = extracted.groupBy("part_id").agg(
-            F.count("*").alias("docs"),
-            F.sum(F.size("unresolved")).alias("unresolved_fields"),
-            F.sum(
-                F.size(F.filter("hits", lambda h: h["path"] == F.lit("rule")))
-            ).alias("rule_hits"),
-            F.sum("n_text_spans").alias("text_spans"),
-            F.sum("n_media_spans").alias("media_spans"),
-        )
-        lineage = [r.asDict() for r in agg.collect()]
-        totals = {
-            k: int(sum(r[k] or 0 for r in lineage))
-            for k in ["docs", "unresolved_fields", "rule_hits", "text_spans", "media_spans"]
-        }
-        totals["fast_path_doc_rate"] = None  # filled by caller if wanted
-        return totals, lineage
+    def _round_metrics(self, extracted: DataFrame) -> dict:
+        return _totals(extracted.groupBy().agg(*_metric_aggs()).collect())
 
     def _mine(self, extracted: DataFrame) -> list[dict]:
         cfg = self.config
@@ -328,6 +368,29 @@ class ExtractionPipeline:
     ) -> DataFrame:
         """Run (or resume) the full pipeline; returns the output span table."""
         cfg = self.config
+        start_round = self.manifest.last_completed_round() + 1
+        # A finished run resumes straight to the final pass: its rules
+        # are converged and committed; re-mining would append spurious
+        # rounds to the manifest. Same for a run that crashed BETWEEN a
+        # converged round's commit and finish(): the last committed
+        # round's n_new_rules == 0 proves convergence, and an extra
+        # resumed round would re-aggregate a whole pass of rule-weight
+        # hits (which can flip priority order — not byte-identical).
+        prev = next(
+            (
+                r
+                for r in self.manifest.state.get("rounds", [])
+                if r["round"] == start_round - 1
+            ),
+            None,
+        )
+        converged = prev is not None and prev.get("n_new_rules", 1) == 0
+        round_range = (
+            []
+            if (self.manifest.complete or converged)
+            else range(start_round, cfg.max_rounds)
+        )
+
         spans_before = None
         if cfg.strip_boilerplate:
             from ..operators.layout import strip_boilerplate_spans
@@ -342,7 +405,12 @@ class ExtractionPipeline:
             )
         if cfg.num_partitions:
             docs = salted_repartition(docs, cfg.num_partitions)
-        docs = docs.persist()
+        # Cache docs only when it is read more than once: by the rounds and
+        # the final pass, or by the strip count and the final pass. A
+        # converged resume reads it once.
+        cached = bool(round_range) or spans_before is not None
+        if cached:
+            docs = docs.persist()
         try:
             if spans_before is not None:
                 # AFTER persist: this first action materializes the cache,
@@ -359,7 +427,6 @@ class ExtractionPipeline:
                         1 - spans_after / spans_before, 6
                     ) if spans_before else 0.0,
                 }
-            start_round = self.manifest.last_completed_round() + 1
             if start_round > 0:
                 rules_rows = self.load_rules_snapshot(
                     self.spark, self.manifest.latest_rules_path()
@@ -367,32 +434,14 @@ class ExtractionPipeline:
             else:
                 rules_rows = list(initial_rules_rows or [])
 
-            # A finished run resumes straight to the final pass: its rules
-            # are converged and committed; re-mining would append spurious
-            # rounds to the manifest. Same for a run that crashed BETWEEN a
-            # converged round's commit and finish(): the last committed
-            # round's n_new_rules == 0 proves convergence, and an extra
-            # resumed round would re-aggregate a whole pass of rule-weight
-            # hits (which can flip priority order — not byte-identical).
-            prev = next(
-                (
-                    r
-                    for r in self.manifest.state.get("rounds", [])
-                    if r["round"] == start_round - 1
-                ),
-                None,
-            )
-            converged = prev is not None and prev.get("n_new_rules", 1) == 0
-            round_range = (
-                []
-                if (self.manifest.complete or converged)
-                else range(start_round, cfg.max_rounds)
-            )
             for round_no in round_range:
                 extracted = self._extract(docs, rules_rows, final=False).persist()
                 try:
-                    rules_rows = aggregate_weights(rules_rows, extracted)
-                    metrics, lineage = self._round_metrics(extracted)
+                    rules_rows, lineage = aggregate_weights(rules_rows, extracted)
+                    metrics = _totals(lineage)
+                    # no unresolved field: discovery and mining would read
+                    # an empty sample, so neither runs a job
+                    unresolved = metrics["unresolved_fields"] > 0
                     if not self.manifest.state.get("anchor_discovery_done"):
                         # Anchors are template properties: one discovery pass
                         # over the first executed round's unresolved docs
@@ -402,9 +451,13 @@ class ExtractionPipeline:
                         # RESUMED run skip re-discovery exactly like the
                         # uninterrupted run would — re-running on a later
                         # round's different sample could diverge.
-                        self._discover_anchors(extracted, docs)
+                        if unresolved:
+                            self._discover_anchors(extracted, docs)
+                        self.manifest.state["anchors"] = sorted(
+                            self.anchors.values(), key=lambda a: (a["label"], a["field"])
+                        )
                         self.manifest.state["anchor_discovery_done"] = True
-                    mined = self._mine(extracted)
+                    mined = self._mine(extracted) if unresolved else []
                 finally:
                     extracted.unpersist()
                 accepted = self._accept(rules_rows, mined, round_no)
@@ -417,23 +470,28 @@ class ExtractionPipeline:
                 if not accepted:
                     break  # converged: another scan cannot change anything
 
-            final = self._extract(docs, rules_rows, final=True).persist()
-            try:
-                output = final.select("doc_id", "spans")
-                out_path = f"{self.run_dir}/output"
-                if write_output:
-                    spark_io.write_table(output, out_path)
-                    output = spark_io.read_table(self.spark, out_path)
+            final = self._extract(docs, rules_rows, final=True)
+            out_path = f"{self.run_dir}/output"
+            if write_output:
                 # Final-pass metrics on BOTH paths (a persisted production
-                # run must not finish with an empty summary); the persist
-                # above makes this a cache scan, not a second extraction.
-                summary, _ = self._round_metrics(final)
-            finally:
-                final.unpersist()
+                # run must not finish with an empty summary). Here they
+                # ride the output write as an Observation: one job, no
+                # cache, no second scan.
+                obs = Observation()
+                spark_io.write_table(
+                    final.observe(obs, *_metric_aggs()).select("doc_id", "spans"),
+                    out_path,
+                )
+                summary = _totals([obs.get])
+                output = spark_io.read_table(self.spark, out_path)
+            else:
+                output = final.select("doc_id", "spans")
+                summary = self._round_metrics(final)
             self.manifest.finish(out_path if write_output else None, summary)
             return output
         finally:
-            docs.unpersist()
+            if cached:
+                docs.unpersist()
 
     def final_rules(self) -> list[dict]:
         path = self.manifest.latest_rules_path()

@@ -50,13 +50,17 @@ def _control_loop(n: int) -> float:
     return time.time() - t0
 
 
-def noise_control(workers: int = 8, n: int = 5_000_000) -> tuple[float, float]:
+def noise_control(
+    workers: int = min(8, os.cpu_count() or 1), n: int = 5_000_000
+) -> tuple[float, float]:
     """No-Spark multiprocessing control (the BENCH.md methodology, now
     self-labeling in the artifact): per-proc efficiency of ``workers``
-    concurrent pure-Python loops vs one. Healthy machine ~= 0.85+;
-    hypervisor noise windows reproduce ~2x degradation on everything
-    parallel (observed round 4: 0.45) — a low value here flags the whole
-    run's parallel numbers as machine-noise-contaminated."""
+    concurrent pure-Python loops vs one, at most one worker per core (so
+    a box with fewer than 8 cores does not always read as noisy).
+    Healthy machine ~= 0.85+; hypervisor noise windows reproduce ~2x
+    degradation on everything parallel (observed round 4: 0.45) — a low
+    value here flags the whole run's parallel numbers as
+    machine-noise-contaminated."""
     import multiprocessing as mp
 
     _control_loop(n // 10)  # frequency/cache ramp before the baseline

@@ -12,8 +12,6 @@ from adaptive_pdf_extractor_spark.operators.extract import extract_documents
 from adaptive_pdf_extractor_spark.sources import corpus as corpus_mod
 from adaptive_pdf_extractor_spark.sources import spark_io
 
-CACHE = "/root/reference/data/fake/caches/fake_dataset_1000samples_seed_1_cache.json"
-
 
 def _variants(doc_id: str, text: str) -> list[list[dict]]:
     """Same text, three chunkings: single span, tiny chunks, default."""
@@ -28,8 +26,8 @@ def _variants(doc_id: str, text: str) -> list[list[dict]]:
     return [single, tiny or single, default]
 
 
-def test_extraction_invariant_under_rechunking(spark):
-    book = RuleBook.from_rows(corpus_mod.reference_cache_to_rule_rows(CACHE))
+def test_extraction_invariant_under_rechunking(spark, learned_rules):
+    book = RuleBook.from_rows(learned_rules)
     recs = [corpus_mod.synth_record(seed=71, doc_id=f"v/{i}") for i in range(40)]
     rows = []
     for v in range(3):

@@ -24,6 +24,7 @@ from adaptive_pdf_extractor_spark.functions.rules import (
     validate_value,
 )
 from adaptive_pdf_extractor_spark.sources import corpus as corpus_mod
+from specs import apply_rules_pandas
 
 
 # ---------------------------------------------------------------------------
@@ -189,23 +190,52 @@ def test_vectorized_matches_scalar_on_reference_corpus():
             assert vec_ids.iloc[i] == exp_id, (fname, i)
 
 
-@settings(max_examples=60, deadline=None)
+# (rule, validation_regex) pool covering every tri-state branch: a value
+# capture, an empty capture, a capture that strips to "", an optional group
+# that does not participate, a pattern without a group, an invalid rule and
+# an invalid validation regex
+_RULE_POOL = [
+    (r"Nome[\s:]*([A-Za-z ]{1,30}?)(?=\d|$)", r"^[A-Za-z ]+$"),
+    (r"Nome\s*()(?=\d|$)", r"^$"),
+    (r"(\d{3,6})", r"^\d{3,6}$"),
+    (r"(\s*)x", r""),
+    (r"(a)?b", r".*"),
+    (r"Nome\s+\w+", r".*"),
+    (r"([", r".*"),
+    (r"(\w+)", r"["),
+]
+_FRAGMENTS = ["Nome", " ", ":", "\n", "João", "Ana", "123", "45678", "x", "b", "ab", ""]
+
+
+@settings(max_examples=120, deadline=None)
 @given(
-    st.lists(st.one_of(st.none(), st.text(max_size=60)), min_size=1, max_size=12),
-    st.integers(min_value=0, max_value=4),
+    st.lists(
+        st.one_of(
+            st.none(),
+            st.just(""),
+            st.text(max_size=60),
+            st.lists(st.sampled_from(_FRAGMENTS), max_size=8).map("".join),
+        ),
+        min_size=1,
+        max_size=12,
+    ),
+    st.lists(st.integers(min_value=0, max_value=len(_RULE_POOL) - 1), max_size=5),
 )
-def test_vectorized_matches_scalar_random(texts, n_extra):
+def test_vectorized_matches_scalar_random(texts, picks):
+    """``apply_rules_vectorized`` equals both the scalar ``first_match`` and
+    the pandas spec (tests/specs.py) row by row."""
     rules = [
-        Rule(rule=r"Nome[\s:]*([A-Za-z ]{1,30}?)(?=\d|$)", validation_regex=r"^[A-Za-z ]+$", rule_id=0),
-        Rule(rule=r"Nome\s*()(?=\d|$)", validation_regex=r"^$", rule_id=1),
-        Rule(rule=r"(\d{3,6})", validation_regex=r"^\d{3,6}$", rule_id=2),
-    ][: 1 + n_extra]
+        Rule(rule=_RULE_POOL[k][0], validation_regex=_RULE_POOL[k][1], rule_id=i)
+        for i, k in enumerate(picks)
+    ]
     s = pd.Series(texts, dtype="object")
     vec_vals, vec_ids = apply_rules_vectorized(s, rules)
+    spec_vals, spec_ids = apply_rules_pandas(s, rules)
+    assert vec_ids.dtype == spec_ids.dtype == "int64"
     for i, t in enumerate(texts):
         exp_val, exp_id = first_match(rules, t)
-        assert vec_vals.iloc[i] == exp_val
-        assert vec_ids.iloc[i] == exp_id
+        assert vec_vals.iloc[i] == exp_val == spec_vals.iloc[i], (t, picks)
+        assert vec_ids.iloc[i] == exp_id == spec_ids.iloc[i], (t, picks)
 
 
 # ---------------------------------------------------------------------------

@@ -165,6 +165,8 @@ def test_pipeline_exact_resume(spark, tmp_path):
     # uninterrupted
     pipe_a = ExtractionPipeline(spark, str(tmp_path / "runA"), cfg)
     out_a = pipe_a.run(docs, initial_rules_rows=[], write_output=False)
+    assert all(r["lineage"] == sorted(r["lineage"], key=lambda x: x["part_id"])
+               for r in pipe_a.manifest.state["rounds"])
 
     # interrupted: run only round 0, then resume with full budget
     pipe_b0 = ExtractionPipeline(
@@ -359,3 +361,86 @@ def test_unresolved_excludes_direct_resolved_fields(spark):
         assert paths == {"direct"}
     finally:
         out.unpersist()
+
+
+def test_direct_fallback_paths_in_kernel(spark):
+    """Direct fallback inside the extraction kernel: a field the direct
+    extractor fills with "" comes out null with path 'direct'; a field is
+    listed in ``unresolved`` iff its path is 'none'; norm_text ships only
+    for docs with an unresolved field."""
+    import pandas as pd
+
+    from adaptive_pdf_extractor_spark.functions.rules import RuleBook
+    from adaptive_pdf_extractor_spark.operators.extract import extract_documents
+
+    def direct(label, all_fields, fld, texts):
+        fill = {"nome": "", "inscricao": "v"}.get(fld)
+        return pd.Series([fill] * len(texts), dtype="object")
+
+    book = RuleBook.from_rows([
+        dict(label="carteira_oab", field="seccional", rule=r"Seccional\s*([A-Z]{2})\b",
+             validation_regex=r"^[A-Z]{2}$", weight=1, rule_seq=0, rule_id=7),
+    ])
+    docs = spark_io.synthetic_corpus_df(spark, seed=19, count=40, partitions=2)
+    rows = extract_documents(docs, book, direct_extractor=direct).collect()
+    paths = {}
+    for r in rows:
+        values = {s["kind"]: s["text"] for s in r["spans"] if s["kind"] != "media"}
+        for h in r["hits"]:
+            paths.setdefault((h["field"], h["path"]), 0)
+            paths[(h["field"], h["path"])] += 1
+            assert (h["field"] in r["unresolved"]) == (h["path"] == "none")
+            assert (h["rule_id"] == 7) == (h["path"] == "rule")
+        assert (values["nome"], values["inscricao"]) == (None, "v")
+        assert (r["norm_text"] is not None) == bool(r["unresolved"])
+    assert paths[("nome", "direct")] == paths[("inscricao", "direct")] == 40
+    assert paths[("seccional", "rule")] > 0 and paths[("seccional", "none")] > 0
+
+
+def test_round_and_final_pass_job_counts(spark, tmp_path):
+    """Pinned Spark job counts of a cold learn and a converged resume (one
+    aggregate action per round, no job for a round with nothing to mine,
+    the run summary from an Observation on the output write, no docs cache
+    on a converged resume); the manifest summary equals an independent
+    aggregate over the final pass's hits."""
+    sc = spark.sparkContext
+    docs = spark_io.synthetic_corpus_df(spark, seed=83, count=150, partitions=2)
+    cfg = PipelineConfig(max_rounds=4, num_partitions=2)
+    run_dir = str(tmp_path / "jobs")
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    learn = jobs("pin_learn", lambda: ExtractionPipeline(spark, run_dir, cfg).run(
+        docs, initial_rules_rows=[]))
+    resume = jobs("pin_resume", lambda: ExtractionPipeline(spark, run_dir, cfg).run(docs))
+    # a cold learn of two rounds (the second finds nothing to mine), then
+    # the final pass; the parent formulation submitted 28 and 9
+    assert (learn, resume) == (20, 5)
+
+    pipe = ExtractionPipeline(spark, run_dir, cfg)
+    assert pipe.manifest.state["rounds"][-1]["n_new_rules"] == 0
+    final = pipe._extract(docs, pipe.final_rules(), final=True)
+    per_doc = final.groupBy().agg(
+        F.count("*").alias("docs"),
+        F.sum("n_text_spans").alias("text_spans"),
+        F.sum("n_media_spans").alias("media_spans"),
+    ).first()
+    by_path = {
+        r["path"]: r["count"]
+        for r in final.select(F.explode("hits.path").alias("path")).groupBy("path").count().collect()
+    }
+    assert pipe.manifest.state["summary"] == {
+        "docs": 150,
+        "unresolved_fields": by_path.get("none", 0),
+        "rule_hits": by_path["rule"],
+        "text_spans": per_doc["text_spans"],
+        "media_spans": per_doc["media_spans"],
+        "fast_path_doc_rate": None,
+    }
+    assert per_doc["docs"] == 150

@@ -14,10 +14,8 @@ from adaptive_pdf_extractor_spark.operators.extract import (
 from adaptive_pdf_extractor_spark.sources import corpus as corpus_mod
 from adaptive_pdf_extractor_spark.sources import spark_io
 
-CACHE = "/root/reference/data/fake/caches/fake_dataset_1000samples_seed_1_cache.json"
 
-
-def test_giant_document_skew(spark):
+def test_giant_document_skew(spark, learned_rules):
     """A few 1 MB documents among 500 normal ones: extraction stays correct
     (giant docs just have huge noise prefixes) and the salted repartition
     spreads bytes, not only row counts."""
@@ -37,7 +35,7 @@ def test_giant_document_skew(spark):
             }
         )
     docs = salted_repartition(spark_io.input_df_from_rows(spark, rows), 8)
-    book = RuleBook.from_rows(corpus_mod.reference_cache_to_rule_rows(CACHE))
+    book = RuleBook.from_rows(learned_rules)
     out = extract_documents(docs, book).cache()
     assert out.count() == 505
 
