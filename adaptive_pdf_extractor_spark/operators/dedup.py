@@ -254,14 +254,11 @@ def minhash_lsh_pairs(
     practical purposes (tests plant dups and assert exact equality).
 
     Scale notes: candidate pairing joins only within buckets, carrying
-    bare (id, id); exact verification re-shingles only the candidate
-    endpoints — the prefiltered candidate pairs are materialized first
-    (persist + one eager count at plan build), then the docs are
-    semi-joined down to their ids (a LAZY semi-join pre-prune was measured
-    1.6x SLOWER: it re-evaluates the prefilter subtree before its cache
-    populates). Composition of :func:`minhash_signatures_df` +
-    :func:`minhash_lsh_pairs_from_sigs` — callers holding a persisted
-    signature table use those directly.
+    bare (id, id); exact verification shingles the docs in one lazy
+    narrow pass and joins them to the few surviving pairs
+    (:func:`_verified_pairs`). Composition of
+    :func:`minhash_signatures_df` + :func:`minhash_lsh_pairs_from_sigs` —
+    callers holding a persisted signature table use those directly.
     """
     sigs = minhash_signatures_df(
         df, id_col, text_col, shingle_n=shingle_n, num_hashes=num_hashes
@@ -318,7 +315,6 @@ def _verified_pairs(
     shingle_n: int,
     num_hashes: int,
     threshold: float,
-    prune_verify: bool,
 ) -> DataFrame:
     """Verification tail shared by the full and incremental pair stages:
     candidate ``(id_a, id_b)`` pairs -> signature prefilter -> exact
@@ -333,15 +329,13 @@ def _verified_pairs(
     E[est]=j, sigma=sqrt(j(1-j)/num_hashes)); only candidates within 4+
     sigma of the threshold proceed to exact verification.
 
-    ``prune_verify``: semi-join the verification docs down to candidate
-    endpoint ids before shingling. Shingling is the dominant per-doc cost
-    and candidates are usually a tiny fraction of the corpus (2,544 pairs
-    of 50k docs at sf1.0), so the un-pruned verify shingles every doc for
-    rows the join immediately drops. The candidate set must materialize
-    first (persist + one eager count job at plan build): a LAZY semi-join
-    pre-prune re-evaluates the banding/prefilter subtree before its cache
-    populates — measured 1.6x slower end-to-end. Off, the plan stays lazy
-    and single-action."""
+    Stage 2 shingles all of ``docs``, not only the candidate endpoints:
+    since grams come from one codegen'd pass (``text.char_grams_all``),
+    shingling every doc costs less than materializing the candidate set
+    at plan build to prune them (perfbench, 4 cores; at 50k old docs x a
+    750-doc delta the two measured within ~4%). If a large-old-corpus
+    workload ever shows that prune winning, it returns as a path chosen
+    by input size, not as an option."""
     sig_margin = 4.5 * (0.25 / num_hashes) ** 0.5  # sigma at j=0.5 (max)
     sa = sigs.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
     sb = sigs.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
@@ -359,20 +353,6 @@ def _verified_pairs(
         .filter(est >= threshold - sig_margin)
         .select("id_a", "id_b")
     )
-    verify_docs = docs
-    if prune_verify:
-        prefiltered = prefiltered.persist()
-        prefiltered.count()  # candidate ids must exist before the prune
-        cand_ids = prefiltered.select(
-            F.explode(F.array("id_a", "id_b")).alias(id_col)
-        ).distinct()
-        # unconditional full-width repartition: AQE coalesces the tiny
-        # semi-join output to ~1 partition and the interpreted shingle
-        # projection is compute-bound per row (measured 3.7s single-core
-        # vs 0.5s spread for 210 docs)
-        verify_docs = docs.join(cand_ids, id_col, "left_semi").repartition(
-            max(docs.sparkSession.sparkContext.defaultParallelism, 8)
-        )
     # Exact verification with ONE evaluation of the shingled docs: the
     # two-sided (a ⋈ b) form embeds the shingle subtree TWICE in the plan,
     # computing it twice per action (measured ~10% of the warm stage and
@@ -380,7 +360,7 @@ def _verified_pairs(
     # endpoint joins the shingled docs once and regroups; the regroup
     # shuffle carries candidate-scaled shingle arrays only, and
     # intersect/union are symmetric so the jaccard is unchanged.
-    cbase = _shingled(verify_docs, id_col, text_col, shingle_n)
+    cbase = _shingled(docs, id_col, text_col, shingle_n)
     sides = prefiltered.select(
         "id_a", "id_b", F.explode(F.array("id_a", "id_b")).alias("id")
     )
@@ -410,7 +390,6 @@ def minhash_lsh_pairs_incremental(
     num_hashes: int = 128,
     bands: int = 32,
     threshold: float = 0.8,
-    prune_verify: bool = False,
 ) -> DataFrame:
     """Pair stage for a NEW document batch against an existing signature
     table: candidates = new x new ∪ new x old — the batch twin of the
@@ -420,8 +399,7 @@ def minhash_lsh_pairs_incremental(
     output equals it restricted to pairs touching a new id (pinned by
     test), but the bucket join probes only the banded NEW side, so
     candidate-generation cost scales with the DELTA, not the corpus —
-    old documents never re-hash, never re-band against each other, and
-    only candidate-joined rows are ever re-shingled.
+    old documents never re-hash and never re-band against each other.
 
     ``docs`` must cover every id in either signature table (it feeds the
     re-shingle verification — ONE linear narrow pass, evaluated once).
@@ -432,14 +410,8 @@ def minhash_lsh_pairs_incremental(
     for new docs only. No ``max_bucket_size`` guard here: an old-side
     flood bucket of size m costs O(|new ∩ bucket| x m) candidates —
     already delta-scaled; a flood INSIDE one batch is the full pair
-    stage's regime.
-
-    ``prune_verify`` (see :func:`_verified_pairs`) stays off by default —
-    lazy/single-action, right for bench-scale corpora; enable it when the
-    old corpus is large relative to the delta (the daily production
-    regime: measured 16.6s -> ~9s at 50k old docs x 500 delta, and the
-    gap grows with the corpus since the un-pruned verify shingles every
-    old doc)."""
+    stage's regime. Building the plan submits no job of its own (only
+    :func:`_spread`'s partition probe, on shuffled or cached inputs)."""
     rows_per_band = num_hashes // bands
     assert rows_per_band * bands == num_hashes, "bands must divide num_hashes"
     nsig = new_sigs.select("id", "sig").persist()
@@ -475,7 +447,6 @@ def minhash_lsh_pairs_incremental(
         shingle_n=shingle_n,
         num_hashes=num_hashes,
         threshold=threshold,
-        prune_verify=prune_verify,
     )
 
 
@@ -570,10 +541,9 @@ def minhash_lsh_pairs_from_sigs(
     caching themselves (the streaming loop persists per micro-batch and
     must unpersist after — an internal persist here would strand one
     CacheManager entry per batch, since each batch's plan is distinct).
-    ``persist_sigs`` also turns on the candidate-endpoint prune of the
-    verification docs (``prune_verify`` of :func:`_verified_pairs`: one
-    eager count at plan build); without it the plan stays fully lazy and
-    single-action.
+    ``persist_sigs`` controls only that signature cache and, when the
+    guard is on, its eager fill (see the NOTE below); unguarded, building
+    the plan submits no job of its own either way.
 
     ``max_bucket_size`` is the mega-cluster guard (:func:`_guard_split`,
     which also documents ``observation``'s metrics): a band bucket larger
@@ -678,7 +648,6 @@ def minhash_lsh_pairs_from_sigs(
         shingle_n=shingle_n,
         num_hashes=num_hashes,
         threshold=threshold,
-        prune_verify=persist_sigs,
     )
 
 
@@ -874,9 +843,9 @@ def simhash64(text_col: Column, hash_family: str = "xxhash64") -> Column:
     of sum over tokens of bit k (+-1) of the token's hash. JVM hashes each
     token once; the 64-bit fold runs as one numpy unpack/sign-sum per
     document (:func:`_simhash_fold_udf`) — 64 interpreted ``F.aggregate``
-    folds (:func:`simhash64_columns`, to which the xxhash64 output is
-    bit-identical, pinned by test) cost ~64 x n_tokens lambda evals per
-    row.
+    folds (``simhash64_columns``, to which the xxhash64 output is
+    bit-identical, pinned by test; the spec lives in ``tests/specs.py``)
+    cost ~64 x n_tokens lambda evals per row.
 
     ``hash_family``: ``"xxhash64"`` (the production fast path) or
     ``"md5"`` — the engine-portable variant (token hash = first 16 hex
@@ -884,33 +853,6 @@ def simhash64(text_col: Column, hash_family: str = "xxhash64") -> Column:
     signature a DuckDB oracle reproduces bit-for-bit (q_simhash_md5)."""
     token_hash, decode = _hash_family(hash_family)
     return _simhash_fold_udf(decode)(F.transform(tokens(text_col), token_hash))
-
-
-def simhash64_columns(text_col: Column) -> Column:
-    """Reference formulation of :func:`simhash64`, entirely as Column
-    algebra. Interpreted (not codegen'd): 64 ``F.aggregate`` folds per row.
-    Kept as the executable spec the fast path is pinned against — do not
-    use in the hot path."""
-    toks = tokens(text_col)
-    bit_cols = []
-    for k in range(64):
-        contrib = F.aggregate(
-            toks,
-            F.lit(0).cast("long"),
-            lambda acc, t: acc
-            + F.when(F.shiftright(F.xxhash64(t), k).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1),
-        )
-        # shiftleft handles bit 63 (two's-complement negative); OR-fold the
-        # disjoint bits — addition would overflow under ANSI mode
-        bit_cols.append(
-            F.when(
-                contrib > 0, F.shiftleft(F.lit(1).cast("long"), k)
-            ).otherwise(F.lit(0).cast("long"))
-        )
-    out = bit_cols[0]
-    for c in bit_cols[1:]:
-        out = out.bitwiseOR(c)
-    return out
 
 
 def simhash_pairs(
@@ -1018,9 +960,9 @@ def _star_edges(pairs: DataFrame, max_rounds: int = 30) -> DataFrame:
         .distinct()
         .localCheckpoint(eager=True)
     )
-    if e.isEmpty():
-        return e
     n_edges = e.count()
+    if n_edges == 0:
+        return e
     for _ in range(max_rounds):
         # large-star: for every node u, connect each LARGER neighbor v to
         # m(u) = min(N(u) ∪ {u}). Connectivity-preserving; strictly shrinks
@@ -1081,8 +1023,8 @@ def neardup_clusters(
     Runs alternating large-star/small-star contraction (:func:`_star_edges`)
     — O(log n) rounds regardless of component diameter, so web-scale chain
     components (which broke the diameter-bound min-label propagation kept
-    below as :func:`neardup_clusters_minlabel`) converge in a handful of
-    edge-list shuffles.
+    as the spec ``neardup_clusters_minlabel`` in ``tests/specs.py``)
+    converge in a handful of edge-list shuffles.
 
     ids: one column ``id``; pairs: columns ``id_a``, ``id_b``.
     """
@@ -1100,87 +1042,6 @@ def neardup_clusters(
         "cluster_size",
         F.count("*").over(Window.partitionBy("canonical_id")),
     )
-
-
-def neardup_clusters_minlabel(
-    ids: DataFrame, pairs: DataFrame, max_iterations: int = 12
-) -> DataFrame:
-    """Reference formulation of :func:`neardup_clusters`: iterative
-    min-label propagation over the symmetrized edge list. Converges in
-    component-diameter + 1 rounds (the final round verifies zero changes),
-    capped at ``max_iterations`` with a loud failure — which a chain-shaped
-    component longer than the cap WILL trip; that diameter dependence is
-    why the star-contraction version is the default. Kept as the executable
-    spec the default is pinned against (tests assert identical output).
-    """
-    edges = (
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .unionByName(
-            pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
-        )
-        .persist()
-    )
-    labels = ids.select(F.col("id"), F.col("id").alias("lab")).persist()
-    try:
-        converged = False
-        for _ in range(max_iterations):
-            nbr = (
-                edges.join(
-                    labels.select(F.col("id").alias("src"), "lab"), "src"
-                )
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.min("lab").alias("nlab"))
-            )
-            # localCheckpoint, not persist: persist truncates recompute but
-            # NOT the logical plan, and Catalyst's cost on a plan nesting N
-            # rounds of joins grows super-linearly — ~10+ unconverged
-            # rounds OOMed the driver (measured on a 40-node chain).
-            # Checkpointing resets the plan to a leaf each round.
-            new_labels = (
-                labels.join(nbr, "id", "left")
-                .select(
-                    "id",
-                    F.least(F.col("lab"), F.coalesce("nlab", "lab")).alias("lab"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            changed = (
-                new_labels.alias("n")
-                .join(labels.alias("o"), "id")
-                .filter(F.col("n.lab") != F.col("o.lab"))
-                .count()
-            )
-            labels.unpersist()
-            labels = new_labels
-            if changed == 0:
-                converged = True
-                break
-        if not converged:
-            # Returning the partial labels would silently split one real
-            # component into several (wrong canonical_id AND cluster_size);
-            # long chains (diameter > max_iterations) must fail loudly.
-            raise RuntimeError(
-                f"neardup_clusters_minlabel did not converge in "
-                f"{max_iterations} rounds; rounds needed = graph diameter "
-                "+ 1 (the final zero-change verification round). Raise "
-                "max_iterations — or use neardup_clusters (star "
-                "contraction), whose rounds are O(log n) regardless of "
-                "diameter"
-            )
-        from pyspark.sql.window import Window
-
-        # truncate the per-round join lineage and release the caches the
-        # loop accumulated (labels is small: two columns, one row per node)
-        final = labels.localCheckpoint(eager=True)
-        return final.select(
-            F.col("id").alias("doc_id"), F.col("lab").alias("canonical_id")
-        ).withColumn(
-            "cluster_size",
-            F.count("*").over(Window.partitionBy("canonical_id")),
-        )
-    finally:
-        labels.unpersist()
-        edges.unpersist()
 
 
 # ---------------------------------------------------------------------------

@@ -114,7 +114,6 @@ def curate_increment(
     threshold: float = 0.8,
     decontaminate_against: DataFrame | None = None,
     decon_n: int = 13,
-    prune_verify: bool = False,
 ) -> DataFrame:
     """Curate a NEW document batch against an EXISTING curated corpus —
     the daily form of the 100 TB pipeline: only new docs quality-score,
@@ -165,7 +164,7 @@ def curate_increment(
     pairs = dedup.minhash_lsh_pairs_incremental(
         new_sigs, old_sigs, docs_all, "doc_id", "text",
         shingle_n=shingle_n, num_hashes=num_hashes,
-        bands=bands, threshold=threshold, prune_verify=prune_verify,
+        bands=bands, threshold=threshold,
     )
     # classify endpoints: every pair touches >= 1 new id by construction
     new_ids = kept.select(F.col("doc_id").alias("id"))
@@ -243,13 +242,18 @@ def curation_run(
         decontaminate_against=decontaminate_against,
     )
     output_path = os.path.join(run_dir, "curated.parquet")
-    # ONE action: the write executes the observed pair stage, so obs.get
-    # is ready as soon as the table is committed
-    spark_io.write_table(out, output_path, catalog=catalog)
+    # ONE action: the write executes the observed pair stage and counts
+    # its own rows, so both observations are ready once the table is
+    # committed
+    written = Observation("curated")
+    spark_io.write_table(
+        out.observe(written, F.count("*").alias("n")), output_path,
+        catalog=catalog,
+    )
+    n_output = written.get["n"]
+    # a separate action: docs is consumed only inside the persisted kept
+    # subtree, and an observation there never fires on a cache hit
     n_input = docs.count()
-    n_output = spark_io.read_table(
-        docs.sparkSession, output_path, catalog=catalog
-    ).count()
     guard = obs.get if obs is not None else {}
     max_over = guard.get("max_oversized_bucket")
     summary = {

@@ -88,9 +88,6 @@ def main() -> None:
             bands=args.bands,
             threshold=args.threshold,
             decontaminate_against=evals,
-            # the CLI's incremental mode IS the daily production regime
-            # (old corpus >> delta) — prune the verification scan
-            prune_verify=True,
         )
         from adaptive_pdf_extractor_spark.plans.checkpoint import RunManifest
         from adaptive_pdf_extractor_spark.sources import spark_io

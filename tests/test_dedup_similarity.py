@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from adaptive_pdf_extractor_spark.operators import dedup, similarity
 from adaptive_pdf_extractor_spark.sources import corpus as corpus_mod
+from specs import neardup_clusters_minlabel, simhash64_columns
 
 
 @pytest.fixture(scope="module")
@@ -134,21 +135,38 @@ def test_minhash_incremental_pairs_match_full(corpus):
     assert inc == expected
     assert {(3, 103), (4, 104)} <= {(a, b) for a, b, _ in inc}  # new-new
     assert {(0, 100), (10, 200)} <= {(a, b) for a, b, _ in inc}  # new-old
-    # the pruned-verification path (the cold daily-pipeline form) must
-    # produce the identical pair set
-    pruned = {
-        (r["id_a"], r["id_b"], r["jaccard"])
-        for r in dedup.minhash_lsh_pairs_incremental(
-            dedup.minhash_signatures_df(new, "doc_id", "text", **kw),
-            dedup.minhash_signatures_df(old, "doc_id", "text", **kw),
-            corpus,
+
+
+def test_minhash_pair_stage_builds_without_jobs(spark, corpus):
+    """Building the unguarded full pair stage (default ``persist_sigs``)
+    and the incremental pair stage submits no Spark job: verification
+    shingles the docs lazily, with no candidate materialization at plan
+    build. The input is a fresh local frame, so ``_spread``'s partition
+    probe has no shuffle or cache to plan (the former candidate-endpoint
+    prune submitted 15 jobs here)."""
+    rows = dedup.exact_dedup_keep(corpus, "doc_id", "text").collect()
+    fresh = spark.createDataFrame(rows, "doc_id long, text string")
+    assert len(rows) == 65
+    kw = dict(shingle_n=5, num_hashes=128)
+    sc = spark.sparkContext
+    sc.setJobGroup("pin_pair_build", "pin_pair_build")
+    try:
+        dedup.minhash_lsh_pairs(fresh, "doc_id", "text", threshold=0.8)
+        dedup.minhash_lsh_pairs_incremental(
+            dedup.minhash_signatures_df(
+                fresh.filter(F.col("doc_id") >= 3), "doc_id", "text", **kw
+            ),
+            dedup.minhash_signatures_df(
+                fresh.filter(F.col("doc_id") < 3), "doc_id", "text", **kw
+            ),
+            fresh,
             "doc_id",
             "text",
             threshold=0.8,
-            prune_verify=True,
-        ).collect()
-    }
-    assert pruned == expected
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("pin_pair_build") == []
 
 
 def test_simhash_finds_planted_dups(corpus):
@@ -253,7 +271,7 @@ def test_simhash_np_matches_column_reference(spark):
     rows = df.select(
         "id",
         dedup.simhash64(F.col("t")).alias("fast"),
-        dedup.simhash64_columns(F.col("t")).alias("ref"),
+        simhash64_columns(F.col("t")).alias("ref"),
     ).orderBy("id").collect()
     assert all(r["fast"] == r["ref"] for r in rows)
     by_id = {r["id"]: r["fast"] for r in rows}
@@ -460,11 +478,11 @@ def test_neardup_clusters_minlabel_raises_on_unconverged_chain(spark):
         [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long"
     )
     with pytest.raises(RuntimeError, match="did not converge"):
-        dedup.neardup_clusters_minlabel(ids, pairs, max_iterations=3)
+        neardup_clusters_minlabel(ids, pairs, max_iterations=3)
     # and with enough rounds the same chain converges to one cluster
     got = {
         r["doc_id"]: r["canonical_id"]
-        for r in dedup.neardup_clusters_minlabel(
+        for r in neardup_clusters_minlabel(
             ids, pairs, max_iterations=12
         ).collect()
     }
@@ -482,7 +500,7 @@ def test_neardup_clusters_long_chain_log_rounds(spark):
         [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long"
     )
     with pytest.raises(RuntimeError, match="did not converge"):
-        dedup.neardup_clusters_minlabel(ids, pairs, max_iterations=12)
+        neardup_clusters_minlabel(ids, pairs, max_iterations=12)
     got = {
         (r["doc_id"], r["canonical_id"], r["cluster_size"])
         for r in dedup.neardup_clusters(ids, pairs, max_iterations=8).collect()
@@ -506,7 +524,7 @@ def test_neardup_clusters_star_matches_minlabel_spec(spark):
     }
     minlabel = {
         tuple(r)
-        for r in dedup.neardup_clusters_minlabel(ids, pairs).collect()
+        for r in neardup_clusters_minlabel(ids, pairs).collect()
     }
     assert star == minlabel
 

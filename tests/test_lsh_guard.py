@@ -194,6 +194,48 @@ def test_curation_run_manifest_persists_guard_metrics(spark, tmp_path):
     assert s3["n_output"] == s2["n_output"]
 
 
+def test_curation_run_job_count_and_cached_frames(spark, tmp_path):
+    """Pinned Spark job count of one guarded curation_run on a small flood
+    corpus, and the cached frames it leaves: ``kept`` and the guarded
+    signature cache, nothing else. No job runs while the pair stage is
+    built, the star contraction's empty-graph check is one action, and
+    ``n_output`` is an Observation on the output write. The former
+    formulation (a candidate-endpoint prune materialized at plan build,
+    ``isEmpty`` + ``count``, the output table read back and counted)
+    submitted 72 jobs and left 3 cached frames. The star contraction's
+    ``localCheckpoint`` RDDs are not counted: the ContextCleaner may
+    release them at any GC."""
+    from adaptive_pdf_extractor_spark.plans.curation import curation_run
+
+    sc = spark.sparkContext
+
+    def cached_ids():
+        return {
+            k for k, r in sc._jsc.getPersistentRDDs().items()
+            if "localCheckpoint" not in r.toString()
+        }
+
+    # one input split per source: _spread repartitions at any core count
+    docs = (
+        _mega_docs(spark, 300, partitions=1)
+        .withColumn("doc_id", F.col("doc_id") + 5000)
+        .unionByName(_mixed_docs(spark).coalesce(1))
+    )
+    before = cached_ids()
+    sc.setJobGroup("pin_curation_run", "pin_curation_run")
+    try:
+        summary = curation_run(docs, str(tmp_path / "pin"), max_bucket_size=24)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup("pin_curation_run"))
+    assert (n_jobs, len(cached_ids() - before)) == (58, 2)
+    assert summary["n_input"] == 360
+    assert summary["n_output"] == 2  # the whole corpus shares BASE
+    assert summary["guard"]["flood_regime"] is True
+    out = spark.read.parquet(str(tmp_path / "pin" / "curated.parquet"))
+    assert out.count() == summary["n_output"]
+
+
 def test_simhash_guard_bit_compatible_and_bounded(spark):
     docs = _mixed_docs(spark)
     unguarded = sorted(
