@@ -608,7 +608,9 @@ def q_winnowing_sketch_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.select(
         "doc_id",
         F.explode(
-            T.winnowing_fingerprints_md5(F.col("text"), k=7, window=4)
+            T.winnowing_fingerprints(
+                F.col("text"), k=7, window=4, hash_family="md5"
+            )
         ).alias("fingerprint"),
     )
 

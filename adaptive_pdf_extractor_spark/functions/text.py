@@ -2,10 +2,14 @@
 
 Functions here build **JVM-side Column expressions** (whole-stage codegen,
 no Python in the hot path) — the Spark-first counterpart of the reference's
-row-at-a-time Python string ops — except where per-element array math would
-run as interpreted higher-order lambdas; those hot folds (winnowing window
-minima) run as Arrow-batched numpy instead, with the Column formulation
-kept as the executable spec.
+row-at-a-time Python string ops. Every gram array is one codegen'd
+``regexp_extract_all`` pass plus at most one single-level hashing
+``transform``: no per-position lambda re-evaluates captured text, and the
+array can feed a pandas UDF directly (a PythonUDF whose input nests lambdas
+skips Python-UDF extraction on a session's later queries). Folds over those
+arrays (winnowing window minima here; MinHash and SimHash in
+operators/dedup) run as Arrow-batched numpy over ONE hash-family table,
+``_HASH_FAMILIES``; their Column-algebra specs live in ``tests/specs.py``.
 
 The scalar functions are deterministic and DuckDB-expressible, giving them
 exact SQL oracles in the driver's correctness harness
@@ -37,6 +41,38 @@ STOPWORDS_EN = ["the", "a", "of", "to", "and", "in", "is", "it", "that", "for"]
 # includes \x0B (vertical tab), RE2 (DuckDB) \s does not — naming the
 # characters keeps Spark and the oracles byte-identical on all inputs.
 WS_CLASS = r"\t\n\x0b\f\r "
+_WS_EDGES = rf"^[{WS_CLASS}]+|[{WS_CLASS}]+$"
+_ASCII_UPPER = "ABCDEFGHIJKLMNOPQRSTUVWXYZ"
+
+
+# Per-element hash families of the sketch kernels (MinHash, SimHash,
+# winnowing): the JVM-side hash applied to each gram/token, and the numpy
+# decode of the resulting Arrow array to uint64. Only these differ between
+# families; each fold is one implementation. xxhash64 is the production
+# fast path; md5 (first 16 hex chars parsed as uint64) is the
+# engine-portable form a DuckDB oracle reproduces bit-for-bit (numpy can't
+# reduce string dtypes, hence the per-element parse).
+_HASH_FAMILIES = {
+    "xxhash64": (
+        lambda g: F.xxhash64(g),
+        lambda np, hs: np.asarray(hs, dtype=np.int64).astype(np.uint64),
+    ),
+    "md5": (
+        lambda g: F.substring(F.md5(g), 1, 16),
+        lambda np, hs: np.array([int(x, 16) for x in hs], dtype=np.uint64),
+    ),
+}
+
+
+def _hash_family(hash_family: str):
+    """(JVM element hash, numpy decode) of a hash family; ValueError for
+    an unknown name (raised while the query is built, before any job)."""
+    if hash_family not in _HASH_FAMILIES:
+        raise ValueError(
+            f"unknown hash_family {hash_family!r}; "
+            f"expected one of {sorted(_HASH_FAMILIES)}"
+        )
+    return _HASH_FAMILIES[hash_family]
 
 
 def tokens(col: Column) -> Column:
@@ -45,7 +81,7 @@ def tokens(col: Column) -> Column:
     Boundary whitespace is stripped by regex (F.trim removes only spaces;
     a trailing newline would otherwise yield a counted empty-string token
     and break the ``[^\\s]+``-counting oracles)."""
-    cleaned = F.regexp_replace(col, rf"^[{WS_CLASS}]+|[{WS_CLASS}]+$", "")
+    cleaned = F.regexp_replace(col, _WS_EDGES, "")
     return F.when(cleaned == "", F.array().cast("array<string>")).otherwise(
         F.split(cleaned, rf"[{WS_CLASS}]+")
     )
@@ -134,19 +170,6 @@ def lang_id(col: Column) -> Column:
     return F.when(best["score"] > 0, best["lang"]).otherwise(F.lit("und"))
 
 
-def _bind(expr: Column, fn) -> Column:
-    """Evaluate ``expr`` ONCE per row and pass it to ``fn`` as a bound
-    lambda variable. Interpreted higher-order lambdas re-evaluate every
-    captured OUTER expression per element (no common-subexpression
-    elimination inside a lambda body), so e.g. ``lower(text)`` referenced
-    inside a per-position ``transform`` costs O(len) per element — O(len²)
-    per row. Binding through a one-element array transform turns the
-    capture into a slot read: measured 39.1s -> 1.1s for 5-gram shingling
-    of 50k documents (sf1.0). Plain column references are already slots
-    and don't need this."""
-    return F.element_at(F.transform(F.array(expr), fn), 1)
-
-
 def char_grams_all(col: Column, n: int) -> Column:
     """EVERY position n-gram of the lowercased text, in order, duplicates
     kept — one codegen'd ``regexp_extract_all`` pass with an overlapping
@@ -169,66 +192,37 @@ def char_grams_all(col: Column, n: int) -> Column:
 def char_ngrams(col: Column, n: int = 5) -> Column:
     """Distinct character n-grams (shingles) of the lowercased text —
     the dedup primitive. One regex pass (:func:`char_grams_all`) + one
-    distinct; no lambdas, so the result is safe as a pandas-UDF input
-    (see :func:`_bind` for why that matters)."""
+    distinct; no lambdas, so the result is safe as a pandas-UDF input."""
     return F.array_distinct(char_grams_all(col, n))
 
 
-def token_ngram_keys(col: Column, n: int = 13, width: int = 16) -> Column:
+def token_ngram_keys(col: Column, n: int = 13) -> Column:
     """Distinct ``n``-token n-gram keys of the case-folded text: each
     gram is ``n`` consecutive whitespace tokens joined by one space,
-    keyed by the first ``width`` hex chars of its md5 (compact AND
+    keyed by the first 16 hex chars of its md5 (compact AND
     engine-portable — a DuckDB oracle reproduces every key, the
-    hash_split/winnowing_md5 trick). Case folding is ASCII-only
+    hash_split/winnowing md5 trick). Case folding is ASCII-only
     (translate, NOT full-Unicode lower()): Java and DuckDB lower() can
     disagree on exotic uppercase ('İ'), and a single divergent byte
     changes the md5 key — the same reasoning as stats.ascii_fold and
-    WS_CLASS. Texts with fewer than ``n`` tokens yield an empty array.
-    The benchmark-decontamination primitive: 13-gram membership is the
-    standard train-vs-eval overlap test (GPT-3 appendix C lineage)."""
-    folded = F.translate(
-        col,
-        "ABCDEFGHIJKLMNOPQRSTUVWXYZ",
-        "abcdefghijklmnopqrstuvwxyz",
-    )
-    # toks enters as a bound lambda variable (slot read) — as a captured
-    # expression the whole tokenization re-ran per gram position
-    return _bind(tokens(folded), lambda t: _token_ngram_keys_of(t, n, width))
+    WS_CLASS. Texts with fewer than ``n`` tokens (and NULL) yield an
+    empty array. The benchmark-decontamination primitive: 13-gram
+    membership is the standard train-vs-eval overlap test (GPT-3
+    appendix C lineage).
 
-
-def _token_ngram_keys_of(toks: Column, n: int, width: int) -> Column:
-    """Gram-key expression over an already-computed token array — the ONE
-    body both the bound fast path and the unbound pandas-UDF-safe variant
-    share, so their keys can never diverge."""
-    n_grams = F.size(toks) - (n - 1)
-    grams = F.transform(
-        F.sequence(F.lit(1), n_grams),
-        lambda i: F.substring(
-            F.md5(F.array_join(F.slice(toks, i, n), " ")), 1, width
-        ),
+    Tokens are :func:`tokens`' (boundary whitespace stripped, each
+    ``WS_CLASS`` run one separator); with every run collapsed to one
+    space, the grams are one ``regexp_extract_all`` pass capturing ``n``
+    tokens ahead of each token start, then one single-level hashing
+    ``transform`` — the gram shape a pandas UDF can take directly."""
+    folded = F.translate(col, _ASCII_UPPER, _ASCII_UPPER.lower())
+    norm = F.regexp_replace(
+        F.regexp_replace(folded, _WS_EDGES, ""), rf"[{WS_CLASS}]+", " "
     )
-    return F.when(n_grams >= 1, F.array_distinct(grams)).otherwise(
-        F.array().cast("array<string>")
-    )
-
-
-def token_ngram_keys_unbound(
-    col: Column, n: int = 13, width: int = 16
-) -> Column:
-    """:func:`token_ngram_keys` WITHOUT the :func:`_bind` hoist (the
-    tokenization is a captured expression, re-evaluated per gram — the
-    round-5 formulation). Required where the gram array feeds a pandas
-    UDF DIRECTLY (streaming_decontaminate's membership kernel): a
-    PythonUDF whose input carries nested lambdas silently skips
-    ExtractPythonUDFs on every query after a session's first (see
-    :func:`_gram_hashes`). Identical keys by construction (shared
-    :func:`_token_ngram_keys_of` body)."""
-    folded = F.translate(
-        col,
-        "ABCDEFGHIJKLMNOPQRSTUVWXYZ",
-        "abcdefghijklmnopqrstuvwxyz",
-    )
-    return _token_ngram_keys_of(tokens(folded), n, width)
+    pat = "(?<![^ ])(?=((?:[^ ]+ ){" + str(n - 1) + "}[^ ]+))"
+    gram_hash, _ = _hash_family("md5")
+    keys = F.transform(F.regexp_extract_all(norm, F.lit(pat), 1), gram_hash)
+    return F.coalesce(F.array_distinct(keys), F.array().cast("array<string>"))
 
 
 # PII patterns constrained to constructs with IDENTICAL semantics in Java
@@ -274,14 +268,6 @@ def duplicate_line_fraction(col: Column) -> Column:
     ).otherwise(F.lit(0.0))
 
 
-def doc_fingerprint(col: Column) -> Column:
-    """Deterministic 64-bit document fingerprint: xxhash64 of the
-    whitespace-normalized, lowercased text. The canonical exact-dedup key
-    (content-defined, layout-insensitive)."""
-    normalized = F.lower(F.regexp_replace(F.trim(col), rf"[{WS_CLASS}]+", " "))
-    return F.xxhash64(normalized)
-
-
 # BPE-style pretokenizer classes (simplified GPT-2 shape, constrained to
 # constructs with identical semantics in Java regex and RE2 so the DuckDB
 # oracle reproduces it exactly): letter runs, digit runs, non-space symbol
@@ -298,17 +284,6 @@ def bpe_token_count(col: Column) -> Column:
     )
 
 
-def _gram_hashes(col: Column, k: int) -> Column:
-    """xxhash64 of every k-gram position of the lowercased text: one
-    codegen'd regex gram pass (:func:`char_grams_all`) + one single-level
-    hashing transform. Single-level matters beyond speed — this array
-    feeds a pandas UDF directly (winnowing_fingerprints), and a PythonUDF
-    whose input carries NESTED lambdas (the :func:`_bind` shape) silently
-    skips ExtractPythonUDFs on every query after a session's first —
-    [INTERNAL_ERROR] Cannot evaluate expression (reproduced on 4.1)."""
-    return F.transform(char_grams_all(col, k), lambda g: F.xxhash64(g))
-
-
 def _window_minima(np, h, window: int):
     """Distinct-sorted sliding-window minima of one non-empty hash array
     (a single window when the array is no longer than ``window``)."""
@@ -319,34 +294,39 @@ def _window_minima(np, h, window: int):
     return np.unique(m)
 
 
-def winnowing_minima_np(window: int):
-    """Arrow-batched winnowing window minima: k-gram hash arrays in,
+def _winnowing_udf(hash_family: str, window: int):
+    """Arrow-batched winnowing window minima: gram hash arrays in,
     distinct-sorted window minima out, one numpy sliding-window reduce per
-    document. Replaces the second interpreted ``transform`` pass of the
-    Column formulation (~len(text) array_min lambda evals per doc — the
-    interpreted-lambda anti-pattern; 20 kB docs paid ~40k evals)."""
+    document (an interpreted ``array_min`` lambda per window cost ~len(text)
+    lambda evals per doc). The minima follow the order the family's Spark
+    values sort in: signed int64 for xxhash64 (``array_min`` on bigint),
+    unsigned for md5's 16-hex strings (lexicographic order on fixed-length
+    lowercase hex IS numeric order), which come back as ``016x`` hex."""
     import numpy as np
     from pyspark.sql.pandas.functions import pandas_udf
+
+    _, decode = _hash_family(hash_family)
+    md5 = hash_family == "md5"
+    order = np.uint64 if md5 else np.int64
 
     def mins(hashes):
         out = []
         for hs in hashes:
-            if hs is None:
-                out.append(None)
+            if hs[0] is None:
+                # md5(NULL) is NULL: NULL text's one gram hashes to [NULL],
+                # which the Column spec maps to [NULL]
+                out.append([None])
                 continue
-            h = np.asarray(hs, dtype=np.int64)
-            if len(h) == 0:
-                out.append([])
-                continue
-            out.append(_window_minima(np, h, window).tolist())
+            m = _window_minima(np, decode(np, hs).view(order), window)
+            out.append([format(int(v), "016x") for v in m] if md5 else m.tolist())
         return pd.Series(out)
 
     mins.__annotations__ = {"hashes": pd.Series, "return": pd.Series}
-    return pandas_udf("array<bigint>")(mins)
+    return pandas_udf("array<string>" if md5 else "array<bigint>")(mins)
 
 
 def winnowing_fingerprints(
-    col: Column, k: int = 7, window: int = 4
+    col: Column, k: int = 7, window: int = 4, hash_family: str = "xxhash64"
 ) -> Column:
     """Winnowing document sketch (Schleimer et al., MOSS): hash every
     k-gram, then keep the minimum hash of each sliding window of ``window``
@@ -354,123 +334,22 @@ def winnowing_fingerprints(
     >= k + window - 1 contributes a shared fingerprint — the classic
     rolling-hash fingerprinting scheme for near-dup/plagiarism detection.
 
-    JVM hashes each k-gram once; window minima run as one numpy sliding
-    reduce per doc (winnowing_minima_np). Bit-identical to the Column
-    reference formulation below (pinned by test)."""
-    return winnowing_minima_np(window)(_gram_hashes(col, k))
-
-
-def winnowing_fingerprints_columns(
-    col: Column, k: int = 7, window: int = 4
-) -> Column:
-    """Reference formulation of :func:`winnowing_fingerprints`, entirely as
-    Column algebra: window minima via an interpreted transform over an
-    index sequence. Kept as the executable spec the fast path is pinned
-    against — do not use in the hot path."""
-    def mins_of(gram_hashes: Column) -> Column:
-        n_windows = F.greatest(F.size(gram_hashes) - (window - 1), F.lit(1))
-        mins = F.transform(
-            F.sequence(F.lit(1), n_windows),
-            lambda w: F.array_min(F.slice(gram_hashes, w, window)),
-        )
-        return F.array_sort(F.array_distinct(mins))
-
-    return _bind(_gram_hashes(col, k), mins_of)
-
-
-def _gram_md5_hex(col: Column, k: int, width: int = 16) -> Column:
-    """Fixed-width md5-hex prefix of every k-gram of the lowercased text
-    (one interpreted transform pass — JVM md5 per gram, same shape as
-    :func:`_gram_hashes`). Lexicographic order on fixed-length lowercase
-    hex IS numeric order, identical in every engine — the same trick
-    operators/stats.hash_split uses — which makes window MINIMA over these
-    strings ANSI-reproducible where xxhash64 minima are not. Same
-    regex-gram + single-level-transform shape as :func:`_gram_hashes`
-    (this array feeds winnowing_fingerprints_md5's pandas UDF)."""
-    return F.transform(
-        char_grams_all(col, k),
-        lambda g: F.substring(F.md5(g), 1, width),
-    )
-
-
-def winnowing_minima_str_np(window: int, width: int = 16):
-    """Hex-string twin of :func:`winnowing_minima_np`: fixed-width (<= 16
-    chars == 64 bits) hex gram hashes in, distinct-sorted window minima
-    out. numpy can't reduce byte-string dtypes, so each hex string parses
-    to uint64 — numeric order on the integers IS lexicographic order on
-    the fixed-length hex — and the sliding minima run as the same numpy
-    reduce the xxhash64 path uses, formatting back to hex on the way out."""
-    import numpy as np
-    from pyspark.sql.pandas.functions import pandas_udf
-
-    if width > 16:
-        raise ValueError(f"width must be <= 16 hex chars (64 bits): {width}")
-    fmt = f"0{width}x"
-
-    def mins(hashes):
-        out = []
-        for hs in hashes:
-            if hs is None:
-                out.append(None)
-                continue
-            if len(hs) == 0:
-                out.append([])
-                continue
-            if any(x is None for x in hs):
-                # md5(null) is null (unlike xxhash64, which hashes the
-                # seed), so a null TEXT arrives as [null]. Mirror the
-                # Column spec exactly: array_min skips nulls (null only if
-                # a window is all-null), array_sort puts nulls last.
-                n_w = max(len(hs) - (window - 1), 1)
-                win_mins = []
-                for w in range(n_w):
-                    vals = [x for x in hs[w : w + window] if x is not None]
-                    win_mins.append(min(vals) if vals else None)
-                uniq = sorted({m for m in win_mins if m is not None})
-                if None in win_mins:
-                    uniq.append(None)
-                out.append(uniq)
-                continue
-            h = np.array([int(x, 16) for x in hs], dtype=np.uint64)
-            out.append(
-                [format(int(v), fmt) for v in _window_minima(np, h, window)]
-            )
-        return pd.Series(out)
-
-    mins.__annotations__ = {"hashes": pd.Series, "return": pd.Series}
-    return pandas_udf("array<string>")(mins)
-
-
-def winnowing_fingerprints_md5(
-    col: Column, k: int = 7, window: int = 4, width: int = 16
-) -> Column:
-    """Engine-portable winnowing sketch: identical semantics to
-    :func:`winnowing_fingerprints` but with md5-hex-prefix gram hashes, so
-    a DuckDB oracle reproduces every fingerprint exactly (xxhash64 is the
-    faster production path; this is the cross-engine-verifiable one).
-    Numpy fast path, pinned bit-identical to the Column spec below."""
-    return winnowing_minima_str_np(window, width)(_gram_md5_hex(col, k, width))
-
-
-def winnowing_fingerprints_md5_columns(
-    col: Column, k: int = 7, window: int = 4, width: int = 16
-) -> Column:
-    """Column-algebra executable spec of :func:`winnowing_fingerprints_md5`
-    (interpreted; pin target only — do not use in the hot path)."""
-
-    def mins_of(gram_hashes: Column) -> Column:
-        n_windows = F.greatest(F.size(gram_hashes) - (window - 1), F.lit(1))
-        mins = F.transform(
-            F.sequence(F.lit(1), n_windows),
-            lambda w: F.array_min(F.slice(gram_hashes, w, window)),
-        )
-        return F.array_sort(F.array_distinct(mins))
-
-    return _bind(_gram_md5_hex(col, k, width), mins_of)
+    ``hash_family``: ``"xxhash64"`` (the production fast path, bigint
+    fingerprints) or ``"md5"`` (16-hex-char string fingerprints a DuckDB
+    oracle reproduces exactly — q_winnowing_sketch_md5). The JVM hashes
+    each k-gram once (:func:`char_grams_all` + one single-level
+    transform); the window minima run in :func:`_winnowing_udf`. Both
+    families are pinned bit-identical to a Column-algebra spec
+    (``winnowing_fingerprints_columns`` in ``tests/specs.py``)."""
+    gram_hash, _ = _hash_family(hash_family)
+    grams = F.transform(char_grams_all(col, k), gram_hash)
+    return _winnowing_udf(hash_family, window)(grams)
 
 
 def doc_fingerprint_md5(col: Column) -> Column:
-    """Portable variant of :func:`doc_fingerprint` (md5 hex — identical in
-    every engine, used when a cross-engine oracle must reproduce it)."""
+    """Deterministic document fingerprint: md5 hex of the
+    whitespace-normalized, lowercased text — the canonical exact-dedup key
+    (content-defined, layout-insensitive), identical in every engine so a
+    cross-engine oracle reproduces it."""
     normalized = F.lower(F.regexp_replace(F.trim(col), rf"[{WS_CLASS}]+", " "))
     return F.md5(normalized)

@@ -26,7 +26,14 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import char_ngrams, doc_fingerprint_md5, tokens
+from ..functions.text import (
+    _hash_family,
+    char_grams_all,
+    char_ngrams,
+    doc_fingerprint_md5,
+    token_ngram_keys,
+    tokens,
+)
 
 
 def _spread(df: DataFrame) -> DataFrame:
@@ -79,36 +86,6 @@ def exact_dedup_keep(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # MinHash + LSH
 # ---------------------------------------------------------------------------
-
-
-# Per-element hash families of the sketch kernels (MinHash, SimHash): the
-# JVM-side hash applied to each gram/token, and the numpy decode of the
-# resulting Arrow array to uint64. Only these differ between families; the
-# folds are one implementation each. xxhash64 is the production fast path;
-# md5 (first 16 hex chars parsed as uint64) is the engine-portable form a
-# DuckDB oracle reproduces bit-for-bit (numpy can't reduce string dtypes,
-# hence the per-element parse).
-_HASH_FAMILIES = {
-    "xxhash64": (
-        lambda g: F.xxhash64(g),
-        lambda np, hs: np.asarray(hs, dtype=np.int64).astype(np.uint64),
-    ),
-    "md5": (
-        lambda g: F.substring(F.md5(g), 1, 16),
-        lambda np, hs: np.array([int(x, 16) for x in hs], dtype=np.uint64),
-    ),
-}
-
-
-def _hash_family(hash_family: str):
-    """(JVM element hash, numpy decode) of a hash family; ValueError for
-    an unknown name (raised while the query is built, before any job)."""
-    if hash_family not in _HASH_FAMILIES:
-        raise ValueError(
-            f"unknown hash_family {hash_family!r}; "
-            f"expected one of {sorted(_HASH_FAMILIES)}"
-        )
-    return _HASH_FAMILIES[hash_family]
 
 
 # Permutation bank for the numpy signature path: sig_i = min over shingles
@@ -215,13 +192,11 @@ def minhash_signatures_df(
     * No nested lambdas: this array is a pandas-UDF input, and a
       PythonUDF whose input carries nested lambda bindings silently
       skips ExtractPythonUDFs on every query after a session's first
-      (see functions/text._gram_hashes).
+      (see the functions/text module docstring).
 
     An interpreted per-position substr form is O(len²) per row (39.7 s
     against ~1 s for the signature stage of 50k docs at sf1.0). No
     size(gh) > 0 filter: see :func:`_shingled`."""
-    from ..functions.text import char_grams_all
-
     gram_hash, decode = _hash_family(hash_family)
     base = _spread(df).select(
         F.col(id_col).alias("id"),
@@ -490,7 +465,9 @@ def _guard_split(
     ``observation.get`` after the query's first action — the production
     signal that a corpus is in the template-flood regime. The observed
     frame is ``star``, so the stage must consume it exactly once
-    (``flood_ids`` comes from the sized frame for that reason)."""
+    (``flood_ids`` comes from the sized frame for that reason). A first
+    action whose plan AQE empties above ``star`` reports nothing (see
+    :func:`observed_metrics`)."""
     from pyspark.sql.window import Window
 
     wb = Window.partitionBy(*keys)
@@ -514,6 +491,15 @@ def _guard_split(
         )
     flood_ids = sized.filter(over).select("id").distinct()
     return small, star.drop("_bsz"), flood_ids
+
+
+def observed_metrics(observation) -> dict | None:
+    """``observation``'s metrics once its first action has run, or None
+    when Spark completed it without any: once a shuffle stage below a
+    query's result comes back empty, AQE replaces the plan with an empty
+    relation, and a CollectMetrics node under that point is no longer in
+    the executed plan (``Observation.get`` then fails in ``toPyRow``)."""
+    return dict(observation._jo.getAsJava()) or None
 
 
 def minhash_lsh_pairs_from_sigs(
@@ -684,8 +670,6 @@ def decontaminate(
     reproduces every key; at extreme eval sizes a Bloom filter over the
     same keys would trade the exact broadcast set for a documented FPR,
     but exact membership is the right default at eval-suite scale)."""
-    from ..functions.text import token_ngram_keys
-
     eval_text = eval_text_col or text_col
     eval_keys = (
         eval_df.select(
@@ -729,8 +713,6 @@ def decontaminate_keys(
     (streaming.ingest.streaming_decontaminate), computed by the SAME
     ``token_ngram_keys`` definition the batch operator joins on — the
     two paths can never disagree on what a gram is."""
-    from ..functions.text import token_ngram_keys
-
     rows = (
         eval_df.select(
             F.explode(token_ngram_keys(F.col(text_col), n)).alias("g")

@@ -198,22 +198,6 @@ def lsh_table_buckets_np(tables: list[list[list[float]]]):
     return pandas_udf("array<bigint>")(buckets)
 
 
-def lsh_bucket_expr(vec_col: Column, planes: list[list[float]]) -> Column:
-    """Bucket id = bits of sign(v . h_p)."""
-    bits = []
-    for p, plane in enumerate(planes):
-        h = F.array(*[F.lit(float(x)) for x in plane])
-        bits.append(
-            F.when(_dot(vec_col.cast("array<double>"), h) >= 0, F.lit(1 << p)).otherwise(
-                F.lit(0)
-            )
-        )
-    out = bits[0]
-    for b in bits[1:]:
-        out = out + b
-    return out.cast("long")
-
-
 def lsh_topk(
     df: DataFrame,
     id_col: str,
@@ -247,9 +231,9 @@ def lsh_topk(
     probes = [qbucket] + [
         qbucket ^ (1 << p) for p in by_margin[: max(0, n_probes - 1)]
     ]
-    # corpus-side buckets via the Arrow/numpy matmul (lsh_bucket_expr's
-    # interpreted per-plane dot folds are the corpus-sized slow path;
-    # kept as the executable spec)
+    # corpus-side buckets via the Arrow/numpy matmul (interpreted
+    # per-plane dot folds are the corpus-sized slow path; that Column form
+    # is kept as the spec in tests/specs.py)
     bucket_col = F.element_at(
         lsh_table_buckets_np([planes])(F.col(vec_col)), 1
     )

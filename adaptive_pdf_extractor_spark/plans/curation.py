@@ -226,9 +226,11 @@ def curation_run(
     # with the guard off, obs.get would raise NO_OBSERVE_BEFORE_GET after
     # the output write, so skip the telemetry entirely in that case
     obs = Observation("lsh_guard") if max_bucket_size is not None else None
-    out = curation_pipeline(
-        docs,
-        lambda kept: dedup.minhash_lsh_pairs(
+    gated = []
+
+    def pair_stage(kept: DataFrame) -> DataFrame:
+        gated.append(kept)
+        return dedup.minhash_lsh_pairs(
             kept,
             "doc_id",
             "text",
@@ -238,8 +240,10 @@ def curation_run(
             threshold=threshold,
             max_bucket_size=max_bucket_size,
             observation=obs,
-        ).select("id_a", "id_b"),
-        decontaminate_against=decontaminate_against,
+        ).select("id_a", "id_b")
+
+    out = curation_pipeline(
+        docs, pair_stage, decontaminate_against=decontaminate_against
     )
     output_path = os.path.join(run_dir, "curated.parquet")
     # ONE action: the write executes the observed pair stage and counts
@@ -254,7 +258,24 @@ def curation_run(
     # a separate action: docs is consumed only inside the persisted kept
     # subtree, and an observation there never fires on a cache hit
     n_input = docs.count()
-    guard = obs.get if obs is not None else {}
+    guard = {}
+    if obs is not None:
+        guard = dedup.observed_metrics(obs)
+    if guard is None:
+        # no pair survived, so AQE emptied the pair stage's plan above the
+        # observed star frame, which may still hold star edges (a flood
+        # whose members all verify below the threshold): observe the star
+        # frame again under a one-row count, which keeps it in the plan
+        sigs = dedup.minhash_signatures_df(
+            gated[0], "doc_id", "text", shingle_n=shingle_n, num_hashes=num_hashes
+        ).select("id", "sig")  # the pair stage's persisted signatures
+        banded = dedup._banded(sigs, bands, num_hashes // bands)
+        recount = Observation("lsh_guard_recount")
+        _, star, _ = dedup._guard_split(
+            banded, ["band", "bucket"], max_bucket_size, recount
+        )
+        star.agg(F.count("*")).collect()
+        guard = dedup.observed_metrics(recount)
     max_over = guard.get("max_oversized_bucket")
     summary = {
         "n_input": int(n_input),

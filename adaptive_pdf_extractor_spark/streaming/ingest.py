@@ -187,7 +187,7 @@ def streaming_decontaminate(
     import pandas as pd
     from pyspark.sql.pandas.functions import pandas_udf
 
-    from ..functions.text import token_ngram_keys_unbound
+    from ..functions.text import token_ngram_keys
     from ..operators.dedup import bloom_contains, build_gram_bloom
 
     sc = docs.sparkSession.sparkContext
@@ -198,7 +198,7 @@ def streaming_decontaminate(
             bits, k, m = bbloom.value
             out = []
             for g in grams:
-                if g is None or len(g) == 0:
+                if len(g) == 0:
                     out.append(0)
                     continue
                 kv = np.array([int(x, 16) for x in g], dtype=np.uint64)
@@ -211,20 +211,13 @@ def streaming_decontaminate(
         def hits(grams):
             ks = bkeys.value
             return pd.Series(
-                [
-                    0 if g is None else sum(1 for x in g if x in ks)
-                    for g in grams
-                ],
-                dtype="int64",
+                [sum(1 for x in g if x in ks) for g in grams], dtype="int64"
             )
 
     hits.__annotations__ = {"grams": pd.Series, "return": pd.Series}
     hit_udf = pandas_udf("long")(hits)
-    # token_ngram_keys_unbound, NOT token_ngram_keys: this gram array is a
-    # pandas UDF input, where the bound (nested-lambda) form breaks UDF
-    # extraction after a session's first query (see functions/text.py)
     flagged = docs.withColumn(
-        "_n_hit", hit_udf(token_ngram_keys_unbound(F.col(text_col), n))
+        "_n_hit", hit_udf(token_ngram_keys(F.col(text_col), n))
     )
     cond = F.col("_n_hit") >= min_hits
     return flagged.filter(cond if keep_contaminated else ~cond).drop("_n_hit")

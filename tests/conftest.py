@@ -15,6 +15,14 @@ def reference_available() -> bool:
     return os.path.isdir(os.path.join(REFERENCE, "data"))
 
 
+# the shared gate of tests that check parity with the reference's own
+# corpora, caches or published numbers (they run whenever it exists)
+needs_reference = pytest.mark.skipif(
+    not reference_available(),
+    reason=f"reference corpora, caches and results absent ({REFERENCE})",
+)
+
+
 @pytest.fixture(scope="session")
 def spark():
     from adaptive_pdf_extractor_spark.session import get_spark

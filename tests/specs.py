@@ -7,13 +7,28 @@ production path; tests pin the production path to it.
 from __future__ import annotations
 
 import re
+from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
-from adaptive_pdf_extractor_spark.functions.rules import Rule, compile_cached
-from adaptive_pdf_extractor_spark.functions.text import tokens
+from adaptive_pdf_extractor_spark.functions.normalize import normalize_series
+from adaptive_pdf_extractor_spark.functions.rules import (
+    Rule,
+    RuleBook,
+    compile_cached,
+    execute_rule,
+    validate_value,
+)
+from adaptive_pdf_extractor_spark.functions.text import (
+    _hash_family,
+    char_grams_all,
+    tokens,
+)
+from adaptive_pdf_extractor_spark.operators.similarity import _dot
+from adaptive_pdf_extractor_spark.sources.spark_io import RULES_DDL
 
 
 def apply_rules_pandas(
@@ -148,7 +163,6 @@ def neardup_clusters_minlabel(
                 "contraction), whose rounds are O(log n) regardless of "
                 "diameter"
             )
-        from pyspark.sql.window import Window
 
         # truncate the per-round join lineage and release the caches the
         # loop accumulated (labels is small: two columns, one row per node)
@@ -162,3 +176,148 @@ def neardup_clusters_minlabel(
     finally:
         labels.unpersist()
         edges.unpersist()
+
+
+def _bind(expr: Column, fn) -> Column:
+    """Evaluate ``expr`` ONCE per row and pass it to ``fn`` as a bound
+    lambda variable. Interpreted higher-order lambdas re-evaluate every
+    captured outer expression per element (no common-subexpression
+    elimination inside a lambda body); binding through a one-element array
+    transform turns the capture into a slot read."""
+    return F.element_at(F.transform(F.array(expr), fn), 1)
+
+
+def winnowing_fingerprints_columns(
+    col: Column, k: int = 7, window: int = 4, hash_family: str = "xxhash64"
+) -> Column:
+    """Reference formulation of ``text.winnowing_fingerprints``, entirely
+    as Column algebra: the same family gram hashes, then window minima via
+    an interpreted ``array_min`` transform over an index sequence, sorted
+    distinct. Interpreted (not codegen'd) — do not use in the hot path."""
+    gram_hash, _ = _hash_family(hash_family)
+
+    def mins_of(gram_hashes: Column) -> Column:
+        n_windows = F.greatest(F.size(gram_hashes) - (window - 1), F.lit(1))
+        mins = F.transform(
+            F.sequence(F.lit(1), n_windows),
+            lambda w: F.array_min(F.slice(gram_hashes, w, window)),
+        )
+        return F.array_sort(F.array_distinct(mins))
+
+    return _bind(F.transform(char_grams_all(col, k), gram_hash), mins_of)
+
+
+def lsh_bucket_expr(vec_col: Column, planes: list[list[float]]) -> Column:
+    """Reference formulation of ``similarity.lsh_table_buckets_np`` for one
+    table as Column algebra: bucket id = bits of sign(v . h_p), one
+    interpreted dot fold per plane."""
+    bits = []
+    for p, plane in enumerate(planes):
+        h = F.array(*[F.lit(float(x)) for x in plane])
+        bits.append(
+            F.when(_dot(vec_col.cast("array<double>"), h) >= 0, F.lit(1 << p)).otherwise(
+                F.lit(0)
+            )
+        )
+    out = bits[0]
+    for b in bits[1:]:
+        out = out + b
+    return out.cast("long")
+
+
+# Relational cross-check formulation of the extraction kernel. The fused
+# in-UDF first-match loop is the production path; this expresses the same
+# semantics as pure relational algebra —
+#
+#     docs x broadcast(rules)  (nested-loop join)
+#     -> apply/validate each rule        (pandas UDF per pair: CPython re)
+#     -> row_number() over (partition by doc_id, field
+#                           order by weight desc, rule_seq)  among validated
+#     -> keep rank 1
+#
+# It shuffles (the window) and evaluates every rule on every doc (no
+# short-circuit), so it is deliberately NOT a scale path.
+
+
+def rules_to_df(spark, book: RuleBook) -> DataFrame:
+    rows = []
+    for label, fields in book.by_label_field.items():
+        for fname, rl in fields.items():
+            for r in rl:
+                rows.append(
+                    {
+                        "label": label,
+                        "field": fname,
+                        "rule": r.rule,
+                        "validation_regex": r.validation_regex,
+                        "weight": r.weight,
+                        "rule_seq": r.rule_seq,
+                        "round_added": 0,
+                        "rule_id": r.rule_id,
+                    }
+                )
+    return spark.createDataFrame(rows, schema=RULES_DDL)
+
+
+APPLIED_DDL = (
+    "doc_id string, field string, rule_id bigint, weight bigint, "
+    "rule_seq bigint, value string, valid boolean"
+)
+
+
+def first_match_relational(docs: DataFrame, rules: DataFrame) -> DataFrame:
+    """(doc_id, field, value, rule_id) via join + window — semantics equal
+    to the fused operator's (tested), including tri-state null handling."""
+    flat = docs.select(
+        "doc_id",
+        "label",
+        F.expr(
+            "concat_ws('', transform(array_sort(spans, (l, r) -> l.offset - r.offset),"
+            " s -> CASE WHEN s.kind = 'text' THEN coalesce(s.text, '') ELSE '' END))"
+        ).alias("raw_text"),
+    )
+
+    def normalize_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            pdf = pdf.copy()
+            pdf["text"] = normalize_series(pdf["raw_text"])
+            yield pdf[["doc_id", "label", "text"]]
+
+    normed = flat.mapInPandas(
+        normalize_batch, schema="doc_id string, label string, text string"
+    )
+
+    pairs = normed.join(F.broadcast(rules), "label")
+
+    def apply_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            vals = []
+            valid = []
+            for text, rule, vregex in zip(
+                pdf["text"], pdf["rule"], pdf["validation_regex"]
+            ):
+                v = execute_rule(rule, text)
+                vals.append(v)
+                valid.append(validate_value(vregex, v))
+            out = pdf[["doc_id", "field", "rule_id", "weight", "rule_seq"]].copy()
+            out["value"] = pd.Series(vals, index=pdf.index, dtype="object")
+            out["valid"] = valid
+            yield out
+
+    applied = pairs.mapInPandas(apply_batch, schema=APPLIED_DDL)
+
+    w = Window.partitionBy("doc_id", "field").orderBy(
+        F.desc("weight"), F.asc("rule_seq")
+    )
+    return (
+        applied.filter("valid")
+        .withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") == 1)
+        .select(
+            "doc_id",
+            "field",
+            # "" -> null (src/pipeline.py:52-57)
+            F.nullif(F.col("value"), F.lit("")).alias("value"),
+            "rule_id",
+        )
+    )

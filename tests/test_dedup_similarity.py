@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 from adaptive_pdf_extractor_spark.operators import dedup, similarity
 from adaptive_pdf_extractor_spark.sources import corpus as corpus_mod
-from specs import neardup_clusters_minlabel, simhash64_columns
+from specs import lsh_bucket_expr, neardup_clusters_minlabel, simhash64_columns
 
 
 @pytest.fixture(scope="module")
@@ -754,7 +754,7 @@ def test_lsh_bucket_np_matches_column_expr(vectors):
     planes = similarity.hyperplanes(16, 8, seed=42)
     rows = vectors.select(
         "vec_id",
-        similarity.lsh_bucket_expr(F.col("embedding"), planes).alias("col_b"),
+        lsh_bucket_expr(F.col("embedding"), planes).alias("col_b"),
         F.element_at(
             similarity.lsh_table_buckets_np([planes])(F.col("embedding")), 1
         ).alias("np_b"),

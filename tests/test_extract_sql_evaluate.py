@@ -4,18 +4,15 @@ operators reproduce the reference's published numbers."""
 
 from __future__ import annotations
 
-import pytest
+from conftest import needs_reference
 from pyspark.sql import functions as F
 
 from adaptive_pdf_extractor_spark.functions.rules import RuleBook
 from adaptive_pdf_extractor_spark.operators.extract import extract_documents
-from adaptive_pdf_extractor_spark.operators.extract_sql import (
-    first_match_relational,
-    rules_to_df,
-)
 from adaptive_pdf_extractor_spark.plans.evaluate import field_accuracy, span_parity
 from adaptive_pdf_extractor_spark.sources import corpus as corpus_mod
 from adaptive_pdf_extractor_spark.sources import spark_io
+from specs import first_match_relational, rules_to_df
 
 DATASETS = "/root/reference/data/fake/datasets"
 RESULTS = "/root/reference/data/fake/results"
@@ -23,17 +20,11 @@ CACHES = "/root/reference/data/fake/caches"
 NAME = "fake_dataset_1000samples_seed_1"
 
 
-@pytest.fixture(scope="module")
-def seed1(spark):
-    docs = spark_io.reference_corpus_df(spark, f"{DATASETS}/{NAME}.json").limit(400).cache()
-    book = RuleBook.from_rows(
-        corpus_mod.reference_cache_to_rule_rows(f"{CACHES}/{NAME}_cache.json")
-    )
-    return docs, book
-
-
-def test_relational_equals_fused(spark, seed1):
-    docs, book = seed1
+def test_relational_equals_fused(spark, learned_rules):
+    docs = spark_io.input_df_from_rows(
+        spark, corpus_mod.synth_rows(seed=1, start=0, count=400)
+    ).cache()
+    book = RuleBook.from_rows(learned_rules)
     fused = (
         extract_documents(docs, book)
         .select("doc_id", F.explode("spans").alias("s"))
@@ -57,6 +48,7 @@ def test_relational_equals_fused(spark, seed1):
         assert k not in resolved_nulls or b[k] is None
 
 
+@needs_reference
 def test_evaluation_reproduces_reference_numbers(spark):
     """Full seed-1 corpus with the converged cache: parity 100%, accuracy
     98.26%, perfect-doc rate 86.6% — the reference's published benchmark
@@ -79,6 +71,7 @@ def test_evaluation_reproduces_reference_numbers(spark):
     assert abs(acc.perfect_docs / acc.docs - 0.866) < 0.002
 
 
+@needs_reference
 def test_direct_only_beats_reference_llm_only_benchmark(spark):
     """The reference's --no-use-cache mode (every field answered by the
     LLM, 98.90% accuracy, README.md:32): the deterministic direct extractor

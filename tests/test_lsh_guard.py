@@ -236,6 +236,61 @@ def test_curation_run_job_count_and_cached_frames(spark, tmp_path):
     assert out.count() == summary["n_output"]
 
 
+def test_curation_run_reports_guard_when_no_pair_survives(spark, tmp_path):
+    """A guarded curation_run whose pair stage verifies no pair still
+    commits its telemetry. AQE empties that plan above the observed star
+    frame, so its Observation completes without metrics, and the run
+    sizes the band buckets in one action of its own instead. A 0- and a
+    1-document corpus give the unguarded run's summary with the cap
+    recorded; a template flood whose members all verify below the
+    threshold keeps its exact star count. The former code raised on all
+    three at ``obs.get``."""
+    import hashlib
+
+    from adaptive_pdf_extractor_spark.plans.curation import curation_run
+
+    for rows in ([], [(1, BASE)]):
+        docs = spark.createDataFrame(rows, "doc_id long, text string")
+        guarded = curation_run(docs, str(tmp_path / f"guarded{len(rows)}"))
+        unguarded = curation_run(
+            docs, str(tmp_path / f"unguarded{len(rows)}"), max_bucket_size=None
+        )
+        assert guarded["guard"] == {
+            "max_bucket_size": 256,
+            "star_candidate_rows": 0,
+            "max_oversized_bucket": None,
+            "flood_regime": False,
+        }
+        assert guarded == {**unguarded, "guard": guarded["guard"]}
+
+    # every doc = BASE + 20 random hex tokens: pairwise jaccard ~0.6, so
+    # band buckets overflow a cap of 24 but no pair reaches 0.8
+    rows = [
+        (i, BASE + "".join(
+            " " + hashlib.md5(f"{i}/{j}".encode()).hexdigest()[:8] for j in range(20)
+        ))
+        for i in range(300)
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    summary = curation_run(docs, str(tmp_path / "flood"), max_bucket_size=24)
+    sigs = dedup.minhash_signatures_df(docs, "doc_id", "text")
+    sizes = [
+        r["n"]
+        for r in dedup._banded(sigs, 32, 4)
+        .groupBy("band", "bucket")
+        .agg(F.count("*").alias("n"))
+        .filter(F.col("n") > 24)
+        .collect()
+    ]
+    assert summary["n_output"] == 300
+    assert summary["guard"] == {
+        "max_bucket_size": 24,
+        "star_candidate_rows": sum(n - 1 for n in sizes),
+        "max_oversized_bucket": max(sizes),
+        "flood_regime": True,
+    }
+
+
 def test_simhash_guard_bit_compatible_and_bounded(spark):
     docs = _mixed_docs(spark)
     unguarded = sorted(

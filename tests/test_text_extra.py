@@ -3,16 +3,26 @@ document sketch): the winnowing guarantee and near-dup behavior."""
 
 from __future__ import annotations
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from adaptive_pdf_extractor_spark.functions import text as T
+from specs import winnowing_fingerprints_columns
 
 
-def _sketch(spark, texts: list[str], k=7, window=4) -> list[set]:
+HASH_FAMILIES = ("xxhash64", "md5")
+
+
+def _sketch(
+    spark, texts: list[str], k=7, window=4, hash_family="xxhash64"
+) -> list[set]:
     df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "id int, t string")
     rows = df.select(
-        "id", T.winnowing_fingerprints(F.col("t"), k=k, window=window).alias("fp")
+        "id",
+        T.winnowing_fingerprints(
+            F.col("t"), k=k, window=window, hash_family=hash_family
+        ).alias("fp"),
     ).collect()
     return [set(r["fp"]) for r in sorted(rows, key=lambda r: r["id"])]
 
@@ -28,37 +38,46 @@ def test_bpe_token_count(spark):
 
 def test_winnowing_guarantee(spark):
     """Any shared substring of length >= k + window - 1 must contribute at
-    least one shared fingerprint (the winnowing theorem)."""
+    least one shared fingerprint (the winnowing theorem), in every hash
+    family."""
     k, w = 7, 4
     shared = "the quick brown fox jumps over the lazy dog"  # length 43 >= 10
     a = "PREFIX AAA " + shared + " SUFFIX BBB"
     b = "zzz totally different opening " + shared + " and closing qqq"
     c = "nothing in common with either of those two documents at all!"
-    sa, sb, sc = _sketch(spark, [a, b, c], k=k, window=w)
-    assert sa & sb, "documents sharing a long substring must share fingerprints"
-    assert not (sa & sc) or len(sa & sc) < len(sa & sb)
+    for hash_family in HASH_FAMILIES:
+        sa, sb, sc = _sketch(spark, [a, b, c], k=k, window=w, hash_family=hash_family)
+        assert sa & sb, "documents sharing a long substring must share fingerprints"
+        assert not (sa & sc) or len(sa & sc) < len(sa & sb)
 
 
 def test_winnowing_neardup_ranking(spark):
     base = "alpha beta gamma delta epsilon zeta eta theta iota kappa " * 5
     near = base[15:]          # same content, shifted
     far = "one two three four five six seven eight nine ten " * 5
-    s_base, s_near, s_far = _sketch(spark, [base, near, far])
-    overlap_near = len(s_base & s_near) / len(s_base | s_near)
-    overlap_far = len(s_base & s_far) / len(s_base | s_far)
-    assert overlap_near > 0.6 > overlap_far
+    for hash_family in HASH_FAMILIES:
+        s_base, s_near, s_far = _sketch(
+            spark, [base, near, far], hash_family=hash_family
+        )
+        overlap_near = len(s_base & s_near) / len(s_base | s_near)
+        overlap_far = len(s_base & s_far) / len(s_base | s_far)
+        assert overlap_near > 0.6 > overlap_far
 
 
 def test_winnowing_short_and_empty(spark):
-    s_tiny, s_empty = _sketch(spark, ["abc", ""])
-    assert len(s_tiny) == 1  # single k-gram window on short text
-    assert len(s_empty) == 1  # hash of the empty substring — defined, stable
+    for hash_family in HASH_FAMILIES:
+        s_tiny, s_empty = _sketch(spark, ["abc", ""], hash_family=hash_family)
+        assert len(s_tiny) == 1  # single k-gram window on short text
+        assert len(s_empty) == 1  # hash of the empty substring — defined, stable
 
 
-def test_winnowing_np_matches_column_reference(spark):
+@pytest.mark.parametrize("hash_family", HASH_FAMILIES)
+def test_winnowing_np_matches_column_reference(spark, hash_family):
     """The numpy sliding-min winnowing (hot path) must be bit-identical to
-    the Column-algebra reference formulation, including the degenerate
-    edges (empty text, text shorter than k, null -> [xxhash64(null)])."""
+    the Column-algebra reference formulation in both hash families,
+    including the degenerate edges (empty text, text shorter than k, null
+    -> [xxhash64(null)] / md5's [null]), and give one fingerprint for
+    short/empty text."""
     texts = [
         "the quick brown fox jumps over the lazy dog",
         "abc", "", None, "x" * 500,
@@ -67,39 +86,21 @@ def test_winnowing_np_matches_column_reference(spark):
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "id int, t string"
     )
+
+    def fast(**kw):
+        return T.winnowing_fingerprints(F.col("t"), hash_family=hash_family, **kw)
+
+    def ref(**kw):
+        return winnowing_fingerprints_columns(
+            F.col("t"), hash_family=hash_family, **kw
+        )
+
     rows = df.select(
         "id",
-        T.winnowing_fingerprints(F.col("t")).alias("fast"),
-        T.winnowing_fingerprints_columns(F.col("t")).alias("ref"),
-        T.winnowing_fingerprints(F.col("t"), k=4, window=7).alias("fast2"),
-        T.winnowing_fingerprints_columns(F.col("t"), k=4, window=7).alias("ref2"),
-    ).collect()
-    for r in rows:
-        assert r["fast"] == r["ref"], r["id"]
-        assert r["fast2"] == r["ref2"], r["id"]
-
-
-def test_winnowing_md5_np_matches_column_reference(spark):
-    """The md5 (engine-portable) winnowing fast path must be bit-identical
-    to its Column-algebra spec on the same degenerate edges, and must obey
-    the same guarantee shape as the xxhash64 variant (one fingerprint for
-    short/empty text)."""
-    texts = [
-        "the quick brown fox jumps over the lazy dog",
-        "abc", "", None, "x" * 500,
-        " ".join(str(i) for i in range(300)),
-    ]
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "id int, t string"
-    )
-    rows = df.select(
-        "id",
-        T.winnowing_fingerprints_md5(F.col("t")).alias("fast"),
-        T.winnowing_fingerprints_md5_columns(F.col("t")).alias("ref"),
-        T.winnowing_fingerprints_md5(F.col("t"), k=4, window=7).alias("fast2"),
-        T.winnowing_fingerprints_md5_columns(F.col("t"), k=4, window=7).alias(
-            "ref2"
-        ),
+        fast().alias("fast"),
+        ref().alias("ref"),
+        fast(k=4, window=7).alias("fast2"),
+        ref(k=4, window=7).alias("ref2"),
     ).collect()
     for r in rows:
         assert r["fast"] == r["ref"], r["id"]
@@ -279,17 +280,20 @@ def test_hash_split_validation_and_ascii_fold(spark):
 def test_token_ngram_keys_match_python_reference(spark):
     """token_ngram_keys (the decontamination gram primitive) against a
     straight-line Python reference over a seeded batch of edge-case and
-    random ASCII texts: empty, whitespace-only, sub-n, exactly-n,
-    repeated grams (distinct!), and every WS_CLASS char as a separator.
-    One Spark job for the whole batch."""
+    random ASCII texts at n = 1, 5 and 13: NULL, empty, whitespace-only,
+    sub-n, exactly-n, repeated grams (distinct!), every WS_CLASS char as a
+    separator, a non-ASCII space (U+00A0, which stays inside a token) and
+    a non-ASCII token. One Spark job for the whole batch."""
     import hashlib
     import random
     import re
 
-    n = 5  # smaller n than production's 13 so short random texts exercise grams
+    ns = (1, 5, 13)
     ws = "\t\n\x0b\f\r "
 
-    def ref(text: str) -> list[str]:
+    def ref(text: str | None, n: int) -> list[str]:
+        if text is None:
+            return []
         folded = text.translate(str.maketrans(
             "ABCDEFGHIJKLMNOPQRSTUVWXYZ", "abcdefghijklmnopqrstuvwxyz"
         ))  # ASCII fold, mirroring token_ngram_keys' translate
@@ -309,7 +313,12 @@ def test_token_ngram_keys_match_python_reference(spark):
 
     rng = random.Random(17)
     vocab = ["alpha", "beta", "Gamma", "d", "e1", "FF", "go"]
-    texts = ["", "   ", "\t\n", "a b c d", "a b c d e", "one two one two one two one two"]
+    texts = [
+        None, "", "   ", "\t\n", "a b c d", "a b c d e",
+        "one two one two one two one two",
+        "a\u00a0b c d e f g h i j k l m n o",
+        "İstanbul İSTANBUL istanbul Word WORD word x y z q r s t u v",
+    ]
     for _ in range(60):
         k = rng.randrange(0, 20)
         toks = [rng.choice(vocab) for _ in range(k)]
@@ -322,13 +331,16 @@ def test_token_ngram_keys_match_python_reference(spark):
         [(i, t) for i, t in enumerate(texts)], "id int, t string"
     )
     rows = {
-        r["id"]: list(r["g"])
+        r["id"]: r
         for r in df.select(
-            "id", T.token_ngram_keys(F.col("t"), n).alias("g")
+            "id",
+            *[T.token_ngram_keys(F.col("t"), n).alias(f"g{n}") for n in ns],
         ).collect()
     }
-    for i, t in enumerate(texts):
-        assert rows[i] == ref(t), (i, t)
+    for n in ns:
+        for i, t in enumerate(texts):
+            assert list(rows[i][f"g{n}"]) == ref(t, n), (n, i, t)
+    assert any(len(ref(t, 13)) > 1 for t in texts)  # n=13 sees real grams
 
 
 def test_repetition_metrics_signal(spark):
@@ -388,13 +400,15 @@ def test_redact_pii_precision(spark):
 
 def test_pandas_udf_gram_inputs_survive_repeated_queries(spark):
     """Regression for the round-6 lambda-binding landmine: a pandas UDF
-    whose input expression carries NESTED lambda bindings (the
-    functions.text._bind shape) silently skips Python-UDF extraction on
-    every query after a session's first and dies with [INTERNAL_ERROR]
-    Cannot evaluate expression. Every UDF-feeding gram pipeline must
-    therefore stay single-lambda-level — pinned here by running each one
-    TWICE against freshly-constructed source frames (the exact trigger)
-    and requiring identical results."""
+    whose input expression carries NESTED lambda bindings (a one-element
+    ``transform`` hoist around a per-gram lambda) silently skips
+    Python-UDF extraction on every query after a session's first and dies
+    with [INTERNAL_ERROR] Cannot evaluate expression. Every gram array
+    must therefore stay single-lambda-level — pinned here by running each
+    UDF-fed one (MinHash signatures and winnowing in both hash families,
+    streaming decontamination, and a pandas UDF taking token_ngram_keys
+    directly) TWICE against freshly-constructed source frames (the exact
+    trigger) and requiring identical results."""
     from adaptive_pdf_extractor_spark.operators import dedup
     from adaptive_pdf_extractor_spark.streaming.ingest import (
         streaming_decontaminate,
@@ -414,17 +428,43 @@ def test_pandas_udf_gram_inputs_survive_repeated_queries(spark):
     for hash_family, n in (("xxhash64", 20), ("md5", 10)):
         assert sig_rows(hash_family, n) == sig_rows(hash_family, n)
 
-    def winnow_rows():
+    def winnow_rows(hash_family):
         d = spark.read.parquet(f"{sf}/documents.parquet").limit(10)
         return sorted(
             (r["doc_id"], tuple(r["fp"]))
             for r in d.select(
                 "doc_id",
-                T.winnowing_fingerprints(F.col("text")).alias("fp"),
+                T.winnowing_fingerprints(
+                    F.col("text"), hash_family=hash_family
+                ).alias("fp"),
             ).collect()
         )
 
-    assert winnow_rows() == winnow_rows()
+    for hash_family in ("xxhash64", "md5"):
+        assert winnow_rows(hash_family) == winnow_rows(hash_family)
+
+    from pyspark.sql.pandas.functions import pandas_udf
+
+    def n_keys(keys: pd.Series) -> pd.Series:
+        return keys.map(len)
+
+    n_keys_udf = pandas_udf("long")(n_keys)
+
+    def key_counts():
+        d = spark.read.parquet(f"{sf}/documents.parquet").limit(20)
+        return sorted(
+            (r["doc_id"], r["n"], r["size"])
+            for r in d.select(
+                "doc_id",
+                n_keys_udf(T.token_ngram_keys(F.col("text"), 5)).alias("n"),
+                F.size(T.token_ngram_keys(F.col("text"), 5)).alias("size"),
+            ).collect()
+        )
+
+    first = key_counts()
+    assert first == key_counts()
+    assert all(n == size for _, n, size in first)
+    assert any(n > 0 for _, n, _ in first)
 
     def decon_ids():
         d = spark.read.parquet(f"{sf}/documents.parquet").limit(20)
