@@ -234,6 +234,12 @@ def minhash_lsh_pairs(
     (:func:`_verified_pairs`). Composition of
     :func:`minhash_signatures_df` + :func:`minhash_lsh_pairs_from_sigs` —
     callers holding a persisted signature table use those directly.
+
+    ``max_bucket_size`` and ``observation`` are the mega-cluster guard
+    (:func:`minhash_lsh_pairs_from_sigs`). Read ``observation`` through
+    :func:`observed_metrics` after the first action over the result: it
+    returns None when AQE emptied the plan (no pair found), where
+    ``observation.get`` raises.
     """
     sigs = minhash_signatures_df(
         df, id_col, text_col, shingle_n=shingle_n, num_hashes=num_hashes
@@ -532,7 +538,9 @@ def minhash_lsh_pairs_from_sigs(
     the plan submits no job of its own either way.
 
     ``max_bucket_size`` is the mega-cluster guard (:func:`_guard_split`,
-    which also documents ``observation``'s metrics): a band bucket larger
+    which also documents ``observation``'s metrics; read them through
+    :func:`observed_metrics`, None when AQE emptied the plan because no
+    pair was found): a band bucket larger
     than the cap emits star edges instead of all pairs. Star edges bypass
     the >=2-band evidence cut (an oversized full-band collision is
     already overwhelming evidence) but still pass the signature prefilter
@@ -862,7 +870,9 @@ def simhash_pairs(
     ``max_bucket_size`` is the mega-cluster guard (:func:`_guard_split`,
     with ``observation``): a prefix bucket larger than the cap emits star
     edges, which carry both signatures and pass the same exact hamming
-    filter."""
+    filter. Read ``observation`` through :func:`observed_metrics` after
+    the first action over the result: it returns None when AQE emptied
+    the plan (no pair found), where ``observation.get`` raises."""
     sigs = _spread(df).select(
         F.col(id_col).alias("id"), simhash64(F.col(text_col)).alias("sig")
     )
@@ -919,29 +929,54 @@ def simhash_pairs(
 # ---------------------------------------------------------------------------
 
 
-def _star_edges(pairs: DataFrame, max_rounds: int = 30) -> DataFrame:
-    """Contract a pair graph to stars around each component's minimum id
-    via alternating large-star/small-star rounds (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond", SoCC'14 — public
-    algorithm). Returns the fixpoint edge set ``(u, v)`` with ``u`` = the
-    component minimum and one row per non-center node ``v``.
+# Most canonical edges (self-loops dropped, repeats counted) that
+# :func:`neardup_clusters` labels on the driver (numpy union-find) instead
+# of by star contraction. Sized with
+# ``scripts/size_cc_cap.py``: a random graph from ``spark.range`` (both
+# endpoints uniform over twice as many ids as edges), 4 cores, warm
+# session; build + ``count()`` of ``neardup_clusters`` over every id, median
+# of 3 runs (1 at 3M); driver Python peak RSS after the driver runs:
+#
+#   edges      driver s   star s   peak_rss_mb
+#   10,000        0.92      7.64       143
+#   100,000       0.97     10.46       156
+#   1,000,000     4.23     30.91       277
+#   3,000,000    24.19    145.98       543
+#
+# The driver plan is not slower at any measured size, so time does not
+# bound CAP; driver memory does. It stops at 1M edges (16 MB per column
+# collected, broadcast once): past that the driver's RSS keeps growing
+# with the graph while the star plan's rounds spread over executors.
+CAP = 1_000_000
+
+
+def _release_checkpoint(df: DataFrame) -> None:
+    """Free the blocks of a ``localCheckpoint``-ed frame. They are not a
+    CacheManager entry, so ``clearCache()`` never reaches them; without
+    this they stay registered until a driver GC lets the ContextCleaner
+    drop them. Only for a frame no live plan reads any more: its lineage
+    is gone, so a later read fails."""
+    df._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
+def _star_edges(edges: DataFrame, max_rounds: int = 30) -> DataFrame:
+    """Contract a canonical edge list ``(u < v)``, distinct, to stars
+    around each component's minimum id via alternating large-star/small-
+    star rounds (Kiveris et al., "Connected Components in MapReduce and
+    Beyond", SoCC'14 — public algorithm). Returns the fixpoint edge set
+    ``(u, v)`` with ``u`` = the component minimum and one row per
+    non-center node ``v``.
 
     Round count is O(log n) INDEPENDENT of component diameter — the
     property min-label propagation lacks (a length-d chain costs d
     propagation rounds but only ~log d contraction rounds). Each round is
     two edge-list shuffles (groupBy u / groupBy v) + a distinct; nothing
     corpus-sized iterates, and the per-round localCheckpoint keeps the
-    plan from growing with the loop.
+    plan from growing with the loop. Each round releases the previous
+    round's checkpoint once its own exists, so one checkpoint (the
+    returned frame's) outlives the call.
     """
-    e = (
-        pairs.select(
-            F.least("id_a", "id_b").alias("u"),
-            F.greatest("id_a", "id_b").alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e = edges.localCheckpoint(eager=True)
     n_edges = e.count()
     if n_edges == 0:
         return e
@@ -982,15 +1017,54 @@ def _star_edges(pairs: DataFrame, max_rounds: int = 30) -> DataFrame:
         new_n = new_e.count()
         # fixpoint test on the canonical (u<v) distinct sets: equal counts
         # + empty one-sided difference <=> equal sets <=> stars reached
-        if new_n == n_edges and new_e.join(e, ["u", "v"], "left_anti").isEmpty():
+        done = (
+            new_n == n_edges
+            and new_e.join(e, ["u", "v"], "left_anti").isEmpty()
+        )
+        # new_e's lineage starts at its own checkpoint: e is unread now
+        _release_checkpoint(e)
+        if done:
             return new_e
         e, n_edges = new_e, new_n
+    _release_checkpoint(e)
     # O(log n) rounds means 30 covers any graph that fits on Earth; if we
     # get here something is deeply wrong — never return a partial answer
     # (it would silently split components).
     raise RuntimeError(
         f"star contraction did not reach a fixpoint in {max_rounds} rounds"
     )
+
+
+def _min_id_roots(u, v):
+    """Union-find over the edge arrays ``u``, ``v`` (numpy, one edge per
+    index): returns ``(nodes, roots)``, every distinct endpoint and its
+    component's minimum id. Ids are compressed to their sorted rank, so
+    the min rank is the min id. Hook-and-shortcut: every round hooks each
+    edge's larger root under the smaller one (``np.minimum.at``), then
+    pointer-jumps every label to its root. A round that leaves an edge
+    with two labels lowers at least one root, so the loop ends; labels
+    only ever fall and stay inside their component, so each component
+    ends at its minimum."""
+    import numpy as np
+
+    nodes, idx = np.unique(np.concatenate([u, v]), return_inverse=True)
+    a, b = idx[: len(u)], idx[len(u):]
+    lab = np.arange(len(nodes))
+    while True:
+        la, lb = lab[a], lab[b]
+        split = la != lb
+        if not split.any():
+            return nodes, nodes[lab]
+        np.minimum.at(
+            lab,
+            np.maximum(la[split], lb[split]),
+            np.minimum(la[split], lb[split]),
+        )
+        while True:
+            up = lab[lab]
+            if (up == lab).all():
+                break
+            lab = up
 
 
 def neardup_clusters(
@@ -1002,20 +1076,62 @@ def neardup_clusters(
     duplicate CLUSTER, not per pair: pairs (a,b),(b,c) must collapse to one
     keeper even though (a,c) was never emitted).
 
-    Runs alternating large-star/small-star contraction (:func:`_star_edges`)
-    — O(log n) rounds regardless of component diameter, so web-scale chain
-    components (which broke the diameter-bound min-label propagation kept
-    as the spec ``neardup_clusters_minlabel`` in ``tests/specs.py``)
-    converge in a handful of edge-list shuffles.
+    The plan is chosen at run time by ONE bounded action: the canonical
+    edge list (``u = least``, ``v = greatest``, self-loops dropped) is
+    collected up to ``CAP + 1`` rows.
+
+    * At most ``CAP`` edges: union-find on the driver (:func:`_min_id_roots`)
+      labels every endpoint with its component's min id; the labels become
+      an Arrow-built frame broadcast-joined to ``ids``. A near-dup graph
+      is usually tiny next to its corpus (52 edges for 1,000 perfbench
+      docs), and a Spark job costs ~0.1-0.3 s whatever its size.
+    * Over ``CAP``: alternating large-star/small-star contraction
+      (:func:`_star_edges`, on the distinct edges) — O(log n) rounds
+      regardless of component diameter (``max_iterations`` caps them), so
+      web-scale chain components (which broke the diameter-bound
+      min-label propagation kept as the spec ``neardup_clusters_minlabel``
+      in ``tests/specs.py``) converge in a handful of edge-list shuffles.
+
+    Both branches root a component at its min id by construction and
+    give identical rows. Components span the whole pair graph: an
+    endpoint absent from ``ids`` gets no row but still links its
+    neighbours, and can be their ``canonical_id``.
 
     ids: one column ``id``; pairs: columns ``id_a``, ``id_b``.
     """
     from pyspark.sql.window import Window
 
-    stars = _star_edges(pairs, max_rounds=max_iterations)
-    centers = stars.groupBy(F.col("v").alias("id")).agg(
-        F.min("u").alias("lab")
+    edges = (
+        pairs.select(
+            F.least("id_a", "id_b").alias("u"),
+            F.greatest("id_a", "id_b").alias("v"),
+        )
+        .filter(F.col("u") != F.col("v"))
     )
+    # no distinct before the collect: union-find ignores repeated edges,
+    # and a shuffle here would cost one more job on every graph
+    head = edges.limit(CAP + 1).toArrow()
+    if head.num_rows <= CAP:
+        import pyarrow as pa
+
+        nodes, roots = _min_id_roots(
+            head.column("u").to_numpy(), head.column("v").to_numpy()
+        )
+        moved = nodes != roots
+        t = head.schema.field("u").type
+        centers = F.broadcast(
+            ids.sparkSession.createDataFrame(
+                pa.table({
+                    "id": pa.array(nodes[moved], type=t),
+                    "lab": pa.array(roots[moved], type=t),
+                })
+            )
+        )
+    else:
+        stars = _star_edges(edges.distinct(), max_rounds=max_iterations)
+        centers = stars.groupBy(F.col("v").alias("id")).agg(
+            F.min("u").alias("lab")
+        )
     labels = ids.join(centers, "id", "left").select(
         F.col("id").alias("doc_id"),
         F.coalesce("lab", "id").alias("canonical_id"),

@@ -584,7 +584,10 @@ def embedding_neardup_pairs(
     larger than the cap emits star candidates, which carry both vectors
     and pass the exact cosine verification. Under-cap buckets score
     bit-identically to the unguarded path (same kernel, same groups —
-    pinned in tests)."""
+    pinned in tests). Read ``observation`` through
+    :func:`dedup.observed_metrics` after the first action over the
+    result: it returns None when AQE emptied the plan (no pair found),
+    where ``observation.get`` raises."""
     # _spread first: a small parquet input arrives as ONE partition and
     # would run the bucket matmul / pair dots on a single core.
     from .dedup import _guard_split, _spread

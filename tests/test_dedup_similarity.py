@@ -359,36 +359,47 @@ def test_lsh_topk_multiprobe_recall_dominates_single(vectors):
     assert full == set(brute)
 
 
-def test_neardup_clusters_transitive(spark):
+def _cluster_rows(monkeypatch, ids, pairs, **kw):
+    """``neardup_clusters``' rows under each plan, by plan name: ``CAP``
+    0 runs the star contraction on any graph with an edge, the default
+    runs driver union-find on every graph these tests build."""
+    out = {}
+    for plan, cap in (("star", 0), ("driver", dedup.CAP)):
+        monkeypatch.setattr(dedup, "CAP", cap)
+        out[plan] = {
+            tuple(r) for r in dedup.neardup_clusters(ids, pairs, **kw).collect()
+        }
+    return out
+
+
+def test_neardup_clusters_transitive(spark, monkeypatch):
     """Pairs (a,b),(b,c) must collapse into ONE cluster with canonical=min,
-    even though (a,c) was never emitted; singletons stay their own cluster."""
+    even though (a,c) was never emitted; singletons stay their own cluster.
+    Both plans (star contraction and driver union-find)."""
     ids = spark.createDataFrame([(i,) for i in range(8)], "id long")
     pairs = spark.createDataFrame(
         [(1, 3), (3, 5), (5, 7), (2, 4)], "id_a long, id_b long"
     )
-    got = {
-        r["doc_id"]: (r["canonical_id"], r["cluster_size"])
-        for r in dedup.neardup_clusters(ids, pairs).collect()
-    }
-    # chain 1-3-5-7 (diameter 3 -> exercises >1 propagation round)
-    for i in (1, 3, 5, 7):
-        assert got[i] == (1, 4)
-    for i in (2, 4):
-        assert got[i] == (2, 2)
-    for i in (0, 6):
-        assert got[i] == (i, 1)
+    for plan, rows in _cluster_rows(monkeypatch, ids, pairs).items():
+        got = {d: (c, n) for d, c, n in rows}
+        # chain 1-3-5-7 (diameter 3 -> exercises >1 propagation round)
+        for i in (1, 3, 5, 7):
+            assert got[i] == (1, 4), plan
+        for i in (2, 4):
+            assert got[i] == (2, 2), plan
+        for i in (0, 6):
+            assert got[i] == (i, 1), plan
 
 
-def test_neardup_clusters_on_planted_corpus(corpus):
-    """Planted exact dups form 2-clusters; the canonical keeps the min id."""
+def test_neardup_clusters_on_planted_corpus(corpus, monkeypatch):
+    """Planted exact dups form 2-clusters; the canonical keeps the min id
+    (both plans)."""
     pairs = dedup.ngram_jaccard_pairs(corpus, "doc_id", "text", threshold=0.8)
     ids = corpus.select(F.col("doc_id").alias("id"))
-    got = {
-        r["doc_id"]: (r["canonical_id"], r["cluster_size"])
-        for r in dedup.neardup_clusters(ids, pairs).collect()
-    }
-    for i in range(5):
-        assert got[100 + i] == (i, 2) and got[i] == (i, 2)
+    for plan, rows in _cluster_rows(monkeypatch, ids, pairs).items():
+        got = {d: (c, n) for d, c, n in rows}
+        for i in range(5):
+            assert got[100 + i] == (i, 2) and got[i] == (i, 2), plan
 
 
 def test_knn_join_matches_per_query_brute_force(vectors):
@@ -489,11 +500,13 @@ def test_neardup_clusters_minlabel_raises_on_unconverged_chain(spark):
     assert set(got.values()) == {0}
 
 
-def test_neardup_clusters_long_chain_log_rounds(spark):
+def test_neardup_clusters_long_chain_log_rounds(spark, monkeypatch):
     """A planted chain LONGER than the old diameter cap (12): min-label
     propagation refuses it, star contraction resolves it — in O(log n)
     rounds (max_iterations=8 covers a 40-node chain only if rounds are
-    logarithmic, not diameter-bound)."""
+    logarithmic, not diameter-bound). ``CAP = 0`` forces the star plan:
+    the driver plan has no rounds to cap."""
+    monkeypatch.setattr(dedup, "CAP", 0)
     n = 40  # diameter 39
     ids = spark.createDataFrame([(i,) for i in range(n)], "id long")
     pairs = spark.createDataFrame(
@@ -508,10 +521,27 @@ def test_neardup_clusters_long_chain_log_rounds(spark):
     assert got == {(i, 0, n) for i in range(n)}
 
 
-def test_neardup_clusters_star_matches_minlabel_spec(spark):
-    """On a mixed graph (chain + clique + singleton + isolated edge) the
-    star-contraction default is row-identical to the min-label executable
-    spec."""
+def test_neardup_clusters_star_releases_round_checkpoints(spark, monkeypatch):
+    """The star plan frees each contraction round's ``localCheckpoint``
+    once the next round's exists: after a multi-round run at most one
+    RDD (the fixpoint edges the result reads) stays registered as
+    persistent. ``clearCache`` cannot free these, so a leak would grow by
+    one RDD per round (a 40-node chain takes several)."""
+    monkeypatch.setattr(dedup, "CAP", 0)
+    sc = spark.sparkContext
+    n = 40
+    ids = spark.createDataFrame([(i,) for i in range(n)], "id long")
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long"
+    )
+    before = set(sc._jsc.getPersistentRDDs().keys())
+    assert dedup.neardup_clusters(ids, pairs).count() == n
+    assert len(set(sc._jsc.getPersistentRDDs().keys()) - before) <= 1
+
+
+def test_neardup_clusters_star_matches_minlabel_spec(spark, monkeypatch):
+    """On a mixed graph (chain + clique + singleton + isolated edge) both
+    plans are row-identical to the min-label executable spec."""
     ids = spark.createDataFrame([(i,) for i in range(12)], "id long")
     pairs = spark.createDataFrame(
         [(1, 3), (3, 5), (5, 7), (7, 9),  # chain
@@ -519,14 +549,60 @@ def test_neardup_clusters_star_matches_minlabel_spec(spark):
          (10, 11)],                       # isolated edge
         "id_a long, id_b long",
     )
-    star = {
-        tuple(r) for r in dedup.neardup_clusters(ids, pairs).collect()
-    }
     minlabel = {
         tuple(r)
         for r in neardup_clusters_minlabel(ids, pairs).collect()
     }
-    assert star == minlabel
+    assert _cluster_rows(monkeypatch, ids, pairs) == {
+        "star": minlabel, "driver": minlabel
+    }
+
+
+def test_neardup_clusters_degenerate_graphs_match_minlabel_spec(
+    spark, monkeypatch
+):
+    """Both plans are row-identical to the min-label spec on an empty
+    graph, a self-loop-only graph, a 300-member star (a template flood
+    after the LSH guard) and pairs with dangling endpoints absent from
+    ``ids``."""
+    ids = spark.createDataFrame([(i,) for i in range(320)], "id long")
+    schema = "id_a long, id_b long"
+    graphs = {
+        "empty": [],
+        "self_loops": [(i, i) for i in range(0, 20, 3)],
+        # star edges point both ways (min-first and member-first)
+        "flood": [(5, i) if i % 2 else (i, 5) for i in range(6, 306)],
+        # 900/901/950 are not ids: leaves hanging off ids 1, 2 and 4
+        "absent": [(1, 900), (2, 3), (3, 901), (4, 950), (950, 6), (4, 6)],
+    }
+    for name, rows in graphs.items():
+        pairs = spark.createDataFrame(rows, schema)
+        minlabel = {
+            tuple(r) for r in neardup_clusters_minlabel(ids, pairs).collect()
+        }
+        got = _cluster_rows(monkeypatch, ids, pairs)
+        assert got == {"star": minlabel, "driver": minlabel}, name
+        if name == "flood":
+            assert {r for r in minlabel if r[1] == 5} == {
+                (i, 5, 301) for i in range(5, 306)
+            }
+
+
+def test_neardup_clusters_absent_endpoint_links_its_neighbours(
+    spark, monkeypatch
+):
+    """Components span the whole pair graph: an endpoint absent from
+    ``ids`` still joins its neighbours and, as their minimum, becomes
+    their ``canonical_id`` (the min-label spec propagates only from
+    ``ids`` and would split them). Both plans agree."""
+    ids = spark.createDataFrame([(i,) for i in (3, 5, 8, 9)], "id long")
+    pairs = spark.createDataFrame(
+        [(1, 3), (1, 5), (8, 20), (9, 20)], "id_a long, id_b long"
+    )
+    expected = {(3, 1, 2), (5, 1, 2), (8, 8, 2), (9, 8, 2)}
+    assert _cluster_rows(monkeypatch, ids, pairs) == {
+        "star": expected, "driver": expected
+    }
 
 
 def test_decontaminate_planted(spark):
