@@ -931,23 +931,29 @@ def simhash_pairs(
 
 # Most canonical edges (self-loops dropped, repeats counted) that
 # :func:`neardup_clusters` labels on the driver (numpy union-find) instead
-# of by star contraction. Sized with
-# ``scripts/size_cc_cap.py``: a random graph from ``spark.range`` (both
-# endpoints uniform over twice as many ids as edges), 4 cores, warm
-# session; build + ``count()`` of ``neardup_clusters`` over every id, median
-# of 3 runs (1 at 3M); driver Python peak RSS after the driver runs:
+# of by star contraction: the largest measured size at which the driver
+# plan is not slower and stays within a driver memory budget of 4 GB
+# added peak RSS, Python and JVM together (half of ``get_spark``'s
+# default 8 GB ``spark.driver.memory``; the rest is for broadcasts and
+# the other stages). Sized with ``scripts/size_cc_cap.py``: a random
+# graph from ``spark.range`` (both endpoints uniform over twice as many
+# ids as edges, pair frame not persisted), 4 cores, one fresh warmed
+# process per row; build + one aggregate over every id, median of 3; the
+# peak RSS the runs added, in MB (local mode: the JVM is driver and
+# executor at once, so its figure overstates a cluster driver's):
 #
-#   edges      driver s   star s   peak_rss_mb
-#   10,000        0.92      7.64       143
-#   100,000       0.97     10.46       156
-#   1,000,000     4.23     30.91       277
-#   3,000,000    24.19    145.98       543
+#   edges      driver s   star s   driver py + jvm MB   star jvm MB
+#   10,000        1.02      8.18        1 +   241           667
+#   100,000       1.64     11.24       14 +   348         1,554
+#   1,000,000     7.34     67.42      135 + 2,920         2,456
+#   2,000,000    17.04    115.04      269 + 3,323         3,296
+#   3,000,000    23.75         -      402 + 4,604             -
 #
-# The driver plan is not slower at any measured size, so time does not
-# bound CAP; driver memory does. It stops at 1M edges (16 MB per column
-# collected, broadcast once): past that the driver's RSS keeps growing
-# with the graph while the star plan's rounds spread over executors.
-CAP = 1_000_000
+# Rows were identical at every size run under both plans. The driver
+# plan is faster at every size, so the budget bounds CAP: 3M edges add
+# 5.0 GB. Larger graphs keep the star plan, whose rounds spread over
+# executors on a cluster.
+CAP = 2_000_000
 
 
 def _release_checkpoint(df: DataFrame) -> None:
@@ -955,7 +961,15 @@ def _release_checkpoint(df: DataFrame) -> None:
     CacheManager entry, so ``clearCache()`` never reaches them; without
     this they stay registered until a driver GC lets the ContextCleaner
     drop them. Only for a frame no live plan reads any more: its lineage
-    is gone, so a later read fails."""
+    is gone, so a later read fails.
+
+    PySpark has no public call that frees a local checkpoint, hence the
+    reach into the frame's ``LogicalRDD``. The public alternative,
+    ``persist`` + ``count`` per round and ``unpersist`` of the previous
+    one, does not cut the lineage: every round's plan nests all earlier
+    rounds twice over. On a 2,000-node chain, which checkpointed rounds
+    contract in 12 rounds, that variant ran the 8 GB driver heap out of
+    memory rendering its plan's string before reaching the fixpoint."""
     df._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
@@ -1078,7 +1092,8 @@ def neardup_clusters(
 
     The plan is chosen at run time by ONE bounded action: the canonical
     edge list (``u = least``, ``v = greatest``, self-loops dropped) is
-    collected up to ``CAP + 1`` rows.
+    persisted and collected up to ``CAP + 1`` rows, so ``pairs`` runs
+    once whichever plan follows (and any Observation in it fires there).
 
     * At most ``CAP`` edges: union-find on the driver (:func:`_min_id_roots`)
       labels every endpoint with its component's min id; the labels become
@@ -1101,37 +1116,47 @@ def neardup_clusters(
     """
     from pyspark.sql.window import Window
 
+    # persisted, so the pair stage runs once: the bounded collect fills
+    # the cache (every partition is read whole) and the star plan reads
+    # it. Not a lazy localCheckpoint, which costs no extra job but fires
+    # a pair stage's Observation before the stage's last tasks run. No
+    # distinct before the collect: union-find ignores repeated edges, and
+    # a shuffle here would cost one more job on every graph
     edges = (
         pairs.select(
             F.least("id_a", "id_b").alias("u"),
             F.greatest("id_a", "id_b").alias("v"),
         )
         .filter(F.col("u") != F.col("v"))
+        .persist()
     )
-    # no distinct before the collect: union-find ignores repeated edges,
-    # and a shuffle here would cost one more job on every graph
-    head = edges.limit(CAP + 1).toArrow()
-    if head.num_rows <= CAP:
-        import pyarrow as pa
+    try:
+        head = edges.limit(CAP + 1).toArrow()
+        if head.num_rows <= CAP:
+            import pyarrow as pa
 
-        nodes, roots = _min_id_roots(
-            head.column("u").to_numpy(), head.column("v").to_numpy()
-        )
-        moved = nodes != roots
-        t = head.schema.field("u").type
-        centers = F.broadcast(
-            ids.sparkSession.createDataFrame(
-                pa.table({
-                    "id": pa.array(nodes[moved], type=t),
-                    "lab": pa.array(roots[moved], type=t),
-                })
+            nodes, roots = _min_id_roots(
+                head.column("u").to_numpy(), head.column("v").to_numpy()
             )
-        )
-    else:
-        stars = _star_edges(edges.distinct(), max_rounds=max_iterations)
-        centers = stars.groupBy(F.col("v").alias("id")).agg(
-            F.min("u").alias("lab")
-        )
+            moved = nodes != roots
+            t = head.schema.field("u").type
+            centers = F.broadcast(
+                ids.sparkSession.createDataFrame(
+                    pa.table({
+                        "id": pa.array(nodes[moved], type=t),
+                        "lab": pa.array(roots[moved], type=t),
+                    })
+                )
+            )
+        else:
+            stars = _star_edges(edges.distinct(), max_rounds=max_iterations)
+            centers = stars.groupBy(F.col("v").alias("id")).agg(
+                F.min("u").alias("lab")
+            )
+    finally:
+        # neither plan reads it again: the labels come from the collected
+        # table or from the contraction's own checkpoint
+        edges.unpersist()
     labels = ids.join(centers, "id", "left").select(
         F.col("id").alias("doc_id"),
         F.coalesce("lab", "id").alias("canonical_id"),

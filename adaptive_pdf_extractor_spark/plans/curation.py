@@ -246,9 +246,10 @@ def curation_run(
         docs, pair_stage, decontaminate_against=decontaminate_against
     )
     output_path = os.path.join(run_dir, "curated.parquet")
-    # ONE action: the write executes the observed pair stage and counts
-    # its own rows, so both observations are ready once the table is
-    # committed
+    # the guard observation has fired already, in neardup_clusters'
+    # bounded collect of the edge list (the one action that runs the
+    # observed pair stage); `written` fires on the write, which counts its
+    # own rows
     written = Observation("curated")
     spark_io.write_table(
         out.observe(written, F.count("*").alias("n")), output_path,

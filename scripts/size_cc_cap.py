@@ -1,13 +1,18 @@
 """Size ``dedup.CAP``: the edge count up to which connected components run
 union-find on the driver instead of the star contraction.
 
-For each edge count, builds a random graph from ``spark.range`` (endpoints
-uniform over twice as many ids as edges), caches it, and times
-``neardup_clusters(ids, pairs).count()`` under both plans (``CAP`` at the
-edge count forces the driver plan, ``CAP = 0`` the star plan). Prints one
-row per edge count: median seconds of each plan, the driver process's peak
-resident size after the driver runs, and whether both plans gave the same
-rows (an order-free hash sum).
+For each edge count and plan, starts a fresh process that builds a random
+graph from ``spark.range`` (endpoints uniform over twice as many ids as
+edges; the pair frame is not persisted, so the cluster build runs it) and
+times ``neardup_clusters(ids, pairs)`` + one aggregate over its rows.
+``CAP`` at the edge count forces the driver plan, ``CAP = 0`` the star
+plan. Each process first runs the plan on a 1,000-edge graph, so the JVM
+and the Python workers are warm and the memory baseline is taken after
+that. Prints one row per edge count and plan: median seconds, what the
+runs added to the peak resident size of the Python driver and of the JVM
+(``VmHWM``; in local mode the JVM is driver and executor at once, so its
+figure bounds what a cluster driver would add), and an order-free digest
+of the rows, which must agree between the plans.
 
     python3 scripts/size_cc_cap.py --edges 10000 100000 1000000 --reps 3
 """
@@ -18,64 +23,93 @@ import argparse
 import os
 import resource
 import statistics
+import subprocess
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-from pyspark.sql import functions as F  # noqa: E402
-
-from adaptive_pdf_extractor_spark.operators import dedup  # noqa: E402
-from adaptive_pdf_extractor_spark.session import get_spark  # noqa: E402
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
-def _run(ids, pairs, cap: int, reps: int) -> tuple[float, int]:
-    """Median wall of ``reps`` cluster runs under ``cap``, and the rows'
-    order-free digest."""
-    dedup.CAP = cap
-    walls, digest = [], None
-    for _ in range(reps):
-        t0 = time.perf_counter()
+def _kb(pid: int, key: str) -> int:
+    with open(f"/proc/{pid}/status") as f:
+        for line in f:
+            if line.startswith(key + ":"):
+                return int(line.split()[1])
+    raise KeyError(key)
+
+
+def _child(m: int, plan: str, reps: int, cpus: int) -> None:
+    """One plan at one edge count; prints a tab-separated result line."""
+    from pyspark.sql import functions as F
+
+    from adaptive_pdf_extractor_spark.operators import dedup
+    from adaptive_pdf_extractor_spark.session import get_spark
+
+    spark = get_spark(app_name="size_cc_cap", cpus=cpus)
+    spark.sparkContext.setLogLevel("ERROR")
+    jvm_pid = spark._jvm.java.lang.ProcessHandle.current().pid()
+
+    def graph(k):
+        n = 2 * k
+        pairs = spark.range(k).select(
+            F.pmod(F.xxhash64("id", F.lit(1)), F.lit(n)).alias("id_a"),
+            F.pmod(F.xxhash64("id", F.lit(2)), F.lit(n)).alias("id_b"),
+        )
+        return spark.range(n), pairs
+
+    def run(ids, pairs):
         out = dedup.neardup_clusters(ids, pairs)
-        digest = out.select(
+        return out.select(
             F.sum(F.xxhash64("doc_id", "canonical_id", "cluster_size") % 1000003)
         ).first()[0]
-        walls.append(time.perf_counter() - t0)
-    return statistics.median(walls), digest
+
+    try:
+        dedup.CAP = m if plan == "driver" else 0
+        run(*graph(1000))
+        py0 = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss
+        jvm0 = _kb(jvm_pid, "VmRSS")
+        ids, pairs = graph(m)
+        walls, digest = [], None
+        for _ in range(reps):
+            t0 = time.perf_counter()
+            digest = run(ids, pairs)
+            walls.append(time.perf_counter() - t0)
+        py = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss - py0
+        jvm = _kb(jvm_pid, "VmHWM") - jvm0
+        print(
+            f"RESULT\t{statistics.median(walls):.2f}\t{py / 1024:.0f}\t"
+            f"{max(jvm, 0) / 1024:.0f}\t{digest}",
+            flush=True,
+        )
+    finally:
+        spark.stop()
 
 
 def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--edges", type=int, nargs="+", default=[10_000, 100_000, 1_000_000])
+    ap.add_argument("--plans", nargs="+", default=["driver", "star"])
     ap.add_argument("--reps", type=int, default=3)
     ap.add_argument("--cpus", type=int, default=4)
+    ap.add_argument("--child", nargs=2, metavar=("EDGES", "PLAN"), help=argparse.SUPPRESS)
     args = ap.parse_args()
+    if args.child:
+        _child(int(args.child[0]), args.child[1], args.reps, args.cpus)
+        return
 
-    spark = get_spark(app_name="size_cc_cap", cpus=args.cpus)
-    spark.sparkContext.setLogLevel("ERROR")
-    default_cap = dedup.CAP
-    print("edges  driver_s  star_s  peak_rss_mb  same_rows")
-    try:
-        for m in args.edges:
-            n = 2 * m
-            pairs = spark.range(m).select(
-                F.pmod(F.xxhash64("id", F.lit(1)), F.lit(n)).alias("id_a"),
-                F.pmod(F.xxhash64("id", F.lit(2)), F.lit(n)).alias("id_b"),
-            ).persist()
-            pairs.count()
-            ids = spark.range(n)
-            driver_s, d_digest = _run(ids, pairs, m, args.reps)
-            rss_mb = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024
-            star_s, s_digest = _run(ids, pairs, 0, args.reps)
-            print(
-                f"{m}  {driver_s:.2f}  {star_s:.2f}  {rss_mb:.0f}  "
-                f"{d_digest == s_digest}",
-                flush=True,
+    print("edges  plan  median_s  added_py_rss_mb  added_jvm_rss_mb  digest")
+    for m in args.edges:
+        for plan in args.plans:
+            proc = subprocess.run(
+                [sys.executable, os.path.abspath(__file__), "--child", str(m), plan,
+                 "--reps", str(args.reps), "--cpus", str(args.cpus)],
+                capture_output=True, text=True, check=True,
             )
-            pairs.unpersist()
-    finally:
-        dedup.CAP = default_cap
-        spark.stop()
+            row = next(
+                line for line in proc.stdout.splitlines() if line.startswith("RESULT")
+            ).split("\t")[1:]
+            print(f"{m}  {plan}  " + "  ".join(row), flush=True)
 
 
 if __name__ == "__main__":

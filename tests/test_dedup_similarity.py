@@ -539,6 +539,29 @@ def test_neardup_clusters_star_releases_round_checkpoints(spark, monkeypatch):
     assert len(set(sc._jsc.getPersistentRDDs().keys()) - before) <= 1
 
 
+def test_neardup_clusters_runs_pair_stage_once(spark, monkeypatch):
+    """Both plans evaluate an unpersisted pair stage once per row: the
+    star plan reads the edge list the bounded collect materialized
+    instead of running the pair stage again. ``CAP = n - 1`` picks the
+    star plan after a collect that reads every edge."""
+    n = 50
+    for cap in (n - 1, dedup.CAP):
+        monkeypatch.setattr(dedup, "CAP", cap)
+        seen = spark.sparkContext.accumulator(0)
+
+        def tick(x):
+            seen.add(1)
+            return x
+
+        pair_id = F.udf(tick, "long").asNondeterministic()
+        pairs = spark.range(n).select(
+            pair_id("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
+        )
+        ids = spark.range(n + 1)
+        assert dedup.neardup_clusters(ids, pairs).count() == n + 1
+        assert seen.value == n, cap
+
+
 def test_neardup_clusters_star_matches_minlabel_spec(spark, monkeypatch):
     """On a mixed graph (chain + clique + singleton + isolated edge) both
     plans are row-identical to the min-label executable spec."""

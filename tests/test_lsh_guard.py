@@ -209,7 +209,8 @@ def test_curation_run_job_count_and_cached_frames(spark, tmp_path):
     """Pinned Spark job count of one guarded curation_run on a small flood
     corpus, and the cached frames it leaves: ``kept`` and the guarded
     signature cache, nothing else. No job runs while the pair stage is
-    built, connected components run one bounded collect and label the
+    built, connected components run one bounded collect of the persisted
+    edge list (the cache's own query stage is one job) and label the
     small pair graph on the driver, and ``n_output`` is an Observation
     on the output write. Former formulations submitted 72 jobs (a
     candidate-endpoint prune materialized at plan build, ``isEmpty`` +
@@ -235,9 +236,9 @@ def test_curation_run_job_count_and_cached_frames(spark, tmp_path):
         lambda: curation_run(docs, str(tmp_path / "pin"), max_bucket_size=24),
     )
     n_cached = len(cached_ids() - before)
-    # 29 or 30 jobs: which of the gate's independent stages finishes first
+    # 30 or 31 jobs: which of the gate's independent stages finishes first
     # decides how AQE re-plans the rest (both seen on 4 cores)
-    assert n_jobs <= 30 and n_cached == 2, (n_jobs, n_cached)
+    assert n_jobs <= 31 and n_cached == 2, (n_jobs, n_cached)
     assert summary["n_input"] == 360
     assert summary["n_output"] == 2  # the whole corpus shares BASE
     assert summary["guard"]["flood_regime"] is True
@@ -250,7 +251,8 @@ def test_curate_increment_job_count(spark):
     small delta against a small flood corpus: 10 near-dup mutations of
     the flood, 10 re-ingestions, 10 unseen documents and a near-dup twin
     of three of them. Its new-new graph is labelled on the driver after
-    one bounded collect; the star contraction this replaced ran a
+    one bounded collect of the persisted edge list (the cache's own query
+    stage is one of the jobs); the star contraction this replaced ran a
     ``localCheckpoint`` + ``count`` + ``isEmpty`` per round and submitted
     58 jobs."""
     from adaptive_pdf_extractor_spark.plans.curation import curate_increment
@@ -286,7 +288,7 @@ def test_curate_increment_job_count(spark):
         spark, "pin_curate_increment",
         lambda: curate_increment(delta, old, threshold=0.8).count(),
     )
-    assert n == 10 and n_jobs <= 34, (n, n_jobs)
+    assert n == 10 and n_jobs <= 35, (n, n_jobs)
 
 
 def test_neardup_clusters_build_job_count(spark):
