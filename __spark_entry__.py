@@ -664,9 +664,9 @@ def q_minhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (buckets here are pair-sized, so output is bit-identical to the
     # unguarded path — pinned in tests/test_lsh_guard.py — while the
     # DuckDB hash check keeps the guarded code path honest).
-    # NOTE: guard + persist_sigs eagerly materializes the signature cache
-    # at plan-BUILD time (one count job — see minhash_lsh_pairs_from_sigs'
-    # docstring), so merely constructing this DataFrame runs a Spark job.
+    # NOTE: with the guard on, minhash_lsh_pairs fills its signature cache
+    # at plan-BUILD time (one count job — see its docstring), so merely
+    # constructing this DataFrame runs a Spark job.
     return dedup.minhash_lsh_pairs(
         _planted_dups(spark, sf_dir),
         "doc_id",
@@ -970,9 +970,9 @@ def q_corpus_curation_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # near-identical docs costs O(m) star candidates per oversized bucket
     # instead of O(m²) pairs (the clustering consumer only needs
     # connectivity); under the cap the pair stage is bit-identical.
-    # NOTE: guard + persist_sigs eagerly materializes the signature cache
-    # at plan-BUILD time (one count job — see minhash_lsh_pairs_from_sigs'
-    # docstring), so merely constructing this DataFrame runs a Spark job.
+    # NOTE: with the guard on, minhash_lsh_pairs fills its signature cache
+    # at plan-BUILD time (one count job — see its docstring), so merely
+    # constructing this DataFrame runs a Spark job.
     return curation_pipeline(
         _planted_dups(spark, sf_dir, n=None),
         lambda kept: dedup.minhash_lsh_pairs(

@@ -240,10 +240,21 @@ def minhash_lsh_pairs(
     :func:`observed_metrics` after the first action over the result: it
     returns None when AQE emptied the plan (no pair found), where
     ``observation.get`` raises.
+
+    The signatures it computes feed three join branches (banding and
+    both prefilter sides), so it persists them (~1 KB/doc). NOTE: with
+    ``max_bucket_size`` set, building the plan also fills that cache
+    with one count job: the guarded plan fans the signatures out to five
+    consumers and Spark runs independent stages concurrently, so a
+    lazily-filled cache gets recomputed per branch (measured 4x
+    end-to-end at 10k docs). The cache is keyed by plan, so repeated
+    invocations of the same query pay that job only while cold.
     """
     sigs = minhash_signatures_df(
         df, id_col, text_col, shingle_n=shingle_n, num_hashes=num_hashes
-    )
+    ).select("id", "sig").persist()
+    if max_bucket_size is not None:
+        sigs.count()
     return minhash_lsh_pairs_from_sigs(
         sigs,
         df,
@@ -382,6 +393,9 @@ def minhash_lsh_pairs_incremental(
     candidate-generation cost scales with the DELTA, not the corpus —
     old documents never re-hash and never re-band against each other.
 
+    ``new_sigs`` is read by four branches of the one job that runs the
+    stage, and this never caches it: pass a materialized table
+    (``curation.curate_increment`` checkpoints the one it computes).
     ``docs`` must cover every id in either signature table (it feeds the
     re-shingle verification — ONE linear narrow pass, evaluated once).
     Per-batch cost: candidate generation probes only the banded NEW side
@@ -395,7 +409,7 @@ def minhash_lsh_pairs_incremental(
     :func:`_spread`'s partition probe, on shuffled or cached inputs)."""
     rows_per_band = num_hashes // bands
     assert rows_per_band * bands == num_hashes, "bands must divide num_hashes"
-    nsig = new_sigs.select("id", "sig").persist()
+    nsig = new_sigs.select("id", "sig")
     osig = old_sigs.select("id", "sig")
     banded_new = _banded(nsig, bands, rows_per_band)
     banded_all = banded_new.unionByName(_banded(osig, bands, rows_per_band))
@@ -518,7 +532,6 @@ def minhash_lsh_pairs_from_sigs(
     num_hashes: int = 128,
     bands: int = 32,
     threshold: float = 0.8,
-    persist_sigs: bool = True,
     max_bucket_size: int | None = None,
     observation=None,
 ) -> DataFrame:
@@ -529,13 +542,11 @@ def minhash_lsh_pairs_from_sigs(
     the few surviving pairs. The incremental / streaming path: signatures
     persist, only new docs ever hash.
 
-    ``persist_sigs=False`` for callers that manage the signature frame's
-    caching themselves (the streaming loop persists per micro-batch and
-    must unpersist after — an internal persist here would strand one
-    CacheManager entry per batch, since each batch's plan is distinct).
-    ``persist_sigs`` controls only that signature cache and, when the
-    guard is on, its eager fill (see the NOTE below); unguarded, building
-    the plan submits no job of its own either way.
+    ``sigs_df`` is read by several join branches (more when guarded), so
+    pass a persisted table: this never caches it, and building the plan
+    submits no job of its own. Whoever computes the signatures owns
+    their cache (:func:`minhash_lsh_pairs`; the streaming loop persists
+    and releases one per micro-batch).
 
     ``max_bucket_size`` is the mega-cluster guard (:func:`_guard_split`,
     which also documents ``observation``'s metrics; read them through
@@ -549,33 +560,10 @@ def minhash_lsh_pairs_from_sigs(
     >=min_bands cut relaxes to one band for pairs with BOTH endpoints in
     oversized buckets (co-occupying one is what makes collisions
     invisible to the count, and it implies both ids are flood members),
-    and exact verification still gates the output.
-
-    NOTE: with BOTH ``max_bucket_size`` and ``persist_sigs`` set, this
-    function EAGERLY materializes the signature cache (one count job at
-    plan-build time): the guarded plan fans the signature subtree out to
-    five consumers and Spark runs independent stages concurrently, so a
-    lazily-filled cache gets recomputed per branch (measured 4x
-    end-to-end). Callers needing a fully lazy plan should pass
-    ``persist_sigs=False`` and manage caching themselves."""
+    and exact verification still gates the output."""
     rows_per_band = num_hashes // bands
     assert rows_per_band * bands == num_hashes, "bands must divide num_hashes"
-
-    # Signatures feed three join branches (banding + both prefilter
-    # sides); persisting the compact sig table (~1 KB/doc) avoids
-    # recomputing its subtree per branch.
     sigs = sigs_df.select("id", "sig")
-    if persist_sigs:
-        sigs = sigs.persist()
-        if max_bucket_size is not None:
-            # The guarded path fans the signature subtree out to MORE
-            # consumers (three bucket-sizing branches + both prefilter
-            # sides), and INDEPENDENT stages of one job run concurrently —
-            # so an unfilled cache gets recomputed per branch (measured 4x
-            # end-to-end at 10k docs). Fill it eagerly once; the count is
-            # CacheManager-keyed by plan, so repeated invocations of the
-            # same query pay it only while cold.
-            sigs.count()
     banded = _banded(sigs, bands, rows_per_band)
 
     # Candidates must collide in >= 2 bands (when bands allow): a true

@@ -8,7 +8,7 @@ partitioning, UDF signatures; the codec layer is pluggable:
   sample streams) that exercise decode/resize/feature/frame-sample paths
   hermetically (no image/audio libs ship in this container).
 * Real codecs (PIL / soundfile / av) — import-gated; raise a clearly
-  marked NotImplementedError when absent so the stub boundary is explicit
+  labelled NotImplementedError when absent so the stub boundary is explicit
   (per round-1 instructions: plumbing real, decode stubbed).
 
 Media table schema::

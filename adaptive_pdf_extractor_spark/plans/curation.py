@@ -47,10 +47,19 @@ def _gate(
     return dedup.exact_dedup_keep(kept, "doc_id", "text")
 
 
-def _stats(kept: DataFrame, keep: DataFrame) -> DataFrame:
-    """Gated docs joined to their ``(doc_id, cluster_size)`` keepers, as
-    the curated ``(doc_id, cluster_size, n_tokens, quality)``."""
-    return kept.join(keep, "doc_id").select(
+def _keep_canonicals(kept: DataFrame, pairs: DataFrame) -> DataFrame:
+    """The curation tail of :func:`curation_pipeline` and
+    :func:`curate_increment`: connected components over ``pairs``
+    (``id_a``, ``id_b``) labelling the gated ``kept`` docs, then each doc
+    that is its component's ``canonical_id`` (the min id), as the curated
+    ``(doc_id, cluster_size, n_tokens, quality)``."""
+    clusters = dedup.neardup_clusters(
+        kept.select(F.col("doc_id").alias("id")), pairs
+    )
+    canon = clusters.filter(
+        F.col("doc_id") == F.col("canonical_id")
+    ).select("doc_id", "cluster_size")
+    return kept.join(canon, "doc_id").select(
         "doc_id",
         "cluster_size",
         T.token_count(F.col("text")).cast("long").alias("n_tokens"),
@@ -93,14 +102,7 @@ def curation_pipeline(
     # Entry count is bounded by distinct source frames, session-scoped.
     # At true corpus scale this is a table write (same role).
     kept = _gate(dedup._spread(docs), decontaminate_against, decon_n).persist()
-    pairs = pair_fn(kept)
-    clusters = dedup.neardup_clusters(
-        kept.select(F.col("doc_id").alias("id")), pairs
-    )
-    canon = clusters.filter(
-        F.col("doc_id") == F.col("canonical_id")
-    ).select("doc_id", "cluster_size")
-    return _stats(kept, canon)
+    return _keep_canonicals(kept, pair_fn(kept))
 
 
 def curate_increment(
@@ -128,16 +130,26 @@ def curate_increment(
     fallback).
 
     Returns kept NEW docs as (doc_id, cluster_size, n_tokens, quality).
-    Semantics: a new doc is kept iff full re-curation of
-    (old_docs ∪ new_docs) would keep it — EXACT (pinned by test and by
-    the DuckDB oracle) provided every new id sorts after every old id
-    (so no mixed cluster's canonical is ever a new doc) and old_docs is
-    pairwise non-near-dup at ``threshold`` (true of curation output;
-    chain-merges ACROSS old canonicals keep both — the old corpus is
-    immutable here, which is the point of incremental).
-    cluster_size counts the NEW-only cluster, which equals the full
-    graph's cluster for every KEPT doc (kept docs live in all-new
-    clusters by the id-order argument)."""
+
+    Connected components run over ONE pair graph, new x new ∪ new x old,
+    and keep each new doc that is its component's ``canonical_id`` (the
+    min id) — the same tail as :func:`curation_pipeline`. An old endpoint
+    gets no row but still links its neighbours. So when every new id
+    sorts after every old id, a component that reaches the old corpus
+    (directly, through a chain of new docs, or with an old doc bridging
+    two new-side clusters) is rooted at an old id and keeps no new doc,
+    exactly as full re-curation of (old_docs ∪ new_docs) folds it under
+    its least old id. Under that precondition a new doc is kept iff full
+    re-curation would keep it (pinned by test and by the DuckDB oracle).
+    A kept doc's component is all-new, so its ``cluster_size``, which
+    counts new docs only, is its full-graph size. Old docs are never
+    re-judged: two old canonicals chained through a new doc both stay,
+    the old corpus being immutable here, which is the point of
+    incremental.
+
+    Outside the precondition, a new doc whose id sorts before an old
+    near-dup's is its component's canonical and is kept: the doc full
+    re-curation keeps. The old doc stays in the old corpus too."""
     # the gate runs WITHIN the batch, then a content-identity anti-join
     # against the old corpus (a re-ingested doc must not come back)
     kept = _gate(new_docs, decontaminate_against, decon_n)
@@ -150,9 +162,6 @@ def curate_increment(
         .drop("fp")
         .persist()
     )
-    new_sigs = dedup.minhash_signatures_df(
-        kept, "doc_id", "text", shingle_n=shingle_n, num_hashes=num_hashes
-    )
     if old_sigs is None:
         old_sigs = dedup.minhash_signatures_df(
             old_docs, "doc_id", "text",
@@ -161,38 +170,29 @@ def curate_increment(
     docs_all = kept.select("doc_id", "text").unionByName(
         old_docs.select("doc_id", "text")
     )
-    pairs = dedup.minhash_lsh_pairs_incremental(
-        new_sigs, old_sigs, docs_all, "doc_id", "text",
-        shingle_n=shingle_n, num_hashes=num_hashes,
-        bands=bands, threshold=threshold,
-    )
-    # classify endpoints: every pair touches >= 1 new id by construction
-    new_ids = kept.select(F.col("doc_id").alias("id"))
-    na = new_ids.select(F.col("id").alias("id_a"), F.lit(True).alias("_na"))
-    nb = new_ids.select(F.col("id").alias("id_b"), F.lit(True).alias("_nb"))
-    marked = pairs.join(na, "id_a", "left").join(nb, "id_b", "left").persist()
-    pairs_nn = marked.filter(
-        F.col("_na").isNotNull() & F.col("_nb").isNotNull()
-    ).select("id_a", "id_b")
-    # the new endpoint of each new-old pair: its whole (new-side) cluster
-    # is tainted — full re-curation would fold it under the old canonical
-    touched = marked.filter(
-        F.col("_na").isNull() | F.col("_nb").isNull()
-    ).select(
-        F.when(F.col("_na").isNull(), F.col("id_b"))
-        .otherwise(F.col("id_a"))
-        .alias("doc_id")
-    ).distinct()
-    clusters = dedup.neardup_clusters(new_ids, pairs_nn)
-    tainted = (
-        clusters.join(touched, "doc_id").select("canonical_id").distinct()
-    )
-    keep = (
-        clusters.filter(F.col("doc_id") == F.col("canonical_id"))
-        .join(tainted, "canonical_id", "left_anti")
-        .select("doc_id", "cluster_size")
-    )
-    return _stats(kept, keep)
+    # the pair stage reads the new signatures in four branches of one job,
+    # and each branch would rerun the signature UDF: materialized once,
+    # perfbench curation_sf01's increment measured a median 5.9 s against
+    # 8.1 s (4 cores). An eager local checkpoint (one job, released below)
+    # rather than persist(), which measured 28 jobs against 24 on
+    # test_curate_increment_job_count's corpus
+    new_sigs = dedup.minhash_signatures_df(
+        kept, "doc_id", "text", shingle_n=shingle_n, num_hashes=num_hashes
+    ).localCheckpoint()
+    try:
+        pairs = dedup.minhash_lsh_pairs_incremental(
+            new_sigs, old_sigs, docs_all, "doc_id", "text",
+            shingle_n=shingle_n, num_hashes=num_hashes,
+            bands=bands, threshold=threshold,
+        )
+        # ONE graph, new x new ∪ new x old: an old endpoint gets no row
+        # but still links its neighbours, so a new-side cluster touching
+        # the old corpus is rooted at an old id and keeps no doc
+        return _keep_canonicals(kept, pairs)
+    finally:
+        # connected components ran the pair stage in their one bounded
+        # collect, and the labels they return never read it again
+        dedup._release_checkpoint(new_sigs)
 
 
 def curation_run(

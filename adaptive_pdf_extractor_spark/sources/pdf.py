@@ -14,7 +14,7 @@ real and tested):
 2. ``%PDF`` with pypdf installed — single-page text extraction, one block
    per page (the reference's fidelity level: src/data.py:201-223, which
    asserts exactly one page and calls ``extract_text()``).
-3. ``%PDF`` without pypdf — NotImplementedError, clearly marked.
+3. ``%PDF`` without pypdf — NotImplementedError, clearly labelled.
 """
 
 from __future__ import annotations

@@ -447,9 +447,9 @@ def streaming_minhash_neardup(
         )
         batch = batch.join(batch_sigs, "id", "left").persist()
         union = batch.unionByName(state)
-        # persist managed HERE (persist_sigs=False below): each batch's
-        # plan is distinct, so an operator-internal persist would strand
-        # one CacheManager entry per micro-batch on a long-running stream
+        # persisted HERE, where the signatures are assembled, and released
+        # after the batch: each batch's plan is distinct, so a cache left
+        # behind would strand one CacheManager entry per micro-batch
         all_sigs = (
             union.select("id", "sig").filter(F.col("sig").isNotNull()).persist()
         )
@@ -466,7 +466,6 @@ def streaming_minhash_neardup(
             num_hashes=num_hashes,
             bands=bands,
             threshold=threshold,
-            persist_sigs=False,
             max_bucket_size=max_bucket_size,
         ).persist()
         state_ids = state.select(F.col("id").alias("sid"))

@@ -138,8 +138,9 @@ def test_minhash_incremental_pairs_match_full(corpus):
 
 
 def test_minhash_pair_stage_builds_without_jobs(spark, corpus):
-    """Building the unguarded full pair stage (default ``persist_sigs``)
-    and the incremental pair stage submits no Spark job: verification
+    """Building the unguarded full pair stage (it persists the signatures
+    it computes, but fills that cache only when guarded) and the
+    incremental pair stage submits no Spark job: verification
     shingles the docs lazily, with no candidate materialization at plan
     build. The input is a fresh local frame, so ``_spread``'s partition
     probe has no shuffle or cache to plan (the former candidate-endpoint
@@ -1010,12 +1011,12 @@ def test_gram_bloom_no_false_negatives_and_fpr():
     assert not bloom_contains(np, bits0, k0, m0, others[:100]).any()
 
 
-def test_curate_increment_transitive_taint(spark):
+def test_curate_increment_transitive_taint(spark, monkeypatch):
     """A new doc connected to the old corpus only THROUGH another new doc
     (chain old-A ~ new-B ~ new-C, no direct A~C pair) must also drop:
-    full re-curation folds the whole chain under A, and the incremental
-    taint propagates through new-new components, not just direct
-    new-old edges."""
+    full re-curation folds the whole chain under A, and so does the one
+    new x new ∪ new x old graph, whose component is rooted at A. Both
+    connected-components plans (``CAP`` 0 forces the star contraction)."""
     from adaptive_pdf_extractor_spark.plans.curation import curate_increment
 
     w = [f"tok{i:03d}" for i in range(100)]
@@ -1043,5 +1044,62 @@ def test_curate_increment_transitive_taint(spark):
 
     old = trio.filter(F.col("doc_id") == 1)
     new = trio.filter(F.col("doc_id") > 1)
-    kept = curate_increment(new, old, threshold=thr).collect()
-    assert kept == []  # B direct-tainted, C transitively tainted
+    for cap in (0, dedup.CAP):
+        monkeypatch.setattr(dedup, "CAP", cap)
+        # B links to A directly, C only through B
+        assert curate_increment(new, old, threshold=thr).collect() == [], cap
+
+
+def _window_doc(start: int, n: int = 100) -> str:
+    """Tokens ``start .. start + n - 1`` of one fixed vocabulary, each
+    followed by a stopword chosen by its position in the vocabulary (so
+    overlapping windows share their character grams and the quality gate
+    passes). Windows ``d`` tokens apart have a 5-char-gram jaccard of
+    0.892 at d = 8 and 0.796 at d = 16."""
+    stop = ["the", "of", "is", "to", "and"]
+    return " ".join(
+        x for i in range(start, start + n) for x in (f"tok{i:03d}", stop[i % 5])
+    )
+
+
+def test_curate_increment_labels_one_graph(spark, monkeypatch):
+    """``curate_increment`` keeps the min-id canonicals of ONE graph over
+    new x new ∪ new x old pairs, under both connected-components plans:
+
+    * two new clusters (101~102, 103~104) bridged only by old doc 1 both
+      drop: the component is rooted at 1;
+    * the all-new cluster 201~202~203 keeps 201 with its new-only
+      ``cluster_size`` 3;
+    * new doc 5 near-dup of old doc 1000 sorts BEFORE it (outside the
+      documented id-order precondition) and is kept as its component's
+      canonical, the doc full re-curation keeps, with ``cluster_size`` 1
+      (only new docs are counted)."""
+    from adaptive_pdf_extractor_spark.plans.curation import curate_increment
+
+    thr = 0.85
+    offsets = {1: 20, 1000: 200, 101: 4, 102: 12, 103: 28, 104: 36,
+               201: 120, 202: 128, 203: 136, 5: 204}
+    docs = spark.createDataFrame(
+        [(i, _window_doc(o)) for i, o in offsets.items()],
+        "doc_id long, text string",
+    )
+    pairs = {
+        (r["id_a"], r["id_b"])
+        for r in dedup.ngram_jaccard_pairs(
+            docs, "doc_id", "text", shingle_n=5, threshold=thr
+        ).collect()
+    }
+    # windows 8 tokens apart pair, 16 apart do not
+    assert pairs == {
+        (1, 102), (1, 103), (101, 102), (103, 104),
+        (201, 202), (202, 203), (5, 1000),
+    }
+    old = docs.filter(F.col("doc_id").isin(1, 1000))
+    new = docs.filter(~F.col("doc_id").isin(1, 1000))
+    for cap in (0, dedup.CAP):
+        monkeypatch.setattr(dedup, "CAP", cap)
+        kept = {
+            (r["doc_id"], r["cluster_size"])
+            for r in curate_increment(new, old, threshold=thr).collect()
+        }
+        assert kept == {(5, 1), (201, 3)}, cap
