@@ -4,11 +4,14 @@ from __future__ import annotations
 
 import json
 
+from conftest import needs_reference
+
 from adaptive_pdf_extractor_spark.sources import corpus as corpus_mod
 
 CACHE = "/root/reference/data/fake/caches/fake_dataset_1000samples_seed_1_cache.json"
 
 
+@needs_reference
 def test_reference_cache_roundtrip(tmp_path):
     rows = corpus_mod.reference_cache_to_rule_rows(CACHE)
     exported = corpus_mod.rule_rows_to_reference_cache(rows)

@@ -8,6 +8,7 @@ import re
 
 import pandas as pd
 import pytest
+from conftest import needs_reference
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -79,6 +80,7 @@ def test_normalize_series_matches_scalar(items):
         assert got == normalize_text(raw)
 
 
+@needs_reference
 def test_normalize_on_reference_corpus_sample():
     """Spot-check against real reference corpus texts."""
     ds = corpus_mod.load_reference_json(
@@ -173,6 +175,7 @@ def _load_seed1_rules():
     return RuleBook.from_rows(rows)
 
 
+@needs_reference
 def test_vectorized_matches_scalar_on_reference_corpus():
     """Every (doc, field) on 300 real corpus docs: vectorized first-match
     equals the scalar oracle, including None/"" tri-state."""
@@ -252,6 +255,7 @@ def test_span_roundtrip_exact(text, n_media):
     assert len(corpus_mod.media_spans(spans)) == n_media
 
 
+@needs_reference
 def test_reference_dataset_conversion_roundtrip():
     rows = corpus_mod.reference_dataset_to_rows(
         "/root/reference/data/fake/datasets/fake_dataset_1000samples_seed_1.json"
@@ -281,6 +285,7 @@ def test_synth_rows_deterministic_and_order_independent():
     assert json.dumps(a, sort_keys=True) != json.dumps(c, sort_keys=True)
 
 
+@needs_reference
 def test_golden_output_rows_shape():
     rows = corpus_mod.golden_output_rows(
         "/root/reference/data/fake/datasets/fake_dataset_1000samples_seed_1.json",

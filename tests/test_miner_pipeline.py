@@ -7,6 +7,7 @@ from __future__ import annotations
 import json
 
 import pytest
+from conftest import needs_reference
 from pyspark.sql import functions as F
 
 from adaptive_pdf_extractor_spark.functions.normalize import normalize_text
@@ -127,6 +128,7 @@ def seed1_docs(spark):
     )
 
 
+@needs_reference
 def test_pipeline_learns_from_scratch(spark, seed1_docs, tmp_path):
     """The engine's own adaptive loop, no reference cache: mine rules from
     the corpus, converge, and beat the reference's with-cache accuracy

@@ -68,22 +68,17 @@ def test_doc_scan_prunes_columns(spark):
     assert cols == {"doc_id", "text"}
 
 
-def test_extraction_is_shuffle_free(spark):
+def test_extraction_is_shuffle_free(spark, learned_rules):
     """The hot path: no Exchange beyond the explicit salted repartition."""
     from adaptive_pdf_extractor_spark.functions.rules import RuleBook
     from adaptive_pdf_extractor_spark.operators.extract import (
         extract_documents,
         salted_repartition,
     )
-    from adaptive_pdf_extractor_spark.sources import corpus as corpus_mod
     from adaptive_pdf_extractor_spark.sources import spark_io
 
     docs = spark_io.synthetic_corpus_df(spark, seed=3, count=50, partitions=2)
-    book = RuleBook.from_rows(
-        corpus_mod.reference_cache_to_rule_rows(
-            "/root/reference/data/fake/caches/fake_dataset_1000samples_seed_1_cache.json"
-        )
-    )
+    book = RuleBook.from_rows(learned_rules)
     plan_no_repart = _executed(extract_documents(docs, book))
     assert "Exchange" not in plan_no_repart, plan_no_repart
     plan_repart = _executed(extract_documents(salted_repartition(docs, 4), book))

@@ -8,9 +8,11 @@ day the dependency exists. Also covers the spark_io catalog dispatch seam
 from __future__ import annotations
 
 import glob
+import json
 import os
 
 import pytest
+from conftest import needs_reference
 from pyspark.sql import functions as F
 
 from adaptive_pdf_extractor_spark.functions.rules import RuleBook
@@ -23,6 +25,7 @@ REAL_DIR = "/root/reference/data/real"
 REAL_DATASET = f"{REAL_DIR}/dataset.json"
 
 
+@needs_reference
 def test_real_dataset_parses_and_ingests(spark):
     """The actual two-label dataset.json parses (json5 fallback's motivating
     file) and runs through one extraction pass."""
@@ -44,13 +47,28 @@ def test_real_dataset_parses_and_ingests(spark):
     assert all(r["u"] >= 3 for r in got)
 
 
-def test_real_dataset_pdf_loader_gate():
+def test_real_dataset_pdf_loader_gate(tmp_path):
     """Without pypdf the pdf_path tier must fail loudly, not silently."""
     if pdf_mod._PdfReader is not None:
         pytest.skip("pypdf present: the gate is open (covered below)")
+    # one record in the real dataset's format: a pdf_path relative to the JSON
+    (tmp_path / "pdfs").mkdir()
+    (tmp_path / "pdfs" / "doc.pdf").write_bytes(b"%PDF-1.4\n%%EOF\n")
+    dataset = tmp_path / "dataset.json"
+    dataset.write_text(
+        json.dumps(
+            [
+                {
+                    "label": "carteira_oab",
+                    "extraction_schema": {"nome": "Nome do profissional"},
+                    "pdf_path": "pdfs/doc.pdf",
+                }
+            ]
+        )
+    )
     with pytest.raises(NotImplementedError, match="pypdf"):
         corpus_mod.reference_dataset_to_rows(
-            REAL_DATASET, pdf_loader=pdf_mod.load_pdf_text
+            str(dataset), pdf_loader=pdf_mod.load_pdf_text
         )
 
 
@@ -107,6 +125,7 @@ def test_catalog_dispatch_unknown(spark, tmp_path):
         spark_io.write_table(spark.range(1), str(tmp_path / "u"), catalog="orc")
 
 
+@needs_reference
 def test_pipeline_learns_real_schemas_under_description_labels(spark, tmp_path):
     """The reference's REAL two-label schemas (carteira_oab, tela_sistema —
     data/real/dataset.json), with documents printing each field under a

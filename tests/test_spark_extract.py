@@ -5,6 +5,7 @@ synthetic corpus determinism."""
 from __future__ import annotations
 
 import pytest
+from conftest import needs_reference
 from pyspark.sql import functions as F
 
 from adaptive_pdf_extractor_spark.functions.rules import RuleBook
@@ -35,6 +36,7 @@ def _parity_count(spark, name: str) -> tuple[int, int]:
     return equal, total
 
 
+@needs_reference
 @pytest.mark.parametrize(
     "name,n",
     [
@@ -53,12 +55,12 @@ def test_golden_span_parity(spark, name, n):
     assert equal == total, f"span parity {equal}/{total}"
 
 
-def test_extraction_output_shape_and_metrics(spark):
-    name = "fake_dataset_1000samples_seed_1"
-    docs = spark_io.reference_corpus_df(spark, f"{DATASETS}/{name}.json").limit(200)
-    book = RuleBook.from_rows(
-        corpus_mod.reference_cache_to_rule_rows(f"{CACHES}/{name}_cache.json")
+def test_extraction_output_shape_and_metrics(spark, learned_rules):
+    # 200 docs held out of the learned_rules training range (0..399)
+    docs = spark_io.input_df_from_rows(
+        spark, corpus_mod.synth_rows(seed=1, start=1000, count=200)
     )
+    book = RuleBook.from_rows(learned_rules)
     out = extract_documents(docs, book).cache()
     try:
         # every doc emits 8 field spans + its media spans
@@ -114,6 +116,7 @@ def test_synthetic_corpus_deterministic_across_parallelism(spark):
         assert ja[k] == jb[k]
 
 
+@needs_reference
 def test_extraction_accuracy_on_synthetic(spark):
     """Rules learned on the reference corpus transfer to our synthetic
     corpus (same template family): accuracy must be high, proving the

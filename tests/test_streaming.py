@@ -12,12 +12,10 @@ from adaptive_pdf_extractor_spark.sources import corpus as corpus_mod
 from adaptive_pdf_extractor_spark.sources import spark_io
 from adaptive_pdf_extractor_spark.streaming import ingest
 
-CACHE = "/root/reference/data/fake/caches/fake_dataset_1000samples_seed_1_cache.json"
-
 
 @pytest.fixture(scope="module")
-def rulebook():
-    return RuleBook.from_rows(corpus_mod.reference_cache_to_rule_rows(CACHE))
+def rulebook(learned_rules):
+    return RuleBook.from_rows(learned_rules)
 
 
 def test_streaming_extract_equals_batch(spark, rulebook, tmp_path):
