@@ -272,29 +272,17 @@ def minhash_lsh_pairs(
 def _banded(sigs: DataFrame, bands: int, rows_per_band: int) -> DataFrame:
     """(id, band, bucket) banding of a signature table: bucket = xxhash64
     of the band's signature slots — ONE formulation shared by the full and
-    incremental pair stages so their buckets can never diverge."""
-    return sigs.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(
-                            F.concat_ws(
-                                ",",
-                                *[
-                                    F.element_at("sig", b * rows_per_band + r + 1)
-                                    for r in range(rows_per_band)
-                                ],
-                            )
-                        ).alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("id", "bb.band", "bb.bucket")
+    incremental pair stages so their buckets can never diverge.
+
+    One explode of the band index and a ``slice`` on it: a per-band
+    Column list cost ~2,800 py4j calls per build (32 x 4) and one 298 KB
+    whole-stage class that compiled and ran slowly. Pinned row-identical
+    to it (``tests/specs.banded_columns``)."""
+    band = F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("band")
+    slots = F.slice("sig", F.col("band") * rows_per_band + 1, rows_per_band)
+    return sigs.select("id", "sig", band).select(
+        "id", "band", F.xxhash64(F.concat_ws(",", slots)).alias("bucket")
+    )
 
 
 def _verified_pairs(

@@ -259,6 +259,11 @@ def curation_run(
     # a separate action: docs is consumed only inside the persisted kept
     # subtree, and an observation there never fires on a cache hit
     n_input = docs.count()
+    # the plan of the signatures minhash_lsh_pairs persisted: it owns that
+    # cache, and this run releases it once the guard telemetry is read
+    sigs = dedup.minhash_signatures_df(
+        gated[0], "doc_id", "text", shingle_n=shingle_n, num_hashes=num_hashes
+    ).select("id", "sig")
     guard = {}
     if obs is not None:
         guard = dedup.observed_metrics(obs)
@@ -267,9 +272,6 @@ def curation_run(
         # observed star frame, which may still hold star edges (a flood
         # whose members all verify below the threshold): observe the star
         # frame again under a one-row count, which keeps it in the plan
-        sigs = dedup.minhash_signatures_df(
-            gated[0], "doc_id", "text", shingle_n=shingle_n, num_hashes=num_hashes
-        ).select("id", "sig")  # the pair stage's persisted signatures
         banded = dedup._banded(sigs, bands, num_hashes // bands)
         recount = Observation("lsh_guard_recount")
         _, star, _ = dedup._guard_split(
@@ -277,6 +279,7 @@ def curation_run(
         )
         star.agg(F.count("*")).collect()
         guard = dedup.observed_metrics(recount)
+    sigs.unpersist()
     max_over = guard.get("max_oversized_bucket")
     summary = {
         "n_input": int(n_input),

@@ -98,6 +98,35 @@ def simhash64_columns(text_col: Column) -> Column:
     return out
 
 
+def banded_columns(sigs: DataFrame, bands: int, rows_per_band: int) -> DataFrame:
+    """Reference formulation of ``dedup._banded``: one struct per band,
+    each hashing its ``rows_per_band`` ``element_at`` slots, exploded from
+    one array. Builds ``bands x rows_per_band`` Columns on the driver and
+    one large generated class — do not use in the hot path."""
+    return sigs.select(
+        "id",
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(b).alias("band"),
+                        F.xxhash64(
+                            F.concat_ws(
+                                ",",
+                                *[
+                                    F.element_at("sig", b * rows_per_band + r + 1)
+                                    for r in range(rows_per_band)
+                                ],
+                            )
+                        ).alias("bucket"),
+                    )
+                    for b in range(bands)
+                ]
+            )
+        ).alias("bb"),
+    ).select("id", "bb.band", "bb.bucket")
+
+
 def neardup_clusters_minlabel(
     ids: DataFrame, pairs: DataFrame, max_iterations: int = 12
 ) -> DataFrame:

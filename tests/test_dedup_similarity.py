@@ -8,7 +8,12 @@ from pyspark.sql import functions as F
 
 from adaptive_pdf_extractor_spark.operators import dedup, similarity
 from adaptive_pdf_extractor_spark.sources import corpus as corpus_mod
-from specs import lsh_bucket_expr, neardup_clusters_minlabel, simhash64_columns
+from specs import (
+    banded_columns,
+    lsh_bucket_expr,
+    neardup_clusters_minlabel,
+    simhash64_columns,
+)
 
 
 @pytest.fixture(scope="module")
@@ -168,6 +173,71 @@ def test_minhash_pair_stage_builds_without_jobs(spark, corpus):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert sc.statusTracker().getJobIdsForGroup("pin_pair_build") == []
+
+
+def test_minhash_banding_matches_column_spec(spark, corpus):
+    """``dedup._banded`` (band-index explode + ``slice``) is row-identical
+    to the per-band Column formulation it replaced
+    (``specs.banded_columns``): on random signatures and on the minhash
+    signatures of a corpus with NULL and "" texts, at 32 x 4 and 16 x 8."""
+    random_sigs = spark.range(400).select(
+        "id",
+        F.transform(
+            F.sequence(F.lit(1), F.lit(128)), lambda i: F.xxhash64("id", i)
+        ).alias("sig"),
+    )
+    edge = spark.createDataFrame(
+        [(900, None), (901, ""), (902, None), (903, "")], "doc_id long, text string"
+    )
+    corpus_sigs = dedup.minhash_signatures_df(
+        corpus.select("doc_id", "text").unionByName(edge), "doc_id", "text"
+    ).select("id", "sig")
+    for sigs in (random_sigs, corpus_sigs):
+        for bands, rows_per_band in ((32, 4), (16, 8)):
+            got = dedup._banded(sigs, bands, rows_per_band)
+            ref = banded_columns(sigs, bands, rows_per_band)
+            assert got.schema == ref.schema
+            assert got.exceptAll(ref).count() == 0
+            assert ref.exceptAll(got).count() == 0
+            assert got.count() == sigs.count() * bands
+
+
+def test_minhash_pair_stages_generated_code_bounded(spark, corpus):
+    """No whole-stage-codegen subtree of the guarded full or the
+    incremental MinHash pair stage exceeds 64 KB of Java source. The
+    per-band Column list banding once made one 298 KB class, which
+    compiled and ran slowly. Plans are listed with AQE off: an adaptive
+    plan lists no subtree before it runs. Listing a broadcast join runs
+    its build side, so the listing is not job-free."""
+    kw = dict(shingle_n=5, num_hashes=128)
+    sigs = dedup.minhash_signatures_df(corpus, "doc_id", "text", **kw).persist()
+    new = sigs.filter(F.col("id") >= 100).persist()
+    old = sigs.filter(F.col("id") < 100).persist()
+    for frame in (sigs, new, old):
+        frame.count()
+    stages = {
+        "guarded": dedup.minhash_lsh_pairs_from_sigs(
+            sigs, corpus, "doc_id", "text", threshold=0.8, max_bucket_size=256
+        ),
+        "incremental": dedup.minhash_lsh_pairs_incremental(
+            new, old, corpus, "doc_id", "text", threshold=0.8
+        ),
+    }
+    adaptive = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        sizes = {}
+        for name, df in stages.items():
+            subtrees = df._jdf.queryExecution().debug().codegenToSeq()
+            sizes[name] = [
+                len(subtrees.apply(i)._2()) for i in range(subtrees.size())
+            ]
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", adaptive)
+        for frame in (new, old, sigs):
+            frame.unpersist()
+    assert all(sizes.values()), sizes
+    assert max(max(s) for s in sizes.values()) <= 64 * 1024, sizes
 
 
 def test_simhash_finds_planted_dups(corpus):

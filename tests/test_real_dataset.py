@@ -72,6 +72,7 @@ def test_real_dataset_pdf_loader_gate(tmp_path):
         )
 
 
+@needs_reference
 @pytest.mark.skipif(pdf_mod._PdfReader is None, reason="pypdf not installed")
 def test_real_pdfs_decode(spark):
     """Tier-2 decode over the reference's six real PDFs (runs where pypdf
@@ -87,6 +88,7 @@ def test_real_pdfs_decode(spark):
     assert all(len(r["spans"]) > 0 for r in rows)
 
 
+@needs_reference
 @pytest.mark.skipif(pdf_mod._PdfReader is None, reason="pypdf not installed")
 def test_real_dataset_with_decoded_text(spark):
     rows = corpus_mod.reference_dataset_to_rows(
