@@ -1328,7 +1328,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def _sql_occurrences(col: str, word: str) -> str:
-    # mirror functions/text.word_occurrences exactly: whitespace-normalize,
+    # per word, what functions/text._occurrences counts: whitespace-normalize,
     # double interior spaces (adjacent repeats must not share delimiter
     # spaces with the non-overlapping replace-count), then pad and count
     normalized = f"regexp_replace({col}, '[{_SQL_WS}]+', ' ', 'g')"

@@ -18,6 +18,8 @@ exact SQL oracles in the driver's correctness harness
 
 from __future__ import annotations
 
+import re
+
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -88,34 +90,38 @@ def tokens(col: Column) -> Column:
 
 
 def token_count(col: Column) -> Column:
-    return F.size(tokens(col))
+    """``size(tokens(col))`` as one codegen'd regex count of maximal
+    non-whitespace runs, with no array built (the oracles'
+    ``_sql_token_count``)."""
+    return F.regexp_count(col, F.lit(f"[^{WS_CLASS}]+"))
 
 
-def word_occurrences(col: Column, word: str) -> Column:
-    """Count of a token (word-boundary by whitespace) — the substring-count
-    formulation keeps it expressible identically in ANSI SQL.
+def _occurrences(col: Column, words) -> Column:
+    """Total count of the tokens (split on ``WS_CLASS``) of ``col`` that
+    are in the set ``words``: ONE regex count of a regex-escaped
+    alternation, never one replace-count per word.
 
-    Two delimiter subtleties, both load-bearing: (1) whitespace normalizes
-    to single spaces first, so newline/tab-separated tokens count (the
-    token_count denominator splits on the same class); (2) interior spaces
-    are DOUBLED before searching ``' word '``, so adjacent repeats
-    ('the the the') don't share delimiter spaces with the non-overlapping
-    replace-count (which would undercount them)."""
+    Whitespace normalizes to single spaces first, so newline- and
+    tab-separated tokens count, and interior spaces are then DOUBLED and
+    the text padded with a space on each side: every token sits between
+    delimiter spaces of its own, so adjacent repeats ('the the the')
+    count fully and the non-overlapping count equals the sum of the
+    per-word replace-counts of the SQL oracles (``_sql_occurrences``;
+    the per-word spec is ``tests/specs.word_occurrences``). ``words`` is
+    a set: a word listed twice counts once."""
     normalized = F.regexp_replace(col, rf"[{WS_CLASS}]+", " ")
     padded = F.concat(
         F.lit(" "), F.replace(normalized, F.lit(" "), F.lit("  ")), F.lit(" ")
     )
-    needle = f" {word} "
-    return (
-        (F.length(padded) - F.length(F.replace(padded, F.lit(needle), F.lit(""))))
-        / len(needle)
-    ).cast("int")
+    alternation = "|".join(re.escape(w) for w in sorted(set(words)))
+    return F.regexp_count(padded, F.lit(f" (?:{alternation}) "))
 
 
 def stopword_ratio(col: Column, stopwords: list[str] | None = None) -> Column:
-    sw = stopwords or STOPWORDS_EN
+    """Share of tokens that are stopwords; ``stopwords`` is a set (default
+    ``STOPWORDS_EN``), counted by :func:`_occurrences`."""
     total = token_count(col)
-    hits = sum(word_occurrences(col, w) for w in sw)
+    hits = _occurrences(col, stopwords or STOPWORDS_EN)
     return F.when(total > 0, F.round(hits / total, 4)).otherwise(F.lit(0.0))
 
 
@@ -153,7 +159,7 @@ def quality_score(col: Column) -> Column:
 
 def lang_scores(col: Column) -> dict[str, Column]:
     return {
-        lang: sum(word_occurrences(col, w) for w in words)
+        lang: _occurrences(col, words)
         for lang, words in LANG_MARKERS.items()
     }
 

@@ -75,12 +75,39 @@ def exact_dedup_groups(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
 def exact_dedup_keep(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Keep one representative row per distinct content (min id wins —
-    deterministic). Expressed as window-free groupBy + self-join so the
-    dedup side is only (fingerprint, canonical_id)."""
-    groups = exact_dedup_groups(df, id_col, text_col).select(
-        F.col("canonical_id").alias(id_col)
+    deterministic): one aggregate keyed on the fingerprint, see
+    :func:`_min_id_rows`."""
+    return _min_id_rows(df, id_col, text_col)
+
+
+def _min_id_rows(
+    df: DataFrame, id_col: str, text_col: str, where: Column | None = None
+) -> DataFrame:
+    """The row with the least ``id_col`` of each fingerprint group among
+    the rows that satisfy ``where`` (all rows when None), as ONE aggregate:
+    ``min(when(where, struct(id, row)))`` per fingerprint, with no join
+    back to the input, so the input subtree (the curation gate's quality
+    score) runs once per row. A semi-join of the frame to its own min-id
+    aggregate would run it in both branches.
+
+    The predicate filters BEFORE the min, so a group whose least id fails
+    keeps its least passing id. ``min`` skips the NULL structs of failing
+    rows, and a group with none passing yields NULL and is dropped. A row
+    with a NULL id is never kept. Ids are unique keys (a repeated id comes
+    back once) and every column must be orderable (no map column).
+    Columns come out as a semi-join on ``id_col`` gives them: ``id_col``
+    first, then the others in their order."""
+    rest = [c for c in df.columns if c != id_col]
+    passes = F.col(id_col).isNotNull()
+    if where is not None:
+        passes = passes & where
+    best = F.min(F.when(passes, F.struct(id_col, *rest))).alias("_best")
+    return (
+        df.groupBy(doc_fingerprint_md5(F.col(text_col)).alias("_fp"))
+        .agg(best)
+        .filter(F.col("_best").isNotNull())
+        .select("_best.*")
     )
-    return df.join(groups, id_col, "left_semi")
 
 
 # ---------------------------------------------------------------------------

@@ -27,24 +27,33 @@ def _gate(
     decon_n: int,
 ) -> DataFrame:
     """The curation gate of :func:`curation_pipeline` and
-    :func:`curate_increment`: quality >= 0.5, then the optional
-    decontamination anti-join, then exact dedup (min-id keeper per
+    :func:`curate_increment`: quality >= 0.5, the optional
+    decontamination anti-join, and exact dedup (the min passing id per
     fingerprint). ONE definition: curate_increment's exactness contract
-    holds only while both paths gate identically."""
+    holds only while both paths gate identically.
+
+    The score is computed in one projection and the predicate is folded
+    into the exact-dedup aggregate (``dedup._min_id_rows``), so each
+    document is scored once. The predicate must filter before the min:
+    the fingerprint ignores case and whitespace, the score does not, so
+    one group can hold passing and failing docs. The decontamination
+    flags are per document, so anti-joining them before the quality
+    predicate keeps the same rows."""
     scored = docs.withColumn("quality", T.quality_score(F.col("text")))
-    kept = scored.filter(F.col("quality") >= 0.5)
     if decontaminate_against is not None:
         flagged = dedup.decontaminate(
-            kept, decontaminate_against, "doc_id", "text", n=decon_n
+            scored, decontaminate_against, "doc_id", "text", n=decon_n
         )
-        kept = kept.join(
+        scored = scored.join(
             flagged.filter(F.col("contaminated")).select(
                 F.col("id").alias("doc_id")
             ),
             "doc_id",
             "left_anti",
         )
-    return dedup.exact_dedup_keep(kept, "doc_id", "text")
+    return dedup._min_id_rows(
+        scored, "doc_id", "text", F.col("quality") >= 0.5
+    )
 
 
 def _keep_canonicals(kept: DataFrame, pairs: DataFrame) -> DataFrame:

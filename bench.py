@@ -1,6 +1,7 @@
 #!/usr/bin/env python3
 """Benchmark: headline queries at $SPARK_GRAFT_SF_DIR (default sf0.1) on
-local[$SPARK_GRAFT_CPUS]. Prints ONE JSON line:
+local[$SPARK_GRAFT_CPUS] (default: the machine's cores, as
+session.get_spark). Prints ONE JSON line:
 {"metric": ..., "value": <total sec>, "unit": "sec", "queries": {...},
  "sf": ..., "docs_per_sec": ...}
 
@@ -34,7 +35,7 @@ REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
 FASTPATH_DOCS = int(os.environ.get("BENCH_FASTPATH_DOCS", "100000"))
 
 GROUPS = ["fastpath", "adaptive", "relational", "textops", "lsh"]

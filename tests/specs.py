@@ -23,9 +23,15 @@ from adaptive_pdf_extractor_spark.functions.rules import (
     validate_value,
 )
 from adaptive_pdf_extractor_spark.functions.text import (
+    WS_CLASS,
     _hash_family,
     char_grams_all,
+    quality_score,
     tokens,
+)
+from adaptive_pdf_extractor_spark.operators.dedup import (
+    decontaminate,
+    exact_dedup_groups,
 )
 from adaptive_pdf_extractor_spark.operators.similarity import _dot
 from adaptive_pdf_extractor_spark.sources.spark_io import RULES_DDL
@@ -69,6 +75,61 @@ def apply_rules_pandas(
             rule_ids.loc[hit_idx] = r.rule_id
             unresolved.loc[hit_idx] = False
     return values, rule_ids
+
+
+def word_occurrences(col: Column, word: str) -> Column:
+    """Count of a token (word-boundary by whitespace) — the substring-count
+    formulation keeps it expressible identically in ANSI SQL.
+
+    Two delimiter subtleties, both load-bearing: (1) whitespace normalizes
+    to single spaces first, so newline/tab-separated tokens count (the
+    token_count denominator splits on the same class); (2) interior spaces
+    are DOUBLED before searching ``' word '``, so adjacent repeats
+    ('the the the') don't share delimiter spaces with the non-overlapping
+    replace-count (which would undercount them).
+
+    Spec of ``text._occurrences``: its one alternation over a word set
+    counts the sum of this over the set's words."""
+    normalized = F.regexp_replace(col, rf"[{WS_CLASS}]+", " ")
+    padded = F.concat(
+        F.lit(" "), F.replace(normalized, F.lit(" "), F.lit("  ")), F.lit(" ")
+    )
+    needle = f" {word} "
+    return (
+        (F.length(padded) - F.length(F.replace(padded, F.lit(needle), F.lit(""))))
+        / len(needle)
+    ).cast("int")
+
+
+def quality_gate_two_branch(
+    docs: DataFrame,
+    decontaminate_against: DataFrame | None = None,
+    decon_n: int = 13,
+) -> DataFrame:
+    """The curation gate's former formulation, spec of
+    ``curation._gate``: score, filter ``quality >= 0.5``, anti-join the
+    ids that ``dedup.decontaminate`` flags among the passing docs, then
+    keep the min id of each fingerprint group by semi-joining the
+    filtered frame to its own ``exact_dedup_groups`` aggregate. That
+    join runs the scored subtree in both of its branches."""
+    kept = docs.withColumn(
+        "quality", quality_score(F.col("text"))
+    ).filter(F.col("quality") >= 0.5)
+    if decontaminate_against is not None:
+        flagged = decontaminate(
+            kept, decontaminate_against, "doc_id", "text", n=decon_n
+        )
+        kept = kept.join(
+            flagged.filter(F.col("contaminated")).select(
+                F.col("id").alias("doc_id")
+            ),
+            "doc_id",
+            "left_anti",
+        )
+    groups = exact_dedup_groups(kept, "doc_id", "text").select(
+        F.col("canonical_id").alias("doc_id")
+    )
+    return kept.join(groups, "doc_id", "left_semi")
 
 
 def simhash64_columns(text_col: Column) -> Column:

@@ -12,6 +12,7 @@ from specs import (
     banded_columns,
     lsh_bucket_expr,
     neardup_clusters_minlabel,
+    quality_gate_two_branch,
     simhash64_columns,
 )
 
@@ -770,6 +771,104 @@ def test_curation_pipeline_decontaminate_flag(spark):
         ).collect()
     }
     assert got == set(base) - {k}
+
+
+# 7 tokens, 25 chars: stopwords and word length pass, length and punctuation
+# fail, so the score is exactly 0.5; upper-cased, no stopword matches (0.25);
+# upper-cased and padded past 50 chars, length and punctuation pass (0.75)
+BORDER = "the !!! of ??? and ;;; to"
+BORDER_UP = BORDER.upper()
+BORDER_WIDE = BORDER_UP.replace(" ", "      ")
+
+
+def _gate_corpus(spark):
+    """Fingerprint groups (lower-cased, whitespace-collapsed text) that mix
+    passing and failing case/whitespace variants, in a frame whose id is
+    not its first column: the group's least id fails and a later id
+    passes (ids 1-3 and a NULL id), the least id passes (4, 5), no id
+    passes (6), exact duplicates (7, 8), a contaminable group (30, 31),
+    singletons, a NULL text and a NULL id."""
+    long_text = " ".join(
+        f"the record {i} of the archive and its notes" for i in range(6)
+    )
+    rows = [
+        (BORDER_UP, 1, "a"), (BORDER, 2, "b"), (BORDER_WIDE, 3, "c"),
+        (BORDER.replace(" ", "\t"), None, "d"),
+        (BORDER + " x", 4, "e"), (BORDER_UP + " X", 5, "f"),
+        (BORDER_UP + " Y", 6, "g"),
+        (long_text, 7, "h"), (long_text, 8, "i"),
+        (long_text + " copy", 30, "j"), ((long_text + " copy").upper(), 31, "k"),
+        ("a plain sentence about the weather in the hills and the sea", 9, "l"),
+        (None, 20, "m"),
+        ("the sentence with no id at all is long enough to pass", None, "n"),
+    ]
+    schema = "text string, doc_id long, src string"
+    return spark.createDataFrame(rows, schema), long_text
+
+
+def test_curation_gate_matches_two_branch_spec(spark):
+    """The one-aggregate gate (score once, fold ``quality >= 0.5`` into the
+    min-id aggregate) is row- and column-identical to the two-branch spec
+    (filter, then semi-join the frame to its own min-id aggregate), with
+    and without decontamination, on 0-row, 1-row and mixed-variant
+    inputs. The predicate filters before the min: the group whose least
+    id fails keeps its least passing id."""
+    from adaptive_pdf_extractor_spark.plans.curation import _gate
+
+    docs, long_text = _gate_corpus(spark)
+    evals = spark.createDataFrame([(long_text + " copy",)], "text string")
+    inputs = {
+        "mixed": docs,
+        "empty": docs.limit(0),
+        "one_pass": docs.filter(F.col("doc_id") == 2),
+        "one_fail": docs.filter(F.col("doc_id") == 1),
+    }
+    for name, df in inputs.items():
+        for against in (None, evals):
+            got = _gate(df, against, 13)
+            spec = quality_gate_two_branch(df, against, 13)
+            assert got.columns == spec.columns, (name, got.columns)
+            assert sorted(got.collect()) == sorted(spec.collect()), name
+    kept = {r["doc_id"]: r["quality"] for r in _gate(docs, None, 13).collect()}
+    assert kept == {2: 0.5, 4: 0.5, 7: 1.0, 9: 1.0, 30: 1.0}
+    # the eval text shares 13-grams with both long-text groups
+    decon = {r["doc_id"] for r in _gate(docs, evals, 13).collect()}
+    assert decon == {2, 4, 9}
+    # and without a predicate: the same rows as the semi-join form
+    groups = dedup.exact_dedup_groups(docs, "doc_id", "text").select(
+        F.col("canonical_id").alias("doc_id")
+    )
+    two_branch = docs.join(groups, "doc_id", "left_semi")
+    one = dedup.exact_dedup_keep(docs, "doc_id", "text")
+    assert one.columns == two_branch.columns
+    assert sorted(one.collect()) == sorted(two_branch.collect())
+
+
+def test_curation_gate_generated_code_bounded(spark):
+    """No whole-stage-codegen subtree of the curation gate exceeds 64 KB
+    of Java source, with or without decontamination. Ten unrolled
+    stopword replace-counts, a score compiled into both a filter and a
+    projection, and a semi-join branch that compiled it again once made
+    subtrees of 246 and 227 KB. Plans are listed with AQE off (an
+    adaptive plan lists no subtree before it runs)."""
+    from adaptive_pdf_extractor_spark.plans.curation import _gate
+
+    docs, long_text = _gate_corpus(spark)
+    evals = spark.createDataFrame([(long_text,)], "text string")
+    adaptive = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        sizes = {}
+        for name, against in (("plain", None), ("decontaminated", evals)):
+            plan = _gate(docs, against, 13)._jdf.queryExecution()
+            subtrees = plan.debug().codegenToSeq()
+            sizes[name] = [
+                len(subtrees.apply(i)._2()) for i in range(subtrees.size())
+            ]
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", adaptive)
+    assert all(sizes.values()), sizes
+    assert max(max(s) for s in sizes.values()) <= 64 * 1024, sizes
 
 
 def test_curation_lsh_matches_exact_composition(spark):

@@ -213,11 +213,12 @@ def test_curation_run_job_count_and_cached_frames(spark, tmp_path):
     built, connected components run one bounded collect of the persisted
     edge list (the cache's own query stage is one job) and label the
     small pair graph on the driver, and ``n_output`` is an Observation
-    on the output write. Former formulations submitted 72 jobs (a
-    candidate-endpoint prune materialized at plan build, ``isEmpty`` +
-    ``count``, the output table read back and counted) and 58 (the star
-    contraction on every graph, a ``localCheckpoint`` + ``count`` +
-    ``isEmpty`` per round)."""
+    on the output write. The gate scores each document once, in one
+    aggregate with no self semi-join. Former formulations submitted 30 or
+    31 jobs (the two-branch gate keeper), 72 (a candidate-endpoint prune
+    materialized at plan build, ``isEmpty`` + ``count``, the output table
+    read back and counted) and 58 (the star contraction on every graph, a
+    ``localCheckpoint`` + ``count`` + ``isEmpty`` per round)."""
     from adaptive_pdf_extractor_spark.plans.curation import curation_run
 
     sc = spark.sparkContext
@@ -237,9 +238,9 @@ def test_curation_run_job_count_and_cached_frames(spark, tmp_path):
         lambda: curation_run(docs, str(tmp_path / "pin"), max_bucket_size=24),
     )
     n_cached = len(cached_ids() - before)
-    # 30 or 31 jobs: which of the gate's independent stages finishes first
-    # decides how AQE re-plans the rest (both seen on 4 cores)
-    assert n_jobs <= 31 and n_cached == 1, (n_jobs, n_cached)
+    # 28 in five of five runs on 4 cores; the two-branch gate keeper took
+    # 30 or 31, by which of its independent stages finished first
+    assert n_jobs == 28 and n_cached == 1, (n_jobs, n_cached)
     assert summary["n_input"] == 360
     assert summary["n_output"] == 2  # the whole corpus shares BASE
     assert summary["guard"]["flood_regime"] is True
@@ -256,8 +257,9 @@ def test_curate_increment_job_count(spark):
     (the cache's own query stage is one of the jobs). The new-side signatures
     are an eager local checkpoint, released once the labels exist, so the
     only cache left behind is the gated batch ``kept``. Former
-    formulations submitted 58 jobs (the star contraction, a
-    ``localCheckpoint`` + ``count`` + ``isEmpty`` per round) and 35
+    formulations submitted 24 jobs (the two-branch gate keeper), 58 (the
+    star contraction, a ``localCheckpoint`` + ``count`` + ``isEmpty`` per
+    round) and 35
     (new-new clustering plus an old-side taint: endpoint-flag joins over
     a persisted pair frame, distincts and an anti-join; that frame and
     the new-side signatures stayed cached)."""
@@ -297,9 +299,8 @@ def test_curate_increment_job_count(spark):
         lambda: curate_increment(delta, old, threshold=0.8).count(),
     )
     n_cached = len(set(sc._jsc.getPersistentRDDs().keys()) - before)
-    # 24 jobs seen on 4 cores; one more allowed for AQE re-planning the
-    # rest by which independent stage finishes first (as curation_run's)
-    assert n == 10 and n_jobs <= 25 and n_cached == 1, (n, n_jobs, n_cached)
+    # 18 in five of five runs on 4 cores (24 with the two-branch gate)
+    assert n == 10 and n_jobs == 18 and n_cached == 1, (n, n_jobs, n_cached)
 
 
 def test_neardup_clusters_build_job_count(spark):

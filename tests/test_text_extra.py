@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from adaptive_pdf_extractor_spark.functions import text as T
-from specs import winnowing_fingerprints_columns
+from specs import winnowing_fingerprints_columns, word_occurrences
 
 
 HASH_FAMILIES = ("xxhash64", "md5")
@@ -220,7 +220,7 @@ def test_word_occurrences_whitespace_kinds_and_adjacent_repeats(spark):
         r["id"]: (r["occ"], r["sw"])
         for r in df.select(
             "id",
-            T.word_occurrences(F.col("t"), "the").alias("occ"),
+            word_occurrences(F.col("t"), "the").alias("occ"),
             T.stopword_ratio(F.col("t")).alias("sw"),
         ).collect()
     }
@@ -238,6 +238,75 @@ def test_word_occurrences_whitespace_kinds_and_adjacent_repeats(spark):
             [t, t],
         ).fetchone()
         assert occ == got[i][0], (i, repr(t))
+
+
+def _random_texts(seed: int, words: list[str], n: int = 300) -> list:
+    """Random texts over ``words`` plus near-miss tokens, each token
+    followed by a run of one of the whitespace kinds, with adjacent
+    repeats; then NULL, "", whitespace-only text, NBSP-delimited text and
+    text that ends in a token."""
+    import random
+
+    rng = random.Random(seed)
+    near = ["thee", "xthe", "the.", "The", "a.b", "(of)", "de|la", "o?", "[a]"]
+    seps = [" ", "  ", "\t", "\n", "\x0b", "\f", "\r\n", " \t "]
+    texts = []
+    for _ in range(n):
+        toks = []
+        for _ in range(rng.randint(0, 40)):
+            tok = rng.choice(words + near)
+            toks += [tok] * (rng.randint(2, 4) if rng.random() < 0.2 else 1)
+        body = "".join(t + rng.choice(seps) for t in toks)
+        texts.append(rng.choice(["", " ", "\n"]) + body)
+    return texts + [None, "", " ", "\t\n\x0b", "\u00a0the\u00a0", "the of the"]
+
+
+def test_word_list_alternation_matches_per_word_spec(spark):
+    """One alternation per word list counts what the per-word spec sums:
+    ``STOPWORDS_EN``, every ``LANG_MARKERS`` list and a list of regex
+    metacharacter words (each escaped), on random text with adjacent
+    repeats, every whitespace kind, near-miss tokens, NULL and ""."""
+    meta = ["a.b", "(of)", "de|la", "o?", "[a]", "c++", "$x^", "\\w"]
+    lists = {"stop": T.STOPWORDS_EN, "meta": meta, **T.LANG_MARKERS}
+    words = sorted({w for ws in lists.values() for w in ws})
+    texts = _random_texts(11, words)
+    df = spark.createDataFrame(list(enumerate(texts)), "id int, t string")
+    t = F.col("t")
+    cols = []
+    for name, ws in lists.items():
+        assert len(set(ws)) == len(ws), name
+        spec = sum(word_occurrences(t, w) for w in ws)
+        if name in T.LANG_MARKERS:
+            got = T.lang_scores(t)[name]
+        else:
+            got = T._occurrences(t, ws)
+        cols += [got.alias(f"got_{name}"), spec.alias(f"spec_{name}")]
+    rows = df.select("id", *cols).collect()
+    for r in rows:
+        for name in lists:
+            assert r[f"got_{name}"] == r[f"spec_{name}"], (name, repr(texts[r["id"]]))
+    # the pins are not vacuous: every list is hit somewhere
+    for name in lists:
+        assert any(r[f"spec_{name}"] for r in rows), name
+
+
+def test_token_count_matches_tokens_size(spark):
+    """``token_count`` (one regex count) equals ``size(tokens(...))`` on
+    NULL, "", whitespace-only text, ``\\x0b``, NBSP (a token character)
+    and random text with every whitespace kind."""
+    texts = _random_texts(5, ["the", "a", "dog", "x.y"]) + [
+        "\x0b", "a\x0bb", "\u00a0", "a\u00a0b c", "x x x", "  lead", "trail\n",
+    ]
+    df = spark.createDataFrame(list(enumerate(texts)), "id int, t string")
+    rows = df.select(
+        "id",
+        T.token_count(F.col("t")).alias("n"),
+        F.size(T.tokens(F.col("t"))).alias("spec"),
+    ).collect()
+    for r in rows:
+        assert r["n"] == r["spec"], repr(texts[r["id"]])
+    by_id = {r["id"]: r["n"] for r in rows}
+    assert by_id[texts.index("a\u00a0b c")] == 2
 
 
 def test_hash_split_validation_and_ascii_fold(spark):
