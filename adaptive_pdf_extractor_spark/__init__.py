@@ -8,12 +8,12 @@ a bounded iterative broadcast (mine -> aggregate -> broadcast per round).
 
 Layout:
     functions/   pure + vectorized scalar functions (normalize, rules, text)
-    sources/     corpus ingestion (reference JSON <-> span tables, synthetic
-                 generator, PDF byte-stream source)
+    sources/     corpus model and ingestion (span tables, reference cache
+                 import, synthetic generator, PDF byte-stream source)
     operators/   distributed operators (extract, miner, layout, dedup,
                  similarity)
     plans/       end-to-end pipeline driver, checkpoint/resume, metrics
-    streaming/   structured-streaming ingestion wrappers
+    streaming/   micro-batch twins of the dedup/decontamination operators
 
 Design invariant (verified in tests/): output span sequences are
 span-sequence-equal (kind, text, media_ref, order) to the reference

@@ -5,9 +5,9 @@ The Spark-side contract is real and tested — schema, Arrow batch shape,
 partitioning, UDF signatures; the codec layer is pluggable:
 
 * ``FAKEMEDIA`` container — deterministic synthetic payloads (seeded pixel/
-  sample streams) that exercise decode/resize/feature/frame-sample paths
+  sample streams) that exercise the decode and feature paths
   hermetically (no image/audio libs ship in this container).
-* Real codecs (PIL / soundfile / av) — import-gated; raise a clearly
+* Real image codecs (PIL) — import-gated; raise a clearly
   labelled NotImplementedError when absent so the stub boundary is explicit
   (per round-1 instructions: plumbing real, decode stubbed).
 
@@ -25,7 +25,7 @@ from __future__ import annotations
 
 import json
 import struct as _struct
-from typing import Iterator, Optional
+from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -94,8 +94,8 @@ def _parse_fake(data: bytes) -> tuple[dict, np.ndarray]:
     if data[: len(FAKE_MAGIC)] != FAKE_MAGIC:
         # Container-format error, not the codec-availability boundary: the
         # input may simply be corrupt, and the real libs may even be
-        # importable. The import-gated NotImplementedError lives at each
-        # decoder's dispatch layer (decode_image, video_frame_sample).
+        # importable. The import-gated NotImplementedError lives at the
+        # decoder's dispatch layer (decode_image).
         # Never a bare assert (python -O would strip it, silently slicing
         # garbage out of non-FAKEMEDIA bytes).
         raise ValueError("not a FAKEMEDIA container")
@@ -168,88 +168,6 @@ def image_features(media: DataFrame) -> DataFrame:
             )
 
     return media.mapInPandas(run, schema=FEATURES_DDL)
-
-
-def image_resize(media: DataFrame, out_w: int, out_h: int) -> DataFrame:
-    """Nearest-neighbor resize inside the fake container (real codecs would
-    swap in PIL here); returns the same media schema with new payloads."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_rows = []
-            for ref, kind, data, meta in zip(
-                pdf["media_ref"], pdf["kind"], pdf["data"], pdf["meta"]
-            ):
-                if kind != "image":
-                    out_rows.append(
-                        {"media_ref": ref, "kind": kind, "data": data, "meta": meta}
-                    )
-                    continue
-                img = decode_image(bytes(data))
-                ys = (np.arange(out_h) * img.shape[0] // out_h).astype(int)
-                xs = (np.arange(out_w) * img.shape[1] // out_w).astype(int)
-                resized = img[ys][:, xs]
-                header = json.dumps(
-                    {"w": out_w, "h": out_h, "c": img.shape[2], "kind": "image"}
-                ).encode()
-                payload = (
-                    FAKE_MAGIC
-                    + _struct.pack("<I", len(header))
-                    + header
-                    + resized.tobytes()
-                )
-                new_meta = dict(meta) if meta is not None else {}
-                new_meta.update({"width": out_w, "height": out_h})
-                out_rows.append(
-                    {
-                        "media_ref": ref,
-                        "kind": kind,
-                        "data": payload,
-                        "meta": new_meta,
-                    }
-                )
-            yield pd.DataFrame(out_rows, columns=["media_ref", "kind", "data", "meta"])
-
-    return media.mapInPandas(run, schema=MEDIA_DDL)
-
-
-FRAMES_DDL = "media_ref string, frame_idx int, frame binary"
-
-
-def video_frame_sample(media: DataFrame, every_n: int = 10) -> DataFrame:
-    """Deterministic frame sampling from fake-video payloads: one output row
-    per sampled frame (UDTF-shaped: one in, many out)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for ref, kind, data in zip(pdf["media_ref"], pdf["kind"], pdf["data"]):
-                if kind != "video":
-                    continue
-                raw = bytes(data)
-                if raw[: len(FAKE_MAGIC)] != FAKE_MAGIC:
-                    # dispatch layer: real video containers need av, which
-                    # is absent here (import-gated stub boundary)
-                    raise NotImplementedError(
-                        "real video decoding requires av, not present in "
-                        "this container; ship it via --py-files/conda env "
-                        "on a real cluster"
-                    )
-                h, payload = _parse_fake(raw)
-                frame_sz = h["w"] * h["h"] * 3
-                for idx in range(0, h["frames"], every_n):
-                    rows.append(
-                        {
-                            "media_ref": ref,
-                            "frame_idx": idx,
-                            "frame": payload[
-                                idx * frame_sz : (idx + 1) * frame_sz
-                            ].tobytes(),
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=["media_ref", "frame_idx", "frame"])
-
-    return media.mapInPandas(run, schema=FRAMES_DDL)
 
 
 def synthetic_media_df(spark, count: int, partitions: int = 4) -> DataFrame:

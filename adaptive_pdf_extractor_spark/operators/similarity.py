@@ -587,7 +587,17 @@ def embedding_neardup_pairs(
     pinned in tests). Read ``observation`` through
     :func:`dedup.observed_metrics` after the first action over the
     result: it returns None when AQE emptied the plan (no pair found),
-    where ``observation.get`` raises."""
+    where ``observation.get`` raises.
+
+    With ``max_bucket_size=None`` nothing bounds a bucket's memory: a
+    bucket of m vectors is ONE ``applyInPandas`` group, which holds its
+    pandas rows plus an m x dim float64 matrix, and scores it through
+    ``block x m`` working arrays (dots, cosines, keep mask) with
+    ``block = min(2048, 8_000_000 // m)``, so each array is capped near
+    8M entries (~64 MB as float64; m entries once m passes 8M). One
+    worker thus needs O(m * dim) memory for the largest bucket, however
+    many executors there are: a template flood in one sign bucket is
+    what the guard is for."""
     # _spread first: a small parquet input arrives as ONE partition and
     # would run the bucket matmul / pair dots on a single core.
     from .dedup import _guard_split, _spread

@@ -57,8 +57,8 @@ def _gate(
 
 
 def _keep_canonicals(kept: DataFrame, pairs: DataFrame) -> DataFrame:
-    """The curation tail of :func:`curation_pipeline` and
-    :func:`curate_increment`: connected components over ``pairs``
+    """The curation tail of :func:`curation_pipeline`, :func:`curation_run`
+    and :func:`curate_increment`: connected components over ``pairs``
     (``id_a``, ``id_b``) labelling the gated ``kept`` docs, then each doc
     that is its component's ``canonical_id`` (the min id), as the curated
     ``(doc_id, cluster_size, n_tokens, quality)``."""
@@ -74,6 +74,31 @@ def _keep_canonicals(kept: DataFrame, pairs: DataFrame) -> DataFrame:
         T.token_count(F.col("text")).cast("long").alias("n_tokens"),
         "quality",
     )
+
+
+def _gated(
+    docs: DataFrame, decontaminate_against: DataFrame | None, decon_n: int
+) -> DataFrame:
+    """The persisted gate of a full curation (:func:`curation_pipeline`,
+    :func:`curation_run`)."""
+    # Spread before the quality gate: the regex bank is compute-bound per
+    # row and a small parquet input arrives as 1-2 splits (measured 23 s
+    # on 2 cores vs 10.6 s spread for 100k docs at sf1.0 — the same
+    # idle-core trap as dedup._spread, which only kicks in later, inside
+    # the pair stage).
+    #
+    # Cache: kept feeds THREE consumers (the pair stage, the cluster id
+    # set, and the final stats join) — without this the quality-score
+    # regex bank and the dedup agg re-run per consumer (measured 2.6x on
+    # the LSH variant at 10k docs). persist, NOT localCheckpoint: Spark's
+    # CacheManager keys cache entries by canonical logical plan, so
+    # repeated invocations of the same query (a) don't accumulate copies
+    # (re-persisting an already-cached plan is a no-op hit on the existing
+    # entry) and (b) REUSE the materialized gate across reruns — measured
+    # 2x vs an eager localCheckpoint, which re-executes per invocation.
+    # Entry count is bounded by distinct source frames, session-scoped.
+    # At true corpus scale this is a table write (same role).
+    return _gate(dedup._spread(docs), decontaminate_against, decon_n).persist()
 
 
 def curation_pipeline(
@@ -93,24 +118,7 @@ def curation_pipeline(
     ``decontaminate_against``: an eval-set frame (``text`` column) —
     quality-passing docs sharing ``decon_n``-token n-grams with it are
     dropped before dedup (see dedup.decontaminate for the plan shape)."""
-    # Spread before the quality gate: the regex bank is compute-bound per
-    # row and a small parquet input arrives as 1-2 splits (measured 23 s
-    # on 2 cores vs 10.6 s spread for 100k docs at sf1.0 — the same
-    # idle-core trap as dedup._spread, which only kicks in later, inside
-    # the pair stage).
-    #
-    # Cache: kept feeds THREE consumers (the pair stage, the cluster id
-    # set, and the final stats join) — without this the quality-score
-    # regex bank and the dedup agg re-run per consumer (measured 2.6x on
-    # the LSH variant at 10k docs). persist, NOT localCheckpoint: Spark's
-    # CacheManager keys cache entries by canonical logical plan, so
-    # repeated invocations of the same query (a) don't accumulate copies
-    # (re-persisting an already-cached plan is a no-op hit on the existing
-    # entry) and (b) REUSE the materialized gate across reruns — measured
-    # 2x vs an eager localCheckpoint, which re-executes per invocation.
-    # Entry count is bounded by distinct source frames, session-scoped.
-    # At true corpus scale this is a table write (same role).
-    kept = _gate(dedup._spread(docs), decontaminate_against, decon_n).persist()
+    kept = _gated(docs, decontaminate_against, decon_n)
     return _keep_canonicals(kept, pair_fn(kept))
 
 
@@ -235,11 +243,20 @@ def curation_run(
     # with the guard off, obs.get would raise NO_OBSERVE_BEFORE_GET after
     # the output write, so skip the telemetry entirely in that case
     obs = Observation("lsh_guard") if max_bucket_size is not None else None
-    gated = []
-
-    def pair_stage(kept: DataFrame) -> DataFrame:
-        gated.append(kept)
-        return dedup.minhash_lsh_pairs(
+    kept = _gated(docs, decontaminate_against, decon_n=13)
+    # the pair stage of dedup.minhash_lsh_pairs, composed here so that this
+    # run owns the signature cache it releases once the guard telemetry is
+    # read: the signatures feed banding and both prefilter sides, and the
+    # guarded plan fans them out to five consumers, so they are filled
+    # eagerly (see minhash_lsh_pairs)
+    sigs = dedup.minhash_signatures_df(
+        kept, "doc_id", "text", shingle_n=shingle_n, num_hashes=num_hashes
+    ).select("id", "sig").persist()
+    try:
+        if max_bucket_size is not None:
+            sigs.count()
+        pairs = dedup.minhash_lsh_pairs_from_sigs(
+            sigs,
             kept,
             "doc_id",
             "text",
@@ -250,45 +267,39 @@ def curation_run(
             max_bucket_size=max_bucket_size,
             observation=obs,
         ).select("id_a", "id_b")
-
-    out = curation_pipeline(
-        docs, pair_stage, decontaminate_against=decontaminate_against
-    )
-    output_path = os.path.join(run_dir, "curated.parquet")
-    # the guard observation has fired already, in neardup_clusters'
-    # bounded collect of the edge list (the one action that runs the
-    # observed pair stage); `written` fires on the write, which counts its
-    # own rows
-    written = Observation("curated")
-    spark_io.write_table(
-        out.observe(written, F.count("*").alias("n")), output_path,
-        catalog=catalog,
-    )
-    n_output = written.get["n"]
-    # a separate action: docs is consumed only inside the persisted kept
-    # subtree, and an observation there never fires on a cache hit
-    n_input = docs.count()
-    # the plan of the signatures minhash_lsh_pairs persisted: it owns that
-    # cache, and this run releases it once the guard telemetry is read
-    sigs = dedup.minhash_signatures_df(
-        gated[0], "doc_id", "text", shingle_n=shingle_n, num_hashes=num_hashes
-    ).select("id", "sig")
-    guard = {}
-    if obs is not None:
-        guard = dedup.observed_metrics(obs)
-    if guard is None:
-        # no pair survived, so AQE emptied the pair stage's plan above the
-        # observed star frame, which may still hold star edges (a flood
-        # whose members all verify below the threshold): observe the star
-        # frame again under a one-row count, which keeps it in the plan
-        banded = dedup._banded(sigs, bands, num_hashes // bands)
-        recount = Observation("lsh_guard_recount")
-        _, star, _ = dedup._guard_split(
-            banded, ["band", "bucket"], max_bucket_size, recount
+        out = _keep_canonicals(kept, pairs)
+        output_path = os.path.join(run_dir, "curated.parquet")
+        # the guard observation has fired already, in neardup_clusters'
+        # bounded collect of the edge list (the one action that runs the
+        # observed pair stage); `written` fires on the write, which counts
+        # its own rows
+        written = Observation("curated")
+        spark_io.write_table(
+            out.observe(written, F.count("*").alias("n")), output_path,
+            catalog=catalog,
         )
-        star.agg(F.count("*")).collect()
-        guard = dedup.observed_metrics(recount)
-    sigs.unpersist()
+        n_output = written.get["n"]
+        # a separate action: docs is consumed only inside the persisted
+        # kept subtree, and an observation there never fires on a cache hit
+        n_input = docs.count()
+        guard = {}
+        if obs is not None:
+            guard = dedup.observed_metrics(obs)
+        if guard is None:
+            # no pair survived, so AQE emptied the pair stage's plan above
+            # the observed star frame, which may still hold star edges (a
+            # flood whose members all verify below the threshold): observe
+            # the star frame again under a one-row count, which keeps it in
+            # the plan
+            banded = dedup._banded(sigs, bands, num_hashes // bands)
+            recount = Observation("lsh_guard_recount")
+            _, star, _ = dedup._guard_split(
+                banded, ["band", "bucket"], max_bucket_size, recount
+            )
+            star.agg(F.count("*")).collect()
+            guard = dedup.observed_metrics(recount)
+    finally:
+        sigs.unpersist()
     max_over = guard.get("max_oversized_bucket")
     summary = {
         "n_input": int(n_input),

@@ -1,48 +1,17 @@
-"""Evaluation: golden span parity + field accuracy as library operators.
+"""Evaluation: field accuracy as a library operator.
 
 The reference evaluates inline per document (exact string equality incl.
 None — src/metrics.py:255-289) and reports a corpus mean (src/metrics.py:
-173-174). Here both are DataFrame operators: a doc_id equi-join plus
-JVM-side span/field comparison (broadcast-hash or sort-merge as Catalyst
-chooses; AQE handles skew).
+173-174). Here it is a DataFrame operator: a doc_id equi-join plus
+JVM-side field comparison (broadcast-hash or sort-merge as Catalyst
+chooses; AQE handles skew). Golden span parity, which only the tests
+score, is ``tests/plumbing.span_parity``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
-
-from ..sources.spark_io import spans_equal_expr
-
-
-def span_parity(output: DataFrame, golden: DataFrame) -> Row:
-    """Span-sequence equality (kind, text, media_ref, order) per doc_id —
-    the north_rule invariant. Returns Row(total, equal, parity).
-
-    ``total`` is the GOLDEN doc count (left join from golden): an output
-    that dropped documents scores those as unequal instead of silently
-    shrinking the denominator — an empty output reads as 0.0 parity, never
-    1.0. Duplicate output doc_ids would multiply golden rows through the
-    join (inflating total AND letting one equal copy mask an unequal one),
-    so they fail loudly instead of skewing the score."""
-    dup_ids = (
-        output.groupBy("doc_id").count().filter(F.col("count") > 1).count()
-    )
-    if dup_ids:
-        raise ValueError(
-            f"span_parity: output has {dup_ids} duplicate doc_id(s); parity "
-            "is defined over one output row per document"
-        )
-    joined = golden.alias("b").join(output.alias("a"), "doc_id", "left")
-    equal_expr = F.when(
-        F.col("a.spans").isNotNull() & spans_equal_expr(), 1
-    ).otherwise(0)
-    agg = joined.agg(
-        F.count("*").alias("total"),
-        F.sum(equal_expr).alias("equal"),
-    ).first()
-    total, equal = agg["total"], agg["equal"] or 0
-    return Row(total=total, equal=equal, parity=(equal / total if total else 0.0))
 
 
 def field_accuracy(output: DataFrame, docs_with_expected: DataFrame) -> Row:

@@ -20,24 +20,27 @@ order = extraction-schema key order, src/main.py:183), so the schema is an
 ordered ARRAY of structs, not a MAP (Spark map entry order is not
 contractual).
 
-Output span layout (documented contract, see also golden derivation in
-:func:`golden_output_spans`): one span per schema field **in schema order**
+Output span layout (documented contract; the golden derivation of the
+parity tests, ``tests/plumbing.golden_output_rows``, follows it): one span
+per schema field **in schema order**
 ``(kind=<field name>, text=<value or null>, media_ref=null, offset=i)``,
 followed by the document's media spans in original order with offsets
 continuing.
 
-Reference-corpus ingestion converts the reference's JSON datasets
-(reference: src/data.py:103-121 ``read_dataset``; record shape
-scripts/generate_fake_data.py:283-288) into this span table, chunking
-``pdf_text`` deterministically and interleaving synthetic media spans so the
-media-passthrough path is exercised on the parity corpora.
+:func:`text_to_spans` chunks document text deterministically and
+interleaves synthetic media spans, so the media-passthrough path is
+exercised on every converted corpus. The conversion of the reference's
+JSON datasets (reference: src/data.py:103-121 ``read_dataset``; record
+shape scripts/generate_fake_data.py:283-288) into this span table feeds
+only the parity tests and lives with them (``tests/plumbing.py``); the
+reference's converged caches import here as rules
+(:func:`reference_cache_to_rule_rows`).
 """
 
 from __future__ import annotations
 
 import hashlib
 import json
-import os
 import re
 from typing import Any, Iterable, Optional
 
@@ -160,110 +163,6 @@ def assemble_text(spans: Iterable[dict]) -> str:
     return "".join(s["text"] or "" for s in ordered if s["kind"] == "text")
 
 
-def media_spans(spans: Iterable[dict]) -> list[dict]:
-    """Media spans in offset order (pass-through payload)."""
-    return [dict(s) for s in sorted(spans, key=lambda s: s["offset"]) if s["kind"] == "media"]
-
-
-# ---------------------------------------------------------------------------
-# Reference corpus -> input rows / golden rows
-# ---------------------------------------------------------------------------
-
-
-def reference_doc_id(corpus: str, idx0: int) -> str:
-    """Stable doc_id for the idx0-th (0-based) record of a reference corpus."""
-    return f"{corpus}/{idx0:06d}"
-
-
-def reference_dataset_to_rows(
-    path: str, corpus: Optional[str] = None, pdf_loader=None
-) -> list[dict]:
-    """Convert a reference dataset JSON into engine input rows.
-
-    Fake datasets inline ``pdf_text``; the real dataset
-    (data/real/dataset.json, reference src/data.py:117) instead names a
-    ``pdf_path`` relative to the JSON. Pass ``pdf_loader`` (e.g.
-    ``sources.pdf.load_pdf_text``) to decode those documents; without a
-    loader the row keeps empty text (schema/label/doc_id still real — the
-    decode tier is import-gated on pypdf, sources/pdf.py)."""
-    corpus = corpus or os.path.splitext(os.path.basename(path))[0]
-    rows = []
-    for i, rec in enumerate(load_reference_json(path)):
-        doc_id = reference_doc_id(corpus, i)
-        schema = rec.get("extraction_schema", {})
-        expected = rec.get("expected_answer")
-        text = rec.get("pdf_text")
-        if text is None and rec.get("pdf_path") and pdf_loader is not None:
-            text = pdf_loader(os.path.join(os.path.dirname(path), rec["pdf_path"]))
-        rows.append(
-            {
-                "doc_id": doc_id,
-                "spans": text_to_spans(doc_id, text or ""),
-                "label": rec.get("label", ""),
-                "schema_fields": [
-                    {"name": k, "description": v} for k, v in schema.items()
-                ],
-                "expected": (
-                    None
-                    if expected is None
-                    else [{"name": k, "value": v} for k, v in expected.items()]
-                ),
-            }
-        )
-    return rows
-
-
-def output_spans(
-    field_values: list[tuple[str, Optional[str]]], media: Iterable[dict]
-) -> list[dict]:
-    """Build the output span array: field spans in schema order, then media
-    passthrough in original order, offsets renumbered 0..n-1."""
-    spans = [
-        {"kind": fname, "text": value, "media_ref": None, "offset": i}
-        for i, (fname, value) in enumerate(field_values)
-    ]
-    base = len(spans)
-    for j, m in enumerate(sorted(media, key=lambda s: s["offset"])):
-        spans.append(
-            {"kind": "media", "text": None, "media_ref": m["media_ref"], "offset": base + j}
-        )
-    return spans
-
-
-def golden_output_rows(
-    dataset_path: str, result_path: str, corpus: Optional[str] = None
-) -> list[dict]:
-    """Derive golden output rows from a reference result file
-    (``[{idx,label,expected,extracted}]`` — reference src/main.py:338-345)
-    plus the media spans of the converted input (media passthrough is part
-    of the engine contract but absent from the reference's output shape)."""
-    corpus = corpus or os.path.splitext(os.path.basename(dataset_path))[0]
-    dataset = load_reference_json(dataset_path)
-    results = load_reference_json(result_path)
-    if len(dataset) != len(results):
-        # zip would silently drop the tail and let a parity check pass
-        # vacuously for the missing documents
-        raise ValueError(
-            f"dataset ({len(dataset)} docs) and result file "
-            f"({len(results)} entries) disagree — truncated reference run?"
-        )
-    rows = []
-    for i, (rec, res) in enumerate(zip(dataset, results)):
-        doc_id = reference_doc_id(corpus, i)
-        media = media_spans(text_to_spans(doc_id, rec.get("pdf_text", "")))
-        # Engine output contract: field spans in extraction-schema order.
-        # The reference result dict's key order is a pipeline artifact
-        # (slow-path fields are appended after fast-path ones,
-        # src/main.py:262) — the semantic content is the mapping, so the
-        # golden span sequence is derived in schema order.
-        field_values = [
-            (fname, res["extracted"].get(fname))
-            for fname in rec.get("extraction_schema", res["extracted"])
-        ]
-        rows.append({"doc_id": doc_id, "spans": output_spans(field_values, media)})
-    return rows
-
-
 # ---------------------------------------------------------------------------
 # Reference cache JSON -> rules-table rows
 # ---------------------------------------------------------------------------
@@ -296,67 +195,6 @@ def reference_cache_to_rule_rows(path: str) -> list[dict]:
                 )
                 rule_id += 1
     return rows
-
-
-def output_rows_to_reference_results(
-    output_rows: list[dict], input_rows: list[dict]
-) -> list[dict]:
-    """Export engine output in the reference's results-JSON shape
-    ``[{idx, label, expected, extracted}]`` (reference src/main.py:338-345,
-    1-based idx) so reference-side tooling can consume engine output
-    directly. Field order follows the schema (the engine contract)."""
-    by_id = {r["doc_id"]: r for r in input_rows}
-    results = []
-    for i, out in enumerate(
-        sorted(output_rows, key=lambda r: r["doc_id"]), start=1
-    ):
-        src = by_id[out["doc_id"]]
-        extracted = {
-            s["kind"]: s["text"]
-            for s in sorted(out["spans"], key=lambda s: s["offset"])
-            if s["kind"] != "media"
-        }
-        expected = {
-            e["name"]: e["value"] for e in (src.get("expected") or [])
-        }
-        results.append(
-            {
-                "idx": i,
-                "label": src.get("label", ""),
-                "expected": expected,
-                "extracted": extracted,
-            }
-        )
-    return results
-
-
-def rule_rows_to_reference_cache(rows: list[dict]) -> dict:
-    """Export engine rules in the reference's cache-JSON shape
-    ``{label: {field: [{rule:{rule,validation_regex}, weight}]}}``
-    (reference src/cache.py:369-378), priority-ordered (weight desc,
-    rule_seq) the way the reference persists head->tail. Round-trips with
-    :func:`reference_cache_to_rule_rows`, so rules learned here can seed
-    the reference and vice versa."""
-    out: dict = {}
-    ordered = sorted(
-        rows, key=lambda r: (r["label"], r["field"], -int(r["weight"]), int(r["rule_seq"]))
-    )
-    for r in ordered:
-        out.setdefault(r["label"], {}).setdefault(r["field"], []).append(
-            {
-                "rule": {
-                    "rule": r["rule"],
-                    "validation_regex": r["validation_regex"],
-                },
-                "weight": int(r["weight"]),
-            }
-        )
-    return out
-
-
-def save_reference_cache(rows: list[dict], path: str) -> None:
-    with open(path, "w", encoding="utf-8") as f:
-        json.dump(rule_rows_to_reference_cache(rows), f, ensure_ascii=False, indent=2)
 
 
 # ---------------------------------------------------------------------------

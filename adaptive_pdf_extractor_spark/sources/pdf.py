@@ -9,8 +9,9 @@ import-gated — the Spark-side plumbing, schema, batching and layout are
 real and tested):
 
 1. ``%FAKEPDF`` — this engine's deterministic test container: magic bytes
-   + JSON payload of positioned blocks and media refs. Exercises the whole
-   path (bytes -> blocks -> XY-cut -> spans) hermetically.
+   + JSON payload of positioned blocks and media refs, written by
+   ``tests/plumbing.make_fake_pdf``. Exercises the whole path (bytes ->
+   blocks -> XY-cut -> spans) hermetically.
 2. ``%PDF`` with pypdf installed — single-page text extraction, one block
    per page (the reference's fidelity level: src/data.py:201-223, which
    asserts exactly one page and calls ``extract_text()``).
@@ -37,30 +38,6 @@ except ImportError:
         from PyPDF2 import PdfReader as _PdfReader  # type: ignore
     except ImportError:
         _PdfReader = None
-
-
-def make_fake_pdf(
-    blocks: list[Block],
-    media_refs: Optional[list[str]] = None,
-    page_height: float = 800.0,
-) -> bytes:
-    """Serialize positioned blocks as a deterministic fake-PDF container."""
-    payload = {
-        "page_height": page_height,
-        "blocks": [
-            {
-                "text": b.text,
-                "x0": b.x0,
-                "y0": b.y0,
-                "x1": b.x1,
-                "y1": b.y1,
-                "page": b.page,
-            }
-            for b in blocks
-        ],
-        "media": media_refs or [],
-    }
-    return FAKE_MAGIC + json.dumps(payload, ensure_ascii=False).encode("utf-8")
 
 
 def parse_pdf_bytes(data: bytes) -> tuple[list[Block], list[str], float]:

@@ -16,35 +16,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import corpus as corpus_mod
-from .corpus import INPUT_DDL, OUTPUT_DDL
+from .corpus import INPUT_DDL
 
 RULES_DDL = (
     "label string, field string, rule string, validation_regex string, "
     "weight bigint, rule_seq bigint, round_added int, rule_id bigint"
 )
-
-
-def input_df_from_rows(spark: SparkSession, rows: list[dict]) -> DataFrame:
-    """Local-list constructor (test/ingest path, small corpora)."""
-    return spark.createDataFrame(rows, schema=INPUT_DDL)
-
-
-def reference_corpus_df(
-    spark: SparkSession, dataset_path: str, corpus: Optional[str] = None
-) -> DataFrame:
-    """Ingest one reference JSON dataset as an input span table."""
-    return input_df_from_rows(
-        spark, corpus_mod.reference_dataset_to_rows(dataset_path, corpus=corpus)
-    )
-
-
-def golden_output_df(
-    spark: SparkSession, dataset_path: str, result_path: str, corpus: Optional[str] = None
-) -> DataFrame:
-    return spark.createDataFrame(
-        corpus_mod.golden_output_rows(dataset_path, result_path, corpus=corpus),
-        schema=OUTPUT_DDL,
-    )
 
 
 def rules_df_from_rows(spark: SparkSession, rows: list[dict]) -> DataFrame:
@@ -335,12 +312,3 @@ def read_state_version_below(
     raise ValueError(f"unknown catalog {catalog!r}; expected one of {CATALOGS}")
 
 
-def spans_equal_expr() -> "F.Column":
-    """Order-sensitive span-sequence equality predicate (kind, text,
-    media_ref, order) between columns ``a.spans`` and ``b.spans`` — the
-    north_rule's per-row invariant. Runs JVM-side (no UDF)."""
-    norm = lambda side: F.expr(
-        f"transform(array_sort({side}.spans, (l, r) -> l.offset - r.offset),"
-        " s -> struct(s.kind as kind, s.text as text, s.media_ref as media_ref))"
-    )
-    return norm("a") == norm("b")

@@ -1,11 +1,14 @@
-"""Streaming ingestion + extraction.
+"""Streaming curation: the micro-batch twins of the batch dedup and
+decontamination operators.
 
 The reference is batch-only; its only streaming-like trait is the cache
-evolving mid-scan (SURVEY §2.9), which the round loop already recasts. This
-module adds the forward-looking leg: documents arriving as a stream are
-extracted with the **current converged rulebook** (frozen per micro-batch —
-the broadcast is immutable within a batch, exactly like one refinement
-round), with watermarked windowed metrics for late data.
+evolving mid-scan (SURVEY §2.9), which the round loop already recasts.
+Documents arriving as a stream are extracted by
+``operators.extract.extract_documents`` itself: the fused operator is
+stateless per batch and the rulebook broadcast is immutable within one,
+so one operator serves batch and micro-batch. This module holds what a
+stream needs beyond that: watermarked exact dedup, stateless
+decontamination, and minhash near-dup dedup over a versioned state table.
 
 Rule evolution stays in the batch round loop: streams extract, batches
 learn. (Mining inside the stream would reintroduce the order-dependent
@@ -16,108 +19,8 @@ from __future__ import annotations
 
 from typing import Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from ..functions.rules import RuleBook
-from ..operators.extract import extract_documents
-from ..sources.corpus import INPUT_DDL
-
-
-def streaming_extract(stream_docs: DataFrame, rulebook: RuleBook) -> DataFrame:
-    """Streaming span-table -> streaming extraction output. The fused
-    operator (JVM prep + mapInPandas + JVM struct build) is stateless per
-    batch, so it works identically on streaming DataFrames — one code path,
-    two execution modes."""
-    return extract_documents(stream_docs, rulebook)
-
-
-def with_event_time(extracted: DataFrame, ts_col: str = "ingest_ts") -> DataFrame:
-    return extracted.withColumn(ts_col, F.current_timestamp())
-
-
-def windowed_extraction_metrics(
-    extracted: DataFrame,
-    ts_col: str = "ingest_ts",
-    window: str = "10 seconds",
-    watermark: str = "30 seconds",
-) -> DataFrame:
-    """Watermarked tumbling-window metrics: docs, rule hits, unresolved
-    fields per window — the streaming twin of the batch round metrics."""
-    return (
-        extracted.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window).alias("win"))
-        .agg(
-            F.count("*").alias("docs"),
-            F.sum(
-                F.size(F.filter("hits", lambda h: h["path"] == F.lit("rule")))
-            ).alias("rule_hits"),
-            F.sum(F.size("unresolved")).alias("unresolved_fields"),
-        )
-        .select(
-            F.col("win.start").alias("window_start"),
-            F.col("win.end").alias("window_end"),
-            "docs",
-            "rule_hits",
-            "unresolved_fields",
-        )
-    )
-
-
-def stateful_label_hit_rate(extracted: DataFrame) -> DataFrame:
-    """Custom stateful streaming operator: cumulative per-label rule hit
-    rate across micro-batches via ``applyInPandasWithState``.
-
-    State per label = (docs, rule_hits, total_fields), carried across
-    batches by the state store (checkpointable, exactly-once under a real
-    sink). This is the streaming twin of the batch round metrics — and the
-    engine's example of the ``applyInPandasWithState`` escape hatch for
-    semantics neither windows nor joins express (a monotonically growing
-    per-key counter over an unbounded stream)."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    flat = extracted.select(
-        "label",
-        F.size(F.filter("hits", lambda h: h["path"] == F.lit("rule"))).alias(
-            "rule_hits"
-        ),
-        F.size("hits").alias("n_fields"),
-    )
-
-    output_schema = (
-        "label string, docs bigint, rule_hits bigint, total_fields bigint, "
-        "hit_rate double"
-    )
-    state_schema = "docs bigint, rule_hits bigint, total_fields bigint"
-
-    def update(key, pdfs, state: GroupState):
-        docs, hits, fields = state.get if state.exists else (0, 0, 0)
-        for pdf in pdfs:
-            docs += len(pdf)
-            hits += int(pdf["rule_hits"].sum())
-            fields += int(pdf["n_fields"].sum())
-        state.update((docs, hits, fields))
-        yield pd.DataFrame(
-            [
-                {
-                    "label": key[0],
-                    "docs": docs,
-                    "rule_hits": hits,
-                    "total_fields": fields,
-                    "hit_rate": round(hits / fields, 6) if fields else 0.0,
-                }
-            ]
-        )
-
-    return flat.groupBy("label").applyInPandasWithState(
-        update,
-        outputStructType=output_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
 
 
 def streaming_exact_dedup(
@@ -221,80 +124,6 @@ def streaming_decontaminate(
     )
     cond = F.col("_n_hit") >= min_hits
     return flagged.filter(cond if keep_contaminated else ~cond).drop("_n_hit")
-
-
-def streaming_interval_enrich(
-    events: DataFrame,
-    markers: DataFrame,
-    *,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    marker_id_col: str = "event_id",
-    window: str = "30 minutes",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Watermarked stream-stream join: each event paired with every marker
-    event of the same key whose window ``[marker_ts, marker_ts + window)``
-    contains it — the streaming twin of ``operators.joins.interval_join``
-    (e.g. click-inside-error-window attribution, both sides live streams).
-
-    Both sides carry a watermark and the join condition bounds the event
-    time range, which is exactly what lets Structured Streaming evict join
-    state: a marker older than (max event time - watermark - window) can
-    never match again and is dropped. Without the time-range condition the
-    state store grows forever — the stream-stream analog of the
-    dropDuplicatesWithinWatermark bound. Inner join; output columns =
-    events.* + ``interval_id``."""
-    e = events.withWatermark(ts_col, watermark)
-    iv = markers.select(
-        F.col(key_col).alias("_ikey"),
-        F.col(ts_col).alias("_its"),
-        F.col(marker_id_col).alias("interval_id"),
-    ).withWatermark("_its", watermark)
-    cond = (
-        (F.col(key_col) == F.col("_ikey"))
-        & (F.col(ts_col) >= F.col("_its"))
-        & (F.col(ts_col) < F.col("_its") + F.expr(f"INTERVAL {window}"))
-    )
-    return e.join(iv, cond, "inner").drop("_ikey", "_its")
-
-
-def streaming_session_metrics(
-    events: DataFrame,
-    *,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    gap: str = "30 minutes",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Streaming sessionization: watermarked ``session_window`` aggregation
-    per key — the streaming twin of the batch session query
-    (``__spark_entry__.q_events_sessions``). Sessions merge as events
-    arrive (the state store holds open sessions per key) and FINALIZE in
-    append mode once the watermark passes their close — late events inside
-    the watermark still extend or merge sessions; state for closed
-    sessions is evicted, so the store is bounded by open sessions x keys,
-    not stream length. Same output shape as the batch query: (key,
-    session_start, session_end, n_events, sum_value)."""
-    agg = (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(
-            F.col(key_col),
-            F.session_window(F.col(ts_col), gap).alias("sw"),
-        )
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum(value_col), 2).alias("sum_value"),
-        )
-    )
-    return agg.select(
-        key_col,
-        F.col("sw.start").alias("session_start"),
-        F.col("sw.end").alias("session_end"),
-        "n_events",
-        "sum_value",
-    )
 
 
 def streaming_minhash_neardup(
@@ -537,12 +366,3 @@ def streaming_minhash_neardup(
     return writer.start()
 
 
-def file_stream_source(
-    spark: SparkSession, path: str, max_files_per_trigger: Optional[int] = None
-) -> DataFrame:
-    """Span-table parquet directory as a stream (the Iceberg-shaped landing
-    zone pattern: writers append files, the extractor tails them)."""
-    reader = spark.readStream.schema(INPUT_DDL).format("parquet")
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.load(path)

@@ -41,9 +41,10 @@ def learned_rules(spark, tmp_path_factory):
         ExtractionPipeline,
         PipelineConfig,
     )
-    from adaptive_pdf_extractor_spark.sources import corpus, spark_io
+    from adaptive_pdf_extractor_spark.sources import corpus
+    import plumbing
 
-    docs = spark_io.input_df_from_rows(spark, corpus.synth_rows(seed=1, start=0, count=400))
+    docs = plumbing.input_df_from_rows(spark, corpus.synth_rows(seed=1, start=0, count=400))
     pipe = ExtractionPipeline(
         spark,
         str(tmp_path_factory.mktemp("learned_rules") / "run"),

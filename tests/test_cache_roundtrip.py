@@ -7,6 +7,7 @@ import json
 from conftest import needs_reference
 
 from adaptive_pdf_extractor_spark.sources import corpus as corpus_mod
+import plumbing
 
 CACHE = "/root/reference/data/fake/caches/fake_dataset_1000samples_seed_1_cache.json"
 
@@ -14,13 +15,13 @@ CACHE = "/root/reference/data/fake/caches/fake_dataset_1000samples_seed_1_cache.
 @needs_reference
 def test_reference_cache_roundtrip(tmp_path):
     rows = corpus_mod.reference_cache_to_rule_rows(CACHE)
-    exported = corpus_mod.rule_rows_to_reference_cache(rows)
+    exported = plumbing.rule_rows_to_reference_cache(rows)
     original = json.load(open(CACHE))
     assert exported == original  # byte-equivalent structure
 
     # file round-trip
     out = tmp_path / "cache.json"
-    corpus_mod.save_reference_cache(rows, str(out))
+    plumbing.save_reference_cache(rows, str(out))
     rows2 = corpus_mod.reference_cache_to_rule_rows(str(out))
     key = lambda r: (r["label"], r["field"], r["rule_seq"])
     assert sorted(
@@ -39,7 +40,7 @@ def test_export_orders_by_priority():
         dict(label="l", field="f", rule="heavy", validation_regex="v",
              weight=9, rule_seq=1, round_added=1, rule_id=1),
     ]
-    exported = corpus_mod.rule_rows_to_reference_cache(rows)
+    exported = plumbing.rule_rows_to_reference_cache(rows)
     assert [it["rule"]["rule"] for it in exported["l"]["f"]] == ["heavy", "light"]
 
 

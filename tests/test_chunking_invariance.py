@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 from adaptive_pdf_extractor_spark.functions.rules import RuleBook
 from adaptive_pdf_extractor_spark.operators.extract import extract_documents
 from adaptive_pdf_extractor_spark.sources import corpus as corpus_mod
-from adaptive_pdf_extractor_spark.sources import spark_io
+import plumbing
 
 
 def _variants(doc_id: str, text: str) -> list[list[dict]]:
@@ -43,7 +43,7 @@ def test_extraction_invariant_under_rechunking(spark, learned_rules):
                     "expected": rec["expected"],
                 }
             )
-    docs = spark_io.input_df_from_rows(spark, rows)
+    docs = plumbing.input_df_from_rows(spark, rows)
     out = extract_documents(docs, book)
     flat = (
         out.select("doc_id", F.explode("spans").alias("s"))

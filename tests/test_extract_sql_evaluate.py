@@ -9,9 +9,9 @@ from pyspark.sql import functions as F
 
 from adaptive_pdf_extractor_spark.functions.rules import RuleBook
 from adaptive_pdf_extractor_spark.operators.extract import extract_documents
-from adaptive_pdf_extractor_spark.plans.evaluate import field_accuracy, span_parity
+from adaptive_pdf_extractor_spark.plans.evaluate import field_accuracy
 from adaptive_pdf_extractor_spark.sources import corpus as corpus_mod
-from adaptive_pdf_extractor_spark.sources import spark_io
+import plumbing
 from specs import first_match_relational, rules_to_df
 
 DATASETS = "/root/reference/data/fake/datasets"
@@ -21,7 +21,7 @@ NAME = "fake_dataset_1000samples_seed_1"
 
 
 def test_relational_equals_fused(spark, learned_rules):
-    docs = spark_io.input_df_from_rows(
+    docs = plumbing.input_df_from_rows(
         spark, corpus_mod.synth_rows(seed=1, start=0, count=400)
     ).cache()
     book = RuleBook.from_rows(learned_rules)
@@ -53,15 +53,15 @@ def test_evaluation_reproduces_reference_numbers(spark):
     """Full seed-1 corpus with the converged cache: parity 100%, accuracy
     98.26%, perfect-doc rate 86.6% — the reference's published benchmark
     (BASELINE.md)."""
-    docs = spark_io.reference_corpus_df(spark, f"{DATASETS}/{NAME}.json")
+    docs = plumbing.reference_corpus_df(spark, f"{DATASETS}/{NAME}.json")
     book = RuleBook.from_rows(
         corpus_mod.reference_cache_to_rule_rows(f"{CACHES}/{NAME}_cache.json")
     )
     out = extract_documents(docs, book).select("doc_id", "spans").cache()
-    golden = spark_io.golden_output_df(
+    golden = plumbing.golden_output_df(
         spark, f"{DATASETS}/{NAME}.json", f"{RESULTS}/{NAME}_with_cache_result.json"
     )
-    p = span_parity(out, golden)
+    p = plumbing.span_parity(out, golden)
     assert p.total == 1000 and p.parity == 1.0
 
     acc = field_accuracy(out, docs)
@@ -79,9 +79,8 @@ def test_direct_only_beats_reference_llm_only_benchmark(spark):
     from adaptive_pdf_extractor_spark.operators import miner
     from adaptive_pdf_extractor_spark.operators.extract import extract_documents
     from adaptive_pdf_extractor_spark.plans.evaluate import field_accuracy
-    from adaptive_pdf_extractor_spark.sources import spark_io
 
-    docs = spark_io.reference_corpus_df(
+    docs = plumbing.reference_corpus_df(
         spark, f"{DATASETS}/fake_dataset_1000samples_seed_1.json"
     )
     out = extract_documents(

@@ -25,6 +25,7 @@ from adaptive_pdf_extractor_spark.functions.rules import (
     validate_value,
 )
 from adaptive_pdf_extractor_spark.sources import corpus as corpus_mod
+import plumbing
 from specs import apply_rules_pandas
 
 
@@ -252,12 +253,12 @@ def test_span_roundtrip_exact(text, n_media):
     spans = corpus_mod.text_to_spans("doc-x", text, n_media=n_media)
     assert corpus_mod.assemble_text(spans) == text
     assert [s["offset"] for s in spans] == list(range(len(spans)))
-    assert len(corpus_mod.media_spans(spans)) == n_media
+    assert len(plumbing.media_spans(spans)) == n_media
 
 
 @needs_reference
 def test_reference_dataset_conversion_roundtrip():
-    rows = corpus_mod.reference_dataset_to_rows(
+    rows = plumbing.reference_dataset_to_rows(
         "/root/reference/data/fake/datasets/fake_dataset_1000samples_seed_1.json"
     )
     ds = corpus_mod.load_reference_json(
@@ -287,7 +288,7 @@ def test_synth_rows_deterministic_and_order_independent():
 
 @needs_reference
 def test_golden_output_rows_shape():
-    rows = corpus_mod.golden_output_rows(
+    rows = plumbing.golden_output_rows(
         "/root/reference/data/fake/datasets/fake_dataset_1000samples_seed_1.json",
         "/root/reference/data/fake/results/fake_dataset_1000samples_seed_1_with_cache_result.json",
     )

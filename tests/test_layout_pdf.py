@@ -15,6 +15,7 @@ from adaptive_pdf_extractor_spark.operators.layout import (
     xy_cut,
 )
 from adaptive_pdf_extractor_spark.sources import pdf as pdf_mod
+import plumbing
 
 
 def B(text, x0, y0, x1, y1, page=0):
@@ -116,7 +117,7 @@ def test_fake_pdf_roundtrip(tmp_path):
         B("Nome João Inscricao 123456", 0, 100, 100, 120),
         B("FOOTER", 0, 780, 100, 800),
     ]
-    data = pdf_mod.make_fake_pdf(blocks, media_refs=["media://img/1"], page_height=800)
+    data = plumbing.make_fake_pdf(blocks, media_refs=["media://img/1"], page_height=800)
     parsed_blocks, media, height = pdf_mod.parse_pdf_bytes(data)
     assert parsed_blocks == blocks
     assert media == ["media://img/1"]
@@ -141,7 +142,7 @@ def test_read_pdf_corpus_distributed(spark, tmp_path):
             B(f"doc body {i}", 0, 100, 100, 120),
         ]
         (tmp_path / f"doc{i}.fpdf").write_bytes(
-            pdf_mod.make_fake_pdf(blocks, page_height=800)
+            plumbing.make_fake_pdf(blocks, page_height=800)
         )
     df = pdf_mod.read_pdf_corpus(spark, str(tmp_path / "*.fpdf"))
     rows = df.collect()
@@ -165,7 +166,6 @@ def test_strip_boilerplate_spans(spark):
         strip_boilerplate_spans,
     )
     from adaptive_pdf_extractor_spark.sources import corpus as corpus_mod
-    from adaptive_pdf_extractor_spark.sources import spark_io
 
     rows = corpus_mod.synth_rows(seed=77, start=0, count=30)
     # inject a boilerplate text span at the front of every doc + keep media
@@ -176,7 +176,7 @@ def test_strip_boilerplate_spans(spark):
             s["offset"] = len(spans)
             spans.append(s)
         r["spans"] = spans
-    docs = spark_io.input_df_from_rows(spark, rows)
+    docs = plumbing.input_df_from_rows(spark, rows)
     out = strip_boilerplate_spans(docs, min_doc_frac=0.5, min_docs=5)
     got = {r["doc_id"]: r for r in out.collect()}
     for r in rows:
@@ -191,7 +191,7 @@ def test_strip_boilerplate_spans(spark):
         )
     # identity on a clean corpus
     clean_rows = corpus_mod.synth_rows(seed=78, start=0, count=20)
-    clean = spark_io.input_df_from_rows(spark, clean_rows)
+    clean = plumbing.input_df_from_rows(spark, clean_rows)
     out2 = {r["doc_id"]: r for r in strip_boilerplate_spans(clean).collect()}
     for r in clean_rows:
         assert [dict(s.asDict()) for s in out2[r["doc_id"]]["spans"]] == r["spans"]
@@ -205,7 +205,6 @@ def test_pipeline_with_boilerplate_strip(spark, tmp_path):
         PipelineConfig,
     )
     from adaptive_pdf_extractor_spark.sources import corpus as corpus_mod
-    from adaptive_pdf_extractor_spark.sources import spark_io
 
     rows = corpus_mod.synth_rows(seed=79, start=0, count=120)
     for r in rows:
@@ -213,7 +212,7 @@ def test_pipeline_with_boilerplate_strip(spark, tmp_path):
             [{"kind": "text", "text": "COPYRIGHT 2026 ACME\n", "media_ref": None, "offset": 0}]
             + [dict(s, offset=s["offset"] + 1) for s in r["spans"]]
         )
-    docs = spark_io.input_df_from_rows(spark, rows)
+    docs = plumbing.input_df_from_rows(spark, rows)
     pipe = ExtractionPipeline(
         spark,
         str(tmp_path / "bp"),

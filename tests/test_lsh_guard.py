@@ -208,8 +208,8 @@ def _jobs_of(spark, group: str, fn):
 def test_curation_run_job_count_and_cached_frames(spark, tmp_path):
     """Pinned Spark job count of one guarded curation_run on a small flood
     corpus, and the cached frames it leaves: ``kept`` only (the run
-    releases the signatures the pair stage persisted once the guard
-    telemetry is read). No job runs while the pair stage is
+    releases the signature table it persisted once the guard telemetry
+    is read). No job runs while the pair stage is
     built, connected components run one bounded collect of the persisted
     edge list (the cache's own query stage is one job) and label the
     small pair graph on the driver, and ``n_output`` is an Observation
@@ -437,6 +437,8 @@ def test_embedding_guard_bit_compatible_and_bounded(spark):
     # near-dup pair; guarded == unguarded bit-for-bit
     import math
 
+    import numpy as np
+
     def vec(i: int, eps: float = 0.0):
         return [
             math.sin(0.7 * i + 0.31 * d) + eps * (1 + d % 3)
@@ -448,6 +450,13 @@ def test_embedding_guard_bit_compatible_and_bounded(spark):
     ]
     docs = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     kw = dict(threshold=0.95, n_planes=6, n_tables=3)
+    # the bucket kernel (blocked BLAS) and the star kernel (cosine_pairs_np)
+    # sum in different orders, so exact equality below is about the guard
+    # only while no pair of the corpus sits within rounding of threshold
+    x = np.array([v for _, v in rows])
+    nrm = np.linalg.norm(x, axis=1)
+    cos = ((x @ x.T) / np.outer(nrm, nrm))[np.triu_indices(len(x), 1)]
+    assert np.abs(cos - kw["threshold"]).min() > 1e-9
     unguarded = sorted(
         tuple(r)
         for r in similarity.embedding_neardup_pairs(

@@ -1,10 +1,9 @@
-"""Multimodal column operators: fake-container decode, features, resize,
-frame sampling — distributed plumbing with deterministic payloads."""
+"""Multimodal column operators: fake-container decode and features —
+distributed plumbing with deterministic payloads."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from adaptive_pdf_extractor_spark.operators import media
 
@@ -41,27 +40,6 @@ def test_synthetic_media_and_features(spark):
     assert sorted(map(tuple, rows)) == sorted(map(tuple, rows2))
 
 
-def test_image_resize(spark):
-    m = media.synthetic_media_df(spark, 6, partitions=2).filter(
-        F.col("kind") == "image"
-    )
-    resized = media.image_resize(m, 8, 8)
-    feats = media.image_features(resized).collect()
-    assert all(r["width"] == 8 and r["height"] == 8 for r in feats)
-    metas = resized.select("meta.width", "meta.height").collect()
-    assert all(r["width"] == 8 and r["height"] == 8 for r in metas)
-
-
-def test_video_frame_sample(spark):
-    m = media.synthetic_media_df(spark, 9, partitions=2)
-    frames = media.video_frame_sample(m, every_n=10)
-    rows = frames.collect()
-    # 3 videos x frames 0,10,20
-    assert len(rows) == 9
-    assert {r["frame_idx"] for r in rows} == {0, 10, 20}
-    assert all(len(r["frame"]) == 16 * 16 * 3 for r in rows)
-
-
 def test_pixel_stream_vectorized_matches_reference_loop():
     """The vectorized splitmix expansion must be bit-identical to the
     sequential reference formulation."""
@@ -87,8 +65,7 @@ def test_pixel_stream_vectorized_matches_reference_loop():
 def test_parse_fake_rejects_real_bytes_loudly():
     """_parse_fake raises a container-format ValueError (the bytes may be
     merely corrupt); the import-gated NotImplementedError lives at the
-    decoder dispatch layers instead (decode_image for real images,
-    video_frame_sample for real videos)."""
+    decoder dispatch layer instead (decode_image for real images)."""
     import pytest
 
     from adaptive_pdf_extractor_spark.operators import media

@@ -14,7 +14,6 @@ from adaptive_pdf_extractor_spark.plans.pipeline import (
     PipelineConfig,
 )
 from adaptive_pdf_extractor_spark.sources import corpus as corpus_mod
-from adaptive_pdf_extractor_spark.sources import spark_io
 
 _WORDS = ["registro", "emissao", "codigo", "orgao", "validade", "titular",
           "protocolo", "unidade", "classe", "referencia", "matricula", "lote"]
@@ -93,7 +92,7 @@ def test_learns_unseen_random_templates(spark, tmp_path, seed):
         label = f"tmpl_{seed}_{li}"
         template = _random_template(rng, label, 4 + rng.randint(0, 3))
         rows += _random_corpus(seed * 10 + li, label, template, 120)
-    docs = spark_io.input_df_from_rows(spark, rows)
+    docs = plumbing.input_df_from_rows(spark, rows)
     pipe = ExtractionPipeline(
         spark,
         str(tmp_path / f"gen{seed}"),
@@ -117,6 +116,7 @@ def test_learns_unseen_random_templates(spark, tmp_path, seed):
 from pyspark.sql import functions as SF
 
 from adaptive_pdf_extractor_spark.operators import miner as miner_mod
+import plumbing
 
 
 def test_discover_anchors_expected_path_arbitrary_labels():
@@ -203,7 +203,7 @@ def test_pipeline_learns_related_labels_without_ground_truth(spark, tmp_path):
     """Similarity-path end-to-end: labels share tokens with field names but
     are never equal to them; `expected` is hidden from the pipeline."""
     template = list(zip(_RELATED_LABELS.keys(), _RELATED_SHAPES))
-    docs = spark_io.input_df_from_rows(
+    docs = plumbing.input_df_from_rows(
         spark,
         _random_corpus(77, "rel", template, 150, label_map=_RELATED_LABELS),
     )
@@ -228,7 +228,7 @@ def test_pipeline_learns_arbitrary_labels_with_ground_truth(spark, tmp_path):
     """Expected-path end-to-end: printed labels have zero lexical relation
     to the schema field names; only value-adjacency evidence can solve it."""
     template = list(zip(_ARBITRARY_LABELS.keys(), _ARBITRARY_SHAPES))
-    docs = spark_io.input_df_from_rows(
+    docs = plumbing.input_df_from_rows(
         spark,
         _random_corpus(88, "arb", template, 150, label_map=_ARBITRARY_LABELS),
     )
@@ -336,7 +336,7 @@ def test_anchor_resume_exactness(spark, tmp_path):
     same anchors as an uninterrupted run (anchors feed both mining and the
     final direct-extract fallback)."""
     template = list(zip(_ARBITRARY_LABELS.keys(), _ARBITRARY_SHAPES))
-    docs = spark_io.input_df_from_rows(
+    docs = plumbing.input_df_from_rows(
         spark,
         _random_corpus(99, "res", template, 120, label_map=_ARBITRARY_LABELS),
     )
@@ -400,7 +400,7 @@ def test_pipeline_mixed_evidence_labels(spark, tmp_path):
     for r in rows:
         if corpus_mod._stable_hash(r["doc_id"]) % 2 == 0:
             r["expected_hidden"] = r["expected"]
-    docs_full = spark_io.input_df_from_rows(
+    docs_full = plumbing.input_df_from_rows(
         spark, [{k: v for k, v in r.items() if k != "expected_hidden"} for r in rows]
     )
     blinded_rows = []
@@ -410,7 +410,7 @@ def test_pipeline_mixed_evidence_labels(spark, tmp_path):
             rr = dict(rr)
             rr["expected"] = None
         blinded_rows.append(rr)
-    docs_blind = spark_io.input_df_from_rows(spark, blinded_rows)
+    docs_blind = plumbing.input_df_from_rows(spark, blinded_rows)
     pipe = ExtractionPipeline(
         spark,
         str(tmp_path / "mix"),

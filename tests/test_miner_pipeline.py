@@ -17,6 +17,7 @@ from adaptive_pdf_extractor_spark.plans.pipeline import (
     PipelineConfig,
 )
 from adaptive_pdf_extractor_spark.sources import spark_io
+import plumbing
 
 DATASETS = "/root/reference/data/fake/datasets"
 
@@ -123,7 +124,7 @@ def _accuracy(output_df, docs_df) -> float:
 
 @pytest.fixture(scope="module")
 def seed1_docs(spark):
-    return spark_io.reference_corpus_df(
+    return plumbing.reference_corpus_df(
         spark, f"{DATASETS}/fake_dataset_1000samples_seed_1.json"
     )
 
@@ -281,7 +282,6 @@ def test_pipeline_keyword_guard_on_clean_corpus(spark, tmp_path):
 def test_span_parity_counts_dropped_docs_as_unequal(spark):
     """An output missing documents (or empty) must not read as perfect
     parity: the denominator is the golden count."""
-    from adaptive_pdf_extractor_spark.plans.evaluate import span_parity
     from adaptive_pdf_extractor_spark.sources.corpus import OUTPUT_DDL
 
     golden = spark.createDataFrame(
@@ -294,10 +294,10 @@ def test_span_parity_counts_dropped_docs_as_unequal(spark):
         OUTPUT_DDL,
     )
     empty = spark.createDataFrame([], OUTPUT_DDL)
-    r = span_parity(empty, golden)
+    r = plumbing.span_parity(empty, golden)
     assert r.total == 2 and r.equal == 0 and r.parity == 0.0
     partial = golden.filter(F.col("doc_id") == "d1")
-    r2 = span_parity(partial, golden)
+    r2 = plumbing.span_parity(partial, golden)
     assert r2.total == 2 and r2.equal == 1 and r2.parity == 0.5
 
 

@@ -14,7 +14,7 @@ from adaptive_pdf_extractor_spark.plans.pipeline import (
     PipelineConfig,
 )
 from adaptive_pdf_extractor_spark.sources import corpus as corpus_mod
-from adaptive_pdf_extractor_spark.sources import spark_io
+import plumbing
 
 
 def _two_label_rows(n_per_label: int = 80) -> list[dict]:
@@ -55,7 +55,7 @@ def _two_label_rows(n_per_label: int = 80) -> list[dict]:
 
 def test_multilabel_pipeline_learns_per_label(spark, tmp_path):
     rows = _two_label_rows()
-    docs = spark_io.input_df_from_rows(spark, rows)
+    docs = plumbing.input_df_from_rows(spark, rows)
     pipe = ExtractionPipeline(
         spark, str(tmp_path / "run"), PipelineConfig(max_rounds=3, num_partitions=4)
     )
@@ -96,13 +96,13 @@ def test_multilabel_pipeline_learns_per_label(spark, tmp_path):
 
 def test_results_export_reference_format(spark, tmp_path):
     rows = corpus_mod.synth_rows(seed=61, start=0, count=50)
-    docs = spark_io.input_df_from_rows(spark, rows)
+    docs = plumbing.input_df_from_rows(spark, rows)
     pipe = ExtractionPipeline(
         spark, str(tmp_path / "runx"), PipelineConfig(max_rounds=2, num_partitions=2)
     )
     out = pipe.run(docs, initial_rules_rows=[], write_output=False)
     out_rows = [r.asDict(recursive=True) for r in out.collect()]
-    results = corpus_mod.output_rows_to_reference_results(out_rows, rows)
+    results = plumbing.output_rows_to_reference_results(out_rows, rows)
     assert len(results) == 50
     r0 = results[0]
     assert set(r0.keys()) == {"idx", "label", "expected", "extracted"}

@@ -20,6 +20,7 @@ from adaptive_pdf_extractor_spark.operators.extract import extract_documents
 from adaptive_pdf_extractor_spark.sources import corpus as corpus_mod
 from adaptive_pdf_extractor_spark.sources import pdf as pdf_mod
 from adaptive_pdf_extractor_spark.sources import spark_io
+import plumbing
 
 REAL_DIR = "/root/reference/data/real"
 REAL_DATASET = f"{REAL_DIR}/dataset.json"
@@ -29,7 +30,7 @@ REAL_DATASET = f"{REAL_DIR}/dataset.json"
 def test_real_dataset_parses_and_ingests(spark):
     """The actual two-label dataset.json parses (json5 fallback's motivating
     file) and runs through one extraction pass."""
-    rows = corpus_mod.reference_dataset_to_rows(REAL_DATASET)
+    rows = plumbing.reference_dataset_to_rows(REAL_DATASET)
     assert len(rows) == 4
     labels = {r["label"] for r in rows}
     assert labels == {"carteira_oab", "tela_sistema"}
@@ -39,7 +40,7 @@ def test_real_dataset_parses_and_ingests(spark):
         assert all(f["description"] for f in r["schema_fields"])
         assert r["expected"] is None  # the real dataset has no ground truth
 
-    docs = spark_io.input_df_from_rows(spark, rows)
+    docs = plumbing.input_df_from_rows(spark, rows)
     out = extract_documents(docs, RuleBook.from_rows([]))
     got = out.select("doc_id", "label", F.size("unresolved").alias("u")).collect()
     assert len(got) == 4
@@ -67,7 +68,7 @@ def test_real_dataset_pdf_loader_gate(tmp_path):
         )
     )
     with pytest.raises(NotImplementedError, match="pypdf"):
-        corpus_mod.reference_dataset_to_rows(
+        plumbing.reference_dataset_to_rows(
             str(dataset), pdf_loader=pdf_mod.load_pdf_text
         )
 
@@ -91,7 +92,7 @@ def test_real_pdfs_decode(spark):
 @needs_reference
 @pytest.mark.skipif(pdf_mod._PdfReader is None, reason="pypdf not installed")
 def test_real_dataset_with_decoded_text(spark):
-    rows = corpus_mod.reference_dataset_to_rows(
+    rows = plumbing.reference_dataset_to_rows(
         REAL_DATASET, pdf_loader=pdf_mod.load_pdf_text
     )
     assert all(corpus_mod.assemble_text(r["spans"]).strip() for r in rows)
@@ -181,7 +182,7 @@ def test_pipeline_learns_real_schemas_under_description_labels(spark, tmp_path):
                     ],
                 }
             )
-    docs = spark_io.input_df_from_rows(spark, rows)
+    docs = plumbing.input_df_from_rows(spark, rows)
     pipe = ExtractionPipeline(
         spark,
         str(tmp_path / "real_schemas"),

@@ -13,6 +13,7 @@ from adaptive_pdf_extractor_spark.operators.extract import (
 )
 from adaptive_pdf_extractor_spark.sources import corpus as corpus_mod
 from adaptive_pdf_extractor_spark.sources import spark_io
+import plumbing
 
 
 def test_giant_document_skew(spark, learned_rules):
@@ -34,7 +35,7 @@ def test_giant_document_skew(spark, learned_rules):
                 "expected": rec["expected"],
             }
         )
-    docs = salted_repartition(spark_io.input_df_from_rows(spark, rows), 8)
+    docs = salted_repartition(plumbing.input_df_from_rows(spark, rows), 8)
     book = RuleBook.from_rows(learned_rules)
     out = extract_documents(docs, book).cache()
     assert out.count() == 505

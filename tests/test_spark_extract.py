@@ -15,6 +15,7 @@ from adaptive_pdf_extractor_spark.operators.extract import (
 )
 from adaptive_pdf_extractor_spark.sources import corpus as corpus_mod
 from adaptive_pdf_extractor_spark.sources import spark_io
+import plumbing
 
 DATASETS = "/root/reference/data/fake/datasets"
 RESULTS = "/root/reference/data/fake/results"
@@ -22,17 +23,17 @@ CACHES = "/root/reference/data/fake/caches"
 
 
 def _parity_count(spark, name: str) -> tuple[int, int]:
-    docs = spark_io.reference_corpus_df(spark, f"{DATASETS}/{name}.json")
+    docs = plumbing.reference_corpus_df(spark, f"{DATASETS}/{name}.json")
     book = RuleBook.from_rows(
         corpus_mod.reference_cache_to_rule_rows(f"{CACHES}/{name}_cache.json")
     )
     out = extract_documents(salted_repartition(docs, 8), book)
-    golden = spark_io.golden_output_df(
+    golden = plumbing.golden_output_df(
         spark, f"{DATASETS}/{name}.json", f"{RESULTS}/{name}_with_cache_result.json"
     )
     joined = out.alias("a").join(golden.alias("b"), "doc_id", "inner")
     total = joined.count()
-    equal = joined.filter(spark_io.spans_equal_expr()).count()
+    equal = joined.filter(plumbing.spans_equal_expr()).count()
     return equal, total
 
 
@@ -57,7 +58,7 @@ def test_golden_span_parity(spark, name, n):
 
 def test_extraction_output_shape_and_metrics(spark, learned_rules):
     # 200 docs held out of the learned_rules training range (0..399)
-    docs = spark_io.input_df_from_rows(
+    docs = plumbing.input_df_from_rows(
         spark, corpus_mod.synth_rows(seed=1, start=1000, count=200)
     )
     book = RuleBook.from_rows(learned_rules)

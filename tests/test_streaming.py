@@ -11,6 +11,7 @@ from adaptive_pdf_extractor_spark.operators.extract import extract_documents
 from adaptive_pdf_extractor_spark.sources import corpus as corpus_mod
 from adaptive_pdf_extractor_spark.sources import spark_io
 from adaptive_pdf_extractor_spark.streaming import ingest
+import plumbing
 
 
 @pytest.fixture(scope="module")
@@ -23,9 +24,9 @@ def test_streaming_extract_equals_batch(spark, rulebook, tmp_path):
     src = str(tmp_path / "landing")
     docs.write.parquet(src)
 
-    stream = ingest.file_stream_source(spark, src, max_files_per_trigger=1)
+    stream = plumbing.file_stream_source(spark, src, max_files_per_trigger=1)
     assert stream.isStreaming
-    out = ingest.streaming_extract(stream, rulebook)
+    out = extract_documents(stream, rulebook)
 
     q = (
         out.select("doc_id", "spans")
@@ -48,77 +49,6 @@ def test_streaming_extract_equals_batch(spark, rulebook, tmp_path):
     assert got == batch
 
 
-def test_stateful_hit_rate_accumulates_across_batches(spark, rulebook, tmp_path):
-    """applyInPandasWithState: state persists across micro-batches — with
-    maxFilesPerTrigger=1 each file is its own batch, and the final update
-    must equal the batch-computed totals."""
-    docs = spark_io.synthetic_corpus_df(spark, seed=29, count=200, partitions=4)
-    src = str(tmp_path / "landing3")
-    docs.write.parquet(src)  # 4 files -> 4 micro-batches
-
-    stream = ingest.file_stream_source(spark, src, max_files_per_trigger=1)
-    rates = ingest.stateful_label_hit_rate(
-        ingest.streaming_extract(stream, rulebook)
-    )
-    q = (
-        rates.writeStream.format("memory")
-        .queryName("hit_rate")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = spark.sql(
-        "SELECT * FROM hit_rate ORDER BY docs"
-    ).collect()
-    assert len(rows) >= 2, "state must emit one update per micro-batch"
-    # cumulative counters are monotone
-    docs_seq = [r["docs"] for r in rows]
-    assert docs_seq == sorted(docs_seq)
-    final = rows[-1]
-    assert final["docs"] == 200 and final["total_fields"] == 200 * 8
-
-    # final state equals the batch computation
-    from pyspark.sql import functions as F
-
-    batch = extract_documents(docs, rulebook).select(
-        F.sum(F.size(F.filter("hits", lambda h: h["path"] == F.lit("rule")))).alias("hits")
-    ).first()
-    assert final["rule_hits"] == batch["hits"]
-
-
-def test_windowed_metrics_stream(spark, rulebook, tmp_path):
-    docs = spark_io.synthetic_corpus_df(spark, seed=23, count=120, partitions=2)
-    src = str(tmp_path / "landing2")
-    docs.write.parquet(src)
-
-    stream = ingest.file_stream_source(spark, src)
-    extracted = ingest.with_event_time(ingest.streaming_extract(stream, rulebook))
-    metrics = ingest.windowed_extraction_metrics(extracted, window="1 hour")
-
-    q = (
-        metrics.writeStream.format("memory")
-        .queryName("stream_metrics")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    # watermark append-mode emits only closed windows; with availableNow the
-    # single open window may be withheld — assert via complete-mode rerun
-    q2 = (
-        metrics.writeStream.format("memory")
-        .queryName("stream_metrics_c")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q2.awaitTermination(120)
-    rows = spark.sql("SELECT * FROM stream_metrics_c").collect()
-    assert sum(r["docs"] for r in rows) == 120
-    assert all(r["rule_hits"] is not None for r in rows)
-
-
 def test_streaming_exact_dedup_first_seen_wins(spark, tmp_path):
     """Watermarked streaming exact dedup: duplicated content across
     micro-batches emits once; distinct content all passes."""
@@ -129,7 +59,7 @@ def test_streaming_exact_dedup_first_seen_wins(spark, tmp_path):
     docs.write.parquet(src)
     dups.write.mode("append").parquet(src)
 
-    stream = ingest.file_stream_source(spark, src, max_files_per_trigger=1)
+    stream = plumbing.file_stream_source(spark, src, max_files_per_trigger=1)
     deduped = ingest.streaming_exact_dedup(stream)
     q = (
         deduped.select("doc_id")
@@ -453,77 +383,6 @@ def test_streaming_neardup_empty_batch0_shadows_stale_lineage(spark, tmp_path):
     assert {r["id"] for r in final_state} == {"a/0"}
 
 
-def test_streaming_interval_enrich_equals_batch_interval_join(spark, tmp_path):
-    """Stream-stream watermarked join == the batch interval_join pair set
-    on the same bounded input (the streaming path adds state eviction, not
-    different semantics)."""
-    from datetime import datetime, timedelta
-
-    from adaptive_pdf_extractor_spark.operators.joins import interval_join
-    from pyspark.sql.types import (
-        IntegerType, LongType, StructField, StructType, TimestampType,
-    )
-
-    base = datetime(2030, 1, 1)
-    st = 0xBEEF
-    def nxt():
-        nonlocal st
-        st = (st * 6364136223846793005 + 1442695040888963407) % 2**64
-        return st
-    ev_rows = [
-        (i, (nxt() % 5) + 1, base + timedelta(minutes=nxt() % 120))
-        for i in range(60)
-    ]
-    mk_rows = [
-        (1000 + j, (nxt() % 5) + 1, base + timedelta(minutes=nxt() % 120))
-        for j in range(20)
-    ]
-    schema = StructType(
-        [
-            StructField("event_id", IntegerType()),
-            StructField("user_id", LongType()),
-            StructField("ts", TimestampType()),
-        ]
-    )
-    ev_df = spark.createDataFrame(ev_rows, schema)
-    mk_df = spark.createDataFrame(mk_rows, schema)
-    ev_src, mk_src = str(tmp_path / "ev"), str(tmp_path / "mk")
-    ev_df.repartition(2).write.parquet(ev_src)
-    mk_df.repartition(2).write.parquet(mk_src)
-
-    ev_stream = spark.readStream.schema(schema).parquet(ev_src)
-    mk_stream = spark.readStream.schema(schema).parquet(mk_src)
-    joined = ingest.streaming_interval_enrich(
-        ev_stream, mk_stream, window="30 minutes", watermark="10 minutes"
-    )
-    q = (
-        joined.select("event_id", "interval_id")
-        .writeStream.format("memory")
-        .queryName("stream_ivj")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(240)
-    got = {
-        (r["event_id"], r["interval_id"])
-        for r in spark.sql("SELECT * FROM stream_ivj").collect()
-    }
-    intervals = mk_df.select(
-        F.col("event_id").alias("interval_id"),
-        "user_id",
-        F.col("ts").alias("s"),
-        (F.col("ts") + F.expr("INTERVAL 30 MINUTE")).alias("e"),
-    )
-    exp = {
-        (r["event_id"], r["interval_id"])
-        for r in interval_join(
-            ev_df, intervals, "user_id", "ts", "s", "e", bin_seconds=1800
-        ).collect()
-    }
-    assert got == exp and len(exp) > 0
-
-
 def test_streaming_dedup_keeps_caller_event_time(spark, tmp_path):
     """A caller-supplied event-time column must drive the watermark and
     survive to the output (not be clobbered by processing time)."""
@@ -548,97 +407,6 @@ def test_streaming_dedup_keeps_caller_event_time(spark, tmp_path):
     rows = spark.sql("SELECT * FROM stream_ts").collect()
     assert len(rows) == 20
     assert all(str(r["ingest_ts"]).startswith("2020-01-01") for r in rows)
-
-
-def test_streaming_sessions_equal_batch(spark, tmp_path):
-    """Watermarked streaming session windows == the batch session
-    aggregation on the same bounded input: sessions merge across
-    micro-batches (events for one session split over two files) and
-    finalize in append mode once the watermark passes. Sentinel files
-    advance the watermark so every real session flushes."""
-    import time
-    from datetime import datetime, timedelta
-
-    from pyspark.sql.types import (
-        DoubleType, LongType, StringType, StructField, StructType,
-        TimestampType,
-    )
-
-    def ev(eid, user, minute, value):
-        return (
-            eid, user,
-            datetime(2033, 1, 1) + timedelta(minutes=minute),
-            float(value),
-        )
-
-    # user A: one session split across files (gap < 30 min at the seam);
-    # user B: two separate sessions
-    f1 = [ev(1, "a", 0, 1.0), ev(2, "a", 10, 2.0), ev(3, "b", 5, 5.0)]
-    f2 = [ev(4, "a", 35, 3.0), ev(5, "b", 120, 7.0)]
-    sentinels = [
-        [ev(100, "zz", 60 * 30, 0.0)],   # +30h: watermark passes day 1
-        [ev(101, "zz", 60 * 60, 0.0)],   # +60h: flushes the first sentinel's merges
-    ]
-    schema = StructType([
-        StructField("event_id", LongType()),
-        StructField("user_id", StringType()),
-        StructField("ts", TimestampType()),
-        StructField("value", DoubleType()),
-    ])
-    src = str(tmp_path / "sess_src")
-    for rows in [f1, f2] + sentinels:
-        spark.createDataFrame(rows, schema).repartition(1).write.mode(
-            "append"
-        ).parquet(src)
-        time.sleep(1.1)
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    out = ingest.streaming_session_metrics(stream)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("stream_sessions")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "sess_chk"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = {
-        (r["user_id"], str(r["session_start"]), str(r["session_end"]),
-         r["n_events"], r["sum_value"])
-        for r in spark.sql(
-            "SELECT * FROM stream_sessions WHERE user_id <> 'zz'"
-        ).collect()
-    }
-    batch = spark.read.parquet(src).filter(F.col("user_id") != "zz")
-    exp = {
-        (r["user_id"], str(r["session_start"]),
-         str(r["session_end"]), r["n_events"], r["sum_value"])
-        for r in batch.groupBy(
-            "user_id", F.session_window("ts", "30 minutes").alias("sw")
-        )
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-        .select(
-            "user_id",
-            F.col("sw.start").alias("session_start"),
-            F.col("sw.end").alias("session_end"),
-            "n_events",
-            "sum_value",
-        )
-        .collect()
-    }
-    assert got == exp and len(exp) == 3
-    # the cross-file session merged: user a's three events (two in file 1,
-    # one in file 2, 25-min gap at the seam) form ONE session
-    a_sessions = [g for g in got if g[0] == "a"]
-    assert len(a_sessions) == 1 and a_sessions[0][3] == 3
 
 
 def test_streaming_stratified_sample_matches_batch(spark, tmp_path):
