@@ -22,7 +22,6 @@ from pyspark.sql import functions as F
 from adaptive_pdf_extractor_spark.functions import text as T
 from adaptive_pdf_extractor_spark.operators import dedup, similarity
 from adaptive_pdf_extractor_spark.operators.stats import split_threshold_hex
-from adaptive_pdf_extractor_spark.operators.extract import salted_repartition
 
 SF0001 = "/root/testdata/sf0.001"
 
@@ -1366,7 +1365,7 @@ def _sql_mean_word_len(col: str = "text") -> str:
 
 
 def _sql_punct_ratio(col: str = "text") -> str:
-    stripped = f"length(regexp_replace({col}, '[A-Za-z0-9\\s]', '', 'g'))"
+    stripped = f"length(regexp_replace({col}, '[A-Za-z0-9{_SQL_WS}]', '', 'g'))"
     return (
         f"CASE WHEN length({col}) > 0 "
         f"THEN round({stripped} * 1.0 / length({col}), 4) ELSE 0.0 END"
@@ -1392,13 +1391,14 @@ def _sql_lang_pred(col: str = "text") -> str:
     }
     exprs = {lang: f"({e})" for lang, e in scores.items()}
     best = "greatest(" + ", ".join(exprs[lang] for lang in sorted(exprs)) + ")"
-    # descending lang-code order reproduces Spark's struct-max tie-break
+    # descending lang-code order reproduces Spark's struct-max tie-break;
+    # NULL text scores NULL and is 'und' on both engines
     chain = " ".join(
         f"WHEN {exprs[lang]} = best THEN '{lang}'"
         for lang in sorted(exprs, reverse=True)
     )
     return (
-        f"(SELECT CASE WHEN best = 0 THEN 'und' {chain} END "
+        f"(SELECT CASE WHEN coalesce(best, 0) = 0 THEN 'und' {chain} END "
         f"FROM (SELECT {best} AS best))"
     )
 
@@ -1466,9 +1466,8 @@ def _sql_curation_ctes(p: str, src: str, threshold: float = 0.8) -> str:
     TWICE in one statement) computing the curation keep-set of ``src``:
     quality gate -> exact dedup -> 5-shingle Jaccard pairs -> recursive
     transitive closure -> cluster canonicals. Terminal CTE ``{p}out``
-    carries (doc_id, cluster_size, text, quality) — the same construction
-    as the corpus_curation oracle, factored for reuse by the incremental
-    twin."""
+    carries (doc_id, cluster_size, text, quality): the corpus_curation
+    oracle runs it once, the incremental twin twice."""
     return f"""
 {p}scored AS (SELECT doc_id, text, {_sql_quality()} AS quality FROM ({src})),
 {p}qgate AS (SELECT * FROM {p}scored WHERE quality >= 0.5),
@@ -2232,40 +2231,12 @@ def oracle_sql() -> dict[str, str]:
         """,
         "corpus_curation": (
             "WITH RECURSIVE "
+            + _sql_curation_ctes("", f"({planted})")
             + f"""
-scored AS (SELECT doc_id, text, {_sql_quality()} AS quality
-           FROM ({planted})),
-qgate AS (SELECT * FROM scored WHERE quality >= 0.5),
-fpg AS (SELECT {_SQL_FINGERPRINT} AS fp, min(doc_id) AS keep
-        FROM qgate GROUP BY 1),
-kept AS (SELECT q.* FROM qgate q JOIN fpg ON q.doc_id = fpg.keep),
-"""
-            + _SQL_SHINGLES_CTE.format(src="kept").lstrip()
-            + """,
-pairs AS (
-    SELECT id_a, id_b FROM shared
-    JOIN sizes sa ON sa.doc_id = id_a
-    JOIN sizes sb ON sb.doc_id = id_b
-    WHERE c * 1.0 / (sa.n + sb.n - c) >= 0.8
-),
-e AS (SELECT id_a AS src, id_b AS dst FROM pairs
-      UNION ALL SELECT id_b AS src, id_a AS dst FROM pairs),
-reach(id, lab) AS (
-    SELECT doc_id, doc_id FROM kept
-    UNION
-    SELECT e.dst AS id, reach.lab FROM reach JOIN e ON e.src = reach.id
-),
-comp AS (SELECT id AS doc_id, min(lab) AS canonical_id FROM reach GROUP BY id),
-sized AS (SELECT doc_id, canonical_id,
-                 count(*) OVER (PARTITION BY canonical_id) AS cluster_size
-          FROM comp),
-canon AS (SELECT doc_id, cluster_size FROM sized WHERE doc_id = canonical_id)
-"""
-            + f"""
-SELECT k.doc_id, canon.cluster_size,
-       CAST({_sql_token_count('k.text')} AS BIGINT) AS n_tokens,
-       k.quality
-FROM kept k JOIN canon ON k.doc_id = canon.doc_id
+SELECT doc_id, cluster_size,
+       CAST({_sql_token_count('text')} AS BIGINT) AS n_tokens,
+       quality
+FROM out
 """
         ),
         "incremental_curation": _sql_incremental_curation(),

@@ -117,36 +117,45 @@ def _occurrences(col: Column, words) -> Column:
     return F.regexp_count(padded, F.lit(f" (?:{alternation}) "))
 
 
+def _ratio(num: Column, den: Column) -> Column:
+    """``round(num / den, 4)``, 0.0 where ``den`` is 0 or NULL. A
+    ``try_divide`` rather than a ``when``: a ``when`` branch is evaluated
+    conditionally, so it shares no common subexpression with its
+    condition, and an operand referenced in both would compile and run
+    twice per row."""
+    return F.coalesce(F.round(F.try_divide(num, den), 4), F.lit(0.0))
+
+
 def stopword_ratio(col: Column, stopwords: list[str] | None = None) -> Column:
     """Share of tokens that are stopwords; ``stopwords`` is a set (default
     ``STOPWORDS_EN``), counted by :func:`_occurrences`."""
-    total = token_count(col)
-    hits = _occurrences(col, stopwords or STOPWORDS_EN)
-    return F.when(total > 0, F.round(hits / total, 4)).otherwise(F.lit(0.0))
+    return _ratio(_occurrences(col, stopwords or STOPWORDS_EN), token_count(col))
 
 
 def punct_ratio(col: Column) -> Column:
     """Fraction of non-alphanumeric, non-space characters."""
     stripped = F.regexp_replace(col, rf"[A-Za-z0-9{WS_CLASS}]", "")
-    return F.when(
-        F.length(col) > 0, F.round(F.length(stripped) / F.length(col), 4)
-    ).otherwise(F.lit(0.0))
+    return _ratio(F.length(stripped), F.length(col))
 
 
 def mean_word_length(col: Column) -> Column:
-    n = token_count(col)
     chars = F.length(F.regexp_replace(col, rf"[{WS_CLASS}]+", ""))
-    return F.when(n > 0, F.round(chars / n, 4)).otherwise(F.lit(0.0))
+    return _ratio(chars, token_count(col))
 
 
 def quality_score(col: Column) -> Column:
     """Composite [0,1] quality heuristic: length band + stopword presence +
     sane mean word length + low punctuation noise. The exact weights are a
-    policy choice; determinism + SQL-oracle-ability are the contract."""
+    policy choice; determinism + SQL-oracle-ability are the contract.
+
+    Every regex count is referenced once and unconditionally, so the
+    shared token count compiles once: ``2.0 <= mwl <= 12.0`` is written
+    ``abs(mwl - 7.0) <= 5.0``, because ``&`` evaluates its right side
+    conditionally. Both bounds subtract exactly, and ``mwl`` is rounded
+    to 4 decimals, so the two forms agree on every row."""
     length_ok = (F.length(col) >= 50) & (F.length(col) <= 20000)
     sw_ok = stopword_ratio(col) >= 0.05
-    mwl = mean_word_length(col)
-    mwl_ok = (mwl >= 2.0) & (mwl <= 12.0)
+    mwl_ok = F.abs(mean_word_length(col) - 7.0) <= 5.0
     punct_ok = punct_ratio(col) <= 0.2
     score = (
         length_ok.cast("int")
@@ -165,15 +174,18 @@ def lang_scores(col: Column) -> dict[str, Column]:
 
 
 def lang_id(col: Column) -> Column:
-    """argmax over marker-word scores; 'und' when all zero. Ties broken by
-    language code order (deterministic)."""
+    """argmax over marker-word scores; 'und' when all zero (or NULL).
+    Ties broken by language code order (deterministic): the max of
+    ``(score, lang)`` structs. An ``(0, 'und')`` struct joins the max, so
+    'und' wins exactly the all-zero rows (it sorts after every language
+    code, and a NULL score below 0) with each score referenced once."""
     scores = lang_scores(col)
-    pairs = [
+    assert all(lang < "und" for lang in scores), "'und' must sort last"
+    pairs = [F.struct(F.lit(0).alias("score"), F.lit("und").alias("lang"))] + [
         F.struct(scores[lang].alias("score"), F.lit(lang).alias("lang"))
         for lang in sorted(scores)
     ]
-    best = F.greatest(*pairs) if len(pairs) > 1 else pairs[0]
-    return F.when(best["score"] > 0, best["lang"]).otherwise(F.lit("und"))
+    return F.greatest(*pairs)["lang"]
 
 
 def char_grams_all(col: Column, n: int) -> Column:

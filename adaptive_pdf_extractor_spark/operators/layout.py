@@ -22,8 +22,8 @@ Two layers:
 
 from __future__ import annotations
 
-from dataclasses import dataclass, replace
-from typing import Iterable, Optional
+from dataclasses import dataclass
+from typing import Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F

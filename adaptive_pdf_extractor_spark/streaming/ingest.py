@@ -9,6 +9,9 @@ stateless per batch and the rulebook broadcast is immutable within one,
 so one operator serves batch and micro-batch. This module holds what a
 stream needs beyond that: watermarked exact dedup, stateless
 decontamination, and minhash near-dup dedup over a versioned state table.
+The near-dup step keeps what incremental curation keeps: the min-id
+canonicals of one pair graph over batch ∪ state, in components with no
+state doc.
 
 Rule evolution stays in the batch round loop: streams extract, batches
 learn. (Mining inside the stream would reintroduce the order-dependent
@@ -144,12 +147,15 @@ def streaming_minhash_neardup(
     state_catalog: str = "parquet",
 ):
     """Streaming minhash-LSH NEAR-dup dedup: the approximate twin of
-    :func:`streaming_exact_dedup`. Each micro-batch runs the batch LSH
-    operator (``dedup.minhash_lsh_pairs`` — banded buckets, signature
-    prefilter, exact-Jaccard verify, signatures via the numpy permutation
-    bank) over batch ∪ state inside ``foreachBatch``; batch docs that
-    near-match an already-emitted doc are dropped, one canonical (min id)
-    survives per within-batch cluster, and survivors append to ``out_dir``.
+    :func:`streaming_exact_dedup`. Inside ``foreachBatch``, each
+    micro-batch runs the guarded LSH pair stage over batch ∪ state, then
+    ``dedup.neardup_clusters`` once over that one pair graph. A batch doc
+    is kept iff it is its component's ``canonical_id`` (the min id) and no
+    state doc shares that ``canonical_id``: a component that reaches an
+    emitted doc, directly or through a chain of batch docs, keeps nothing,
+    whatever the id order. That is batch curation's transitive answer: a
+    batch emits what ``plans.curation.curate_increment`` keeps of it
+    against the state (pinned by test). Survivors append to ``out_dir``.
 
     State is the set of previously emitted docs within the event-time
     horizon: rows older than ``max(event_time seen) - watermark_seconds``
@@ -175,13 +181,11 @@ def streaming_minhash_neardup(
     checkpoint lineage — pair them.
 
     The state table IS the signature table: each admitted doc's minhash
-    signature persists alongside its text/ts, so the expensive per-doc
-    hashing (the 128-permutation numpy bank) runs for the NEW batch docs
-    only (``minhash_signatures_df``) — not arrival_rate x watermark — and
+    signature persists alongside its text/ts, so the per-doc hashing runs
+    for the NEW batch docs only — not arrival_rate x watermark — and
     banding/candidate-cut/prefilter run over persisted + fresh signatures
-    (``minhash_lsh_pairs_from_sigs``). Text stays in state for the
-    exact-Jaccard verification, a narrow JVM re-shingling joined against
-    the few surviving candidate pairs.
+    (``dedup.minhash_lsh_pairs_from_sigs``). Text stays in state for the
+    exact-Jaccard verification of the few surviving candidate pairs.
 
     Output writes are batch-id-keyed partitions of ``out_dir``
     (``batch=<id>``, mode overwrite), so a replayed batch overwrites its
@@ -193,15 +197,11 @@ def streaming_minhash_neardup(
     from ..operators import dedup as dedup_ops
     from ..sources import spark_io
 
-    # Reading v=batch_id itself would deadlock recovery: a replayed batch
-    # (crash between the state write and the checkpoint commit) would
-    # lazily read version batch_id while the overwrite deletes it under
-    # the scan (observed: FAILED_READ_FILE on every restart). Keying reads
-    # to < batch_id (spark_io.read_state_version_below) makes replay
-    # idempotent — the replayed batch rebuilds v=batch_id from
-    # v=batch_id-1, exactly as the original attempt did. (Consequence: a
-    # state_dir belongs to ONE checkpoint lineage; a fresh checkpoint
-    # restarts batch ids at 0 and commits every version id from there.)
+    # Reading v=batch_id itself would deadlock recovery: a batch replayed
+    # after a crash between the state write and the checkpoint commit
+    # would lazily read version batch_id while the overwrite deletes it
+    # under the scan (observed: FAILED_READ_FILE on every restart). Read
+    # below it, the replay rebuilds v=batch_id from v=batch_id-1.
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -285,7 +285,8 @@ def streaming_minhash_neardup(
         # max_bucket_size: a template flood arriving on the stream would
         # otherwise cost O(m²) candidate pairs per micro-batch INSIDE the
         # state horizon (the guard is default-on here — streams can't
-        # pre-inspect their corpus)
+        # pre-inspect their corpus). Hence the full self-join stage: the
+        # new x new ∪ new x old one curate_increment runs has no guard
         pairs = dedup_ops.minhash_lsh_pairs_from_sigs(
             all_sigs,
             union.select("id", "text"),
@@ -296,36 +297,19 @@ def streaming_minhash_neardup(
             bands=bands,
             threshold=threshold,
             max_bucket_size=max_bucket_size,
-        ).persist()
-        state_ids = state.select(F.col("id").alias("sid"))
-        # batch docs near-matching an already-emitted (state) doc drop out
-        vs_state = (
-            pairs.join(state_ids, pairs.id_a == F.col("sid"), "left_semi")
-            .select(F.col("id_b").alias("id"))
-            .unionByName(
-                pairs.join(
-                    state_ids, pairs.id_b == F.col("sid"), "left_semi"
-                ).select(F.col("id_a").alias("id"))
-            )
-            .distinct()
         )
-        survivors1 = batch.join(vs_state, "id", "left_anti")
-        # within-batch clusters among the remaining docs: keep min id
-        s1_ids = survivors1.select("id")
-        s1_pairs = (
-            pairs.join(
-                survivors1.select(F.col("id").alias("id_a")), "id_a", "left_semi"
-            )
-            .join(
-                survivors1.select(F.col("id").alias("id_b")), "id_b", "left_semi"
-            )
-            .select("id_a", "id_b")
+        # ONE graph over batch ∪ state (its bounded collect runs the pair
+        # stage once); a component holding a state doc keeps no batch doc
+        labels = dedup_ops.neardup_clusters(union.select("id"), pairs)
+        state_roots = labels.join(
+            state.select(F.col("id").alias("doc_id")), "doc_id", "left_semi"
+        ).select("canonical_id")
+        keep_ids = (
+            labels.filter(F.col("doc_id") == F.col("canonical_id"))
+            .join(state_roots, "canonical_id", "left_anti")
+            .select(F.col("doc_id").alias("id"))
         )
-        clusters = dedup_ops.neardup_clusters(s1_ids, s1_pairs)
-        keep_ids = clusters.filter(
-            F.col("doc_id") == F.col("canonical_id")
-        ).select(F.col("doc_id").alias("id"))
-        survivors = survivors1.join(keep_ids, "id", "left_semi").persist()
+        survivors = batch.join(keep_ids, "id", "left_semi").persist()
 
         # batch-id-keyed partition + overwrite = idempotent under
         # checkpoint replay (a blind append would duplicate every survivor
@@ -351,7 +335,6 @@ def streaming_minhash_neardup(
         spark_io.write_state_version(
             new_state, state_dir, int(batch_id), catalog=state_catalog
         )
-        pairs.unpersist()
         all_sigs.unpersist()
         survivors.unpersist()
         batch.unpersist()

@@ -2,7 +2,9 @@
 class in it has a caller outside ``tests/`` (the package itself,
 ``__spark_entry__.py``, ``bench.py``, ``scripts/`` or ``perfbench/``),
 or a stated reason to stay on :data:`ALLOWED`. Helpers that only tests
-import live under ``tests/`` (``plumbing.py``, ``specs.py``)."""
+import live under ``tests/`` (``plumbing.py``, ``specs.py``). No module
+of the package, ``tests/``, ``scripts/``, ``bench.py`` or
+``__spark_entry__.py`` imports a name it never reads."""
 
 from __future__ import annotations
 
@@ -75,3 +77,46 @@ def test_package_has_no_test_only_code():
     # an entry that gained a caller or is gone must leave the list
     stale = set(ALLOWED) - set(dead)
     assert not stale, stale
+
+
+_SCOPES = (ast.FunctionDef, ast.AsyncFunctionDef)
+
+
+def _bound_imports(scope: ast.AST):
+    """(name, line) of each import binding made directly in ``scope``,
+    not in a function nested in it; ``__future__`` imports bind nothing."""
+    todo = list(ast.iter_child_nodes(scope))
+    while todo:
+        n = todo.pop()
+        if isinstance(n, ast.Import):
+            for a in n.names:
+                yield a.asname or a.name.split(".")[0], n.lineno
+        elif isinstance(n, ast.ImportFrom) and n.module != "__future__":
+            for a in n.names:
+                yield a.asname or a.name, n.lineno
+        elif not isinstance(n, _SCOPES):
+            todo.extend(ast.iter_child_nodes(n))
+
+
+def _unread_imports(path: Path) -> list[str]:
+    """``path:line name`` for each import binding that no ``Name`` in its
+    scope reads: the module, or the function holding the import, nested
+    functions included. Matched by name, like the scan above."""
+    tree = ast.parse(path.read_text())
+    out = []
+    for scope in [tree, *(n for n in ast.walk(tree) if isinstance(n, _SCOPES))]:
+        read = {n.id for n in ast.walk(scope) if isinstance(n, ast.Name)}
+        out += [
+            f"{path.relative_to(ROOT)}:{line} {name}"
+            for name, line in _bound_imports(scope)
+            if name not in read
+        ]
+    return out
+
+
+def test_every_import_is_read():
+    files = [*PACKAGE.rglob("*.py"), *(ROOT / "tests").rglob("*.py")]
+    files += [*(ROOT / "scripts").rglob("*.py")]
+    files += [ROOT / "bench.py", ROOT / "__spark_entry__.py"]
+    unread = [u for path in sorted(files) for u in _unread_imports(path)]
+    assert not unread, unread

@@ -4,7 +4,6 @@ byte-stream source."""
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from adaptive_pdf_extractor_spark.operators.layout import (
     Block,

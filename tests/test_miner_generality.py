@@ -6,7 +6,6 @@ difficulty, README.md:186-196.)"""
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from adaptive_pdf_extractor_spark.plans.evaluate import field_accuracy
 from adaptive_pdf_extractor_spark.plans.pipeline import (

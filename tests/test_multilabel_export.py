@@ -6,7 +6,6 @@ from __future__ import annotations
 
 import json
 
-import pytest
 from pyspark.sql import functions as F
 
 from adaptive_pdf_extractor_spark.plans.pipeline import (

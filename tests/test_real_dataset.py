@@ -9,7 +9,6 @@ from __future__ import annotations
 
 import glob
 import json
-import os
 
 import pytest
 from conftest import needs_reference

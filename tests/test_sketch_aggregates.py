@@ -157,8 +157,6 @@ def test_bigram_lm_scores_rank_gibberish_low(spark):
     corpus's dominant phrase score high avg_logprob, a gibberish doc of
     unique tokens scores markedly lower, and a one-token doc gets the
     zero-bigram null row."""
-    from pyspark.sql import functions as F
-
     from adaptive_pdf_extractor_spark.operators import stats
 
     phrase = "the quick brown fox jumps over the lazy dog"

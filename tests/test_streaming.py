@@ -3,6 +3,8 @@ same fused operator as batch, with golden-equivalent results."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -492,3 +494,126 @@ def test_streaming_decontaminate_bloom_tier(spark, tmp_path):
     exact = {r["id"] for r in batch.filter(~F.col("contaminated")).collect()}
     assert 3 not in got  # contamination can never slip through a Bloom
     assert got == exact  # no false positive fired on this corpus
+
+
+def _neardup_stream(spark, tmp_path, batches):
+    """Run ``streaming_minhash_neardup`` over ``batches``, each a list of
+    ``(doc_id, text)`` string rows with one ingest timestamp, as one
+    micro-batch each. Returns the finished query and the emitted ids
+    of each batch id."""
+    import time
+
+    src = str(tmp_path / "src")
+    out_dir = str(tmp_path / "out")
+    for rows, ts in batches:
+        spark.createDataFrame(rows, "doc_id string, text string").withColumn(
+            "ingest_ts", F.to_timestamp(F.lit(ts))
+        ).repartition(1).write.mode("append").parquet(src)
+        time.sleep(1.1)  # distinct mtimes -> deterministic batch order
+    stream = (
+        spark.readStream.schema(
+            "doc_id string, text string, ingest_ts timestamp"
+        )
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+    q = ingest.streaming_minhash_neardup(
+        stream,
+        str(tmp_path / "state"),
+        out_dir,
+        watermark_seconds=300,
+        checkpoint_dir=str(tmp_path / "chk"),
+    )
+    q.awaitTermination(240)
+    emitted: dict[int, set[str]] = {}
+    for r in spark.read.parquet(out_dir).collect():
+        emitted.setdefault(r["batch"], set()).add(r["doc_id"])
+    return q, emitted
+
+
+def test_streaming_neardup_chain_through_batch_reaches_state(spark, tmp_path):
+    """The chained case follows batch curation's transitive answer: state
+    doc s/0, and batch docs a/1 (a near-dup of s/0) and b/0 (a near-dup
+    of a/1 but not of s/0). The one pair graph over batch ∪ state joins
+    all three, and a component that reaches state keeps no batch doc,
+    so both a/1 and b/0 drop (a stream that only drops direct near-dups
+    of state keeps b/0). Also pinned: the stream's Spark job count, and
+    no persistent RDD or CacheManager entry left once it finishes (each
+    batch releases what it persisted)."""
+    from adaptive_pdf_extractor_spark.functions import text as T
+
+    t = corpus_mod.synth_record(seed=53, doc_id="s/0")["pdf_text"]
+    a, b = t[18:], t[47:]
+    # the margins under the engine's own shingler (5-shingles, lowercased)
+    sh = spark.createDataFrame([(t, a, b)], "s string, a string, b string")
+    sh = sh.select(*(T.char_ngrams(F.col(c), 5).alias(c) for c in "sab"))
+
+    def jaccard(x, y):
+        inter = F.size(F.array_intersect(x, y))
+        return inter / F.size(F.array_union(x, y))
+
+    j = sh.select(
+        jaccard("a", "s").alias("as"),
+        jaccard("b", "a").alias("ba"),
+        jaccard("b", "s").alias("bs"),
+    ).first()
+    assert j["as"] >= 0.9 and j["ba"] >= 0.81 and j["bs"] < 0.8, j
+
+    sc = spark.sparkContext
+    spark.catalog.clearCache()
+    cached = set(sc._jsc.getPersistentRDDs().keys())
+    q, emitted = _neardup_stream(
+        spark,
+        tmp_path,
+        [
+            ([("s/0", t)], "2033-01-01 00:00:00"),
+            ([("a/1", a), ("b/0", b)], "2033-01-01 00:01:00"),
+        ],
+    )
+    assert emitted == {0: {"s/0"}}
+    # a stream's batches run in the job group of its run id. 78 on 4
+    # cores; 95 with the per-batch vs-state and survivor-pair joins
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(str(q.runId)))
+    assert n_jobs <= 80, n_jobs
+    assert set(sc._jsc.getPersistentRDDs().keys()) == cached
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+@pytest.mark.skipif(
+    not os.path.isdir("/root/testdata/sf0.001"),
+    reason="registry input tables absent (/root/testdata/sf0.001)",
+)
+def test_streaming_neardup_batch_equals_curate_increment(spark, tmp_path):
+    """Per batch, the stream emits what ``curate_increment`` keeps: batch
+    0 is the incremental query's curated old corpus, batch 1 its new
+    batch through the curation gate, and batch 1's emitted ids equal
+    ``curate_increment(new, old_kept)``'s. Stream ids are strings, so a
+    mutation such as "100005" sorts before its old original "5": the
+    state flag, not the id order, drops it."""
+    import __spark_entry__ as entry_mod
+    from adaptive_pdf_extractor_spark.plans import curation
+
+    old_kept, new = entry_mod._incremental_batches(
+        spark, "/root/testdata/sf0.001"
+    )
+    gated = curation._gate(new, None, 13)
+
+    def rows(df):
+        return [(str(r["doc_id"]), r["text"]) for r in df.collect()]
+
+    expected = {
+        str(r["doc_id"])
+        for r in curation.curate_increment(new, old_kept).collect()
+    }
+    old_rows = rows(old_kept)
+    _, emitted = _neardup_stream(
+        spark,
+        tmp_path,
+        [
+            (old_rows, "2034-01-01 00:00:00"),
+            (rows(gated), "2034-01-01 00:01:00"),
+        ],
+    )
+    assert emitted[0] == {i for i, _ in old_rows}
+    assert emitted[1] == expected and len(expected) == 20, emitted[1]
+

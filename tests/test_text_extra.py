@@ -309,6 +309,50 @@ def test_token_count_matches_tokens_size(spark):
     assert by_id[texts.index("a\u00a0b c")] == 2
 
 
+def test_quality_and_lang_id_match_sql_oracles(spark):
+    """``stopword_ratio``, ``quality_score`` and ``lang_id`` agree row for
+    row with the DuckDB expressions of the ``doc_quality`` and
+    ``lang_id_dist`` oracles, on random text over every marker list with
+    every whitespace kind, NULL, "", and texts whose mean word length is
+    exactly 2.0 and 12.0 (the band's closed ends)."""
+    import duckdb
+
+    import __spark_entry__ as entry_mod
+
+    words = sorted({w for ws in T.LANG_MARKERS.values() for w in ws})
+    texts = _random_texts(13, words + T.STOPWORDS_EN + ["xy", "!?"]) + [
+        "ab " * 25 + "of",
+        "abcdefghijkl " * 10,
+        "abcdefghijkl " * 10 + "the",
+        "x" * 60,
+        "!!!! ???? .... ,,,, the",
+    ]
+    df = spark.createDataFrame(list(enumerate(texts)), "id int, text string")
+    c = F.col("text")
+    got = sorted(
+        tuple(r)
+        for r in df.select(
+            "id",
+            T.stopword_ratio(c),
+            T.quality_score(c),
+            T.lang_id(c),
+        ).collect()
+    )
+    con = duckdb.connect()
+    con.register("docs", pd.DataFrame({"id": range(len(texts)), "text": texts}))
+    want = sorted(
+        con.execute(
+            f"SELECT id, {entry_mod._sql_stopword_ratio()}, "
+            f"{entry_mod._sql_quality()}, {entry_mod._sql_lang_pred()} "
+            "FROM docs"
+        ).fetchall()
+    )
+    assert got == want
+    # the pins are not vacuous: every score band and language occurs
+    assert {r[2] for r in got} >= {None, 0.25, 0.75, 1.0}
+    assert {r[3] for r in got} >= set(T.LANG_MARKERS) | {"und"}
+
+
 def test_hash_split_validation_and_ascii_fold(spark):
     """hash_split rejects bad fractions loudly (no bare assert); top_terms'
     ASCII fold matches DuckDB on text where full Unicode lower() differs
