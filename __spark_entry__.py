@@ -1407,58 +1407,72 @@ _SQL_FINGERPRINT = (
     f"md5(lower(regexp_replace(trim(text), '[{_SQL_WS}]+', ' ', 'g')))"
 )
 
-_SQL_SHINGLES_CTE = """
-base AS (SELECT doc_id, lower(text) AS t FROM {src}),
-idx AS (SELECT doc_id, t, unnest(generate_series(1, greatest(length(t) - 4, 1))) AS i
-        FROM base),
-sh AS (SELECT DISTINCT doc_id, substr(t, CAST(i AS INT), 5) AS s FROM idx),
-sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-shared AS (SELECT x.doc_id AS id_a, y.doc_id AS id_b, count(*) AS c
-           FROM sh x JOIN sh y USING (s) WHERE x.doc_id < y.doc_id
-           GROUP BY 1, 2)
-"""
 
-_SQL_JACCARD_PAIRS = (
-    "WITH "
-    + _SQL_SHINGLES_CTE
-    + """
-SELECT id_a, id_b,
-       round(c * 1.0 / (sa.n + sb.n - c), 4) AS jaccard
-FROM shared
-JOIN sizes sa ON sa.doc_id = id_a
-JOIN sizes sb ON sb.doc_id = id_b
-WHERE c * 1.0 / (sa.n + sb.n - c) >= {threshold}
-"""
-)
+def _sql_pair_ctes(p: str, src: str, threshold: float) -> str:
+    """CTE chain (every name prefixed with ``p``) of the 5-shingle Jaccard
+    pairs of ``src`` (``doc_id``, ``text``): the ONE shingler of every
+    near-dup oracle. Terminal CTE ``{p}pairs`` carries (id_a < id_b, j),
+    filtered on the un-rounded ``j``."""
+    return f"""
+{p}base AS (SELECT doc_id, lower(text) AS t FROM {src}),
+{p}idx AS (SELECT doc_id, t, unnest(generate_series(
+               1, greatest(length(t) - 4, 1))) AS i FROM {p}base),
+{p}sh AS (SELECT DISTINCT doc_id, substr(t, CAST(i AS INT), 5) AS s
+          FROM {p}idx),
+{p}sizes AS (SELECT doc_id, count(*) AS n FROM {p}sh GROUP BY doc_id),
+{p}shared AS (SELECT x.doc_id AS id_a, y.doc_id AS id_b, count(*) AS c
+              FROM {p}sh x JOIN {p}sh y USING (s) WHERE x.doc_id < y.doc_id
+              GROUP BY 1, 2),
+{p}pairs AS (SELECT id_a, id_b, c * 1.0 / (sa.n + sb.n - c) AS j
+             FROM {p}shared
+             JOIN {p}sizes sa ON sa.doc_id = id_a
+             JOIN {p}sizes sb ON sb.doc_id = id_b
+             WHERE c * 1.0 / (sa.n + sb.n - c) >= {threshold})"""
 
-# Connected components as a recursive transitive closure: reach(id, lab)
-# grows the set of (node, reachable-node) facts until fixpoint (UNION
-# dedups, so it terminates); min(lab) per id = min id in the component —
-# the same answer the Spark side's min-label propagation converges to.
-_SQL_CLUSTERS = (
-    "WITH RECURSIVE "
-    + _SQL_SHINGLES_CTE
-    + """,
-pairs AS (
-    SELECT id_a, id_b FROM shared
-    JOIN sizes sa ON sa.doc_id = id_a
-    JOIN sizes sb ON sb.doc_id = id_b
-    WHERE c * 1.0 / (sa.n + sb.n - c) >= {threshold}
-),
-nodes AS (SELECT doc_id AS id FROM {src}),
-e AS (SELECT id_a AS src, id_b AS dst FROM pairs
-      UNION ALL SELECT id_b AS src, id_a AS dst FROM pairs),
-reach(id, lab) AS (
-    SELECT id, id FROM nodes
+
+def _sql_cluster_ctes(p: str, nodes: str) -> str:
+    """CTE chain (prefixed with ``p``) of connected components over
+    ``{p}pairs`` as a recursive transitive closure: reach(id, lab) grows
+    the set of (node, reachable-node) facts from every ``doc_id`` of
+    ``nodes`` until fixpoint (UNION dedups, so it terminates); min(lab)
+    per id = min id in the component, the answer the Spark side's
+    ``neardup_clusters`` gives. Terminal CTE ``{p}sized`` carries
+    (doc_id, canonical_id, cluster_size). Needs ``WITH RECURSIVE``."""
+    return f"""
+{p}e AS (SELECT id_a AS src, id_b AS dst FROM {p}pairs
+         UNION ALL SELECT id_b AS src, id_a AS dst FROM {p}pairs),
+{p}reach(id, lab) AS (
+    SELECT doc_id, doc_id FROM {nodes}
     UNION
-    SELECT e.dst AS id, reach.lab FROM reach JOIN e ON e.src = reach.id
-),
-comp AS (SELECT id AS doc_id, min(lab) AS canonical_id FROM reach GROUP BY id)
-SELECT doc_id, canonical_id,
-       count(*) OVER (PARTITION BY canonical_id) AS cluster_size
-FROM comp
-"""
-)
+    SELECT {p}e.dst AS id, {p}reach.lab
+    FROM {p}reach JOIN {p}e ON {p}e.src = {p}reach.id),
+{p}comp AS (SELECT id AS doc_id, min(lab) AS canonical_id
+            FROM {p}reach GROUP BY id),
+{p}sized AS (SELECT doc_id, canonical_id,
+                    count(*) OVER (PARTITION BY canonical_id)
+                        AS cluster_size
+             FROM {p}comp)"""
+
+
+def _sql_jaccard_pairs(src: str, threshold: float) -> str:
+    """All 5-shingle Jaccard pairs of ``src`` at or over ``threshold``."""
+    return (
+        "WITH "
+        + _sql_pair_ctes("", src, threshold)
+        + "\nSELECT id_a, id_b, round(j, 4) AS jaccard FROM pairs\n"
+    )
+
+
+def _sql_clusters(src: str, threshold: float) -> str:
+    """Near-dup clusters of ``src``: connected components of its Jaccard
+    pairs, every doc labelled."""
+    return (
+        "WITH RECURSIVE "
+        + _sql_pair_ctes("", src, threshold)
+        + ","
+        + _sql_cluster_ctes("", src)
+        + "\nSELECT doc_id, canonical_id, cluster_size FROM sized\n"
+    )
 
 
 def _sql_curation_ctes(p: str, src: str, threshold: float = 0.8) -> str:
@@ -1468,43 +1482,23 @@ def _sql_curation_ctes(p: str, src: str, threshold: float = 0.8) -> str:
     transitive closure -> cluster canonicals. Terminal CTE ``{p}out``
     carries (doc_id, cluster_size, text, quality): the corpus_curation
     oracle runs it once, the incremental twin twice."""
-    return f"""
+    return (
+        f"""
 {p}scored AS (SELECT doc_id, text, {_sql_quality()} AS quality FROM ({src})),
 {p}qgate AS (SELECT * FROM {p}scored WHERE quality >= 0.5),
 {p}fpg AS (SELECT {_SQL_FINGERPRINT} AS fp, min(doc_id) AS keep
            FROM {p}qgate GROUP BY 1),
-{p}kept AS (SELECT q.* FROM {p}qgate q JOIN {p}fpg ON q.doc_id = {p}fpg.keep),
-{p}base AS (SELECT doc_id, lower(text) AS t FROM {p}kept),
-{p}idx AS (SELECT doc_id, t, unnest(generate_series(
-               1, greatest(length(t) - 4, 1))) AS i FROM {p}base),
-{p}sh AS (SELECT DISTINCT doc_id, substr(t, CAST(i AS INT), 5) AS s
-          FROM {p}idx),
-{p}sizes AS (SELECT doc_id, count(*) AS n FROM {p}sh GROUP BY doc_id),
-{p}shared AS (SELECT x.doc_id AS id_a, y.doc_id AS id_b, count(*) AS c
-              FROM {p}sh x JOIN {p}sh y USING (s) WHERE x.doc_id < y.doc_id
-              GROUP BY 1, 2),
-{p}pairs AS (SELECT id_a, id_b FROM {p}shared
-             JOIN {p}sizes sa ON sa.doc_id = id_a
-             JOIN {p}sizes sb ON sb.doc_id = id_b
-             WHERE c * 1.0 / (sa.n + sb.n - c) >= {threshold}),
-{p}e AS (SELECT id_a AS src, id_b AS dst FROM {p}pairs
-         UNION ALL SELECT id_b AS src, id_a AS dst FROM {p}pairs),
-{p}reach(id, lab) AS (
-    SELECT doc_id, doc_id FROM {p}kept
-    UNION
-    SELECT {p}e.dst AS id, {p}reach.lab
-    FROM {p}reach JOIN {p}e ON {p}e.src = {p}reach.id),
-{p}comp AS (SELECT id AS doc_id, min(lab) AS canonical_id
-            FROM {p}reach GROUP BY id),
-{p}sized AS (SELECT doc_id, canonical_id,
-                    count(*) OVER (PARTITION BY canonical_id)
-                        AS cluster_size
-             FROM {p}comp),
+{p}kept AS (SELECT q.* FROM {p}qgate q JOIN {p}fpg ON q.doc_id = {p}fpg.keep),"""
+        + _sql_pair_ctes(p, p + "kept", threshold)
+        + ","
+        + _sql_cluster_ctes(p, p + "kept")
+        + f""",
 {p}out AS (SELECT k.doc_id, s.cluster_size, k.text, k.quality
            FROM {p}kept k
            JOIN {p}sized s ON k.doc_id = s.doc_id
                           AND s.doc_id = s.canonical_id)
 """
+    )
 
 
 def _sql_incremental_curation() -> str:
@@ -1974,9 +1968,7 @@ def oracle_sql() -> dict[str, str]:
             FROM documents
             GROUP BY 1
         """,
-        "minhash_neardup": _SQL_JACCARD_PAIRS.format(
-            src=f"({planted})", threshold=0.8
-        ),
+        "minhash_neardup": _sql_jaccard_pairs(f"({planted})", 0.8),
         "simhash_md5": _sql_simhash_md5(planted),
         "minhash_md5": _sql_minhash_md5(
             "(SELECT doc_id, text FROM documents WHERE doc_id < 40)"
@@ -1994,13 +1986,10 @@ def oracle_sql() -> dict[str, str]:
             FROM src x JOIN src y ON x.doc_id < y.doc_id
             WHERE levenshtein(lower(x.text), lower(y.text)) <= 16
         """,
-        "ngram_jaccard": _SQL_JACCARD_PAIRS.format(
-            src="(SELECT doc_id, text FROM documents WHERE doc_id < 100)",
-            threshold=0.25,
+        "ngram_jaccard": _sql_jaccard_pairs(
+            "(SELECT doc_id, text FROM documents WHERE doc_id < 100)", 0.25
         ),
-        "neardup_clusters": _SQL_CLUSTERS.format(
-            src=f"({planted})", threshold=0.8
-        ),
+        "neardup_clusters": _sql_clusters(f"({planted})", 0.8),
         "corpus_delta": f"""
             WITH cur AS (
                 SELECT doc_id, text FROM documents

@@ -224,15 +224,32 @@ def minhash_signatures_df(
     An interpreted per-position substr form is O(len²) per row (39.7 s
     against ~1 s for the signature stage of 50k docs at sf1.0). No
     size(gh) > 0 filter: see :func:`_shingled`."""
+    return _signed(
+        df, id_col, text_col, shingle_n, num_hashes, hash_family
+    ).select("id", "sig")
+
+
+def _signed(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    shingle_n: int,
+    num_hashes: int,
+    hash_family: str = "xxhash64",
+) -> DataFrame:
+    """``(id, text, sig)``: :func:`minhash_signatures_df` with the text
+    carried along, the input of :func:`minhash_labels_on_driver`, whose
+    read shingles the text next to the signatures."""
     gram_hash, decode = _hash_family(hash_family)
     base = _spread(df).select(
         F.col(id_col).alias("id"),
+        F.col(text_col).alias("text"),
         F.transform(char_grams_all(F.col(text_col), shingle_n), gram_hash).alias(
             "gh"
         ),
     )
     sig_udf = _minhash_fold_udf(decode, num_hashes)
-    return base.select("id", sig_udf(F.col("gh")).alias("sig"))
+    return base.select("id", "text", sig_udf(F.col("gh")).alias("sig"))
 
 
 def minhash_lsh_pairs(
@@ -306,10 +323,30 @@ def _banded(sigs: DataFrame, bands: int, rows_per_band: int) -> DataFrame:
     whole-stage class that compiled and ran slowly. Pinned row-identical
     to it (``tests/specs.banded_columns``)."""
     band = F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("band")
-    slots = F.slice("sig", F.col("band") * rows_per_band + 1, rows_per_band)
     return sigs.select("id", "sig", band).select(
-        "id", "band", F.xxhash64(F.concat_ws(",", slots)).alias("bucket")
+        "id", "band", _band_bucket(F.col("band"), rows_per_band).alias("bucket")
     )
+
+
+def _band_bucket(band: Column, rows_per_band: int) -> Column:
+    """The bucket of band ``band`` of the ``sig`` column: xxhash64 of the
+    band's signature slots. :func:`_banded` explodes it per band, and
+    :func:`minhash_labels_on_driver` reads it per row as an array."""
+    slots = F.slice("sig", band * rows_per_band + 1, rows_per_band)
+    return F.xxhash64(F.concat_ws(",", slots))
+
+
+def _min_bands(bands: int) -> int:
+    """The fewest bands a candidate pair must collide in: two when there
+    are at least 8 bands (see :func:`minhash_lsh_pairs_from_sigs`)."""
+    return 2 if bands >= 8 else 1
+
+
+def _estimate_floor(threshold: float, num_hashes: int) -> float:
+    """The signature prefilter's cut: a candidate whose share of equal
+    signature slots is under ``threshold`` minus 4.5 sigma (sigma at
+    j = 0.5, its maximum) goes no further."""
+    return threshold - 4.5 * (0.25 / num_hashes) ** 0.5
 
 
 def _verified_pairs(
@@ -342,8 +379,11 @@ def _verified_pairs(
     at plan build to prune them (perfbench, 4 cores; at 50k old docs x a
     750-doc delta the two measured within ~4%). If a large-old-corpus
     workload ever shows that prune winning, it returns as a path chosen
-    by input size, not as an option."""
-    sig_margin = 4.5 * (0.25 / num_hashes) ** 0.5  # sigma at j=0.5 (max)
+    by input size, not as an option.
+
+    Its driver twin is :func:`minhash_labels_on_driver`, which must follow
+    any change to the prefilter, the exact check or the ``size(sh) == 2``
+    rule below."""
     sa = sigs.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
     sb = sigs.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
     est = (
@@ -357,7 +397,7 @@ def _verified_pairs(
     prefiltered = (
         cand.join(sa, "id_a")
         .join(sb, "id_b")
-        .filter(est >= threshold - sig_margin)
+        .filter(est >= _estimate_floor(threshold, num_hashes))
         .select("id_a", "id_b")
     )
     # Exact verification with ONE evaluation of the shingled docs: the
@@ -432,7 +472,6 @@ def minhash_lsh_pairs_incremental(
     # holds one bucket per band, so distinct band rows == colliding-band
     # count (a new-new pair arrives twice from the asymmetric join —
     # once per orientation — and must not double its evidence)
-    min_bands = 2 if bands >= 8 else 1
     cand = (
         banded_new.alias("x")
         .join(banded_all.alias("y"), ["band", "bucket"])
@@ -445,7 +484,7 @@ def minhash_lsh_pairs_incremental(
         .distinct()
         .groupBy("id_a", "id_b")
         .count()
-        .filter(F.col("count") >= min_bands)
+        .filter(F.col("count") >= _min_bands(bands))
         .select("id_a", "id_b")
     )
     return _verified_pairs(
@@ -502,7 +541,11 @@ def _guard_split(
     frame is ``star``, so the stage must consume it exactly once
     (``flood_ids`` comes from the sized frame for that reason). A first
     action whose plan AQE empties above ``star`` reports nothing (see
-    :func:`observed_metrics`)."""
+    :func:`observed_metrics`).
+
+    For the MinHash stage, :func:`minhash_labels_on_driver` splits the
+    buckets of small inputs the same way in numpy and must follow any
+    change to the star edges, the flood ids or the telemetry."""
     from pyspark.sql.window import Window
 
     wb = Window.partitionBy(*keys)
@@ -587,7 +630,7 @@ def minhash_lsh_pairs_from_sigs(
     # P(collision) = j^rows per band) almost never collides twice. This
     # count-based cut happens BEFORE any data is joined to the pairs, so
     # the million-candidate shuffle carries only (id, id) + a count.
-    min_bands = 2 if bands >= 8 else 1
+    min_bands = _min_bands(bands)
     small, star = banded, None
     if max_bucket_size is not None:
         small, star, flood_ids = _guard_split(
@@ -1168,6 +1211,312 @@ def neardup_clusters(
         "cluster_size",
         F.count("*").over(Window.partitionBy("canonical_id")),
     )
+
+
+# Most documents (new and old together: the signature rows read) and
+# most bytes of their UTF-8 text for which the curation plans run the
+# MinHash pair stage and the union-find on the driver
+# (:func:`minhash_labels_on_driver`) instead of the Spark plan;
+# :func:`fits_on_driver` checks both. Sized with scripts/size_cc_cap.py
+# --docs (curation_run, guard cap 24, 4 cores, median of 3 warm runs;
+# "over" is the bounded count at BOUND = docs / 2 followed by the Spark
+# plan, what an input over a bound pays; RSS is what the runs added to
+# the Python driver and the JVM). On the perfbench generator, seed 1
+# (~300-byte documents over a 30-word vocabulary):
+#
+#     docs   text MB  driver   spark    over     Python MB  JVM MB (driver/spark)
+#     1,000    0.3    2.00 s   3.59 s   4.03 s      2         148 / 312
+#     3,000    0.9    2.25 s   5.93 s   5.25 s     55         342 / 1,817
+#    10,000    3.0    3.68 s  11.11 s  10.72 s    149       1,154 / 1,849
+#    30,000    9.1    6.46 s  20.02 s  19.76 s    488       1,514 / 4,015
+#
+# On --chars documents of random words over a 20,000-word vocabulary,
+# whose 5-shingles are nearly all distinct, as in extracted text:
+#
+#     docs x bytes   text MB  driver   spark    Python MB  JVM MB (driver/spark)
+#     1,000 x 2,865    2.9    2.97 s   5.06 s     34        520 / 2,669
+#     3,000 x 2,864    8.6    6.12 s   8.17 s    135      1,044 / 2,965
+#    10,000 x   856    8.6    4.91 s  11.07 s    193      1,106 / 1,621
+#
+# Rows are identical under both placements at every size. The driver
+# placement is faster at every size, so a budget of 256 MB added to the
+# Python driver sets both bounds: 10,000 short documents add 149 MB and
+# 30,000 add 488 MB; 8.6 MB of text with BOUND rows adds 193 MB, so 8 MB
+# at either bound stays under the budget. What grows with text is the
+# shingles of every new document (as Arrow strings, then dictionary
+# codes), and the exact check runs in chunks, so pairs add no more.
+BOUND = 10_000
+BOUND_BYTES = 8_000_000
+
+
+def fits_on_driver(*docs: DataFrame) -> bool:
+    """Whether the documents of ``docs`` (frames with a ``text`` column)
+    fit :func:`minhash_labels_on_driver`: at most ``BOUND`` rows holding
+    at most ``BOUND_BYTES`` bytes of UTF-8 text in all. ONE bounded action
+    that reads text lengths only: at most ``BOUND + 1`` rows of each
+    partition, one long each, counted and summed on one partition (two
+    jobs). ``BOUND`` 0 answers False with no action."""
+    if not BOUND:
+        return False
+    lengths = docs[0].select(F.octet_length("text").alias("n"))
+    for d in docs[1:]:
+        lengths = lengths.unionByName(d.select(F.octet_length("text").alias("n")))
+    rows, size = lengths.limit(BOUND + 1).agg(F.count("*"), F.sum("n")).first()
+    return rows <= BOUND and (size or 0) <= BOUND_BYTES
+
+
+def minhash_labels_on_driver(
+    sigs: DataFrame,
+    *,
+    old_sigs: DataFrame | None = None,
+    old_docs: DataFrame | None = None,
+    shingle_n: int = 5,
+    num_hashes: int = 128,
+    bands: int = 32,
+    threshold: float = 0.8,
+    max_bucket_size: int | None = None,
+) -> tuple[DataFrame, dict] | None:
+    """The MinHash pair stage and connected components of a small input,
+    on the driver: the driver twin of :func:`minhash_lsh_pairs_from_sigs`
+    (no old side) or :func:`minhash_lsh_pairs_incremental` (old side),
+    followed by :func:`neardup_clusters` over the new ids. Returns
+    ``(labels, guard)``: ``neardup_clusters``' rows (``doc_id``,
+    ``canonical_id``, ``cluster_size``) for every new document, as a
+    broadcast frame built from a pyarrow Table, and the guard telemetry
+    as a plain dict (``star_candidate_rows``, ``max_oversized_bucket``;
+    empty when ``max_bucket_size`` is None). Returns None when the small
+    buckets hold over ``CAP`` pair-band rows (a flood the guard does not
+    cut); the caller then runs the Spark plan.
+
+    ``sigs`` holds the new documents as ``(id, text, sig)``
+    (:func:`_signed`), the old side ``old_sigs`` (``id``, ``sig``) with
+    its documents ``old_docs`` (``id``, ``text``). The caller checks
+    :func:`fits_on_driver` over the new and old documents first, which
+    bounds what the driver holds: every new document's shingles, the
+    shingles of the old candidates and one signature per row.
+
+    Spark jobs: ONE read of each new doc's ``(id, sig, shingles)`` and
+    each old doc's ``(id, sig)``, with every row's band buckets computed
+    in the same read by :func:`_band_bucket`, the expression
+    :func:`_banded` explodes. With an old side, one ``isin`` read
+    shingles the old documents of the candidates that pass the signature
+    prefilter. Everything else is numpy on the driver:
+
+    * group the ``(band, bucket)`` rows by a sort; with ``max_bucket_size``
+      split them as :func:`_guard_split` does (star edges from each
+      oversized bucket's min id, the flood ids, the telemetry);
+    * pairs of distinct ids sharing a small bucket in at least
+      :func:`_min_bands` bands (one band when both ids are flood
+      members), at least one of the two rows new; pair-band rows are
+      counted first, and more than ``CAP`` of them return None;
+    * the signature prefilter (:func:`_estimate_floor`), then exact
+      Jaccard on the shingle sets, in chunks of about 4M shingles. As in
+      :func:`_verified_pairs`, a pair survives only with exactly one
+      passing signature combination and one document per endpoint, so an
+      id on both the new and the old side pairs with nothing;
+    * union-find over the verified pairs (:func:`_min_id_roots`), and
+      each component's size counted over the new ids, so no Spark window
+      runs either.
+
+    Pairs, labels and telemetry equal the Spark plan's (pinned by the
+    curation tests, which run both placements); a change to the rules of
+    the Spark stages above must be made here too."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    rows_per_band = num_hashes // bands
+    assert rows_per_band * bands == num_hashes, "bands must divide num_hashes"
+    read = sigs.select(
+        "id",
+        "sig",
+        char_ngrams(F.col("text"), shingle_n).alias("shingles"),
+        F.lit(False).alias("old"),
+    )
+    if old_sigs is not None:
+        read = read.unionByName(
+            old_sigs.select(
+                "id",
+                "sig",
+                F.lit(None).cast("array<string>").alias("shingles"),
+                F.lit(True).alias("old"),
+            )
+        )
+    head = read.withColumn(
+        "buckets",
+        F.transform(
+            F.sequence(F.lit(0), F.lit(bands - 1)),
+            lambda b: _band_bucket(b, rows_per_band),
+        ),
+    ).toArrow()
+    spark = sigs.sparkSession
+    n = head.num_rows
+    uid, rank = np.unique(head.column("id").to_numpy(), return_inverse=True)
+    n_ids = len(uid)
+    old = head.column("old").to_numpy()
+
+    # one (row, band, bucket) per row and band, sorted by bucket then id
+    row = np.repeat(np.arange(n), bands)
+    band = np.tile(np.arange(bands), n)
+    bucket = (
+        head.column("buckets").combine_chunks().flatten()
+        .to_numpy(zero_copy_only=False)
+    )
+    order = np.lexsort((rank[row], bucket, band))
+    row, band, bucket = row[order], band[order], bucket[order]
+    first = np.ones(len(row), bool)
+    first[1:] = (band[1:] != band[:-1]) | (bucket[1:] != bucket[:-1])
+    gid = np.cumsum(first) - 1
+    start = np.flatnonzero(first)[gid]  # per member: its bucket's first row
+    size = np.bincount(gid)[gid]
+    member = rank[row]
+
+    guard, star = {}, np.empty(0, np.int64)
+    over = np.zeros(len(row), bool)
+    flood = np.zeros(n_ids, bool)
+    if max_bucket_size is not None:
+        over = size > max_bucket_size
+        lead = member[start]  # members sort by id: the bucket's min id
+        edge = over & (member != lead)
+        star = lead[edge] * n_ids + member[edge]
+        flood[member[over]] = True
+        guard = {
+            "star_candidate_rows": int(edge.sum()),
+            "max_oversized_bucket": int(size[edge].max()) if edge.any() else None,
+        }
+
+    # every pair of rows in one small bucket: row p with row p + k, for
+    # each k up to the number of rows after p in its bucket
+    small = np.flatnonzero(~over)
+    after = (start + size - 1)[small] - small
+    if int(after.sum()) > CAP:
+        return None
+    by_after = small[np.argsort(-after, kind="stable")]
+    desc = -np.sort(-after)
+    xs, ys = [np.empty(0, np.int64)], [np.empty(0, np.int64)]
+    for k in range(1, int(desc[0]) + 1 if len(desc) else 1):
+        p = by_after[: np.searchsorted(-desc, -k, side="right")]
+        xs.append(p)
+        ys.append(p + k)
+    x, y = np.concatenate(xs), np.concatenate(ys)
+    ra, rb = member[x], member[y]
+    ok = (ra != rb) & ~(old[row[x]] & old[row[y]])
+    lo, hi = np.minimum(ra, rb)[ok], np.maximum(ra, rb)[ok]
+    # distinct (pair, band) rows, then the colliding-band count per pair
+    pair_band = np.unique((lo * n_ids + hi) * bands + band[x][ok])
+    pair, count = np.unique(pair_band // bands, return_counts=True)
+    cut = (count >= _min_bands(bands)) | (
+        flood[pair // n_ids] & flood[pair % n_ids]
+    )
+    cand = np.union1d(pair[cut], star)
+
+    def grouped(key):  # positions sorted by id, each id's first, its count
+        by = np.argsort(key, kind="stable")
+        at = np.searchsorted(key[by], np.arange(n_ids))
+        return by, at, np.bincount(key, minlength=n_ids)
+
+    # signature prefilter over every (row of a, row of b) combination
+    a, b = cand // n_ids, cand % n_ids
+    by_id, first_row, per_id = grouped(rank)
+    combos = per_id[a] * per_id[b]
+    c = np.repeat(np.arange(len(cand)), combos)
+    w = np.arange(len(c)) - np.repeat(np.cumsum(combos) - combos, combos)
+    ia = by_id[first_row[a][c] + w // per_id[b][c]]
+    ib = by_id[first_row[b][c] + w % per_id[b][c]]
+    sig = head.column("sig").combine_chunks()
+    valid = sig.is_valid().to_numpy(zero_copy_only=False)
+    mat = np.zeros((n, num_hashes), np.int64)
+    mat[valid] = sig.flatten().to_numpy().reshape(-1, num_hashes)
+    passed = valid[ia] & valid[ib]
+    floor = _estimate_floor(threshold, num_hashes)
+    for s in range(0, len(c), 16384):  # ~32 MB of gathered signatures
+        e = s + 16384
+        eq = (mat[ia[s:e]] == mat[ib[s:e]]).sum(axis=1)
+        passed[s:e] &= eq / num_hashes >= floor
+    n_pass = np.bincount(c[passed], minlength=len(cand))
+    keep = n_pass > 0
+    a, b, n_pass = a[keep], b[keep], n_pass[keep]
+
+    # exact Jaccard on the shingles of every document row of an endpoint:
+    # new rows from the read, old rows from one isin read. The shingles
+    # become dictionary codes, and a pair's intersection is the number of
+    # (pair, code) keys its two documents share
+    ends = np.union1d(a, b)
+    new_rows = np.flatnonzero(~old & np.isin(rank, ends))
+    keys = [rank[new_rows]]
+    lists = [head.column("shingles").take(pa.array(new_rows)).combine_chunks()]
+    if old_docs is not None and len(ends):
+        got = (
+            old_docs.filter(F.col("id").isin(uid[ends].tolist()))
+            .select("id", char_ngrams(F.col("text"), shingle_n).alias("sh"))
+            .toArrow()
+        )
+        keys.append(np.searchsorted(uid, got.column("id").to_numpy()))
+        lists.append(got.column("sh").combine_chunks())
+    sh = pa.concat_arrays(lists)
+    key = np.concatenate(keys)
+    codes = pc.dictionary_encode(sh.flatten(), null_encoding="encode").indices
+    codes = codes.to_numpy(zero_copy_only=False).astype(np.int64)
+    lens = pc.list_value_length(sh).to_numpy(zero_copy_only=False)
+    starts = np.cumsum(lens) - lens
+    # the documents of a pair, as _verified_pairs collects them: those of
+    # both endpoints, once per passing signature combination; it needs
+    # exactly two, so an id with a document on both sides pairs with none
+    doc_order, doc_first, n_docs = grouped(key)
+    two = n_pass * (n_docs[a] + n_docs[b]) == 2
+    a, b = a[two], b[two]
+    da, db = n_docs[a], n_docs[b]
+
+    def nth(q):  # document q of (docs of a) + (docs of b), cyclically
+        q = q % (da + db)
+        return doc_order[
+            np.where(q < da, doc_first[a] + q, doc_first[b] + q - da)
+        ]
+
+    def spans(d):  # every code position of the documents d
+        ln = lens[d]
+        return np.repeat(starts[d] - np.cumsum(ln) + ln, ln) + np.arange(ln.sum())
+
+    d1, d2 = nth(np.zeros(len(a), np.int64)), nth(np.ones(len(a), np.int64))
+    width = int(codes.max(initial=0)) + 1
+    inter = np.zeros(len(a), np.int64)
+    # chunks of about 4M (pair, code) keys, however many pairs pass
+    cum = np.cumsum(lens[d1] + lens[d2])
+    s = 0
+    while s < len(a):
+        done = cum[s - 1] if s else 0
+        e = max(s + 1, int(np.searchsorted(cum, done + (1 << 22), "right")))
+        pk = np.sort(np.concatenate([
+            np.repeat(np.arange(e - s), lens[d[s:e]]) * width
+            + codes[spans(d[s:e])]
+            for d in (d1, d2)
+        ]))
+        inter[s:e] = np.bincount(
+            pk[1:][pk[1:] == pk[:-1]] // width, minlength=e - s
+        )
+        s = e
+    union = lens[d1] + lens[d2] - inter
+    # the division, not a product, so the cut rounds as Spark's does
+    hit = (union > 0) & (inter / np.maximum(union, 1) >= threshold)
+    # union-find, then neardup_clusters' rows for every new id: the
+    # canonical (min) id of its component, which an old id can be, and
+    # the number of new ids sharing it
+    nodes, roots = _min_id_roots(a[hit], b[hit])
+    canon = np.arange(n_ids)
+    canon[nodes] = roots
+    new_ids = rank[~old]
+    _, where, sizes = np.unique(
+        canon[new_ids], return_inverse=True, return_counts=True
+    )
+    t = head.schema.field("id").type
+    labels = spark.createDataFrame(
+        pa.table({
+            "doc_id": pa.array(uid[new_ids], type=t),
+            "canonical_id": pa.array(uid[canon[new_ids]], type=t),
+            "cluster_size": pa.array(sizes[where], type=pa.int64()),
+        })
+    )
+    return F.broadcast(labels), guard
 
 
 # ---------------------------------------------------------------------------

@@ -56,15 +56,19 @@ def _gate(
     )
 
 
-def _keep_canonicals(kept: DataFrame, pairs: DataFrame) -> DataFrame:
+def _ids(docs: DataFrame, *cols: str) -> DataFrame:
+    """The ids of ``docs`` as connected components label them, with
+    ``cols`` alongside."""
+    return docs.select(F.col("doc_id").alias("id"), *cols)
+
+
+def _keep_canonicals(kept: DataFrame, clusters: DataFrame) -> DataFrame:
     """The curation tail of :func:`curation_pipeline`, :func:`curation_run`
-    and :func:`curate_increment`: connected components over ``pairs``
-    (``id_a``, ``id_b``) labelling the gated ``kept`` docs, then each doc
-    that is its component's ``canonical_id`` (the min id), as the curated
-    ``(doc_id, cluster_size, n_tokens, quality)``."""
-    clusters = dedup.neardup_clusters(
-        kept.select(F.col("doc_id").alias("id")), pairs
-    )
+    and :func:`curate_increment`: given the connected components that
+    label the gated ``kept`` docs (``dedup.neardup_clusters`` over
+    :func:`_ids`, or the labels of ``dedup.minhash_labels_on_driver``),
+    each doc that is its component's ``canonical_id`` (the min id), as
+    the curated ``(doc_id, cluster_size, n_tokens, quality)``."""
     canon = clusters.filter(
         F.col("doc_id") == F.col("canonical_id")
     ).select("doc_id", "cluster_size")
@@ -119,7 +123,9 @@ def curation_pipeline(
     quality-passing docs sharing ``decon_n``-token n-grams with it are
     dropped before dedup (see dedup.decontaminate for the plan shape)."""
     kept = _gated(docs, decontaminate_against, decon_n)
-    return _keep_canonicals(kept, pair_fn(kept))
+    return _keep_canonicals(
+        kept, dedup.neardup_clusters(_ids(kept), pair_fn(kept))
+    )
 
 
 def curate_increment(
@@ -138,7 +144,22 @@ def curate_increment(
     the daily form of the 100 TB pipeline: only new docs quality-score,
     fingerprint and minhash; the old corpus contributes a fingerprint
     anti-join and its (persisted) signature table, and pairs are
-    new x new ∪ new x old (dedup.minhash_lsh_pairs_incremental).
+    new x new ∪ new x old, with no mega-cluster guard.
+
+    The pair stage's placement is chosen while the frame is BUILT, by one
+    bounded action that reads text lengths only (``dedup.fits_on_driver``
+    over the gated batch and ``old_docs``: at most ``dedup.BOUND + 1``
+    rows, counted and summed). At or under ``BOUND`` documents and
+    ``BOUND_BYTES`` bytes of text, new and old together, one read takes
+    the new docs' ``(id, sig, shingles)`` and the old side's ``(id, sig)``
+    with their band buckets, one ``isin`` read shingles the old
+    candidates, and the pair stage (no guard) and connected components
+    run on the driver (``dedup.minhash_labels_on_driver``); the labels
+    come back as a broadcast frame. Otherwise the Spark plan runs: the
+    new signatures as an eager local checkpoint,
+    ``dedup.minhash_lsh_pairs_incremental``, then
+    ``dedup.neardup_clusters``, whose bounded collect also runs at build
+    time. Either way only the gated batch stays cached.
 
     ``old_docs`` is the already-curated corpus (pairwise non-near-dup
     canonicals — what curation_pipeline keeps). ``old_sigs`` is its
@@ -184,6 +205,20 @@ def curate_increment(
             old_docs, "doc_id", "text",
             shingle_n=shingle_n, num_hashes=num_hashes,
         )
+    kw = dict(
+        shingle_n=shingle_n, num_hashes=num_hashes, bands=bands,
+        threshold=threshold,
+    )
+    placed = None
+    if dedup.fits_on_driver(kept, old_docs):
+        placed = dedup.minhash_labels_on_driver(
+            dedup._signed(kept, "doc_id", "text", shingle_n, num_hashes),
+            old_sigs=old_sigs,
+            old_docs=_ids(old_docs, "text"),
+            **kw,
+        )
+    if placed is not None:
+        return _keep_canonicals(kept, placed[0])
     docs_all = kept.select("doc_id", "text").unionByName(
         old_docs.select("doc_id", "text")
     )
@@ -198,14 +233,14 @@ def curate_increment(
     ).localCheckpoint()
     try:
         pairs = dedup.minhash_lsh_pairs_incremental(
-            new_sigs, old_sigs, docs_all, "doc_id", "text",
-            shingle_n=shingle_n, num_hashes=num_hashes,
-            bands=bands, threshold=threshold,
+            new_sigs, old_sigs, docs_all, "doc_id", "text", **kw
         )
         # ONE graph, new x new ∪ new x old: an old endpoint gets no row
         # but still links its neighbours, so a new-side cluster touching
         # the old corpus is rooted at an old id and keeps no doc
-        return _keep_canonicals(kept, pairs)
+        return _keep_canonicals(
+            kept, dedup.neardup_clusters(_ids(kept), pairs)
+        )
     finally:
         # connected components ran the pair stage in their one bounded
         # collect, and the labels they return never read it again
@@ -236,7 +271,23 @@ def curation_run(
     ``star_candidate_rows`` is 0 (and ``flood_regime`` False) on a clean
     corpus; nonzero means some band bucket blew the cap and the pair
     stage switched that bucket to O(m) star edges (still exactly
-    verified — see dedup.minhash_lsh_pairs_from_sigs)."""
+    verified — see dedup.minhash_lsh_pairs_from_sigs).
+
+    The pair stage's placement is chosen at run time, after the gate, by
+    one bounded action that reads text lengths only
+    (``dedup.fits_on_driver``: at most ``dedup.BOUND + 1`` rows, counted
+    and summed). At or under ``BOUND`` documents and ``BOUND_BYTES``
+    bytes of text, one read takes each doc's ``(id, sig, shingles)`` and
+    band buckets, and the guarded stage and connected components run on the
+    driver (``dedup.minhash_labels_on_driver``); the labels are a
+    broadcast frame and the guard telemetry a plain dict, so no
+    Observation and no recount is needed, and no signature table is
+    persisted. Otherwise the Spark plan runs: the signatures persisted
+    and filled eagerly, ``minhash_lsh_pairs_from_sigs`` with the guard
+    Observation, then ``neardup_clusters``, and a guard Observation that
+    AQE dropped (no pair verified) is recounted in one action. Then the
+    write, which counts the output through an Observation, and
+    ``docs.count()`` for ``n_input``."""
     from ..sources import spark_io
 
     # the Observation is only ever ATTACHED by the guarded pair stage —
@@ -244,35 +295,41 @@ def curation_run(
     # the output write, so skip the telemetry entirely in that case
     obs = Observation("lsh_guard") if max_bucket_size is not None else None
     kept = _gated(docs, decontaminate_against, decon_n=13)
-    # the pair stage of dedup.minhash_lsh_pairs, composed here so that this
-    # run owns the signature cache it releases once the guard telemetry is
-    # read: the signatures feed banding and both prefilter sides, and the
-    # guarded plan fans them out to five consumers, so they are filled
-    # eagerly (see minhash_lsh_pairs)
-    sigs = dedup.minhash_signatures_df(
-        kept, "doc_id", "text", shingle_n=shingle_n, num_hashes=num_hashes
-    ).select("id", "sig").persist()
+    kw = dict(
+        shingle_n=shingle_n, num_hashes=num_hashes, bands=bands,
+        threshold=threshold, max_bucket_size=max_bucket_size,
+    )
+    placed = None
+    if dedup.fits_on_driver(kept):
+        placed = dedup.minhash_labels_on_driver(
+            dedup._signed(kept, "doc_id", "text", shingle_n, num_hashes), **kw
+        )
+    sigs = None
     try:
-        if max_bucket_size is not None:
-            sigs.count()
-        pairs = dedup.minhash_lsh_pairs_from_sigs(
-            sigs,
-            kept,
-            "doc_id",
-            "text",
-            shingle_n=shingle_n,
-            num_hashes=num_hashes,
-            bands=bands,
-            threshold=threshold,
-            max_bucket_size=max_bucket_size,
-            observation=obs,
-        ).select("id_a", "id_b")
-        out = _keep_canonicals(kept, pairs)
+        if placed is None:
+            # the pair stage of dedup.minhash_lsh_pairs, composed here so
+            # that this run owns the signature cache it releases once the
+            # guard telemetry is read: the signatures feed banding and both
+            # prefilter sides, and the guarded plan fans them out to five
+            # consumers, so they are filled eagerly (see minhash_lsh_pairs)
+            sigs = dedup.minhash_signatures_df(
+                kept, "doc_id", "text",
+                shingle_n=shingle_n, num_hashes=num_hashes,
+            ).select("id", "sig").persist()
+            if max_bucket_size is not None:
+                sigs.count()
+            pairs = dedup.minhash_lsh_pairs_from_sigs(
+                sigs, kept, "doc_id", "text", observation=obs, **kw
+            ).select("id_a", "id_b")
+            clusters = dedup.neardup_clusters(_ids(kept), pairs)
+        else:
+            clusters, guard = placed
+        out = _keep_canonicals(kept, clusters)
         output_path = os.path.join(run_dir, "curated.parquet")
-        # the guard observation has fired already, in neardup_clusters'
-        # bounded collect of the edge list (the one action that runs the
-        # observed pair stage); `written` fires on the write, which counts
-        # its own rows
+        # on the Spark plan the guard observation has fired already, in
+        # neardup_clusters' bounded collect of the edge list (the one
+        # action that runs the observed pair stage); `written` fires on
+        # the write, which counts its own rows
         written = Observation("curated")
         spark_io.write_table(
             out.observe(written, F.count("*").alias("n")), output_path,
@@ -282,9 +339,8 @@ def curation_run(
         # a separate action: docs is consumed only inside the persisted
         # kept subtree, and an observation there never fires on a cache hit
         n_input = docs.count()
-        guard = {}
-        if obs is not None:
-            guard = dedup.observed_metrics(obs)
+        if placed is None:
+            guard = {} if obs is None else dedup.observed_metrics(obs)
         if guard is None:
             # no pair survived, so AQE emptied the pair stage's plan above
             # the observed star frame, which may still hold star edges (a
@@ -299,7 +355,8 @@ def curation_run(
             star.agg(F.count("*")).collect()
             guard = dedup.observed_metrics(recount)
     finally:
-        sigs.unpersist()
+        if sigs is not None:
+            sigs.unpersist()
     max_over = guard.get("max_oversized_bucket")
     summary = {
         "n_input": int(n_input),

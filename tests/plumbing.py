@@ -303,3 +303,16 @@ def file_stream_source(
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.load(path)
+
+
+def placements(monkeypatch):
+    """Yield the name of each placement of the curation plans' MinHash
+    pair stage, with ``dedup.BOUND`` patched to select it: ``spark``
+    (``BOUND`` 0 sends every input to the Spark plan) and ``driver`` (the
+    default ``BOUND``, which covers the small inputs of the tests)."""
+    from adaptive_pdf_extractor_spark.operators import dedup
+
+    default = dedup.BOUND
+    for name, bound in (("spark", 0), ("driver", default)):
+        monkeypatch.setattr(dedup, "BOUND", bound)
+        yield name

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from adaptive_pdf_extractor_spark.operators import dedup, similarity
 from adaptive_pdf_extractor_spark.sources import corpus as corpus_mod
+from plumbing import placements
 from specs import (
     banded_columns,
     lsh_bucket_expr,
@@ -1180,12 +1181,25 @@ def test_gram_bloom_no_false_negatives_and_fpr():
     assert not bloom_contains(np, bits0, k0, m0, others[:100]).any()
 
 
+def _increment_plans(monkeypatch):
+    """Yield ``(placement, CAP)`` for every plan of ``curate_increment``'s
+    pair graph: the Spark placement under both connected-components plans
+    (``CAP`` 0 forces the star contraction), then the driver placement,
+    which labels its graph itself."""
+    caps = (0, dedup.CAP)
+    for place in placements(monkeypatch):
+        for cap in caps if place == "spark" else caps[1:]:
+            monkeypatch.setattr(dedup, "CAP", cap)
+            yield place, cap
+
+
 def test_curate_increment_transitive_taint(spark, monkeypatch):
     """A new doc connected to the old corpus only THROUGH another new doc
     (chain old-A ~ new-B ~ new-C, no direct A~C pair) must also drop:
     full re-curation folds the whole chain under A, and so does the one
-    new x new ∪ new x old graph, whose component is rooted at A. Both
-    connected-components plans (``CAP`` 0 forces the star contraction)."""
+    new x new ∪ new x old graph, whose component is rooted at A. Every
+    plan: both placements of the pair stage and, on the Spark one, both
+    connected-components plans."""
     from adaptive_pdf_extractor_spark.plans.curation import curate_increment
 
     w = [f"tok{i:03d}" for i in range(100)]
@@ -1213,10 +1227,11 @@ def test_curate_increment_transitive_taint(spark, monkeypatch):
 
     old = trio.filter(F.col("doc_id") == 1)
     new = trio.filter(F.col("doc_id") > 1)
-    for cap in (0, dedup.CAP):
-        monkeypatch.setattr(dedup, "CAP", cap)
+    for place, cap in _increment_plans(monkeypatch):
         # B links to A directly, C only through B
-        assert curate_increment(new, old, threshold=thr).collect() == [], cap
+        assert curate_increment(new, old, threshold=thr).collect() == [], (
+            place, cap
+        )
 
 
 def _window_doc(start: int, n: int = 100) -> str:
@@ -1233,7 +1248,8 @@ def _window_doc(start: int, n: int = 100) -> str:
 
 def test_curate_increment_labels_one_graph(spark, monkeypatch):
     """``curate_increment`` keeps the min-id canonicals of ONE graph over
-    new x new ∪ new x old pairs, under both connected-components plans:
+    new x new ∪ new x old pairs, under every plan (both placements of the
+    pair stage, both connected-components plans on the Spark one):
 
     * two new clusters (101~102, 103~104) bridged only by old doc 1 both
       drop: the component is rooted at 1;
@@ -1265,10 +1281,9 @@ def test_curate_increment_labels_one_graph(spark, monkeypatch):
     }
     old = docs.filter(F.col("doc_id").isin(1, 1000))
     new = docs.filter(~F.col("doc_id").isin(1, 1000))
-    for cap in (0, dedup.CAP):
-        monkeypatch.setattr(dedup, "CAP", cap)
+    for place, cap in _increment_plans(monkeypatch):
         kept = {
             (r["doc_id"], r["cluster_size"])
             for r in curate_increment(new, old, threshold=thr).collect()
         }
-        assert kept == {(5, 1), (201, 3)}, cap
+        assert kept == {(5, 1), (201, 3)}, (place, cap)

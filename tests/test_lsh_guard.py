@@ -12,6 +12,7 @@ from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
 from adaptive_pdf_extractor_spark.operators import dedup, similarity
+from plumbing import placements
 
 # ~640 chars, stopword-rich (passes the curation quality gate), shared by
 # every member of a planted mega-cluster; each doc appends a unique marker
@@ -149,49 +150,60 @@ def test_curation_lsh_flows_5k_mega_cluster(spark):
     assert sum(r["cluster_size"] for r in out) == m
 
 
-def test_curation_run_manifest_persists_guard_metrics(spark, tmp_path):
+def test_curation_run_manifest_persists_guard_metrics(
+    spark, tmp_path, monkeypatch
+):
     """curation_run commits the guard telemetry INTO the run manifest
     (round-5 ask): nonzero star_candidate_rows + flood_regime on a
     template flood, zero / False on a clean corpus — readable from
-    manifest.json on disk, next to the committed output table."""
+    manifest.json on disk, next to the committed output table. Both
+    placements of the pair stage commit the same summaries and rows."""
     import json
     import os
 
     from adaptive_pdf_extractor_spark.plans.curation import curation_run
 
-    flood_dir = str(tmp_path / "flood")
-    summary = curation_run(
-        _mega_docs(spark, 1200, partitions=8), flood_dir, max_bucket_size=256
-    )
-    on_disk = json.load(open(os.path.join(flood_dir, "manifest.json")))
-    assert on_disk["status"] == "complete"
-    g = on_disk["summary"]["guard"]
-    assert g["star_candidate_rows"] > 0
-    assert g["max_oversized_bucket"] > 256
-    assert g["flood_regime"] is True
-    assert on_disk["summary"] == summary
-    curated = spark.read.parquet(on_disk["output_path"])
-    # the flood collapses: few canonicals, every input doc accounted for
-    assert curated.count() < 10
-    assert on_disk["summary"]["n_input"] == 1200
+    got = {}
+    for place in placements(monkeypatch):
+        flood_dir = str(tmp_path / place / "flood")
+        summary = curation_run(
+            _mega_docs(spark, 1200, partitions=8), flood_dir,
+            max_bucket_size=256,
+        )
+        on_disk = json.load(open(os.path.join(flood_dir, "manifest.json")))
+        assert on_disk["status"] == "complete"
+        g = on_disk["summary"]["guard"]
+        assert g["star_candidate_rows"] > 0
+        assert g["max_oversized_bucket"] > 256
+        assert g["flood_regime"] is True
+        assert on_disk["summary"] == summary
+        curated = spark.read.parquet(on_disk["output_path"])
+        # the flood collapses: few canonicals, every input doc accounted for
+        assert curated.count() < 10
+        assert on_disk["summary"]["n_input"] == 1200
 
-    clean_dir = str(tmp_path / "clean")
-    s2 = curation_run(_mixed_docs(spark), clean_dir, max_bucket_size=256)
-    on2 = json.load(open(os.path.join(clean_dir, "manifest.json")))
-    assert on2["summary"]["guard"]["star_candidate_rows"] == 0
-    assert on2["summary"]["guard"]["flood_regime"] is False
-    assert on2["summary"]["guard"]["max_oversized_bucket"] is None
-    assert s2["n_output"] > 0
+        clean_dir = str(tmp_path / place / "clean")
+        s2 = curation_run(_mixed_docs(spark), clean_dir, max_bucket_size=256)
+        on2 = json.load(open(os.path.join(clean_dir, "manifest.json")))
+        assert on2["summary"]["guard"]["star_candidate_rows"] == 0
+        assert on2["summary"]["guard"]["flood_regime"] is False
+        assert on2["summary"]["guard"]["max_oversized_bucket"] is None
+        assert s2["n_output"] > 0
 
-    # guard OFF: the run must still complete and commit its manifest
-    # (no Observation is ever attached -> no telemetry, not a crash)
-    off_dir = str(tmp_path / "guard_off")
-    s3 = curation_run(_mixed_docs(spark), off_dir, max_bucket_size=None)
-    on3 = json.load(open(os.path.join(off_dir, "manifest.json")))
-    assert on3["status"] == "complete"
-    assert on3["summary"]["guard"]["max_bucket_size"] is None
-    assert on3["summary"]["guard"]["star_candidate_rows"] == 0
-    assert s3["n_output"] == s2["n_output"]
+        # guard OFF: the run must still complete and commit its manifest
+        # (no Observation is ever attached -> no telemetry, not a crash)
+        off_dir = str(tmp_path / place / "guard_off")
+        s3 = curation_run(_mixed_docs(spark), off_dir, max_bucket_size=None)
+        on3 = json.load(open(os.path.join(off_dir, "manifest.json")))
+        assert on3["status"] == "complete"
+        assert on3["summary"]["guard"]["max_bucket_size"] is None
+        assert on3["summary"]["guard"]["star_candidate_rows"] == 0
+        assert s3["n_output"] == s2["n_output"]
+        got[place] = [
+            (s, sorted(spark.read.parquet(os.path.join(d, "curated.parquet")).collect()))
+            for s, d in ((summary, flood_dir), (s2, clean_dir), (s3, off_dir))
+        ]
+    assert got["driver"] == got["spark"]
 
 
 def _jobs_of(spark, group: str, fn):
@@ -205,20 +217,30 @@ def _jobs_of(spark, group: str, fn):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_curation_run_job_count_and_cached_frames(spark, tmp_path):
+def test_curation_run_job_count_and_cached_frames(spark, tmp_path, monkeypatch):
     """Pinned Spark job count of one guarded curation_run on a small flood
-    corpus, and the cached frames it leaves: ``kept`` only (the run
-    releases the signature table it persisted once the guard telemetry
-    is read). No job runs while the pair stage is
-    built, connected components run one bounded collect of the persisted
-    edge list (the cache's own query stage is one job) and label the
-    small pair graph on the driver, and ``n_output`` is an Observation
+    corpus under each placement of the pair stage, and the cached frames
+    it leaves: ``kept`` only (the run releases the signature table it
+    persisted, and neither placement leaves a local checkpoint). No job
+    runs while a pair stage is built, and ``n_output`` is an Observation
     on the output write. The gate scores each document once, in one
-    aggregate with no self semi-join. Former formulations submitted 30 or
-    31 jobs (the two-branch gate keeper), 72 (a candidate-endpoint prune
-    materialized at plan build, ``isEmpty`` + ``count``, the output table
-    read back and counted) and 58 (the star contraction on every graph, a
-    ``localCheckpoint`` + ``count`` + ``isEmpty`` per round)."""
+    aggregate with no self semi-join.
+
+    * ``driver``: one bounded count of text lengths (two jobs), one read
+      of each doc's signature, shingles and band buckets, and union-find
+      on the driver, whose labels are a broadcast frame (no window, no
+      edge list, no persisted signatures).
+    * ``spark`` (``BOUND`` 0, no bounded count): one eager count fills the
+      signature cache, and connected components run one bounded collect
+      of the persisted edge list (the cache's own query stage is one
+      job) and label the small pair graph on the driver.
+
+    The cache is cleared before each run, so both gate the corpus cold.
+    Former formulations submitted 30 or 31 (the two-branch gate keeper),
+    72 (a candidate-endpoint prune materialized at plan build,
+    ``isEmpty`` + ``count``, the output table read back and counted) and
+    58 (the star contraction on every graph, a ``localCheckpoint`` +
+    ``count`` + ``isEmpty`` per round)."""
     from adaptive_pdf_extractor_spark.plans.curation import curation_run
 
     sc = spark.sparkContext
@@ -232,37 +254,50 @@ def test_curation_run_job_count_and_cached_frames(spark, tmp_path):
         .withColumn("doc_id", F.col("doc_id") + 5000)
         .unionByName(_mixed_docs(spark).coalesce(1))
     )
-    before = cached_ids()
-    summary, n_jobs = _jobs_of(
-        spark, "pin_curation_run",
-        lambda: curation_run(docs, str(tmp_path / "pin"), max_bucket_size=24),
-    )
-    n_cached = len(cached_ids() - before)
-    # 28 in five of five runs on 4 cores; the two-branch gate keeper took
-    # 30 or 31, by which of its independent stages finished first
-    assert n_jobs == 28 and n_cached == 1, (n_jobs, n_cached)
-    assert summary["n_input"] == 360
-    assert summary["n_output"] == 2  # the whole corpus shares BASE
-    assert summary["guard"]["flood_regime"] is True
-    out = spark.read.parquet(str(tmp_path / "pin" / "curated.parquet"))
-    assert out.count() == summary["n_output"]
+    got = {}
+    for place in placements(monkeypatch):
+        spark.catalog.clearCache()
+        before = cached_ids()
+        summary, n_jobs = _jobs_of(
+            spark, f"pin_curation_run_{place}",
+            lambda: curation_run(
+                docs, str(tmp_path / place), max_bucket_size=24
+            ),
+        )
+        got[place] = (n_jobs, len(cached_ids() - before))
+        assert summary["n_input"] == 360
+        assert summary["n_output"] == 2  # the whole corpus shares BASE
+        assert summary["guard"]["flood_regime"] is True
+        out = spark.read.parquet(str(tmp_path / place / "curated.parquet"))
+        assert out.count() == summary["n_output"]
+    assert got == {"spark": (28, 1), "driver": (9, 1)}, got
 
 
-def test_curate_increment_job_count(spark):
+def test_curate_increment_job_count(spark, monkeypatch):
     """Pinned Spark job count of ``curate_increment(...).count()`` on a
-    small delta against a small flood corpus: 10 near-dup mutations of
-    the flood, 10 re-ingestions, 10 unseen documents and a near-dup twin
-    of three of them. Its one new x new ∪ new x old graph is labelled by
-    numpy union-find after one bounded collect of the persisted edge list
-    (the cache's own query stage is one of the jobs). The new-side signatures
-    are an eager local checkpoint, released once the labels exist, so the
-    only cache left behind is the gated batch ``kept``. Former
-    formulations submitted 24 jobs (the two-branch gate keeper), 58 (the
-    star contraction, a ``localCheckpoint`` + ``count`` + ``isEmpty`` per
-    round) and 35
-    (new-new clustering plus an old-side taint: endpoint-flag joins over
-    a persisted pair frame, distincts and an anti-join; that frame and
-    the new-side signatures stayed cached)."""
+    small delta against a small flood corpus under each placement of the
+    pair stage: 10 near-dup mutations of the flood, 10 re-ingestions, 10
+    unseen documents and a near-dup twin of three of them. The only
+    cache left behind is the gated batch ``kept``.
+
+    * ``driver``: one bounded count of new and old text lengths (two
+      jobs), one read of new ``(id, sig, shingles)`` and old ``(id, sig)``
+      with their band buckets (the old signatures computed from the old
+      docs here, as no table is passed), one ``isin`` read shingling the
+      old candidates, union-find on the driver.
+    * ``spark`` (``BOUND`` 0, no bounded count): the new-side signatures
+      are an eager local checkpoint, released once the labels exist, and
+      the incremental pair graph is labelled by numpy union-find after
+      one bounded collect of the persisted edge list (the cache's own
+      query stage is one of the jobs).
+
+    The cache is cleared before each run, so both gate the batch cold.
+    Former formulations submitted 24 jobs (the two-branch gate keeper),
+    58 (the star contraction, a ``localCheckpoint`` + ``count`` +
+    ``isEmpty`` per round) and 35 (new-new clustering plus an old-side
+    taint: endpoint-flag joins over a persisted pair frame, distincts
+    and an anti-join; that frame and the new-side signatures stayed
+    cached)."""
     from adaptive_pdf_extractor_spark.plans.curation import curate_increment
 
     old = (
@@ -293,14 +328,17 @@ def test_curate_increment_job_count(spark):
     )
     delta = mutated.unionByName(reingested).unionByName(unseen)
     sc = spark.sparkContext
-    before = set(sc._jsc.getPersistentRDDs().keys())
-    n, n_jobs = _jobs_of(
-        spark, "pin_curate_increment",
-        lambda: curate_increment(delta, old, threshold=0.8).count(),
-    )
-    n_cached = len(set(sc._jsc.getPersistentRDDs().keys()) - before)
-    # 18 in five of five runs on 4 cores (24 with the two-branch gate)
-    assert n == 10 and n_jobs == 18 and n_cached == 1, (n, n_jobs, n_cached)
+    got = {}
+    for place in placements(monkeypatch):
+        spark.catalog.clearCache()
+        before = set(sc._jsc.getPersistentRDDs().keys())
+        n, n_jobs = _jobs_of(
+            spark, f"pin_curate_increment_{place}",
+            lambda: curate_increment(delta, old, threshold=0.8).count(),
+        )
+        n_cached = len(set(sc._jsc.getPersistentRDDs().keys()) - before)
+        got[place] = (n, n_jobs, n_cached)
+    assert got == {"spark": (10, 18, 1), "driver": (10, 12, 1)}, got
 
 
 def test_neardup_clusters_build_job_count(spark):
@@ -344,33 +382,28 @@ def test_minhash_pairs_observation_dropped_without_pairs(spark):
     assert dedup.observed_metrics(obs) is None
 
 
-def test_curation_run_reports_guard_when_no_pair_survives(spark, tmp_path):
+def test_curation_run_reports_guard_when_no_pair_survives(
+    spark, tmp_path, monkeypatch
+):
     """A guarded curation_run whose pair stage verifies no pair still
-    commits its telemetry. AQE empties that plan above the observed star
-    frame, so its Observation completes without metrics, and the run
-    sizes the band buckets in one action of its own instead. A 0- and a
-    1-document corpus give the unguarded run's summary with the cap
-    recorded; a template flood whose members all verify below the
-    threshold keeps its exact star count. The former code raised on all
-    three at ``obs.get``."""
+    commits its telemetry, under both placements of the pair stage. On
+    the Spark plan, AQE empties that plan above the observed star frame,
+    so its Observation completes without metrics, and the run sizes the
+    band buckets in one action of its own instead. On the driver the
+    telemetry is the placement's own dict, and no recount runs (no guard
+    split is built at all). A 0- and a 1-document corpus give the
+    unguarded run's summary with the cap recorded; a template flood whose
+    members all verify below the threshold keeps its exact star count.
+    The former code raised on all three at ``obs.get``."""
     import hashlib
 
     from adaptive_pdf_extractor_spark.plans.curation import curation_run
 
-    for rows in ([], [(1, BASE)]):
-        docs = spark.createDataFrame(rows, "doc_id long, text string")
-        guarded = curation_run(docs, str(tmp_path / f"guarded{len(rows)}"))
-        unguarded = curation_run(
-            docs, str(tmp_path / f"unguarded{len(rows)}"), max_bucket_size=None
-        )
-        assert guarded["guard"] == {
-            "max_bucket_size": 256,
-            "star_candidate_rows": 0,
-            "max_oversized_bucket": None,
-            "flood_regime": False,
-        }
-        assert guarded == {**unguarded, "guard": guarded["guard"]}
-
+    splits = []
+    split = dedup._guard_split
+    monkeypatch.setattr(
+        dedup, "_guard_split", lambda *a, **k: splits.append(1) or split(*a, **k)
+    )
     # every doc = BASE + 20 random hex tokens: pairwise jaccard ~0.6, so
     # band buckets overflow a cap of 24 but no pair reaches 0.8
     rows = [
@@ -379,9 +412,8 @@ def test_curation_run_reports_guard_when_no_pair_survives(spark, tmp_path):
         ))
         for i in range(300)
     ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    summary = curation_run(docs, str(tmp_path / "flood"), max_bucket_size=24)
-    sigs = dedup.minhash_signatures_df(docs, "doc_id", "text")
+    flood = spark.createDataFrame(rows, "doc_id long, text string")
+    sigs = dedup.minhash_signatures_df(flood, "doc_id", "text")
     sizes = [
         r["n"]
         for r in dedup._banded(sigs, 32, 4)
@@ -390,13 +422,39 @@ def test_curation_run_reports_guard_when_no_pair_survives(spark, tmp_path):
         .filter(F.col("n") > 24)
         .collect()
     ]
-    assert summary["n_output"] == 300
-    assert summary["guard"] == {
-        "max_bucket_size": 24,
-        "star_candidate_rows": sum(n - 1 for n in sizes),
-        "max_oversized_bucket": max(sizes),
-        "flood_regime": True,
-    }
+    got = {}
+    for place in placements(monkeypatch):
+        splits.clear()
+        for rows in ([], [(1, BASE)]):
+            docs = spark.createDataFrame(rows, "doc_id long, text string")
+            guarded = curation_run(
+                docs, str(tmp_path / place / f"guarded{len(rows)}")
+            )
+            unguarded = curation_run(
+                docs, str(tmp_path / place / f"unguarded{len(rows)}"),
+                max_bucket_size=None,
+            )
+            assert guarded["guard"] == {
+                "max_bucket_size": 256,
+                "star_candidate_rows": 0,
+                "max_oversized_bucket": None,
+                "flood_regime": False,
+            }
+            assert guarded == {**unguarded, "guard": guarded["guard"]}
+        summary = curation_run(
+            flood, str(tmp_path / place / "flood"), max_bucket_size=24
+        )
+        assert summary["n_output"] == 300
+        assert summary["guard"] == {
+            "max_bucket_size": 24,
+            "star_candidate_rows": sum(n - 1 for n in sizes),
+            "max_oversized_bucket": max(sizes),
+            "flood_regime": True,
+        }
+        got[place] = len(splits)
+    # the Spark plan splits in each guarded pair stage and each recount;
+    # the driver never builds a split
+    assert got["driver"] == 0 and got["spark"] >= 3, got
 
 
 def test_simhash_guard_bit_compatible_and_bounded(spark):
@@ -496,28 +554,26 @@ def test_embedding_guard_bit_compatible_and_bounded(spark):
     assert {r["canonical_id"] for r in clusters} == {0}
 
 
-def test_minhash_guard_split_evidence_pair_survives(spark):
-    """A true pair whose band collisions are SPLIT between an oversized
-    bucket and a single small bucket must still be emitted: the oversized
-    collision is invisible to the >=2-band count (those buckets emit star
-    edges), so the cut relaxes to 1 band for pairs with an endpoint in
-    any oversized bucket. Crafted signatures pin the scenario exactly;
-    exact verification still gates the output on real text."""
-    m, cap = 300, 256
-    S = [i * 1000 + 7 for i in range(128)]  # the flood's signature
-    rows = []
-    # flood: identical signatures, mutually near-identical template texts
-    for i in range(m):
-        rows.append((1000 + i, BASE + f" flood u{i:04d}", list(S)))
-    # a=1, b=2: texts near-identical to EACH OTHER, unrelated to the
-    # flood; signatures share band 3 with the flood (slots 12..15) and a
-    # private band 9 (slots 36..39), agree in 3 of 4 slots elsewhere (98
-    # equal slots total -> passes the signature prefilter at j>=0.8)
-    U = ("completely different subject matter about ships and harbors "
+# unrelated to BASE: the topic of the split-evidence pair
+SHIPS = ("completely different subject matter about ships and harbors "
          "where the tide rises and the gulls wheel over the quay while "
          "fishermen mend their nets beside weathered boats and the "
          "lighthouse keeper climbs the spiral stair to trim the lamp "
          "before night settles on the cold grey water of the bay")
+
+
+def _split_evidence_rows(m: int = 300):
+    """``(id, text, sig)`` rows with crafted signatures: a flood of ``m``
+    identical signatures (ids 1000..) over mutually near-identical
+    template texts, and a true pair 1 ~ 2 whose band collisions are
+    SPLIT between the flood's bucket of band 3 and a private bucket of
+    band 9."""
+    S = [i * 1000 + 7 for i in range(128)]  # the flood's signature
+    rows = [(1000 + i, BASE + f" flood u{i:04d}", list(S)) for i in range(m)]
+    # a=1, b=2: texts near-identical to EACH OTHER, unrelated to the
+    # flood; signatures share band 3 with the flood (slots 12..15) and a
+    # private band 9 (slots 36..39), agree in 3 of 4 slots elsewhere (98
+    # equal slots total -> passes the signature prefilter at j>=0.8)
     siga, sigb = [], []
     for slot in range(128):
         band = slot // 4
@@ -529,8 +585,18 @@ def test_minhash_guard_split_evidence_pair_survives(spark):
             siga.append(6_000_000 + slot); sigb.append(7_000_000 + slot)
         else:
             siga.append(8_000_000 + slot); sigb.append(8_000_000 + slot)
-    rows.append((1, U, siga))
-    rows.append((2, U[10:], sigb))
+    return rows + [(1, SHIPS, siga), (2, SHIPS[10:], sigb)]
+
+
+def test_minhash_guard_split_evidence_pair_survives(spark):
+    """A true pair whose band collisions are SPLIT between an oversized
+    bucket and a single small bucket must still be emitted: the oversized
+    collision is invisible to the >=2-band count (those buckets emit star
+    edges), so the cut relaxes to 1 band for pairs with an endpoint in
+    any oversized bucket. Crafted signatures pin the scenario exactly;
+    exact verification still gates the output on real text."""
+    m, cap = 300, 256
+    rows = _split_evidence_rows(m)
     sigs_df = spark.createDataFrame(
         [(i, s) for i, _, s in rows], "id long, sig array<bigint>"
     )
@@ -552,6 +618,138 @@ def test_minhash_guard_split_evidence_pair_survives(spark):
                    for a, b in pairs)
     # the flood itself stays connected through verified star edges
     assert sum(1 for a, b in pairs if a >= 1000 and b >= 1000) >= m - 1
+
+
+def test_pair_stage_placements_agree_on_degenerate_inputs(
+    spark, tmp_path, monkeypatch
+):
+    """Both placements of the curation plans' pair stage give identical
+    rows and guard telemetry on the degenerate inputs:
+
+    * 0- and 1-document batches against an old corpus;
+    * an increment with string ids, whose old signature table holds a
+      null signature (for a text shorter than ``shingle_n``) and shares
+      the id ``dup`` with the batch. The Spark plan's verification drops
+      every pair through an id on both sides (``size(sh) == 2`` sees
+      three shingle arrays), so the new near-dup of the old ``dup`` and
+      the batch's near-dup pair through the new ``dup`` are all kept;
+    * a pair whose band evidence is split between a small and an
+      oversized bucket (the co-flood relaxation of the guard), run through
+      the driver stage and the guarded Spark stage directly.
+
+    It also runs both curation plans where the bounded count of
+    ``fits_on_driver`` runs and sends them to the Spark plan: over a
+    positive ``BOUND`` and over ``BOUND_BYTES``. And it runs them with
+    ``CAP`` 0, where the driver stage reads and bands the input, finds
+    small-bucket pair-band rows over ``CAP`` and hands back None, so the
+    Spark plan follows it."""
+    import random
+
+    from adaptive_pdf_extractor_spark.plans.curation import (
+        curate_increment,
+        curation_run,
+    )
+
+    def shuffled(seed):
+        words = BASE.split()
+        random.Random(seed).shuffle(words)
+        return " ".join(words)
+
+    old = spark.createDataFrame(
+        [("a1", BASE), ("a2", SHIPS), ("dup", shuffled(1)), ("a3", "ab")],
+        "doc_id string, text string",
+    )
+    old_sigs = dedup.minhash_signatures_df(
+        old.filter(F.col("doc_id") != "a3"), "doc_id", "text"
+    ).unionByName(
+        spark.createDataFrame([("a3", None)], "id string, sig array<bigint>")
+    )
+    batches = {
+        "empty": [],
+        "one": [("n1", BASE + " with a tail")],
+        "mixed": [
+            ("n1", BASE + " with a tail"),  # near-dup of a1: dropped
+            ("n2", shuffled(1) + " and more"),  # near-dup of the old dup
+            ("dup", shuffled(2)),
+            ("n3", shuffled(2) + " and more"),  # near-dup of the new dup
+            ("n4", shuffled(3)),
+        ],
+    }
+    got = {}
+
+    def increments(place):
+        for name, rows in batches.items():
+            new = spark.createDataFrame(rows, "doc_id string, text string")
+            got[place, name] = sorted(
+                curate_increment(new, old, old_sigs=old_sigs).collect()
+            )
+
+    for place in placements(monkeypatch):
+        increments(place)
+    # the bounded count runs and finds too many rows or bytes; or the
+    # driver stage runs and finds too many pair-band rows: every time the
+    # Spark plan follows (under CAP 0 with the star contraction)
+    on_driver = dedup.minhash_labels_on_driver
+    placed = []
+    monkeypatch.setattr(
+        dedup, "minhash_labels_on_driver",
+        lambda *a, **k: placed.append(on_driver(*a, **k)) or placed[-1],
+    )
+    flood = _mega_docs(spark, 300, partitions=2)
+    runs = {}
+    for place, patch in (
+        ("over", {"BOUND": 1}),
+        ("long", {"BOUND_BYTES": 1}),
+        ("cap", {"CAP": 0}),
+        ("driver", {}),
+    ):
+        with monkeypatch.context() as m:
+            for k, v in patch.items():
+                m.setattr(dedup, k, v)
+            placed.clear()
+            if place != "driver":
+                increments(place)
+            d = str(tmp_path / place)
+            runs[place] = (
+                curation_run(flood, d, max_bucket_size=24),
+                sorted(spark.read.parquet(f"{d}/curated.parquet").collect()),
+            )
+            # over BOUND or BOUND_BYTES the driver stage never runs; under
+            # CAP 0 it gives up on the flood, the last call
+            if place in ("over", "long"):
+                assert placed == [], place
+            else:
+                assert (placed[-1] is None) == (place == "cap"), place
+    for place in ("over", "long", "cap"):
+        assert runs[place] == runs["driver"], place
+    assert runs["driver"][0]["guard"]["flood_regime"] is True
+    for name in batches:
+        assert (
+            got["driver", name] == got["spark", name] == got["over", name]
+            == got["long", name] == got["cap", name]
+        ), name
+    assert got["spark", "empty"] == got["spark", "one"] == []
+    assert [r["doc_id"] for r in got["spark", "mixed"]] == [
+        "dup", "n2", "n3", "n4"
+    ]
+
+    rows = _split_evidence_rows()
+    sigs = spark.createDataFrame(rows, "id long, text string, sig array<bigint>")
+    labels, guard = dedup.minhash_labels_on_driver(
+        sigs, threshold=0.8, max_bucket_size=256
+    )
+    obs = Observation("split_placements")
+    pairs = dedup.minhash_lsh_pairs_from_sigs(
+        sigs, sigs, "id", "text", threshold=0.8, max_bucket_size=256,
+        observation=obs,
+    )
+    on_spark = dedup.neardup_clusters(sigs.select("id"), pairs.select("id_a", "id_b"))
+    assert sorted(labels.collect()) == sorted(on_spark.collect())
+    assert guard == dedup.observed_metrics(obs)
+    assert guard["star_candidate_rows"] > 0
+    assert {tuple(r) for r in labels.filter(F.col("doc_id") < 1000).collect()} == {
+        (1, 1, 2), (2, 1, 2)
+    }
 
 
 @pytest.mark.parametrize("stage", ["minhash", "simhash", "embedding"])
